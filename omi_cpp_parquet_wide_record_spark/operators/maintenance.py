@@ -205,6 +205,9 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    from omi_cpp_parquet_wide_record_spark.operators.decode import (
+        ScanPlan,
+    )
     from omi_cpp_parquet_wide_record_spark.operators.encode import (
         SUMMARY_SCHEMA, _summary_ddl, _write_chunk,
     )
@@ -212,10 +215,8 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
         MANIFEST_SCHEMA,
     )
 
-    store = ChunkStore(store_dir)
-    snap = store.current_snapshot()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot under {store_dir}")
+    plan = ScanPlan.resolve(store_dir)
+    store, snap = plan.store, plan.snap
     schema = store.arrow_schema(snap)
     m = store.manifest_table(snap, with_commit_n=True)   # live view
     if m.num_rows == 0:
@@ -255,19 +256,8 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
     for v in per_pid.values():
         v.sort(key=lambda t: (t[1], t[0]))
 
-    # delete-file keys are physical names at delete time; resolve to the
-    # live name for filtering the alias-resolved (live-named) tables
-    aliases = ChunkStore.alias_map(snap)
-    _live_of = {old: live for live, olds in aliases.items()
-                for old in olds}
-    deletes = [(os.path.join(store.deletes_dir, d["file"]), d["key"],
-                _live_of.get(d["key"], d["key"]),
-                int(d["n"]) if d.get("n") is not None else None)
-               for d in store.delete_files(snap)
-               if _live_of.get(d["key"], d["key"]) in schema.names]
     run_id = uuid.uuid4().hex
     chunks_dir, manifests_dir = store.chunks_dir, store.manifests_dir
-    schema_ipc = schema.serialize().to_pybytes()
 
     def task(batches):
         from pyspark import TaskContext
@@ -278,7 +268,6 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
         tc = TaskContext.get()
         tag = (f"{run_id[:8]}-rw{tc.taskAttemptId() if tc else 0}-"
                f"{uuid.uuid4().hex[:6]}")
-        sch = pa.ipc.read_schema(pa.py_buffer(schema_ipc))
         out_rows: list[dict] = []
         plan_cache: dict = {}
         for b in batches:
@@ -286,22 +275,16 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
                                      b.column("files").to_pylist()):
                 parts = []
                 for fname, n_f in _json.loads(files_js):
-                    # alias-aware read: pre-rename chunks decode their
-                    # retired names into the live schema (the rewrite
-                    # physically migrates them to live names)
+                    # alias-aware read into the nullable live schema:
+                    # pre-rename chunks decode their retired names (the
+                    # rewrite physically migrates them to live names) and
+                    # pre-add-column chunks null-fill. Scoped
+                    # deletes are MATERIALIZED: the rewritten chunks carry
+                    # this commit's n, which exempts them from older
+                    # deletes
                     t = read_chunk_table(os.path.join(chunks_dir, fname),
-                                         sch, aliases)
-                    # MATERIALIZE merge-on-read deletes: the rewritten
-                    # chunks carry this commit's n, which EXEMPTS them
-                    # from older deletes — so those deletes must be
-                    # applied to the bytes now
-                    for dpath, key, live_key, dn in deletes:
-                        if dn is not None and n_f >= dn:
-                            continue     # delete doesn't scope this chunk
-                        keys = pq.read_table(dpath, columns=[key])
-                        t = t.filter(pc.invert(pc.is_in(
-                            t.column(live_key), value_set=keys.column(key)
-                            .combine_chunks())))
+                                         plan.schema, plan.aliases,
+                                         deletes=plan.deletes_for(n_f))
                     if t.num_rows:
                         parts.append(t)
                 if not parts:

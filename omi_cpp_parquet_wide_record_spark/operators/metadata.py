@@ -15,85 +15,25 @@ kind maps onto a DataFrame:
     metadata_table(spark, store_dir, "refs")         # tags
     metadata_table(spark, store_dir, "deletes")      # equality-delete files
 
-Scale: ``files``/``partitions`` read the manifests as a SPARK job (one
-branch per (commit, rewritten-pid-set) group — commit metadata, bounded
-by history length), so chunk-level metadata rows never materialize on
-the driver: at 10^12 rows the files table is itself tens of millions of
-rows and must distribute like any other scan. ``snapshots``/``refs``/
-``deletes`` are commit metadata — driver-held and tiny by construction.
-The live view matches what readers decode: pid-scoped rewrites hide
-superseded rows and schema-evolution aliases canonicalize retired
-column names.
+Scale: ``files``/``partitions`` read the manifests as a SPARK job (a
+task per batch of manifest shards, each building the shard's live view
+with the same ``ChunkStore.live_shard`` driver planning concatenates),
+so chunk-level metadata rows never materialize on the driver: at 10^12
+rows the files table is itself tens of millions of rows and must
+distribute like any other scan. ``snapshots``/``refs``/``deletes`` are
+commit metadata — driver-held and tiny by construction. The live view
+matches what readers decode: pid-scoped rewrites hide superseded rows
+and schema-evolution aliases canonicalize retired column names.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from omi_cpp_parquet_wide_record_spark.operators.decode import ScanPlan
 from omi_cpp_parquet_wide_record_spark.plans.snapshot import ChunkStore
 
 KINDS = ("snapshots", "history", "refs", "files", "partitions", "deletes")
-
-
-def _resolve(store: ChunkStore, snapshot: int | None, ref: str | None):
-    if ref is not None and snapshot is not None:
-        raise ValueError("pass snapshot= or ref=, not both")
-    if ref is not None:
-        return store.resolve_ref(ref)
-    if snapshot is not None:
-        return store.snapshot_at(snapshot)
-    snap = store.current_snapshot()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot under {store.root}")
-    return snap
-
-
-def _files_df(spark: SparkSession, store: ChunkStore, snap: dict
-              ) -> DataFrame:
-    """Live manifest rows as a distributed DataFrame: one union branch
-    per (commit_n, rewritten-pid set) manifest group, alias-canonical
-    column names — the exact view driver planning's manifest_table gives,
-    without collecting chunk-level rows."""
-    groups: dict[tuple[int, frozenset], list[str]] = {}
-    for m in snap["manifests"]:
-        key = (ChunkStore.manifest_commit_n(snap, m),
-               frozenset(ChunkStore.rewritten_pids_for(snap, m)))
-        groups.setdefault(key, []).append(
-            os.path.join(store.manifests_dir, m))
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-        MANIFEST_SCHEMA,
-    )
-    sch = from_arrow_schema(MANIFEST_SCHEMA)
-    cols = list(MANIFEST_SCHEMA.names)
-    branches = []
-    for (n, drops), paths in sorted(groups.items(),
-                                    key=lambda kv: kv[0][0]):
-        b = spark.read.option("mergeSchema", "true").parquet(*paths)
-        for f in sch.fields:                 # pre-stats manifests: pad
-            if f.name not in b.columns:
-                b = b.withColumn(f.name, F.lit(None).cast(f.dataType))
-        b = b.select(*cols).withColumn("commit_n", F.lit(n))
-        if drops:
-            b = b.filter(~F.col("pid").isin(sorted(drops)))
-        branches.append(b)
-    if not branches:
-        return spark.createDataFrame([], sch).withColumn(
-            "commit_n", F.lit(None).cast("int"))
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionAll(b)
-    aliases = ChunkStore.alias_map(snap)
-    if aliases:
-        expr = F.col("column")
-        for live, olds in aliases.items():
-            expr = F.when(F.col("column").isin(list(olds)),
-                          F.lit(live)).otherwise(expr)
-        out = out.withColumn("column", expr)
-    return out
 
 
 def metadata_table(spark: SparkSession, store_dir: str, kind: str,
@@ -132,7 +72,8 @@ def metadata_table(spark: SparkSession, store_dir: str, kind: str,
         return spark.createDataFrame(
             rows, "name string, type string, snapshot int")
 
-    snap = _resolve(store, snapshot, ref)
+    plan = ScanPlan.resolve(store_dir, snapshot, ref)
+    snap = plan.snap
 
     if kind == "deletes":
         rows = [(d["file"], d["key"],
@@ -141,7 +82,7 @@ def metadata_table(spark: SparkSession, store_dir: str, kind: str,
         return spark.createDataFrame(
             rows, "file string, key string, n int")
 
-    files = _files_df(spark, store, snap)
+    files = plan.live_rows(spark)
     if kind == "files":
         return files
     # partitions: per-pid rollup. Rows are counted per chunk FILE (every

@@ -429,12 +429,63 @@ class ChunkStore:
         n_m = ChunkStore.manifest_commit_n(snap, manifest_name)
         return {int(p) for p, rn in rw.items() if int(rn) > n_m}
 
+    @staticmethod
+    def live_shard(path: str, drop_pids=(), aliases=None,
+                   commit_n: int | None = None) -> pa.Table:
+        """One manifest shard's LIVE rows — the single definition of the
+        live manifest view, shared by driver planning (``manifest_table``
+        concatenates it) and distributed planning (a ``mapInArrow`` over
+        shard names calls it per shard):
+
+        - manifests written before the zone-map columns pad with nulls;
+        - rows of ``drop_pids`` (superseded by a later pid-scoped
+          rewrite) drop;
+        - ``commit_n`` (the shard's commit number), when given, rides
+          along as an int32 column for sequence-scoped deletes;
+        - retired physical column names (``aliases``: live -> retired)
+          canonicalize to live names, so pre-rename chunks keep pruning.
+        """
+        import pyarrow.compute as pc
+        t = pq.read_table(path)
+        for f in MANIFEST_SCHEMA:
+            if f.name not in t.schema.names:
+                t = t.append_column(f.name,
+                                    pa.nulls(t.num_rows, type=f.type))
+        t = t.select(MANIFEST_SCHEMA.names)
+        if drop_pids:
+            t = t.filter(pc.invert(pc.is_in(
+                t.column("pid"), value_set=pa.array(
+                    sorted(drop_pids), type=t.schema.field("pid").type))))
+        if commit_n is not None:
+            t = t.append_column("commit_n", pa.array(
+                [commit_n] * t.num_rows, type=pa.int32()))
+        if aliases and t.num_rows:
+            col = t.column("column").combine_chunks()
+            for live, olds in aliases.items():
+                col = pc.if_else(pc.is_in(col, value_set=pa.array(olds)),
+                                 pa.scalar(live), col)
+            t = t.set_column(t.schema.get_field_index("column"),
+                             t.schema.field("column"), col)
+        return t
+
+    def shard_view(self, snap: dict, manifest_name: str,
+                   with_commit_n: bool = False) -> pa.Table:
+        """``live_shard`` of one manifest of ``snap``, with the drop set,
+        commit number and aliases that snapshot assigns it."""
+        return self.live_shard(
+            os.path.join(self.manifests_dir, manifest_name),
+            self.rewritten_pids_for(snap, manifest_name),
+            self.alias_map(snap),
+            self.manifest_commit_n(snap, manifest_name)
+            if with_commit_n else None)
+
     def manifest_table(self, snapshot: dict | None = None,
                        with_commit_n: bool = False) -> pa.Table:
-        """All LIVE manifest rows of a snapshot (default: the live one)
-        — rows superseded by a pid-scoped rewrite are dropped here, so
-        every driver-side consumer (planning, metrics, pruning, GC's
-        per-snapshot liveness) sees the post-rewrite view.
+        """All LIVE manifest rows of a snapshot (default: the live one):
+        the ``live_shard`` view of every manifest, concatenated — so every
+        driver-side consumer (planning, metrics, pruning, GC's
+        per-snapshot liveness) sees the post-rewrite, alias-canonical
+        view.
 
         ``with_commit_n=True`` appends each row's manifest COMMIT number
         as an int32 ``commit_n`` column (from the snapshot's manifest_n
@@ -442,56 +493,15 @@ class ChunkStore:
         delete reads derive per-chunk epochs from this instead of
         re-reading every manifest parquet on the driver (VERDICT r4 #6)."""
         snap = snapshot or self.current_snapshot()
+        tables = [t for m in (snap or {}).get("manifests", [])
+                  if (t := self.shard_view(snap, m, with_commit_n)).num_rows]
+        if tables:
+            return pa.concat_tables(tables)
         empty = MANIFEST_SCHEMA.empty_table()
         if with_commit_n:
             empty = empty.append_column(
                 "commit_n", pa.array([], type=pa.int32()))
-        if not snap or not snap["manifests"]:
-            return empty
-        tables = []
-        for m in snap["manifests"]:
-            t = pq.read_table(os.path.join(self.manifests_dir, m))
-            # manifests written before the zone-map columns: pad with nulls
-            for f in MANIFEST_SCHEMA:
-                if f.name not in t.schema.names:
-                    t = t.append_column(
-                        f.name, pa.nulls(t.num_rows, type=f.type))
-            t = t.select(MANIFEST_SCHEMA.names)
-            dropped = self.rewritten_pids_for(snap, m)
-            if dropped:
-                import pyarrow.compute as pc
-                t = t.filter(pc.invert(pc.is_in(
-                    t.column("pid"),
-                    value_set=pa.array(sorted(dropped),
-                                       type=t.schema.field("pid").type))))
-            if t.num_rows == 0:
-                continue
-            if with_commit_n:
-                n = self.manifest_commit_n(snap, m)
-                t = t.append_column("commit_n", pa.array(
-                    [n] * t.num_rows, type=pa.int32()))
-            tables.append(t)
-        if not tables:
-            return empty
-        out = pa.concat_tables(tables)
-        # schema evolution: canonicalize retired physical column names to
-        # their live names, so every driver-side consumer (zone/bloom/null
-        # pruning, metrics, rewrite selection) sees ONE logical column per
-        # live name — pre-rename chunks keep pruning after the rename
-        aliases = self.alias_map(snap)
-        if aliases:
-            import pyarrow.compute as pc
-            col = out.column("column")
-            for live, olds in aliases.items():
-                col = pc.if_else(
-                    pc.is_in(col, value_set=pa.array(olds)),
-                    pa.scalar(live), col)
-            out = out.set_column(out.schema.get_field_index("column"),
-                                 out.schema.field("column"),
-                                 col.combine_chunks()
-                                 if isinstance(col, pa.ChunkedArray)
-                                 else col)
-        return out
+        return empty
 
     def arrow_schema(self, snapshot: dict | None = None) -> pa.Schema:
         snap = snapshot or self.current_snapshot()

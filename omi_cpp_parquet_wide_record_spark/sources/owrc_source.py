@@ -32,18 +32,12 @@ from pyspark.sql.datasource import (
 )
 
 
-# per-python-worker cache of delete-key arrays (delete files are
-# immutable, uuid-named); size-capped as a leak guard
-_DELETE_KEY_CACHE: dict = {}
-
-
 class OwrcInputPartition(InputPartition):
     def __init__(self, path: str, deletes: list[tuple[str, str, str]] = (),  # noqa: B006
                  aliases: dict[str, list[str]] | None = None):
         self.path = path
         # [(delete_file_path, physical_key_col, live_key_col), ...]
-        # applicable to THIS chunk's commit epoch (sequence-scoped,
-        # matching decode_store semantics)
+        # applicable to THIS chunk's commit epoch (ScanPlan.deletes_for)
         self.deletes = list(deletes)
         # schema-evolution aliases of the snapshot being read:
         # {live column name: [retired physical names]}
@@ -56,13 +50,11 @@ class OwrcReader(DataSourceReader):
         self.root = options.get("path")
         # snapshot=N time-travels; sinceSnapshot=M reads incrementally
         # (only manifests committed after M); ref="tag" reads a named
-        # ref — all mirror decode_store
+        # ref — resolved by the same ScanPlan decode_store uses
         self._snapshot = options.get("snapshot")
         self._since = options.get("sincesnapshot",
                                   options.get("since_snapshot"))
         self._ref = options.get("ref")
-        if self._ref is not None and self._snapshot is not None:
-            raise ValueError("owrc: pass snapshot or ref, not both")
         self._zone_filters: list[tuple[str, str, object]] = []
         if not self.root:
             raise ValueError("owrc source needs a path")
@@ -96,119 +88,23 @@ class OwrcReader(DataSourceReader):
 
     def partitions(self):
         import os
-        import pyarrow.parquet as pq
         from omi_cpp_parquet_wide_record_spark.operators.decode import (
-            prune_files,
+            ScanPlan,
         )
-        from omi_cpp_parquet_wide_record_spark.plans.snapshot import ChunkStore
-        store = ChunkStore(self.root)
-        if self._ref is not None:
-            snap = store.resolve_ref(self._ref)
-        elif self._snapshot is not None:
-            snap = store.snapshot_at(int(self._snapshot))
-        else:
-            snap = store.current_snapshot()
-        if self._since is not None:
-            base = store.snapshot_at(int(self._since))
-            # skip pid-rewrite commits and read the ORIGINAL appended
-            # rows (same incremental semantics as decode_store)
-            seen = set(base["manifests"]) | set(
-                snap.get("rewrite_manifests", []))
-            snap = {**snap, "manifests": [m for m in snap["manifests"]
-                                          if m not in seen],
-                    "pid_rewrites": {}}
-        manifest = store.manifest_table(snap)
-        if self._zone_filters:
-            files = prune_files(manifest, self._zone_filters)
-        else:
-            files = sorted(set(manifest.column("chunk_file").to_pylist()))
-        deletes = store.delete_files(snap)
-        commit_n: dict[str, int] = {}
-        if deletes and any(d.get("n") is not None for d in deletes):
-            for m in snap["manifests"]:
-                n_m = ChunkStore.manifest_commit_n(snap, m)
-                t = pq.read_table(os.path.join(store.manifests_dir, m),
-                                  columns=["chunk_file"])
-                for fname in set(t.column("chunk_file").to_pylist()):
-                    commit_n.setdefault(fname, n_m)
-
-        # rename evolution: delete-file keys are physical names at delete
-        # time; resolve to live names for filtering alias-resolved tables
-        aliases = ChunkStore.alias_map(snap)
-        _live_of = {o: l for l, olds in aliases.items() for o in olds}
-
-        def applicable(fname: str) -> list[tuple[str, str, str]]:
-            # a delete committed at snapshot n applies only to chunks
-            # from earlier commits (Iceberg sequence-number scoping),
-            # mirroring decode_store
-            out = []
-            for d in deletes:
-                if d.get("n") is not None and \
-                        commit_n.get(fname, 0) >= int(d["n"]):
-                    continue
-                out.append((os.path.join(store.deletes_dir, d["file"]),
-                            d["key"], _live_of.get(d["key"], d["key"])))
-            return out
-
-        return [OwrcInputPartition(os.path.join(store.chunks_dir, f),
-                                   applicable(f), aliases)
-                for f in files]
+        plan = ScanPlan.resolve(self.root, self._snapshot, self._ref,
+                                self._since)
+        return [OwrcInputPartition(os.path.join(plan.store.chunks_dir, f),
+                                   plan.deletes_for(n), plan.aliases)
+                for f, n in plan.kept_files(self._zone_filters).items()]
 
     def read(self, partition: OwrcInputPartition):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from omi_cpp_parquet_wide_record_spark.operators.decode import (
-            read_chunk_file,
-        )
-        cols = [f.name for f in self.schema.fields]
-        del_keys = [lk for _, _, lk in partition.deletes if lk not in cols]
-        want = cols + del_keys
-        aliases = partition.aliases
-        old_names = [o for c in want for o in aliases.get(c, [])]
-        table = read_chunk_file(partition.path,
-                                columns=want + old_names)
-        # rename evolution: chunks written before a rename carry retired
-        # physical names — relabel them to the live names
-        if old_names:
-            present = set(table.schema.names)
-            relabel = {}
-            for live in want:
-                if live in present:
-                    continue
-                for old in aliases.get(live, []):
-                    if old in present:
-                        relabel[old] = live
-                        break
-            if relabel:
-                table = table.rename_columns(
-                    [relabel.get(n, n) for n in table.schema.names])
-        # merge-on-read equality deletes (sequence-scoped in partitions()).
-        # Delete-key arrays cache per python worker: every chunk partition
-        # applies the same few delete files, and delete files are
-        # immutable (uuid-named), so without the cache a store with F
-        # chunks and D deletes performs F x D parquet reads per scan.
-        for dpath, key, live_key in partition.deletes:
-            if live_key not in table.schema.names:
-                continue     # chunk predates the key column: nothing matches
-            ck = (dpath, key)
-            if ck not in _DELETE_KEY_CACHE:
-                if len(_DELETE_KEY_CACHE) > 256:
-                    _DELETE_KEY_CACHE.clear()
-                _DELETE_KEY_CACHE[ck] = pq.read_table(
-                    dpath, columns=[key]).column(key).combine_chunks()
-            table = table.filter(
-                pc.invert(pc.is_in(table.column(live_key),
-                                   value_set=_DELETE_KEY_CACHE[ck])))
-        # schema evolution: null-fill columns added after this chunk
-        # committed (same read-time semantics as decode_store)
         from pyspark.sql.pandas.types import to_arrow_schema
-        target = to_arrow_schema(self.schema)
-        for f in target:
-            if f.name not in table.schema.names:
-                table = table.append_column(
-                    f.name, pa.nulls(table.num_rows, type=f.type))
-        yield from table.select(cols).to_batches()
+        from omi_cpp_parquet_wide_record_spark.operators.decode import (
+            read_chunk_table,
+        )
+        yield from read_chunk_table(
+            partition.path, to_arrow_schema(self.schema), partition.aliases,
+            deletes=partition.deletes).to_batches()
 
 
 class OwrcCommitMessage(WriterCommitMessage):
@@ -310,23 +206,15 @@ class OwrcDataSource(DataSource):
         return "owrc"
 
     def schema(self):
-        import pyarrow as pa
         from pyspark.sql.pandas.types import from_arrow_schema
-        from omi_cpp_parquet_wide_record_spark.plans.snapshot import ChunkStore
-        store = ChunkStore(self.options["path"])
+        from omi_cpp_parquet_wide_record_spark.operators.decode import (
+            ScanPlan,
+        )
         # time-travel/ref reads present THAT snapshot's schema (it may
-        # predate a rename/drop evolution)
-        if self.options.get("ref") is not None:
-            s = store.arrow_schema(store.resolve_ref(self.options["ref"]))
-        elif self.options.get("snapshot") is not None:
-            s = store.arrow_schema(
-                store.snapshot_at(int(self.options["snapshot"])))
-        else:
-            s = store.arrow_schema()
-        # nullable like decode_store: add-column evolution null-fills rows
-        # from chunks committed before a column existed
-        return from_arrow_schema(pa.schema(
-            [pa.field(f.name, f.type, nullable=True) for f in s]))
+        # predate a rename/drop evolution), nullable like decode_store's
+        o = self.options
+        return from_arrow_schema(ScanPlan.resolve(
+            o["path"], o.get("snapshot"), o.get("ref")).schema)
 
     def reader(self, schema):
         return OwrcReader(schema, self.options)

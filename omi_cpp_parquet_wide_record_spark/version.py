@@ -84,8 +84,11 @@ def engine_fingerprint() -> str:
             try:
                 import zipfile
                 archive = os.path.dirname(pkg_root)
-                while archive and not os.path.isfile(archive):
-                    archive = os.path.dirname(archive)
+                while not os.path.isfile(archive):
+                    parent = os.path.dirname(archive)
+                    if parent == archive:    # reached the root: no archive
+                        raise FileNotFoundError(pkg_root)
+                    archive = parent
                 with zipfile.ZipFile(archive) as zf:
                     want = pkg_prefix + entry + "/"
                     for name in zf.namelist():

@@ -187,3 +187,20 @@ def test_engine_fingerprint_matches_under_zipimport(tmp_path):
         [sys.executable, "-c", code], capture_output=True, text=True,
         check=True).stdout.strip()
     assert zip_fp == local_fp
+
+
+def test_engine_fingerprint_without_archive_terminates(tmp_path):
+    """A package root with neither its surface files nor an archive above
+    it (the zipimport fallback's archive walk reaches the filesystem
+    root) falls through to the loader fallback instead of spinning."""
+    import omi_cpp_parquet_wide_record_spark.version as version
+    pkg = tmp_path / "barepkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "version.py").write_text(open(version.__file__).read())
+    code = ("import sys; sys.path.insert(0, %r); "
+            "from barepkg.version import engine_fingerprint; "
+            "print(engine_fingerprint())" % str(tmp_path))
+    fp = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                        text=True, check=True, timeout=60).stdout.strip()
+    assert len(fp) == 16
