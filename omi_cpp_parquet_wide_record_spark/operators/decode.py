@@ -417,8 +417,8 @@ def distributed_file_plan(spark: SparkSession, paths: list[str],
     canonicalization) and prunes it with ``prune_files`` — the same
     compiler driver planning runs, so both modes open the same files.
     Per-shard pruning equals global pruning because every chunk file's
-    manifest rows live in one shard (one ``_write_chunk`` call's rows go
-    to one task's shard; the owrc sink writes one manifest)."""
+    manifest rows live in one shard (``write_chunks``, the one writer,
+    puts all of a task's chunk rows in that task's shard)."""
     def plan(path):
         live = ChunkStore.live_shard(path, drop_pids or (), aliases)
         return pa.table({"chunk_file": pa.array(

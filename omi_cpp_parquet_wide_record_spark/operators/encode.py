@@ -10,9 +10,10 @@ Spark shape (SURVEY.md §3):
       .repartition(num_pids, __pid)      # shuffle boundary #1 (colocate=
                                          # "shuffle"; colocate="local"
                                          # skips it — zero-shuffle encode)
-      .mapInArrow(encode_task)   # batches regrouped by pid columnar-side,
-                                 # Arrow batches -> numpy kernels
-      -> manifest rows -> driver commit (snapshot JSON)                   # tiny collect: metadata only
+      .mapInArrow(encode_task)   # batches split into pid runs columnar-side
+                                 # -> write_chunks: Arrow batches -> numpy
+                                 # kernels -> chunk files
+      -> manifest shards executor-side -> pid rollup -> driver commit     # tiny collect: shard names + pids
 
 Work-unit ids (__pid) are *content-derived* (xxhash64 of the partition
 columns mod N), not Spark partition indexes, so they are stable across runs,
@@ -49,9 +50,9 @@ from omi_cpp_parquet_wide_record_spark.selector import choose_codec
 CHUNK_MAGIC = b"OWRC1"
 PID_COL = "__owr_pid"
 
-# pid-level rollup yielded by sharded-manifest encode tasks (bounded by
-# num_pids, a config knob — unlike chunk-level manifest rows, which scale
-# with the data and stay executor-side)
+# pid-level rollup yielded by write_chunks (bounded by the pid count —
+# unlike chunk-level manifest rows, which scale with the data and stay
+# executor-side in manifest shards)
 SUMMARY_SCHEMA = pa.schema([
     ("shard_file", pa.string()),
     ("pid", pa.int32()),
@@ -337,43 +338,93 @@ def _write_chunk(chunks_dir: str, pid: int, seq: int, table: pa.Table,
     return rows
 
 
-def _encode_task_factory(chunks_dir: str, run_id: str, chunk_rows: int,
-                         chunk_bytes: int, overrides: dict | None = None,
-                         group_cols: list[str] | None = None,
-                         manifests_dir: str | None = None):
-    """Build the mapInArrow function. Accumulates per-pid batch slices and
-    flushes a chunk when either budget trips; all slicing is zero-copy.
+def write_chunks(pid_batches, *, chunks_dir: str, manifests_dir: str,
+                 run_id: str, chunk_rows: int, chunk_bytes: int,
+                 overrides: dict | None = None,
+                 group_cols: list[str] | None = None):
+    """The store's one executor-side writer: every write path
+    (``encode_dataframe``, ``rewrite_small_chunks``, the owrc sink) feeds
+    it ``(pid, batch)`` pairs from inside a Spark task.
 
-    With ``manifests_dir`` set (the sharded-manifest mode), each task
-    writes its chunk-level manifest rows as a parquet SHARD executor-side
-    and yields only a pid-level rollup — chunk-level rows scale with the
-    data (one per chunk column) and must never be collected to the
-    driver at corpus scale. Without it, manifest rows are yielded whole
-    (driver-collected single-manifest commit, fine for small jobs)."""
+    Per pid, batches top up an accumulator and a chunk is flushed
+    whenever the row or byte budget trips; a run larger than
+    ``chunk_rows`` splits into budget-sized chunks instead of flushing
+    whole, so chunk size stays deterministic even when Arrow delivers a
+    pid's rows as one oversized batch (with a write sort order this is
+    what gives consecutive chunks disjoint key ranges). All slicing is
+    zero-copy. The task's chunk-level manifest rows go to ONE parquet
+    shard executor-side — they scale with the data and never reach the
+    driver — and the only output is the pid rollup (``SUMMARY_SCHEMA``,
+    bounded by the pid count) the driver commits."""
+    from pyspark import TaskContext
+    tc = TaskContext.get()
+    tag = f"{run_id[:8]}-t{tc.taskAttemptId() if tc else 0}-{uuid.uuid4().hex[:6]}"
+    if len(_WORKER_PLAN_CACHE) > _WORKER_PLAN_CACHE_MAX:
+        _WORKER_PLAN_CACHE.clear()
+    acc: dict[int, list[pa.RecordBatch]] = {}
+    acc_rows: dict[int, int] = {}
+    acc_bytes: dict[int, int] = {}
+    seq: dict[int, int] = {}
+    out_rows: list[dict] = []
 
-    def task(batches):
-        from pyspark import TaskContext
-        tc = TaskContext.get()
-        tag = f"{run_id[:8]}-t{tc.taskAttemptId() if tc else 0}-{uuid.uuid4().hex[:6]}"
-        if len(_WORKER_PLAN_CACHE) > _WORKER_PLAN_CACHE_MAX:
-            _WORKER_PLAN_CACHE.clear()
-        plan_cache: dict = _WORKER_PLAN_CACHE
-        acc: dict[int, list[pa.RecordBatch]] = {}
-        acc_rows: dict[int, int] = {}
-        acc_bytes: dict[int, int] = {}
-        seq: dict[int, int] = {}
-        out_rows: list[dict] = []
+    def flush(pid: int):
+        if not acc.get(pid):
+            return
+        out_rows.extend(_write_chunk(chunks_dir, pid, seq.get(pid, 0),
+                                     pa.Table.from_batches(acc[pid]),
+                                     _WORKER_PLAN_CACHE, run_id, tag,
+                                     overrides, group_cols))
+        seq[pid] = seq.get(pid, 0) + 1
+        acc[pid], acc_rows[pid], acc_bytes[pid] = [], 0, 0
 
-        def flush(pid: int):
-            if not acc.get(pid):
-                return
-            tbl = pa.Table.from_batches(acc[pid]).drop_columns([PID_COL])
-            out_rows.extend(_write_chunk(chunks_dir, pid, seq.get(pid, 0),
-                                         tbl, plan_cache, run_id, tag,
-                                         overrides, group_cols))
-            seq[pid] = seq.get(pid, 0) + 1
-            acc[pid], acc_rows[pid], acc_bytes[pid] = [], 0, 0
+    for pid, batch in pid_batches:
+        pos = 0
+        while pos < batch.num_rows:
+            take = min(batch.num_rows - pos,
+                       chunk_rows - acc_rows.get(pid, 0))
+            sl = batch.slice(pos, take)
+            pos += take
+            acc.setdefault(pid, []).append(sl)
+            acc_rows[pid] = acc_rows.get(pid, 0) + take
+            acc_bytes[pid] = acc_bytes.get(pid, 0) + sl.nbytes
+            if acc_rows[pid] >= chunk_rows or acc_bytes[pid] >= chunk_bytes:
+                flush(pid)
+    for pid in list(acc):
+        flush(pid)
+    if not out_rows:
+        return
+    import pyarrow.parquet as pq
+    shard = f"manifest-shard-{run_id[:8]}-{tag}.parquet"
+    pq.write_table(pa.table({f.name: [r[f.name] for r in out_rows]
+                             for f in MANIFEST_SCHEMA}, schema=MANIFEST_SCHEMA),
+                   os.path.join(manifests_dir, shard))
+    # rows counted once per chunk, via the first data column
+    first_col = out_rows[0]["column"]
+    agg: dict[int, list] = {}
+    for r in out_rows:
+        a = agg.setdefault(r["pid"], [0, 0, 0, 0])
+        a[0] += r["rows"] if r["column"] == first_col else 0
+        a[1] += r["bytes_in"]
+        a[2] += r["bytes_out"]
+        a[3] += 1
+    yield pa.RecordBatch.from_pydict({
+        "shard_file": [shard] * len(agg),
+        "pid": list(agg),
+        "rows": [a[0] for a in agg.values()],
+        "bytes_in": [a[1] for a in agg.values()],
+        "bytes_out": [a[2] for a in agg.values()],
+        "chunks": [a[3] for a in agg.values()],
+    }, schema=SUMMARY_SCHEMA)
 
+
+def _encode_task_factory(chunks_dir: str, manifests_dir: str, run_id: str,
+                         chunk_rows: int, chunk_bytes: int,
+                         overrides: dict | None = None,
+                         group_cols: list[str] | None = None):
+    """Build the mapInArrow function: split each batch into pid runs and
+    feed them to ``write_chunks``."""
+
+    def pid_runs(batches):
         for batch in batches:
             pids = batch.column(PID_COL).to_numpy()
             if len(pids) == 0:
@@ -384,62 +435,18 @@ def _encode_task_factory(chunks_dir: str, run_id: str, chunk_rows: int,
                 order = np.argsort(pids, kind="stable")
                 batch = batch.take(pa.array(order))
                 pids = pids[order]
+            data = batch.drop_columns([PID_COL])
             change = np.flatnonzero(pids[1:] != pids[:-1]) + 1
             bounds = np.concatenate(([0], change, [len(pids)]))
-            for i in range(len(bounds) - 1):
-                lo, hi = int(bounds[i]), int(bounds[i + 1])
-                pid = int(pids[lo])
-                # top the accumulator up to the row budget and flush,
-                # repeatedly — a run larger than chunk_rows splits into
-                # budget-sized chunks instead of flushing whole (chunk
-                # size stays deterministic even when Arrow delivers a
-                # pid's rows as one oversized batch; with a write sort
-                # order this is what gives consecutive chunks disjoint
-                # key ranges)
-                pos = lo
-                while pos < hi:
-                    take = min(hi - pos,
-                               chunk_rows - acc_rows.get(pid, 0))
-                    sl = batch.slice(pos, take)
-                    pos += take
-                    acc.setdefault(pid, []).append(sl)
-                    acc_rows[pid] = acc_rows.get(pid, 0) + take
-                    acc_bytes[pid] = acc_bytes.get(pid, 0) + sl.nbytes
-                    if acc_rows[pid] >= chunk_rows \
-                            or acc_bytes[pid] >= chunk_bytes:
-                        flush(pid)
-        for pid in list(acc):
-            flush(pid)
-        if not out_rows:
-            return
-        cols = {f.name: [r[f.name] for r in out_rows]
-                for f in MANIFEST_SCHEMA}
-        man = pa.table(cols, schema=MANIFEST_SCHEMA)
-        if manifests_dir is None:
-            yield from man.to_batches(max_chunksize=1 << 20)
-            return
-        # sharded mode: persist the chunk-level rows executor-side, report
-        # only the pid rollup (rows counted once per pid via the first
-        # data column, matching EncodeResult's row accounting)
-        import pyarrow.parquet as pq
-        shard = f"manifest-shard-{run_id[:8]}-{tag}.parquet"
-        pq.write_table(man, os.path.join(manifests_dir, shard))
-        first_col = out_rows[0]["column"]
-        agg: dict[int, list] = {}
-        for r in out_rows:
-            a = agg.setdefault(r["pid"], [0, 0, 0, 0])
-            a[0] += r["rows"] if r["column"] == first_col else 0
-            a[1] += r["bytes_in"]
-            a[2] += r["bytes_out"]
-            a[3] += 1
-        yield pa.RecordBatch.from_pydict({
-            "shard_file": [shard] * len(agg),
-            "pid": list(agg),
-            "rows": [a[0] for a in agg.values()],
-            "bytes_in": [a[1] for a in agg.values()],
-            "bytes_out": [a[2] for a in agg.values()],
-            "chunks": [a[3] for a in agg.values()],
-        }, schema=SUMMARY_SCHEMA)
+            for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+                yield int(pids[lo]), data.slice(lo, hi - lo)
+
+    def task(batches):
+        yield from write_chunks(
+            pid_runs(batches), chunks_dir=chunks_dir,
+            manifests_dir=manifests_dir, run_id=run_id,
+            chunk_rows=chunk_rows, chunk_bytes=chunk_bytes,
+            overrides=overrides, group_cols=group_cols)
 
     return task
 
@@ -525,7 +532,6 @@ def encode_dataframe(
     codec_overrides: dict | None = None,
     num_tasks: int | None = None,
     colocate: str = "shuffle",
-    manifest: str = "sharded",
     sort_by: list[str] | None = None,
     zorder_by: list[str] | None = None,
     zorder_stats_sample: float | None = None,
@@ -558,13 +564,6 @@ def encode_dataframe(
         unchanged: a commit only ever happens after the whole job, so a
         committed pid has ALL its rows encoded in either mode and the
         pid anti-filter applies identically.
-    manifest: "sharded" (default) writes chunk-level manifest rows as
-      parquet shards executor-side — only shard names and a pid-level
-      rollup (bounded by num_pids) reach the driver, so the commit cost
-      does not scale with the data. "collect" gathers manifest rows to
-      the driver and writes one manifest file per commit (fewer files;
-      fine for small jobs). Both produce identical store semantics —
-      readers concat all manifest files a snapshot references.
     sort_by: Iceberg-style write sort order (write.sort-order). A
       task-local sort (sortWithinPartitions — NO extra shuffle) orders
       each pid's rows by these columns before chunking, so every chunk
@@ -698,50 +697,24 @@ def encode_dataframe(
                          .rename_columns([upsert_key]), upsert_key)
 
     import pyarrow.compute as pc
-    if manifest == "sharded":
-        task = _encode_task_factory(store.chunks_dir, run_id, chunk_rows,
-                                    chunk_bytes, codec_overrides,
-                                    partition_by, store.manifests_dir)
-        summaries = work.mapInArrow(task, _summary_ddl()).toArrow() \
-            .cast(SUMMARY_SCHEMA)
-        if summaries.num_rows == 0 and not committed:
-            raise ValueError("nothing to encode: input DataFrame is empty")
-        shard_files = sorted(set(summaries.column("shard_file").to_pylist()))
-        new_pids = set(summaries.column("pid").to_pylist())
-        snap = store.commit(shard_files, _spark_to_arrow_schema(df), run_id,
-                            new_pids=new_pids, add_delete=upsert_delete,
-                            branch=branch)
-        bi = pc.sum(summaries.column("bytes_in")).as_py() or 0
-        bo = pc.sum(summaries.column("bytes_out")).as_py() or 0
-        rows = pc.sum(summaries.column("rows")).as_py() or 0
-        return EncodeResult(
-            snapshot=snap, rows=rows, bytes_in=bi, bytes_out=bo,
-            seconds=time.time() - t0, pids_encoded=len(new_pids),
-            pids_skipped=len(committed),
-        )
-    if manifest != "collect":
-        raise ValueError(f"manifest must be 'sharded' or 'collect': "
-                         f"{manifest}")
-    task = _encode_task_factory(store.chunks_dir, run_id, chunk_rows,
-                                chunk_bytes, codec_overrides, partition_by)
-    manifest_df = work.mapInArrow(task, _manifest_ddl())
-    manifest_rows = manifest_df.toArrow().cast(MANIFEST_SCHEMA)
-    if manifest_rows.num_rows == 0 and not committed:
+    task = _encode_task_factory(store.chunks_dir, store.manifests_dir, run_id,
+                                chunk_rows, chunk_bytes, codec_overrides,
+                                partition_by)
+    summaries = work.mapInArrow(task, _summary_ddl()).toArrow() \
+        .cast(SUMMARY_SCHEMA)
+    if summaries.num_rows == 0 and not committed:
         raise ValueError("nothing to encode: input DataFrame is empty")
-
-    snap = store.commit(manifest_rows, _spark_to_arrow_schema(df), run_id,
-                        add_delete=upsert_delete, branch=branch)
-
-    bi = pc.sum(manifest_rows.column("bytes_in")).as_py() or 0
-    bo = pc.sum(manifest_rows.column("bytes_out")).as_py() or 0
-    first_col = df.columns[0]
-    rows = pc.sum(manifest_rows.filter(
-        pc.equal(manifest_rows.column("column"), first_col)
-    ).column("rows")).as_py() or 0
+    shard_files = sorted(set(summaries.column("shard_file").to_pylist()))
+    new_pids = set(summaries.column("pid").to_pylist())
+    snap = store.commit(shard_files, _spark_to_arrow_schema(df), run_id,
+                        new_pids=new_pids, add_delete=upsert_delete,
+                        branch=branch)
+    bi = pc.sum(summaries.column("bytes_in")).as_py() or 0
+    bo = pc.sum(summaries.column("bytes_out")).as_py() or 0
+    rows = pc.sum(summaries.column("rows")).as_py() or 0
     return EncodeResult(
         snapshot=snap, rows=rows, bytes_in=bi, bytes_out=bo,
-        seconds=time.time() - t0,
-        pids_encoded=len(set(manifest_rows.column("pid").to_pylist())),
+        seconds=time.time() - t0, pids_encoded=len(new_pids),
         pids_skipped=len(committed),
     )
 
@@ -749,13 +722,6 @@ def encode_dataframe(
 def _summary_ddl() -> str:
     return ("shard_file string, pid int, rows long, bytes_in long,"
             " bytes_out long, chunks long")
-
-
-def _manifest_ddl() -> str:
-    return ("chunk_file string, pid int, seq int, column string, codec string,"
-            " params string, rows long, nulls long, bytes_in long,"
-            " bytes_out long, offset long, length long, sha256 string,"
-            " run_id string, stat_min string, stat_max string, bloom string")
 
 
 def _spark_to_arrow_schema(df: DataFrame) -> pa.Schema:

@@ -203,16 +203,12 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
 
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        ScanPlan,
+        ScanPlan, _names_df,
     )
     from omi_cpp_parquet_wide_record_spark.operators.encode import (
-        SUMMARY_SCHEMA, _summary_ddl, _write_chunk,
-    )
-    from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-        MANIFEST_SCHEMA,
+        SUMMARY_SCHEMA, _summary_ddl, write_chunks,
     )
 
     plan = ScanPlan.resolve(store_dir)
@@ -230,12 +226,13 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
         [("rows", "max"), ("commit_n", "max")])
     gb = files_t.group_by("pid").aggregate([("rows_max", "sum"),
                                             ("chunk_file", "count")])
+    wanted = None if pids is None else {int(p) for p in pids}
     cand: list[int] = []
     for pid, rows_, nchunks in zip(gb.column("pid").to_pylist(),
                                    gb.column("rows_max_sum").to_pylist(),
                                    gb.column("chunk_file_count").to_pylist()):
-        if pids is not None:
-            if pid in set(int(p) for p in pids):
+        if wanted is not None:
+            if pid in wanted:
                 cand.append(int(pid))
         elif nchunks >= 2 and rows_ / nchunks < min_avg_frac * target_rows:
             cand.append(int(pid))
@@ -259,74 +256,40 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
     run_id = uuid.uuid4().hex
     chunks_dir, manifests_dir = store.chunks_dir, store.manifests_dir
 
-    def task(batches):
-        from pyspark import TaskContext
-
+    def pid_tables(batches):
         from omi_cpp_parquet_wide_record_spark.operators.decode import (
             read_chunk_table,
         )
-        tc = TaskContext.get()
-        tag = (f"{run_id[:8]}-rw{tc.taskAttemptId() if tc else 0}-"
-               f"{uuid.uuid4().hex[:6]}")
-        out_rows: list[dict] = []
-        plan_cache: dict = {}
         for b in batches:
-            for pid, files_js in zip(b.column("pid").to_pylist(),
-                                     b.column("files").to_pylist()):
-                parts = []
-                for fname, n_f in _json.loads(files_js):
-                    # alias-aware read into the nullable live schema:
-                    # pre-rename chunks decode their retired names (the
-                    # rewrite physically migrates them to live names) and
-                    # pre-add-column chunks null-fill. Scoped
-                    # deletes are MATERIALIZED: the rewritten chunks carry
-                    # this commit's n, which exempts them from older
-                    # deletes
-                    t = read_chunk_table(os.path.join(chunks_dir, fname),
-                                         plan.schema, plan.aliases,
-                                         deletes=plan.deletes_for(n_f))
-                    if t.num_rows:
-                        parts.append(t)
-                if not parts:
-                    continue
-                tbl = pa.concat_tables(parts).combine_chunks()
+            for work in b.column("work").to_pylist():
+                pid, files = _json.loads(work)
+                # alias-aware read into the nullable live schema:
+                # pre-rename chunks decode their retired names (the
+                # rewrite physically migrates them to live names) and
+                # pre-add-column chunks null-fill. Scoped deletes are
+                # MATERIALIZED: the rewritten chunks carry this commit's
+                # n, which exempts them from older deletes
+                tbl = pa.concat_tables([
+                    read_chunk_table(os.path.join(chunks_dir, fname),
+                                     plan.schema, plan.aliases,
+                                     deletes=plan.deletes_for(n_f))
+                    for fname, n_f in files])
                 if sort_by:
                     tbl = tbl.sort_by([(c, "ascending") for c in sort_by])
-                for seq, off in enumerate(range(0, tbl.num_rows,
-                                                target_rows)):
-                    out_rows.extend(_write_chunk(
-                        chunks_dir, pid, seq,
-                        tbl.slice(off, target_rows),
-                        plan_cache, run_id, tag))
-        if not out_rows:
-            return
-        cols = {f.name: [r[f.name] for r in out_rows]
-                for f in MANIFEST_SCHEMA}
-        man = pa.table(cols, schema=MANIFEST_SCHEMA)
-        shard = f"manifest-shard-{run_id[:8]}-{tag}.parquet"
-        pq.write_table(man, os.path.join(manifests_dir, shard))
-        first_col = out_rows[0]["column"]
-        agg: dict[int, list] = {}
-        for r in out_rows:
-            a = agg.setdefault(r["pid"], [0, 0, 0, 0])
-            a[0] += r["rows"] if r["column"] == first_col else 0
-            a[1] += r["bytes_in"]
-            a[2] += r["bytes_out"]
-            a[3] += 1
-        yield pa.RecordBatch.from_pydict({
-            "shard_file": [shard] * len(agg),
-            "pid": list(agg),
-            "rows": [a[0] for a in agg.values()],
-            "bytes_in": [a[1] for a in agg.values()],
-            "bytes_out": [a[2] for a in agg.values()],
-            "chunks": [a[3] for a in agg.values()],
-        }, schema=SUMMARY_SCHEMA)
+                for batch in tbl.to_batches():
+                    yield pid, batch
 
-    rows = [(p, _json.dumps(fs)) for p, fs in sorted(per_pid.items())]
-    fdf = spark.createDataFrame(rows, "pid int, files string").repartition(
-        min(len(rows), spark.sparkContext.defaultParallelism * 2))
-    summaries = fdf.mapInArrow(task, _summary_ddl()).toArrow() \
-        .cast(SUMMARY_SCHEMA)
+    def task(batches):
+        # rows-only budget: every rewritten chunk but a pid's last holds
+        # exactly target_rows
+        yield from write_chunks(
+            pid_tables(batches), chunks_dir=chunks_dir,
+            manifests_dir=manifests_dir, run_id=run_id,
+            chunk_rows=target_rows, chunk_bytes=1 << 62)
+
+    work = [_json.dumps([p, fs]) for p, fs in sorted(per_pid.items())]
+    summaries = _names_df(spark, work, "work").mapInArrow(
+        task, _summary_ddl()).toArrow().cast(SUMMARY_SCHEMA)
     shard_files = sorted(set(summaries.column("shard_file").to_pylist()))
     # CAS: the rewrite read its file plan (and materialized deletes) from
     # `snap` — rows appended or deleted for a selected pid while the

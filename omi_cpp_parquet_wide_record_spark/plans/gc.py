@@ -64,20 +64,49 @@ def expire_snapshots(store: ChunkStore, keep_last: int = 1,
     """Drop all but the newest `keep_last` snapshots plus any manifests and
     chunk files only they referenced. Returns a deletion report.
 
-    The METADATA phase (snapshot/refs read through snapshot-JSON removal)
-    runs under the store's commit lock: a commit writes snapshot-N.json
-    and only then flips `_current`/refs, so an unlocked GC racing that
-    window classified the about-to-be-referenced snapshot as dead and
-    removed it — leaving the pointer at a missing file. Snapshot JSON
-    deletion additionally honors ``older_than_s`` like every other
-    artifact class (belt and braces for lock-free callers)."""
+    Only the METADATA phase (snapshot/refs read through snapshot-JSON
+    removal) runs under the store's commit lock: a commit writes
+    snapshot-N.json and only then flips `_current`/refs, so an unlocked
+    GC racing that window classified the about-to-be-referenced snapshot
+    as dead and removed it — leaving the pointer at a missing file.
+    Snapshot JSON deletion additionally honors ``older_than_s`` like
+    every other artifact class (belt and braces for lock-free callers).
+    The file phase (orphan manifests, chunks and delete files) runs after
+    the lock is released, so a long orphan scan never blocks commits;
+    a commit landing meanwhile only references live manifests or files
+    it just wrote, which ``older_than_s`` protects."""
     keep_last = max(int(keep_last), 0)
     with store._commit_lock():
-        return _expire_snapshots_locked(store, keep_last, older_than_s)
+        dead, retained = _expire_snapshot_metadata(store, keep_last,
+                                                   older_than_s)
+    live_manifests = {m for _, s in retained for m in s["manifests"]}
+    removed_manifests = []
+    for m in os.listdir(store.manifests_dir):
+        p = os.path.join(store.manifests_dir, m)
+        if m not in live_manifests and _old_enough(p, older_than_s):
+            os.remove(p)
+            removed_manifests.append(m)
+    orphans = _remove_orphan_chunks(store, retained, older_than_s)
+    removed_deletes = _remove_orphan_delete_files(store, retained,
+                                                 older_than_s)
+    # broken-lock debris (renamed by _commit_lock's stale breaking)
+    for f in os.listdir(store.root):
+        if f.startswith("_commit.lock.stale."):
+            try:
+                os.remove(os.path.join(store.root, f))
+            except OSError:
+                pass
+    return {"removed_snapshots": dead,
+            "removed_manifests": removed_manifests,
+            "removed_orphan_chunks": orphans,
+            "removed_delete_files": removed_deletes}
 
 
-def _expire_snapshots_locked(store: ChunkStore, keep_last: int,
-                             older_than_s: float) -> dict:
+def _expire_snapshot_metadata(store: ChunkStore, keep_last: int,
+                              older_than_s: float
+                              ) -> tuple[list[str], list[tuple[str, dict]]]:
+    """Under the commit lock: classify snapshots live/dead, remove the
+    dead snapshot JSONs, return (dead names, retained snapshots)."""
     snaps, unparsable = _load_snapshots(store)
     names = [n for n, _ in snaps]
     # the snapshot _current points to is live unconditionally — a crash
@@ -140,33 +169,9 @@ def _expire_snapshots_locked(store: ChunkStore, keep_last: int,
     for n in [n for n in names if n not in live] + unparsable:
         if _old_enough(os.path.join(store.snapshots_dir, n), older_than_s):
             dead.append(n)
-    live_manifests: set[str] = set()
-    for name in sorted(live):
-        if name in by_name:
-            live_manifests.update(by_name[name]["manifests"])
-    removed_manifests = []
     for name in dead:
         os.remove(os.path.join(store.snapshots_dir, name))
-    for m in os.listdir(store.manifests_dir):
-        p = os.path.join(store.manifests_dir, m)
-        if m not in live_manifests and _old_enough(p, older_than_s):
-            os.remove(p)
-            removed_manifests.append(m)
-    retained = [(n, s) for n, s in snaps if n in live]
-    orphans = _remove_orphan_chunks(store, retained, older_than_s)
-    removed_deletes = _remove_orphan_delete_files(store, retained,
-                                                 older_than_s)
-    # broken-lock debris (renamed by _commit_lock's stale breaking)
-    for f in os.listdir(store.root):
-        if f.startswith("_commit.lock.stale."):
-            try:
-                os.remove(os.path.join(store.root, f))
-            except OSError:
-                pass
-    return {"removed_snapshots": dead,
-            "removed_manifests": removed_manifests,
-            "removed_orphan_chunks": orphans,
-            "removed_delete_files": removed_deletes}
+    return dead, [(n, s) for n, s in snaps if n in live]
 
 
 def remove_orphan_chunks(store: ChunkStore,

@@ -525,14 +525,16 @@ class ChunkStore:
                expected_parent_id: str | None = None) -> dict:
         """Append a manifest and flip the snapshot pointer atomically.
 
-        ``manifest`` is either a driver-held Arrow table (written here as
-        one manifest file) or a list of manifest SHARD file names the
-        encode tasks already wrote executor-side into ``manifests_dir``.
-        The sharded form is the at-scale path: chunk-level manifest rows
-        scale with the data (one row per chunk column — tens of millions
-        at corpus scale), so they must never be collected to the driver;
-        only the shard NAMES (one per task) and the pid-level rollup reach
-        the commit. ``new_pids`` is required with the sharded form.
+        ``manifest`` is a list of manifest SHARD file names that
+        ``operators.encode.write_chunks`` already wrote executor-side into
+        ``manifests_dir`` — the form every engine write path commits:
+        chunk-level manifest rows scale with the data (one row per chunk
+        column — tens of millions at corpus scale), so they must never be
+        collected to the driver; only the shard NAMES (one per task) and
+        the pid-level rollup reach the commit. ``new_pids`` is required
+        with it. A driver-held Arrow table (written here as one manifest
+        file) is also accepted; it serves tests and tools that build
+        partial stores by hand.
 
         ``replace=True`` is the Iceberg REPLACE commit: the new snapshot
         references only this manifest (prior data, deletes, and pids drop

@@ -12,11 +12,13 @@ the engine's native format deserves a first-class Spark source AND sink:
 Read: one input partition per chunk file (so a 10^12-row store fans out
 over the cluster), column pruning pushed into the chunk footer (only
 requested columns are decoded), batches stream out as Arrow. Write: each
-task encodes its partition's Arrow batches into chunk files and returns
-only manifest rows as its commit message; the driver's commit() writes the
-manifest and flips the snapshot pointer atomically — Spark's two-phase
+task feeds its partition's Arrow batches to the store's one chunk writer
+(``operators.encode.write_chunks``), which writes the chunk files and a
+manifest shard executor-side; the commit message is only the task's pid
+rollup (shard name and pid). The driver's commit() references every
+shard and flips the snapshot pointer atomically — Spark's two-phase
 writer protocol mapped 1:1 onto the store's Iceberg-style commit, so a
-failed job leaves only invisible orphan chunks. The engine's kernels never
+failed job leaves only invisible orphan files. The engine's kernels never
 materialize Python rows on either path.
 
 For resume-from-checkpoint and content-derived work units use
@@ -97,19 +99,23 @@ class OwrcReader(DataSourceReader):
                                    plan.deletes_for(n), plan.aliases)
                 for f, n in plan.kept_files(self._zone_filters).items()]
 
-    def read(self, partition: OwrcInputPartition):
+    def read(self, partition: OwrcInputPartition | None):
         from pyspark.sql.pandas.types import to_arrow_schema
         from omi_cpp_parquet_wide_record_spark.operators.decode import (
             read_chunk_table,
         )
+        if partition is None:
+            # Spark reads an empty plan (every file pruned) as read(None)
+            return
         yield from read_chunk_table(
             partition.path, to_arrow_schema(self.schema), partition.aliases,
             deletes=partition.deletes).to_batches()
 
 
 class OwrcCommitMessage(WriterCommitMessage):
-    def __init__(self, rows: list[dict]):
-        self.rows = rows
+    def __init__(self, rollup: list[dict]):
+        # the task's pid rollup (SUMMARY_SCHEMA rows): shard name + pids
+        self.rollup = rollup
 
 
 class OwrcArrowWriter(DataSourceArrowWriter):
@@ -130,69 +136,33 @@ class OwrcArrowWriter(DataSourceArrowWriter):
         ChunkStore(self.root).create()
 
     def write(self, iterator):
-        """Executor side: Arrow batches -> encoded chunk files; only
-        manifest metadata travels back to the driver."""
-        import os
-        import uuid
-        import pyarrow as pa
+        """Executor side: the task's Arrow batches (work unit = Spark
+        partition) go through the store's one chunk writer; only the
+        shard name and pid travel back to the driver."""
         from pyspark import TaskContext
         from omi_cpp_parquet_wide_record_spark.operators.encode import (
-            _write_chunk,
+            write_chunks,
         )
+        from omi_cpp_parquet_wide_record_spark.plans.snapshot import ChunkStore
         tc = TaskContext.get()
         pid = tc.partitionId() if tc else 0
-        tag = f"{self.run_id[:8]}-w{uuid.uuid4().hex[:6]}"
-        chunks_dir = os.path.join(self.root, "chunks")
-        plan_cache: dict = {}
-        rows: list[dict] = []
-        acc: list[pa.RecordBatch] = []
-        acc_rows = acc_bytes = seq = 0
-
-        def flush():
-            nonlocal acc, acc_rows, acc_bytes, seq
-            if not acc:
-                return
-            tbl = pa.Table.from_batches(acc)
-            rows.extend(_write_chunk(chunks_dir, pid, seq, tbl, plan_cache,
-                                     self.run_id, tag))
-            seq += 1
-            acc, acc_rows, acc_bytes = [], 0, 0
-
-        for batch in iterator:
-            if batch.num_rows == 0:
-                continue
-            acc.append(batch)
-            acc_rows += batch.num_rows
-            acc_bytes += batch.nbytes
-            if acc_rows >= self.chunk_rows or acc_bytes >= self.chunk_bytes:
-                flush()
-        flush()
-        return OwrcCommitMessage(rows)
+        store = ChunkStore(self.root)
+        rollup = write_chunks(
+            ((pid, b) for b in iterator), chunks_dir=store.chunks_dir,
+            manifests_dir=store.manifests_dir, run_id=self.run_id,
+            chunk_rows=self.chunk_rows, chunk_bytes=self.chunk_bytes)
+        return OwrcCommitMessage([r for b in rollup for r in b.to_pylist()])
 
     def commit(self, messages):
         """Driver side: one atomic snapshot commit over every task's
-        manifest rows (the two-phase protocol's visibility flip)."""
-        import pyarrow as pa
+        manifest shard (the two-phase protocol's visibility flip)."""
         from pyspark.sql.pandas.types import to_arrow_schema
-        from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-            MANIFEST_SCHEMA, ChunkStore,
-        )
-        rows = [r for m in messages for r in m.rows]
-        cols = {f.name: [r[f.name] for r in rows] for f in MANIFEST_SCHEMA}
-        manifest = pa.Table.from_pydict(cols, schema=MANIFEST_SCHEMA)
-        store = ChunkStore(self.root)
-        prior = store.current_snapshot()
-        if prior is not None and not self.overwrite:
-            # retired names (schema evolution) can never be reused —
-            # same guard as encode_dataframe
-            bad = set(prior.get("retired_names", [])) & \
-                {f.name for f in self.schema.fields}
-            if bad:
-                raise ValueError(
-                    f"column name(s) {sorted(bad)} were retired by a "
-                    "schema evolution and cannot be reused")
-        store.commit(manifest, to_arrow_schema(self.schema),
-                     self.run_id, replace=self.overwrite)
+        from omi_cpp_parquet_wide_record_spark.plans.snapshot import ChunkStore
+        rollup = [r for m in messages for r in m.rollup]
+        ChunkStore(self.root).commit(
+            sorted({r["shard_file"] for r in rollup}),
+            to_arrow_schema(self.schema), self.run_id,
+            new_pids={r["pid"] for r in rollup}, replace=self.overwrite)
 
     def abort(self, messages):
         # nothing to undo: the pointer never flipped, so the written chunk

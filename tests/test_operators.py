@@ -690,6 +690,23 @@ def test_owrc_datasource_write_path(spark, tmp_path):
     # overwrite replaces, not appends
     corpus.limit(300).write.format("owrc").mode("overwrite").save(out)
     assert spark.read.format("owrc").load(out).count() == 300
+    # chunk_rows splits oversize partitions: 1000-row partitions at 700
+    FX.web_pages_df(spark, 2000, partitions=2).write.format("owrc") \
+        .option("chunk_rows", 700).mode("overwrite").save(out)
+    store = ChunkStore(out)
+    files = store.manifest_table().group_by("chunk_file").aggregate(
+        [("rows", "max")]).column("rows_max").to_pylist()
+    assert sum(files) == 2000 and max(files) <= 700, files
+    # each task commits its own manifest shard, numbered for delete scoping
+    snap = store.current_snapshot()
+    assert snap["manifests"] and all(
+        m.startswith("manifest-shard-") for m in snap["manifests"])
+    assert set(snap["manifest_n"]) == set(snap["manifests"])
+    # an empty overwrite empties the live table; time travel keeps the old
+    corpus.limit(0).write.format("owrc").mode("overwrite").save(out)
+    assert decode_store(spark, out).count() == 0
+    assert spark.read.format("owrc").load(out).count() == 0
+    assert decode_store(spark, out, snapshot=snap["n"]).count() == 2000
     corpus.unpersist()
 
 

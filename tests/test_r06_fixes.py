@@ -156,6 +156,42 @@ def test_expire_snapshots_age_guard_on_snapshot_json(spark, tmp_path):
     assert len(rep["removed_snapshots"]) == 1
 
 
+def test_expire_snapshots_unlocks_before_file_phase(spark, tmp_path,
+                                                    monkeypatch):
+    """expire_snapshots holds the commit lock for the metadata phase
+    only: a writer can take the lock while orphan files are removed."""
+    import threading
+    from omi_cpp_parquet_wide_record_spark.operators.encode import (
+        encode_dataframe,
+    )
+    from omi_cpp_parquet_wide_record_spark.plans import gc
+    from omi_cpp_parquet_wide_record_spark.plans.snapshot import ChunkStore
+    out = str(tmp_path / "gclock")
+    df = spark.createDataFrame([(i,) for i in range(10)], "k long")
+    encode_dataframe(df, out, salt_key="k", num_pids=2)
+    encode_dataframe(df, out, salt_key="k", num_pids=2, resume=False)
+    store = ChunkStore(out)
+    seen = []
+    real = gc._remove_orphan_chunks
+
+    def probe(*args):
+        def take_lock():
+            try:
+                with store._commit_lock(timeout_s=1):
+                    seen.append("locked")
+            except TimeoutError as e:
+                seen.append(e)
+        t = threading.Thread(target=take_lock)
+        t.start()
+        t.join(timeout=30)
+        return real(*args)
+
+    monkeypatch.setattr(gc, "_remove_orphan_chunks", probe)
+    rep = gc.expire_snapshots(store, keep_last=1)
+    assert seen == ["locked"]
+    assert len(rep["removed_snapshots"]) == 1
+
+
 # ------------------------------------------------- fingerprint parity
 
 def test_engine_fingerprint_matches_under_zipimport(tmp_path):
