@@ -235,21 +235,6 @@ def _column_bloom(arr: pa.Array) -> str | None:
     return base64.b64encode(np.packbits(bits).tobytes()).decode()
 
 
-def bloom_might_contain(bloom_b64: str, value: bytes) -> bool:
-    """Driver-side membership probe (must mirror _column_bloom exactly)."""
-    import base64
-    bits = np.unpackbits(np.frombuffer(base64.b64decode(bloom_b64),
-                                       dtype=np.uint8))
-    hashes = []
-    for base in (257, 263):
-        a = 1 % BLOOM_P
-        for c in value[:BLOOM_PREFIX]:
-            a = (a * base + c) % BLOOM_P
-        hashes.append(a)
-    h1, h2 = hashes
-    return all(bits[(h1 + i * h2) % BLOOM_BITS] for i in range(BLOOM_K))
-
-
 def _write_chunk(chunks_dir: str, pid: int, seq: int, table: pa.Table,
                  plan_cache: dict, run_id: str, tag: str,
                  overrides: dict | None = None,
@@ -530,11 +515,9 @@ def encode_dataframe(
     resume: bool = True,
     run_id: str | None = None,
     codec_overrides: dict | None = None,
-    num_tasks: int | None = None,
     colocate: str = "shuffle",
     sort_by: list[str] | None = None,
     zorder_by: list[str] | None = None,
-    zorder_stats_sample: float | None = None,
     upsert_key: str | None = None,
     branch: str | None = None,
 ) -> EncodeResult:
@@ -544,12 +527,6 @@ def encode_dataframe(
     (e.g. ["lang"] — DICT/FSST tables then specialize per language).
     salt_key: high-cardinality column (e.g. "url") hashed into the pid to
     split skewed partition_by values across `salt` buckets.
-    num_tasks: Spark partitions for the encode stage. Decoupled from
-    num_pids on purpose: pids are the CONTENT-DERIVED work/resume/skew
-    unit (fine-grained, ~MBs), while the JVM->Python Arrow runner costs
-    ~5 ms per TASK — so several pids ride in one task (the encode task
-    groups by pid internally and flushes per-pid chunks). Default
-    4 x defaultParallelism, cap num_pids.
     colocate: how a pid's rows reach one encode kernel.
       - "shuffle" (default): one repartition co-locates each pid globally
         — one chunk set per pid, best for fine-grained pids / bounded
@@ -577,9 +554,8 @@ def encode_dataframe(
       maps prune on ANY of the named columns instead of only the first
       of a lexicographic order. Costs one column-pruned min/max
       aggregate over the input for the normalization range
-      (``zorder_stats_sample`` estimates it from a fraction at corpus
-      scale — layout-only statistics, values are clamped). Mutually
-      exclusive with sort_by.
+      (layout-only statistics, values are clamped). Mutually exclusive
+      with sort_by.
     upsert_key: MERGE-style replace-by-key (Iceberg upsert). The batch's
       distinct key values are committed as an equality-delete file IN THE
       SAME snapshot as the appended data: the delete is sequence-scoped
@@ -647,27 +623,27 @@ def encode_dataframe(
 
     if colocate == "shuffle":
         shuffle_key = F.col(PID_COL)
-        if num_tasks is None:
-            base = max(spark.sparkContext.defaultParallelism * 4, 8)
-            if num_pids <= base * 4:
-                # few-pids regime: hash-partitioning m pids into ~m tasks
-                # collides (birthday) — some tasks carry 2-3 work units
-                # and set the last wave's tail. r5 first fixed this with
-                # 2m partitions (most tasks one pid, ~40% empty); the
-                # exact mapping below beats that on BOTH axes: pid p is
-                # routed to partition p % T deterministically (zero
-                # collisions, every task carries ⌈m/T⌉ or ⌊m/T⌋ units),
-                # and T ≈ max(2·cores, m/2) halves the task count — the
-                # JVM->Python Arrow runner costs are per TASK (measured
-                # floor at bench scale: 246 tasks 2.7 s, 123 2.4 s,
-                # 64 1.6 s for a no-op consumer of the same shuffle).
-                num_tasks = min(num_pids,
-                                max(spark.sparkContext
-                                    .defaultParallelism * 2,
-                                    -(-num_pids // 2)))
-                shuffle_key = _exact_partition_key(num_tasks)
-            else:
-                num_tasks = base
+        # encode-stage task count: pids are the content-derived
+        # work/resume/skew unit, while the JVM->Python Arrow runner costs
+        # ~5 ms per TASK, so several pids ride in one task
+        num_tasks = max(spark.sparkContext.defaultParallelism * 4, 8)
+        if num_pids <= num_tasks * 4:
+            # few-pids regime: hash-partitioning m pids into ~m tasks
+            # collides (birthday) — some tasks carry 2-3 work units
+            # and set the last wave's tail. r5 first fixed this with
+            # 2m partitions (most tasks one pid, ~40% empty); the
+            # exact mapping below beats that on BOTH axes: pid p is
+            # routed to partition p % T deterministically (zero
+            # collisions, every task carries ⌈m/T⌉ or ⌊m/T⌋ units),
+            # and T ≈ max(2·cores, m/2) halves the task count — the
+            # JVM->Python Arrow runner costs are per TASK (measured
+            # floor at bench scale: 246 tasks 2.7 s, 123 2.4 s,
+            # 64 1.6 s for a no-op consumer of the same shuffle).
+            num_tasks = min(num_pids,
+                            max(spark.sparkContext
+                                .defaultParallelism * 2,
+                                -(-num_pids // 2)))
+            shuffle_key = _exact_partition_key(num_tasks)
         work = work.repartition(num_tasks, shuffle_key)
     elif colocate != "local":
         raise ValueError(f"colocate must be 'shuffle' or 'local': {colocate}")
@@ -678,7 +654,7 @@ def encode_dataframe(
         from omi_cpp_parquet_wide_record_spark.operators.zorder import (
             ZKEY_COL, zorder_key,
         )
-        zkey = zorder_key(df, zorder_by, zorder_stats_sample)
+        zkey = zorder_key(df, zorder_by)
         work = (work.withColumn(ZKEY_COL, zkey)
                 .sortWithinPartitions(PID_COL, ZKEY_COL).drop(ZKEY_COL))
     elif sort_by:

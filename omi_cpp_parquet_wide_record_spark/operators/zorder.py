@@ -15,9 +15,7 @@ Each column is mapped to an orderable non-negative long ("ordinal"),
 min/max-normalized into 16 bits via one column-pruned aggregate over the
 input, and bit-interleaved with stride k. NULL ordinals sort as 0 (the
 column's minimum), matching NULLS FIRST. The normalization statistics
-affect only LAYOUT quality — clamping keeps any out-of-range value legal
-— so callers at corpus scale may pass ``stats_sample`` to estimate the
-min/max from a fraction of the input instead of a full pass.
+affect only LAYOUT quality — clamping keeps any out-of-range value legal.
 """
 
 from __future__ import annotations
@@ -94,13 +92,12 @@ def _interleave(quantized: list[Column], bits: int = _BITS) -> Column:
     return out
 
 
-def zorder_key(df: DataFrame, cols: list[str],
-               stats_sample: float | None = None) -> Column:
+def zorder_key(df: DataFrame, cols: list[str]) -> Column:
     """The Morton sort-key expression for ``cols`` over ``df``.
 
-    Runs ONE column-pruned min/max aggregate over ``df`` (or a
-    ``stats_sample`` fraction of it) to learn each column's range —
-    layout-only statistics; clamping keeps out-of-range rows legal.
+    Runs ONE column-pruned min/max aggregate over ``df`` to learn each
+    column's range — layout-only statistics; clamping keeps out-of-range
+    rows legal.
     """
     if not 2 <= len(cols) <= 4:
         raise ValueError("zorder_by takes 2-4 columns")
@@ -110,11 +107,10 @@ def zorder_key(df: DataFrame, cols: list[str],
     # the 4th column's top bit set)
     bits = _BITS if len(cols) * _BITS <= 63 else 63 // len(cols)
     ords = [_ordinal(df, c) for c in cols]
-    src = df.sample(stats_sample) if stats_sample else df
     aggs = []
     for c, o in zip(cols, ords):
         aggs += [F.min(o).alias(f"lo_{c}"), F.max(o).alias(f"hi_{c}")]
-    row = src.agg(*aggs).first()
+    row = df.agg(*aggs).first()
     qs = [_quantize(o, row[f"lo_{c}"] or 0, row[f"hi_{c}"] or 0, bits)
           for c, o in zip(cols, ords)]
     return _interleave(qs, bits)

@@ -20,16 +20,9 @@ import json
 import os
 import time
 
-from omi_cpp_parquet_wide_record_spark.plans.snapshot import ChunkStore
-
-
-def _snapshot_n(name: str) -> int:
-    """Numeric commit number from a snapshot filename — lexical sorting
-    misorders history past 99999 commits (the 05d padding overflows)."""
-    try:
-        return int(name.split("-")[1].split(".")[0])
-    except (IndexError, ValueError):
-        return -1
+from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
+    ChunkStore, _snapshot_name,
+)
 
 
 def _load_snapshots(store: ChunkStore) -> tuple[list[tuple[str, dict]],
@@ -41,7 +34,7 @@ def _load_snapshots(store: ChunkStore) -> tuple[list[tuple[str, dict]],
     stores or foreign files: unparsable snapshots are surfaced so the
     caller can treat non-live ones as dead."""
     good, bad = [], []
-    for name in sorted(os.listdir(store.snapshots_dir), key=_snapshot_n):
+    for name in store._snapshot_names():
         try:
             with open(os.path.join(store.snapshots_dir, name)) as f:
                 good.append((name, json.load(f)))
@@ -89,13 +82,6 @@ def expire_snapshots(store: ChunkStore, keep_last: int = 1,
     orphans = _remove_orphan_chunks(store, retained, older_than_s)
     removed_deletes = _remove_orphan_delete_files(store, retained,
                                                  older_than_s)
-    # broken-lock debris (renamed by _commit_lock's stale breaking)
-    for f in os.listdir(store.root):
-        if f.startswith("_commit.lock.stale."):
-            try:
-                os.remove(os.path.join(store.root, f))
-            except OSError:
-                pass
     return {"removed_snapshots": dead,
             "removed_manifests": removed_manifests,
             "removed_orphan_chunks": orphans,
@@ -110,13 +96,10 @@ def _expire_snapshot_metadata(store: ChunkStore, keep_last: int,
     snaps, unparsable = _load_snapshots(store)
     names = [n for n, _ in snaps]
     # the snapshot _current points to is live unconditionally — a crash
-    # between snapshot-json write and the pointer flip leaves a lexically
+    # between snapshot-json write and the pointer flip leaves a
     # newer snapshot file that _current does NOT reference; keep-last must
     # never delete the pointed-to one (ADVICE r1 #3)
-    current = None
-    if os.path.exists(store.current_path):
-        with open(store.current_path) as f:
-            current = f.read().strip()
+    current = store.current_name()
     # tolerate minimal/foreign snapshot JSON (missing ids): such entries
     # simply can't participate in ancestry walks
     by_id = {s["snapshot_id"]: (name, s) for name, s in snaps
@@ -149,7 +132,7 @@ def _expire_snapshot_metadata(store: ChunkStore, keep_last: int,
     # snapshot would strand a publishable branch.
     refs = store.refs()
     for n in refs.get("tags", {}).values():
-        live.add(f"snapshot-{int(n):05d}.json")
+        live.add(_snapshot_name(int(n)))
     for n in refs.get("branches", {}).values():
         walk = by_n.get(int(n))
         while walk is not None:

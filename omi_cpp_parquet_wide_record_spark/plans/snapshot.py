@@ -5,17 +5,25 @@ The store replaces the reference's single output Parquet file (converter ctor
 column chunks:
 
     <root>/chunks/chunk-p<pid>-s<seq>-<tag>.owrc     column payloads + footer
-    <root>/manifests/manifest-<n>.parquet            one row per column chunk
+    <root>/manifests/manifest-shard-*.parquet        one row per column chunk,
+                                                     one shard per write task
+    <root>/manifests/manifest-<n>-*.parquet          driver-held table commits
+    <root>/deletes/delete-<n>-*.parquet              equality-delete keys
     <root>/snapshots/snapshot-<n>.json               manifest list + lineage
     <root>/_current                                  name of live snapshot
+    <root>/refs.json                                 tags and branch heads
+    <root>/_commit.lock                              writer lock (transient)
 
-Commit protocol (single-writer, Iceberg-flavored): write the new manifest
-parquet, write snapshot-<n>.json referencing parent snapshot + all live
-manifests, then atomically os.replace() the _current pointer. A crash before
-the pointer flip leaves the previous snapshot live and the new chunk files
-orphaned (ignored by readers, removable by GC). Resume = the set of committed
-partition ids in the live snapshot; the encode job anti-joins its work units
-against it (SURVEY.md §2.2).
+Commit protocol (Iceberg-flavored): writers serialize on ``_commit.lock``
+and every metadata change - append, delete, evolve, rollback, branch
+commit - publishes through one step, ``ChunkStore._publish``: write
+snapshot-<n>.json (tmp + rename), then advance the branch ref or
+atomically rename a new _current pointer into place (``fast_forward``
+flips _current to an existing snapshot). A crash before the flip leaves the
+previous snapshot live and the new files orphaned (ignored by readers,
+removable by GC). Resume = the set of committed partition ids in the
+live snapshot; the encode job anti-joins its work units against it
+(SURVEY.md §2.2).
 
 No Iceberg runtime jar exists in this sandbox (verified); the snapshot JSON
 convention keeps identical semantics and would swap for Iceberg REPLACE
@@ -26,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 
@@ -64,6 +73,23 @@ MANIFEST_SCHEMA = pa.schema([
 ])
 
 
+# lineage fields ``_publish`` stamps on every snapshot; the rest is content
+_HEADER = ("n", "snapshot_id", "parent_id", "created_ms", "run_id")
+
+
+def _snapshot_name(n: int) -> str:
+    return f"snapshot-{n:05d}.json"
+
+
+def _snapshot_n(name: str) -> int:
+    """Commit number of a snapshot file name (-1 for foreign files) —
+    numeric, because the 05d padding overflows past 99999 commits."""
+    try:
+        return int(name.split("-")[1].split(".")[0])
+    except (IndexError, ValueError):
+        return -1
+
+
 class CommitConflict(RuntimeError):
     """Optimistic-concurrency failure: the table head moved between the
     snapshot a commit was derived from and the commit itself (Iceberg's
@@ -88,18 +114,24 @@ class ChunkStore:
 
     # ------------------------------------------------------------- reading
 
-    def current_snapshot(self) -> dict | None:
+    def current_name(self) -> str | None:
+        """File name of the live snapshot (what `_current` holds)."""
         if not os.path.exists(self.current_path):
             return None
         with open(self.current_path) as f:
-            name = f.read().strip()
+            return f.read().strip()
+
+    def current_snapshot(self) -> dict | None:
+        name = self.current_name()
+        if name is None:
+            return None
         with open(os.path.join(self.snapshots_dir, name)) as f:
             return json.load(f)
 
     def snapshot_at(self, n: int) -> dict:
         """Time travel: load committed snapshot #n (Iceberg's
         snapshot-id / as-of read). Raises if expired or never committed."""
-        path = os.path.join(self.snapshots_dir, f"snapshot-{n:05d}.json")
+        path = os.path.join(self.snapshots_dir, _snapshot_name(n))
         if not os.path.exists(path):
             raise FileNotFoundError(
                 f"snapshot {n} not found under {self.snapshots_dir} "
@@ -165,9 +197,11 @@ class ChunkStore:
                             # could delete the lock a faster waiter
                             # already re-acquired (double-holder); only
                             # ONE rename of the same source succeeds,
-                            # the loser gets ENOENT and loops
-                            os.rename(path, path +
-                                      f".stale.{uuid.uuid4().hex[:8]}")
+                            # the loser gets ENOENT and loops. The
+                            # winner alone owns the renamed file.
+                            stale = path + f".stale.{uuid.uuid4().hex[:8]}"
+                            os.rename(path, stale)
+                            os.remove(stale)
                             continue
                     except OSError:
                         continue                # vanished: retry acquire
@@ -194,10 +228,6 @@ class ChunkStore:
     def create_tag(self, name: str, snapshot: int | None = None) -> dict:
         """Tag a committed snapshot (default: the live one). Rejects
         duplicates — retag by removing first (tags are immutable)."""
-        import re
-        if not re.fullmatch(r"[A-Za-z0-9._-]+", name or ""):
-            raise ValueError(f"invalid tag name {name!r} "
-                             "(use letters, digits, . _ -)")
         snap = self.snapshot_at(snapshot) if snapshot is not None \
             else self.current_snapshot()
         if snap is None:
@@ -208,12 +238,21 @@ class ChunkStore:
             if name in refs["tags"]:
                 raise ValueError(f"tag {name!r} already exists "
                                  f"(at snapshot {refs['tags'][name]})")
-            if name == "main" or name in refs["branches"]:
-                raise ValueError(f"tag name {name!r} collides with "
-                                 "'main' or an existing branch")
+            self._check_ref_name(name, "tag")
             refs["tags"][name] = int(snap["n"])
             self._write_refs(refs)
         return {"tag": name, "snapshot": int(snap["n"])}
+
+    def _check_ref_name(self, name: str, kind: str) -> None:
+        """Ref names are path-safe, and 'main', tags and branches share
+        one namespace (checked under the commit lock)."""
+        if not re.fullmatch(r"[A-Za-z0-9._-]+", name or ""):
+            raise ValueError(f"invalid {kind} name {name!r} "
+                             "(use letters, digits, . _ -)")
+        others = "branches" if kind == "tag" else "tags"
+        if name == "main" or name in self.refs()[others]:
+            raise ValueError(f"{kind} name {name!r} collides with 'main' "
+                             f"or existing {others}")
 
     def remove_tag(self, name: str) -> dict:
         with self._commit_lock():
@@ -254,18 +293,19 @@ class ChunkStore:
             return self.snapshot_at(int(refs["branches"][branch]))
         return self.current_snapshot()
 
+    def _snapshot_names(self) -> list[str]:
+        """Snapshot file names, oldest commit first (numeric order)."""
+        if not os.path.isdir(self.snapshots_dir):
+            return []
+        return sorted(os.listdir(self.snapshots_dir),
+                      key=lambda name: (_snapshot_n(name), name))
+
     def _next_n(self) -> int:
         """Globally unique next commit number: branch commits and main
         commits share one n sequence (snapshot filenames embed n), so
         the next n is max-over-all-snapshots + 1, not parent.n + 1."""
-        ns = [-1]
-        if os.path.isdir(self.snapshots_dir):
-            for name in os.listdir(self.snapshots_dir):
-                try:
-                    ns.append(int(name.split("-")[1].split(".")[0]))
-                except (IndexError, ValueError):
-                    pass
-        return max(ns) + 1
+        names = self._snapshot_names()
+        return _snapshot_n(names[-1]) + 1 if names else 0
 
     def fast_forward(self, branch: str) -> dict:
         """Publish a branch (Iceberg fast_forward / the P of
@@ -276,35 +316,29 @@ class ChunkStore:
         over parent_id), so a fast-forward can never silently discard
         main commits that landed after the fork."""
         with self._commit_lock():
-            return self._fast_forward_locked(branch)
-
-    def _fast_forward_locked(self, branch: str) -> dict:
-        refs = self.refs()
-        if branch not in refs["branches"]:
-            raise KeyError(f"no branch {branch!r} "
-                           f"(branches: {sorted(refs['branches'])})")
-        head_n = int(refs["branches"][branch])
-        head = self.snapshot_at(head_n)
-        cur = self.current_snapshot()
-        if cur is not None:
-            # one snapshots() load, dict-walked — the per-ancestor
-            # re-scan was O(chain x snapshots) file reads under the lock
-            by_id = {s["snapshot_id"]: s for s in self.snapshots()
-                     if "snapshot_id" in s}
-            ids = set()
-            walk: dict | None = head
-            while walk is not None:
-                ids.add(walk["snapshot_id"])
-                walk = by_id.get(walk.get("parent_id"))
-            if cur["snapshot_id"] not in ids:
-                raise ValueError(
-                    f"cannot fast-forward: main head {cur['n']} is not "
-                    f"an ancestor of branch {branch!r} head {head_n} — "
-                    "main advanced since the fork; re-stage the branch")
-        tmp = self.current_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(f"snapshot-{head_n:05d}.json")
-        os.replace(tmp, self.current_path)
+            refs = self.refs()
+            if branch not in refs["branches"]:
+                raise KeyError(f"no branch {branch!r} "
+                               f"(branches: {sorted(refs['branches'])})")
+            head_n = int(refs["branches"][branch])
+            head = self.snapshot_at(head_n)
+            cur = self.current_snapshot()
+            if cur is not None:
+                # one snapshots() load, dict-walked — the per-ancestor
+                # re-scan was O(chain x snapshots) file reads under the lock
+                by_id = {s["snapshot_id"]: s for s in self.snapshots()
+                         if "snapshot_id" in s}
+                ids = set()
+                walk: dict | None = head
+                while walk is not None:
+                    ids.add(walk["snapshot_id"])
+                    walk = by_id.get(walk.get("parent_id"))
+                if cur["snapshot_id"] not in ids:
+                    raise ValueError(
+                        f"cannot fast-forward: main head {cur['n']} is not "
+                        f"an ancestor of branch {branch!r} head {head_n} — "
+                        "main advanced since the fork; re-stage the branch")
+            self._set_current(_snapshot_name(head_n))
         return {"branch": branch, "published": head_n}
 
     def drop_branch(self, branch: str) -> dict:
@@ -325,36 +359,20 @@ class ChunkStore:
         by time travel until GC expires them, and the rollback itself is
         one atomic pointer flip."""
         with self._commit_lock():
-            return self._rollback_locked(snapshot, run_id)
-
-    def _rollback_locked(self, snapshot: int, run_id: str | None) -> dict:
-        target = self.snapshot_at(int(snapshot))
-        head = self.current_snapshot()
-        if head is None:
-            raise FileNotFoundError(f"no committed snapshot under "
-                                    f"{self.root}")
-        n = self._next_n()
-        snap = {
-            **target,
-            "n": n,
-            "snapshot_id": uuid.uuid4().hex,
-            "parent_id": head["snapshot_id"],
-            "created_ms": int(time.time() * 1000),
-            "run_id": run_id or uuid.uuid4().hex,
-            "rollback_of": int(snapshot),
-        }
-        sname = f"snapshot-{n:05d}.json"
-        self._write_snapshot_json(sname, snap)
-        tmp = self.current_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(sname)
-        os.replace(tmp, self.current_path)
-        return snap
+            target = self.snapshot_at(int(snapshot))
+            head = self.current_snapshot()
+            if head is None:
+                raise FileNotFoundError(f"no committed snapshot under "
+                                        f"{self.root}")
+            body = {k: v for k, v in target.items() if k not in _HEADER}
+            body["rollback_of"] = int(snapshot)
+            return self._publish(self._next_n(), head,
+                                 run_id or uuid.uuid4().hex, body)
 
     def snapshots(self) -> list[dict]:
         """All retained snapshots, oldest first (the table history)."""
         out = []
-        for name in sorted(os.listdir(self.snapshots_dir)):
+        for name in self._snapshot_names():
             with open(os.path.join(self.snapshots_dir, name)) as f:
                 out.append(json.load(f))
         return out
@@ -513,8 +531,9 @@ class ChunkStore:
 
     # ------------------------------------------------------------ commit
 
-    def commit(self, manifest: pa.Table | list[str], schema: pa.Schema,
-               run_id: str, stats: dict | None = None,
+    def commit(self, manifest: pa.Table | list[str],
+               schema: pa.Schema | None,
+               run_id: str,
                replace: bool = False,
                new_pids: set[int] | None = None,
                add_delete: tuple[pa.Table, str] | None = None,
@@ -535,6 +554,10 @@ class ChunkStore:
         with it. A driver-held Arrow table (written here as one manifest
         file) is also accepted; it serves tests and tools that build
         partial stores by hand.
+
+        ``schema=None`` keeps the parent's schema (``commit_deletes``
+        uses it); it is resolved under the lock, so a concurrent schema
+        evolution is never undone.
 
         ``replace=True`` is the Iceberg REPLACE commit: the new snapshot
         references only this manifest (prior data, deletes, and pids drop
@@ -585,145 +608,133 @@ class ChunkStore:
         derivation stale (lost columns, lost rows). On mismatch the
         commit raises ``CommitConflict`` instead of clobbering.
         """
+        import base64
         self.create()
         with self._commit_lock():
-            return self._commit_locked(
-                manifest, schema, run_id, stats, replace, new_pids,
-                add_delete, rewrite_pids, column_aliases, retired_names,
-                branch, expected_parent_id)
-
-    def _commit_locked(self, manifest, schema, run_id, stats, replace,
-                       new_pids, add_delete, rewrite_pids,
-                       column_aliases, retired_names, branch,
-                       expected_parent_id=None) -> dict:
-        import base64
-        import re
-        if branch is not None:
-            if not re.fullmatch(r"[A-Za-z0-9._-]+", branch):
-                raise ValueError(f"invalid branch name {branch!r} "
-                                 "(use letters, digits, . _ -)")
-            if branch == "main" or branch in self.refs()["tags"]:
-                raise ValueError(
-                    f"branch name {branch!r} collides with 'main' or an "
-                    "existing tag")
-            parent = self.branch_head(branch)
-        else:
-            parent = self.current_snapshot()
-        if expected_parent_id is not None and (
-                parent is None
-                or parent.get("snapshot_id") != expected_parent_id):
-            raise CommitConflict(
-                f"head moved since this commit was derived (expected "
-                f"parent {expected_parent_id}, found "
-                f"{parent.get('snapshot_id') if parent else None}) — "
-                "re-derive against the new head and retry")
-        # retired-name guard UNDER the lock (ADVICE r5): writers check it
-        # against the head they read before the lock, but a concurrent
-        # evolve can retire a name in between — re-validate against the
-        # true parent here, for every commit path (batch encode and the
-        # streaming sink both land in this function). Evolve commits pass
-        # their own alias/retired sets and are exempt (their schema is
-        # derived from the head under their own CAS).
-        if (parent is not None and not replace and schema is not None
-                and retired_names is None and column_aliases is None):
-            bad = set(parent.get("retired_names", [])) & set(schema.names)
-            if bad:
+            if branch is not None:
+                self._check_ref_name(branch, "branch")
+                parent = self.branch_head(branch)
+            else:
+                parent = self.current_snapshot()
+            if expected_parent_id is not None and (
+                    parent is None
+                    or parent.get("snapshot_id") != expected_parent_id):
                 raise CommitConflict(
-                    f"column name(s) {sorted(bad)} were retired by a "
-                    "concurrent schema evolution and cannot be reused; "
-                    "pick a fresh name")
-        n = self._next_n()
-        if isinstance(manifest, list):
-            if new_pids is None:
-                raise ValueError("sharded commit needs new_pids")
-            mnames = list(manifest)
-            new_pids = set(int(p) for p in new_pids)
+                    f"head moved since this commit was derived (expected "
+                    f"parent {expected_parent_id}, found "
+                    f"{parent.get('snapshot_id') if parent else None}) — "
+                    "re-derive against the new head and retry")
+            if schema is None and parent is None:
+                raise FileNotFoundError(
+                    f"no committed snapshot under {self.root} to take "
+                    "the schema from")
+            # retired-name guard UNDER the lock (ADVICE r5): writers check
+            # it against the head they read before the lock, but a
+            # concurrent evolve can retire a name in between — re-validate
+            # against the true parent here, for every commit path. Evolve
+            # commits pass their own alias/retired sets and are exempt
+            # (their schema is derived from the head under their own CAS).
+            if (parent is not None and not replace and schema is not None
+                    and retired_names is None and column_aliases is None):
+                bad = set(parent.get("retired_names", [])) & set(schema.names)
+                if bad:
+                    raise CommitConflict(
+                        f"column name(s) {sorted(bad)} were retired by a "
+                        "concurrent schema evolution and cannot be reused; "
+                        "pick a fresh name")
+            n = self._next_n()
+            if isinstance(manifest, list):
+                if new_pids is None:
+                    raise ValueError("sharded commit needs new_pids")
+                mnames = list(manifest)
+                new_pids = set(int(p) for p in new_pids)
+            else:
+                mname = f"manifest-{n:05d}-{uuid.uuid4().hex[:8]}.parquet"
+                pq.write_table(manifest.cast(MANIFEST_SCHEMA),
+                               os.path.join(self.manifests_dir, mname))
+                mnames = [mname]
+                new_pids = set(manifest.column("pid").to_pylist())
+            base = parent if parent is not None and not replace else {}
+            delete_files = list(base.get("delete_files", []))
+            if add_delete is not None:
+                keys, key_col = add_delete
+                dname = f"delete-{n:05d}-{uuid.uuid4().hex[:8]}.parquet"
+                pq.write_table(keys, os.path.join(self.deletes_dir, dname))
+                # "n" scopes the delete (Iceberg sequence numbers): it
+                # applies only to data from manifests committed BEFORE
+                # this snapshot, so a re-inserted key stays visible
+                delete_files.append({"file": dname, "key": key_col, "n": n})
+            body = {
+                "manifests": base.get("manifests", []) + mnames,
+                # commit number per manifest (Iceberg sequence number) —
+                # the delete-scoping reader needs it, and shard filenames
+                # written executor-side cannot encode a number the driver
+                # only assigns at commit time
+                "manifest_n": {**base.get("manifest_n", {}),
+                               **{m: n for m in mnames}},
+                "committed_pids": sorted(
+                    set(base.get("committed_pids", [])) | new_pids),
+                "delete_files": delete_files,
+                # pid-scoped rewrite epochs (JSON keys are strings) + the
+                # manifests incremental readers must skip
+                "pid_rewrites": {**base.get("pid_rewrites", {}),
+                                 **{str(p): n for p in rewrite_pids or ()}},
+                "rewrite_manifests": base.get("rewrite_manifests", [])
+                + (mnames if rewrite_pids else []),
+                # schema-evolution state: live-name -> retired physical
+                # names, and every name ever renamed-away or dropped
+                "column_aliases": base.get("column_aliases", {})
+                if column_aliases is None else column_aliases,
+                "retired_names": base.get("retired_names", [])
+                if retired_names is None else retired_names,
+                "schema_ipc": parent["schema_ipc"] if schema is None
+                else base64.b64encode(schema.serialize().to_pybytes())
+                .decode(),
+            }
+            # no new chunk bytes: the parent's chunks keep their writer's
+            # fingerprint
+            if not mnames and "engine_fingerprint" in base:
+                body["engine_fingerprint"] = base["engine_fingerprint"]
+            return self._publish(n, parent, run_id, body, branch)
+
+    def _publish(self, n: int, parent: dict | None, run_id: str,
+                 body: dict, branch: str | None = None) -> dict:
+        """The one step every snapshot mutation ends in (the caller holds
+        the commit lock): stamp the lineage header on ``body``, write
+        snapshot-<n>.json (tmp + rename, so a crash never leaves a
+        truncated JSON), then advance ``branch``'s ref or flip `_current`.
+        A crash before that last step leaves an orphaned snapshot JSON
+        that readers never follow and GC removes."""
+        snap = {"n": n, "snapshot_id": uuid.uuid4().hex,
+                "parent_id": parent["snapshot_id"] if parent else None,
+                "created_ms": int(time.time() * 1000), "run_id": run_id,
+                **body}
+        # content hash of the encode/decode code that wrote the chunks —
+        # cached-store reuse checks it against the loaded code so a codec
+        # edit can never serve stale bytes
+        snap.setdefault("engine_fingerprint", _engine_fingerprint())
+        name = _snapshot_name(n)
+        path = os.path.join(self.snapshots_dir, name)
+        tmp = path + f".tmp.{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as f:
+            json.dump(snap, f)
+        os.replace(tmp, path)
+        if branch is None:
+            self._set_current(name)
         else:
-            mname = f"manifest-{n:05d}-{uuid.uuid4().hex[:8]}.parquet"
-            pq.write_table(manifest.cast(MANIFEST_SCHEMA),
-                           os.path.join(self.manifests_dir, mname))
-            mnames = [mname]
-            new_pids = set(manifest.column("pid").to_pylist())
-        keep_parent = parent is not None and not replace
-        committed = (set(parent["committed_pids"]) if keep_parent
-                     else set()) | new_pids
-        delete_files = self.delete_files(parent) if keep_parent else []
-        if add_delete is not None:
-            keys, key_col = add_delete
-            dname = f"delete-{n:05d}-{uuid.uuid4().hex[:8]}.parquet"
-            pq.write_table(keys, os.path.join(self.deletes_dir, dname))
-            delete_files = delete_files + [
-                {"file": dname, "key": key_col, "n": n}]
-        snap = {
-            "n": n,
-            "snapshot_id": uuid.uuid4().hex,
-            "parent_id": parent["snapshot_id"] if parent else None,
-            "created_ms": int(time.time() * 1000),
-            "run_id": run_id,
-            "manifests": (parent["manifests"] if keep_parent else [])
-            + mnames,
-            # commit number per manifest (Iceberg sequence number) — the
-            # delete-scoping reader needs it, and shard filenames written
-            # executor-side cannot encode a number the driver only
-            # assigns at commit time
-            "manifest_n": {
-                **(parent.get("manifest_n", {}) if keep_parent else {}),
-                **{m: n for m in mnames},
-            },
-            "committed_pids": sorted(committed),
-            "delete_files": delete_files,
-            # pid-scoped rewrite epochs (JSON keys are strings) + the
-            # manifests incremental readers must skip
-            "pid_rewrites": {
-                **(parent.get("pid_rewrites", {}) if keep_parent else {}),
-                **({str(p): n for p in rewrite_pids} if rewrite_pids
-                   else {}),
-            },
-            "rewrite_manifests": (
-                (parent.get("rewrite_manifests", [])
-                 if keep_parent else [])
-                + (mnames if rewrite_pids else [])),
-            # schema-evolution state: live-name -> retired physical names,
-            # and every name ever renamed-away or dropped (reuse blocked)
-            "column_aliases": (
-                column_aliases if column_aliases is not None
-                else (parent.get("column_aliases", {})
-                      if keep_parent else {})),
-            "retired_names": (
-                retired_names if retired_names is not None
-                else (parent.get("retired_names", [])
-                      if keep_parent else [])),
-            "schema_ipc": base64.b64encode(schema.serialize().to_pybytes()).decode(),
-            "stats": stats or {},
-            # content hash of the encode/decode code that wrote this
-            # snapshot — cached-store reuse checks it against the loaded
-            # code so a codec edit can never serve stale bytes
-            "engine_fingerprint": _engine_fingerprint(),
-        }
-        sname = f"snapshot-{n:05d}.json"
-        self._write_snapshot_json(sname, snap)
-        if branch is not None:
             # staged commit: advance the branch ref, leave `_current`
             # (and thus every main reader) untouched
             refs = self.refs()
             refs["branches"][branch] = n
             self._write_refs(refs)
-            return snap
-        tmp = self.current_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(sname)
-        os.replace(tmp, self.current_path)   # atomic pointer flip
         return snap
 
-
-    def _write_snapshot_json(self, sname: str, snap: dict) -> None:
-        """Write-then-rename: a crash mid-write must never leave a
-        truncated snapshot JSON (readers and GC would choke on it)."""
-        dst = os.path.join(self.snapshots_dir, sname)
-        tmp = dst + f".tmp.{uuid.uuid4().hex[:8]}"
+    def _set_current(self, name: str) -> None:
+        """Atomic pointer flip — the only writer of `_current`."""
+        tmp = self.current_path + f".tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
-            json.dump(snap, f)
-        os.replace(tmp, dst)
+            f.write(name)
+        os.replace(tmp, self.current_path)
 
     # ----------------------------------------------------------- deletes
 
@@ -738,44 +749,10 @@ class ChunkStore:
         """Merge-on-read row deletes (Iceberg equality-delete files): write
         the key values as a delete file and commit a snapshot that carries
         it; readers anti-join the keys at decode time. Data chunks are
-        untouched — compaction can materialize the deletes later.
-
-        Runs under the commit lock with the GLOBAL commit-number
-        sequence: the old parent.n+1 numbering could collide with (and
-        os.replace!) a branch-staged snapshot file sharing that n, and
-        the unlocked read-modify-write raced concurrent commits."""
-        self.create()
-        with self._commit_lock():
-            return self._commit_deletes_locked(keys, key_col, run_id)
-
-    def _commit_deletes_locked(self, keys: pa.Table, key_col: str,
-                               run_id: str) -> dict:
-        parent = self.current_snapshot()
-        if parent is None:
-            raise FileNotFoundError("cannot delete from an empty store")
-        n = self._next_n()
-        dname = f"delete-{n:05d}-{uuid.uuid4().hex[:8]}.parquet"
-        pq.write_table(keys, os.path.join(self.deletes_dir, dname))
-        snap = dict(parent)
-        snap.update({
-            "n": n,
-            "snapshot_id": uuid.uuid4().hex,
-            "parent_id": parent["snapshot_id"],
-            "created_ms": int(time.time() * 1000),
-            "run_id": run_id,
-            # "n" scopes the delete (Iceberg sequence numbers): it applies
-            # only to data from manifests committed BEFORE this snapshot,
-            # so re-inserting a deleted key later stays visible (ADVICE r2)
-            "delete_files": self.delete_files(parent)
-            + [{"file": dname, "key": key_col, "n": n}],
-        })
-        sname = f"snapshot-{n:05d}.json"
-        self._write_snapshot_json(sname, snap)
-        tmp = self.current_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(sname)
-        os.replace(tmp, self.current_path)
-        return snap
+        untouched — compaction can materialize the deletes later. A
+        ``commit`` with no manifests that keeps the parent's schema."""
+        return self.commit([], None, run_id, new_pids=set(),
+                           add_delete=(keys, key_col))
 
     # ------------------------------------------------------------ stats
 

@@ -2139,6 +2139,15 @@ def test_rollback_restores_state_with_history(spark, tmp_path):
                                        .alias("g")),
         out, salt_key="id", num_pids=2, resume=False)
     assert decode_store(spark, out).count() == 1200
+    # a delete after a rollback is not itself a rollback
+    store.rollback_to(0)
+    delete_rows(out, spark.range(0, 10).select("id"), "id")
+    from omi_cpp_parquet_wide_record_spark.operators.metadata import (
+        metadata_table,
+    )
+    hist = metadata_table(spark, out, "snapshots").orderBy("n").collect()
+    assert hist[-2]["rollback_of"] == 0
+    assert hist[-1]["rollback_of"] is None
 
 
 def test_metadata_tables(spark, tmp_path):
@@ -2495,6 +2504,113 @@ def test_concurrent_commits_serialize_no_lost_update(tmp_path):
     # the lock file is released
     import os
     assert not os.path.exists(os.path.join(out, "_commit.lock"))
+
+
+_KV = pa.schema([("k", pa.int64()), ("v", pa.int64())])
+
+
+def _one_chunk_manifest(pid: int) -> pa.Table:
+    """A driver-held manifest naming one chunk of ``pid`` (metadata-only
+    stores: the chunk file itself is never read)."""
+    from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
+        MANIFEST_SCHEMA,
+    )
+    row = {f.name: [None] for f in MANIFEST_SCHEMA}
+    row.update({"chunk_file": [f"c{pid}.owrc"], "pid": [pid], "seq": [0],
+                "column": ["k"], "codec": ["plain"], "params": ["{}"],
+                "rows": [1], "nulls": [0], "bytes_in": [8],
+                "bytes_out": [8], "offset": [0], "length": [8],
+                "sha256": ["x"], "run_id": [f"r{pid}"]})
+    return pa.table(row, schema=MANIFEST_SCHEMA)
+
+
+@pytest.mark.parametrize("mutation", ["append", "branch", "delete",
+                                      "evolve", "rollback", "fast_forward"])
+def test_snapshot_crash_before_flip_keeps_head(tmp_path, monkeypatch,
+                                               mutation):
+    """A crash after the snapshot JSON is written but before `_current`
+    or the branch ref moves leaves every head where it was; the next
+    commit numbers past the orphaned JSON and GC removes it. Pure
+    metadata — no Spark session needed."""
+    from omi_cpp_parquet_wide_record_spark.operators.maintenance import (
+        evolve_schema,
+    )
+    from omi_cpp_parquet_wide_record_spark.plans.gc import expire_snapshots
+    from omi_cpp_parquet_wide_record_spark.plans.snapshot import _snapshot_n
+    out = str(tmp_path / "store")
+    store = ChunkStore(out)
+    store.commit(_one_chunk_manifest(0), _KV, "r0")
+    store.commit(_one_chunk_manifest(1), _KV, "r1")
+    if mutation == "fast_forward":
+        store.commit(_one_chunk_manifest(2), _KV, "r2", branch="b")
+    head = store.current_snapshot()["snapshot_id"]
+    refs = store.refs()
+    before = set(store._snapshot_names())
+
+    class Crash(RuntimeError):
+        pass
+
+    def crash(*args, **kwargs):
+        raise Crash
+
+    monkeypatch.setattr(ChunkStore, "_set_current", crash)
+    monkeypatch.setattr(ChunkStore, "_write_refs", crash)
+    mutate = {
+        "append": lambda: store.commit(_one_chunk_manifest(3), _KV, "r3"),
+        "branch": lambda: store.commit(_one_chunk_manifest(3), _KV, "r3",
+                                       branch="b2"),
+        "delete": lambda: store.commit_deletes(
+            pa.table({"k": pa.array([0], pa.int64())}), "k", "rd"),
+        "evolve": lambda: evolve_schema(out, rename={"v": "w"}),
+        "rollback": lambda: store.rollback_to(0),
+        "fast_forward": lambda: store.fast_forward("b"),
+    }[mutation]
+    with pytest.raises(Crash):
+        mutate()
+    monkeypatch.undo()
+
+    assert store.current_snapshot()["snapshot_id"] == head
+    assert store.refs() == refs
+    orphans = set(store._snapshot_names()) - before
+    assert len(orphans) == (0 if mutation == "fast_forward" else 1)
+    newest = max(_snapshot_n(name) for name in before | orphans)
+    assert all(_snapshot_n(name) == newest for name in orphans)
+    snap = store.commit(_one_chunk_manifest(4), _KV, "r4")
+    assert snap["n"] == newest + 1
+    rep = expire_snapshots(store, keep_last=1)
+    assert orphans <= set(rep["removed_snapshots"])
+    assert not orphans & set(store._snapshot_names())
+
+
+def test_snapshots_order_by_commit_number_past_99999(tmp_path):
+    """History is ordered by commit number, not file name: the 05d
+    padding overflows at 100000, where text order puts it first."""
+    import json
+    out = str(tmp_path / "store")
+    store = ChunkStore(out)
+    store.commit(_one_chunk_manifest(0), _KV, "r0")
+    for n in (99999, 100000):
+        with open(os.path.join(store.snapshots_dir,
+                               f"snapshot-{n:05d}.json"), "w") as f:
+            json.dump({"n": n, "manifests": [], "committed_pids": []}, f)
+    assert [s["n"] for s in store.snapshots()] == [0, 99999, 100000]
+    assert store._next_n() == 100001
+
+
+def test_snapshot_commit_removes_broken_stale_lock(tmp_path):
+    """A commit that breaks a crashed holder's lock removes the renamed
+    lock file itself: no `_commit.lock*` debris remains."""
+    import time
+    out = str(tmp_path / "store")
+    store = ChunkStore(out).create()
+    lock = os.path.join(out, "_commit.lock")
+    with open(lock, "w") as f:
+        f.write("crashed-holder")
+    hour_ago = time.time() - 3600
+    os.utime(lock, (hour_ago, hour_ago))
+    store.commit(_one_chunk_manifest(0), _KV, "r0")
+    assert store.current_snapshot()["n"] == 0
+    assert not [f for f in os.listdir(out) if f.startswith("_commit.lock")]
 
 
 def test_delete_after_branch_stage_no_clobber(spark, tmp_path):
