@@ -1,10 +1,13 @@
-"""Distributed decode: chunk store -> DataFrame, bit-identical to the input.
+"""Decode: chunk store -> DataFrame, bit-identical to the input.
 
 The inverse of operators/encode.py and the engine's analogue of the
 reference's read-back path (O13, ref NQ:3811-3824: StreamReader >> record for
 every row). Spark shape: a tiny DataFrame of chunk file paths fans out over
 the cluster; each task reads its files, decodes every column with the numpy
-kernels, and emits Arrow batches. No data ever routes through the driver.
+kernels, and emits Arrow batches. A read that pruning cuts to at most
+``DRIVER_DECODE_BYTES`` of plain-equivalent data decodes on the driver into a
+local relation instead: below that size a Spark job's fixed cost exceeds the
+decode itself, and driver traffic stays bounded by the constant.
 """
 
 from __future__ import annotations
@@ -25,6 +28,14 @@ from omi_cpp_parquet_wide_record_spark.operators.encode import CHUNK_MAGIC
 from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
     MANIFEST_SCHEMA, ChunkStore,
 )
+
+# Plain-equivalent bytes (the manifest's ``bytes_in``) up to which a
+# driver-planned read decodes on the driver instead of in a Spark job. A
+# Spark read costs a fixed 0.4-0.6 s (an absent-key read, 4 vCPU) and one
+# core decodes ~40 MB/s (41.6 MB in 1.06 s): the cut is the lower fixed
+# cost's worth of single-core decode, 0.4 s x 40 MB/s. It errs towards
+# Spark, whose tasks also spread a larger decode over cores.
+DRIVER_DECODE_BYTES = 16 << 20
 
 
 def read_chunk_file(path: str, columns: list[str] | None = None,
@@ -504,14 +515,24 @@ class ScanPlan:
         return [(p, k, lk) for p, k, lk, n in self.deletes
                 if n is None or commit_n < n]
 
-    def kept_files(self, filters: list[tuple[str, str, object]] | None
-                   ) -> dict[str, int]:
+    def kept_files(self, filters: list[tuple[str, str, object]] | None,
+                   columns: list[str] | None = None) -> "KeptFiles":
         """Driver planning: {kept chunk file: commit number}, pruned on
-        the driver's live manifest table."""
-        kept = _kept(self.store.manifest_table(self.snap, with_commit_n=True),
-                     filters)
-        return dict(zip(kept.column("chunk_file").to_pylist(),
-                        kept.column("commit_n").to_pylist()))
+        the driver's live manifest table. ``bytes_in`` of the result sums
+        the manifest's plain-equivalent bytes of ``columns`` (default:
+        every column) over the kept files."""
+        live = self.store.manifest_table(self.snap, with_commit_n=True)
+        kept = _kept(live, filters)
+        out = KeptFiles(zip(kept.column("chunk_file").to_pylist(),
+                            kept.column("commit_n").to_pylist()))
+        rows = live.filter(pc.is_in(live.column("chunk_file"),
+                                    value_set=kept.column("chunk_file")))
+        if columns is not None:
+            rows = rows.filter(pc.is_in(rows.column("column"),
+                                        value_set=pa.array(columns,
+                                                           pa.string())))
+        out.bytes_in = pc.sum(rows.column("bytes_in")).as_py() or 0
+        return out
 
     def shard_files(self, spark: SparkSession,
                     filters: list[tuple[str, str, object]] | None
@@ -538,6 +559,12 @@ class ScanPlan:
             schema)
 
 
+class KeptFiles(dict):
+    """``ScanPlan.kept_files``' result: {chunk file: commit number}, plus
+    ``bytes_in``, the plain-equivalent bytes the read would decode."""
+    bytes_in: int = 0
+
+
 _KEPT_SCHEMA = pa.schema([("chunk_file", pa.string()),
                           ("commit_n", pa.int32())])
 
@@ -561,7 +588,7 @@ def decode_store(spark: SparkSession, out_dir: str,
                  since_snapshot: int | None = None,
                  ref: str | None = None,
                  ) -> DataFrame:
-    """A committed snapshot as a DataFrame (distributed decode).
+    """A committed snapshot as a DataFrame.
 
     ``snapshot=N`` time-travels to snapshot #N (Iceberg-style as-of read);
     default is the live snapshot `_current` points to. ``ref="name"``
@@ -600,7 +627,18 @@ def decode_store(spark: SparkSession, out_dir: str,
         scale with the data, so at corpus scale (tens of millions of
         chunks) planning must distribute like everything else (Iceberg's
         distributed planning). Per-shard pruning opens the same chunk set
-        driver planning would (parity pinned by test)."""
+        driver planning would (parity pinned by test).
+
+    Where the chunks decode: a driver-planned read whose kept files hold
+    at most ``DRIVER_DECODE_BYTES`` of plain-equivalent data (the
+    manifest's ``bytes_in`` over the columns the read decodes) decodes on
+    the driver, eagerly, into a local relation — no Python-worker job
+    runs, and a decode error (a ``check_sha`` mismatch, a bad chunk)
+    raises from this call instead of at the first action. An empty plan
+    opens no chunk at all. Larger reads and every distributed-planning
+    read decode in Spark tasks. Both forks read each chunk with
+    ``read_chunk_table`` and take the same residual filter and final
+    projection."""
     if planning not in ("driver", "distributed"):
         raise ValueError(
             f"planning must be 'driver' or 'distributed': {planning}")
@@ -617,12 +655,19 @@ def decode_store(spark: SparkSession, out_dir: str,
     spark_schema = from_arrow_schema(schema)
     chunks_dir = plan.store.chunks_dir
     if planning == "driver":
-        kept = plan.kept_files(filters)
-        fdf = _names_df(spark, list(kept), "chunk_file")
+        # the chunk read also decodes each delete's key column
+        kept = plan.kept_files(filters, schema.names +
+                               [lk for _, _, lk, _ in plan.deletes])
+        fdf = None if kept.bytes_in <= DRIVER_DECODE_BYTES else \
+            _names_df(spark, list(kept), "chunk_file")
     else:
         kept = {}
         fdf = plan.shard_files(spark, filters).repartition(
             spark.sparkContext.defaultParallelism * 2)
+
+    def read(fname, n):
+        return read_chunk_table(os.path.join(chunks_dir, fname), schema,
+                                plan.aliases, check_sha, plan.deletes_for(n))
 
     def task(batches):
         for b in batches:
@@ -631,12 +676,16 @@ def decode_store(spark: SparkSession, out_dir: str,
                   if "commit_n" in b.schema.names else
                   [kept[f] for f in files])
             for fname, n in zip(files, ns):
-                t = read_chunk_table(os.path.join(chunks_dir, fname),
-                                     schema, plan.aliases, check_sha,
-                                     plan.deletes_for(n))
-                yield from t.to_batches()
+                yield from read(fname, n).to_batches()
 
-    out = fdf.mapInArrow(task, spark_schema)
+    if fdf is None:
+        # a small read decodes here, eagerly, into a local relation: no
+        # Python-worker job, and decode errors raise from this call
+        table = pa.concat_tables([read(f, n) for f, n in kept.items()]) \
+            if kept else schema.empty_table()
+        out = spark.createDataFrame(table, schema=spark_schema)
+    else:
+        out = fdf.mapInArrow(task, spark_schema)
     if filters:
         from pyspark.sql import functions as F
         # exact residual filter over the surviving chunks (pruning is

@@ -10,6 +10,7 @@ import pyarrow as pa
 import pytest
 
 from omi_cpp_parquet_wide_record_spark import fixtures as FX
+from omi_cpp_parquet_wide_record_spark.operators import decode as D
 from omi_cpp_parquet_wide_record_spark.operators.decode import (
     decode_store, read_chunk_file,
 )
@@ -18,6 +19,30 @@ from omi_cpp_parquet_wide_record_spark.operators.verify import verify_roundtrip
 from omi_cpp_parquet_wide_record_spark.plans.snapshot import ChunkStore
 
 ROWS = 4000
+
+
+def same_rows(a, b) -> bool:
+    """Equal row counts and ``exceptAll`` empty both ways (map columns
+    compare as their entry arrays: set operations reject maps)."""
+    from pyspark.sql import functions as F
+
+    def comparable(df):
+        return df.select([F.map_entries(c).alias(c) if t.startswith("map<")
+                          else F.col(c) for c, t in df.dtypes])
+    a, b = comparable(a), comparable(b)
+    return a.count() == b.count() and a.exceptAll(b).count() == 0 \
+        and b.exceptAll(a).count() == 0
+
+
+def decode_paths(monkeypatch, read) -> list:
+    """``read()`` decoded on the driver and as a Spark job: driver
+    planning's cut forced above, then below, every read."""
+    out = []
+    for cut in (1 << 62, -1):
+        with monkeypatch.context() as m:
+            m.setattr(D, "DRIVER_DECODE_BYTES", cut)
+            out.append(read())
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -139,12 +164,15 @@ def test_sharded_manifest_commit(spark, corpus, tmp_path):
     assert decode_store(spark, sh_dir).count() == ROWS
 
 
-def test_distributed_planning_matches_driver(spark, corpus, tmp_path):
+def test_distributed_planning_matches_driver(spark, corpus, tmp_path,
+                                            monkeypatch):
     """planning='distributed' reads the manifests as a Spark job — the
     chunk-file list never materializes on the driver (Iceberg-style
     distributed planning for corpus-scale stores). Results must equal
     driver planning exactly: plain scans, numeric zone-pruned filtered
-    scans, projections, and sequence-scoped delete branching."""
+    scans, projections, and sequence-scoped delete branching. Driver
+    planning is checked both ways it decodes: on the driver and in a
+    Spark job."""
     import datetime
     out = str(tmp_path / "store")
     encode_dataframe(corpus, out, partition_by=["lang"], salt_key="url",
@@ -185,9 +213,11 @@ def test_distributed_planning_matches_driver(spark, corpus, tmp_path):
     )
 
     def same(**kw):
-        a = decode_store(spark, out, **kw)
-        b = decode_store(spark, out, planning="distributed", **kw)
-        assert a.count() == b.count() and a.exceptAll(b).count() == 0, kw
+        a, *rest = decode_paths(
+            monkeypatch, lambda: decode_store(spark, out, **kw))
+        rest.append(decode_store(spark, out, planning="distributed", **kw))
+        for x in rest:
+            assert same_rows(a, x), kw
         return a.count()
 
     n_del = ChunkStore(out).current_snapshot()["n"]
@@ -206,6 +236,43 @@ def test_distributed_planning_matches_driver(spark, corpus, tmp_path):
     assert rows_of(metadata_table(spark, out, "files").collect()) == \
         rows_of(r.values() for r in ChunkStore(out).manifest_table(
             with_commit_n=True).to_pylist())
+
+
+def test_small_pruned_reads_decode_on_driver(spark, tmp_path, monkeypatch):
+    """A read that pruning cuts to at most ``DRIVER_DECODE_BYTES`` decodes
+    in this process, with no Python-worker job: a one-file lookup reads
+    its one chunk here, an absent key reads none and still returns the
+    full schema, and with the cut forced below every read no chunk
+    decodes in this process."""
+    from pyspark.sql import functions as F
+    out = str(tmp_path / "store")
+    encode_dataframe(spark.range(0, 2000).select(
+        F.col("id"), F.concat(F.lit("u"), F.col("id")).alias("url")), out,
+        salt_key="id", num_pids=1, chunk_rows=250, sort_by=["id"])
+    hit, miss = [("id", "==", 1234)], [("id", "==", 10 ** 9)]
+    cut = D.DRIVER_DECODE_BYTES
+    plan = D.ScanPlan.resolve(out)
+    assert len(plan.kept_files(hit)) == 1 and not plan.kept_files(miss)
+    calls = []
+    real = D.read_chunk_table
+
+    def counting(path, *a, **kw):
+        calls.append(path)
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(D, "read_chunk_table", counting)
+    rows = lambda df: [tuple(r) for r in df.collect()]  # noqa: E731
+    assert rows(decode_store(spark, out, filters=hit)) == [(1234, "u1234")]
+    assert len(calls) == 1
+    calls.clear()
+    none = decode_store(spark, out, filters=miss)
+    assert rows(none) == [] and not calls
+    assert none.dtypes == [("id", "bigint"), ("url", "string")]
+    monkeypatch.setattr(D, "DRIVER_DECODE_BYTES", -1)
+    assert rows(decode_store(spark, out, filters=hit)) == [(1234, "u1234")]
+    assert not calls
+    # the whole store is below the cut: bytes_in sums the kept files
+    assert 0 < plan.kept_files(None).bytes_in <= cut
 
 
 def test_resume_after_partial_commit(spark, corpus, tmp_path):
@@ -548,6 +615,11 @@ def test_sql_over_store_and_corruption_detection(spark, tmp_path):
     open(bad, "wb").write(bytes(data)[:-3])
     with pytest.raises(ValueError, match="bad chunk magic"):
         read_chunk_file(bad)
+    # the flipped byte inside the store: a small read decodes eagerly on
+    # the driver, so the typed error raises from the call itself
+    open(chunk, "wb").write(bytes(data))
+    with pytest.raises(ValueError, match="sha256 mismatch"):
+        decode_store(spark, out, check_sha=True)
 
 
 def test_gc_age_threshold_spares_young_orphans(spark, corpus, tmp_path):
@@ -650,10 +722,12 @@ def test_delete_scoped_to_prior_commits(spark, tmp_path):
     assert decode_store(spark, out, columns=["s"]).count() == 90
 
 
-def test_null_delete_key_parity_across_read_paths(spark, tmp_path):
+def test_null_delete_key_parity_across_read_paths(spark, tmp_path,
+                                                  monkeypatch):
     """A null delete key deletes nothing, and a row with a null key is
     never deleted (anti-join semantics) — on every read path: both
-    decode_store planning modes, format('owrc'), and a read after
+    decode_store planning modes (driver planning decoding on the driver
+    and in a Spark job), format('owrc'), and a read after
     rewrite_small_chunks materialized the delete."""
     from pyspark.sql import functions as F
     from omi_cpp_parquet_wide_record_spark.operators.maintenance import (
@@ -671,8 +745,9 @@ def test_null_delete_key_parity_across_read_paths(spark, tmp_path):
     delete_rows(out, spark.createDataFrame([(3,), (None,)], "k long"), "k")
     want = [i for i in range(20) if i not in (3, 13)]
     ids = lambda df: sorted(r.id for r in df.collect())  # noqa: E731
-    for planning in ("driver", "distributed"):
-        assert ids(decode_store(spark, out, planning=planning)) == want
+    for df in decode_paths(monkeypatch, lambda: decode_store(spark, out)):
+        assert ids(df) == want
+    assert ids(decode_store(spark, out, planning="distributed")) == want
     spark.dataSource.register(OwrcDataSource)
     assert ids(spark.read.format("owrc").load(out)) == want
     assert rewrite_small_chunks(spark, out)["rewritten_pids"]
@@ -1036,7 +1111,7 @@ def test_incremental_append_scan(spark, tmp_path):
                         planning="distributed").count() == 50
 
 
-def test_array_columns_roundtrip(spark, tmp_path):
+def test_array_columns_roundtrip(spark, tmp_path, monkeypatch):
     """list<T> columns (the embeddings shape) flow through the store:
     lengths + flattened values each take their own codec; bit-identical
     decode including null rows and inner nulls."""
@@ -1065,6 +1140,10 @@ def test_array_columns_roundtrip(spark, tmp_path):
     # projection still prunes to one list column
     one = decode_store(spark, out, columns=["id", "vec"])
     assert one.columns == ["id", "vec"] and one.count() == 2000
+    # list, struct and map columns survive the driver's local relation
+    # exactly as they do a Spark-job decode
+    assert same_rows(*decode_paths(monkeypatch, lambda: decode_store(
+        spark, out, check_sha=True)))
 
 
 def test_string_pruning_unicode_edges(spark, tmp_path):
@@ -1263,7 +1342,7 @@ def test_engine_fingerprint_invalidates_cached_store(spark, tmp_path):
     assert not entry._store_valid(out, 200)
 
 
-def test_nested_zone_map_pruning(spark, tmp_path):
+def test_nested_zone_map_pruning(spark, tmp_path, monkeypatch):
     """Nested-column zone maps (r5): list/struct/map chunks record length
     bounds + flattened child value bounds as JSON-object stats, and the
     virtual filter columns c#len / c#val / c#f:<field> prune chunk files
@@ -1352,6 +1431,12 @@ def test_nested_zone_map_pruning(spark, tmp_path):
     want = sorted(r.id for r in full.filter(F.size("emb") == 2)
                   .select("id").collect())
     assert sorted(r.id for r in pf.collect()) == want and want
+
+    # 5) a nested-accessor residual over the driver's local relation
+    # returns the rows a Spark-job decode does
+    small, job = decode_paths(monkeypatch, lambda: decode_store(
+        spark, out, filters=[("emb#val", "<", 25.0), ("pt#f:x", "<", 50)]))
+    assert small.count() == 3 and same_rows(small, job)
 
 
 def test_nested_pruning_fuzz_never_loses_rows(spark, tmp_path):
