@@ -313,12 +313,6 @@ def values_to_array(v: np.ndarray, target: pa.DataType) -> pa.Array:
     return pa.array(v.astype(npdt, copy=False), type=target)
 
 
-def plain_width(t: pa.DataType) -> int:
-    """Bytes per value a PLAIN encoding of this type costs (strings: data+4)."""
-    name = type_name(t)
-    return _WIDTHS.get(name, 4)  # bytes-like: 4-byte length overhead handled separately
-
-
 # --------------------------------------------------------------------------
 # Codec registry + null-aware container
 # --------------------------------------------------------------------------

@@ -273,12 +273,6 @@ def _apply_program(t: np.ndarray, bpos: np.ndarray, program,
     return t
 
 
-def _assign_codes(t: np.ndarray, pairs: list[tuple[int, int]]
-                  ) -> tuple[np.ndarray, list[bytes], np.ndarray]:
-    return _assign_codes_from_freq(
-        np.bincount(t, minlength=_KSPACE).astype(np.int64), pairs)
-
-
 def _assign_codes_from_freq(freq_full: np.ndarray,
                             pairs: list[tuple[int, int]],
                             complete: bool = False

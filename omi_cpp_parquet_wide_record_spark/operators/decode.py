@@ -12,11 +12,13 @@ decode itself, and driver traffic stays bounded by the constant.
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import json
 import os
 from dataclasses import dataclass
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -24,7 +26,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from omi_cpp_parquet_wide_record_spark.codecs import decode_column
-from omi_cpp_parquet_wide_record_spark.operators.encode import CHUNK_MAGIC
+from omi_cpp_parquet_wide_record_spark.operators.encode import (
+    BLOOM_BITS, CHUNK_MAGIC, bloom_positions,
+)
 from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
     MANIFEST_SCHEMA, ChunkStore,
 )
@@ -55,6 +59,9 @@ def read_chunk_file(path: str, columns: list[str] | None = None,
         if buf[-5:] != CHUNK_MAGIC:
             raise ValueError(f"bad chunk magic in {path}")
         flen = int.from_bytes(buf[-9:-5], "little")
+        if flen + 9 > fsize:
+            raise ValueError(f"chunk footer length {flen} exceeds the "
+                             f"{fsize}-byte file {path}")
         if flen + 9 > len(buf):
             f.seek(fsize - flen - 9)
             buf = f.read(flen + 9)
@@ -94,11 +101,12 @@ def _delete_keys(path: str, key: str) -> pa.Array:
 def read_chunk_table(path: str, schema: pa.Schema,
                      aliases: dict[str, list[str]] | None = None,
                      check_sha: bool = False,
-                     deletes=()) -> pa.Table:
+                     deletes=(), filters=()) -> pa.Table:
     """Read one chunk file INTO a target (live) schema, applying the
-    snapshot's schema-evolution semantics and merge-on-read deletes — the
-    one per-chunk read every read path (``decode_store`` in both planning
-    modes, the owrc DataSource, ``rewrite_small_chunks``) calls:
+    snapshot's schema-evolution semantics, merge-on-read deletes and row
+    filter — the one per-chunk read every read path (``decode_store`` in
+    both planning modes, the owrc DataSource, ``rewrite_small_chunks``)
+    calls:
 
     - rename: a chunk written before a column was renamed carries the
       retired physical name; it is decoded under that name and relabeled
@@ -113,8 +121,11 @@ def read_chunk_table(path: str, schema: pa.Schema,
       (Iceberg's read-time null-fill for added fields).
     - drop: a dropped column simply isn't in ``schema`` — its bytes stay
       in old chunks (readable via time travel) but are never decoded.
+    - filters: ``decode_store``'s list; rows ``_row_mask`` rejects drop
+      after the deletes and null-fill. Filter columns decode too.
     """
-    want = list(dict.fromkeys(schema.names + [lk for _, _, lk in deletes]))
+    want = _decoded_columns(schema.names, [lk for _, _, lk in deletes],
+                            filters)
     old_names = [o for c in want for o in (aliases or {}).get(c, [])]
     t = read_chunk_file(path, columns=want + old_names,
                         check_sha=check_sha)
@@ -136,10 +147,89 @@ def read_chunk_table(path: str, schema: pa.Schema,
             t = t.filter(pc.invert(pc.is_in(
                 t.column(live_key), value_set=_delete_keys(dpath, key),
                 skip_nulls=True)))
-    for f in schema:
-        if f.name not in t.schema.names:
-            t = t.append_column(f.name, pa.nulls(t.num_rows, type=f.type))
-    return t.select(schema.names).cast(schema)
+    for c in want:
+        if c not in t.schema.names:
+            typ = schema.field(c).type if c in schema.names else pa.null()
+            t = t.append_column(c, pa.nulls(t.num_rows, type=typ))
+    out = t.select(schema.names)
+    if filters:
+        out = out.filter(pa.array(_row_mask(t, filters)))
+    return out.cast(schema)
+
+
+def _decoded_columns(names, delete_keys, filters) -> list[str]:
+    """A chunk read's projection, delete keys and filter base columns."""
+    return list(dict.fromkeys(list(names) + list(delete_keys) + [
+        _split_filter_col(c)[0] for c, _, _ in filters]))
+
+
+_CMP = {"<": pc.less, "<=": pc.less_equal, ">": pc.greater,
+        ">=": pc.greater_equal, "==": pc.equal}
+
+
+def _row_mask(t: pa.Table, filters) -> np.ndarray:
+    """The numpy mask of the rows of ``t`` that satisfy every ``(col, op,
+    value)`` filter: the engine's one row evaluator, with Spark's
+    semantics. A null result drops the row, ``in`` never matches a null,
+    NaN equals NaN and sorts above every number, numbers compare as Spark
+    promotes them and other literals cast to the column type (a naive
+    datetime reads as UTC, as in ``prune_files``). ``c#len`` is a list or
+    map length, ``c#f:x`` a struct field, and ``c#val`` holds when SOME
+    element (map value) satisfies the op. Bad filters raise, so
+    evaluating a list over no rows checks it."""
+    keep = np.ones(t.num_rows, dtype=bool)
+    for c, op, v in filters:
+        base, acc = _split_filter_col(c)
+        if acc == "val" and op in ("is_null", "is_not_null"):
+            # SOME element null, or the row null? Ambiguous: rejected
+            raise ValueError(f"filter op {op!r} is not supported on the "
+                             f"'#val' nested accessor ({c})")
+        a = t.column(base).combine_chunks()
+        if pa.types.is_null(a.type):     # a column the chunk predates
+            keep &= op == "is_null"
+            continue
+        if acc in ("len", "val"):
+            off = a.offsets.to_numpy(zero_copy_only=False)
+            valid = a.is_valid().to_numpy(zero_copy_only=False)
+        if acc == "val":
+            seen = np.concatenate(([0], np.cumsum(_compare(
+                a.items if pa.types.is_map(a.type) else a.values, op, v))))
+            keep &= valid & (seen[off[1:]] > seen[off[:-1]])
+            continue
+        if acc == "len":
+            a = pa.array(np.diff(off), mask=~valid)
+        elif acc is not None and acc.startswith("f:"):
+            a = pc.struct_field(a, acc[2:])
+        elif acc is not None:
+            raise ValueError(f"unknown nested accessor {acc!r} in {c}")
+        keep &= _compare(a, op, v)
+    return keep
+
+
+def _compare(a: pa.Array, op: str, v) -> np.ndarray:
+    """Spark's ``a <op> v`` per element of ``a``, null read as False."""
+    if op in ("is_null", "is_not_null"):
+        r = pc.is_null(a) if op == "is_null" else pc.is_valid(a)
+    elif op == "startswith":
+        r = pc.starts_with(a, pattern=v)
+    elif op == "in" or op in _CMP:
+        if isinstance(v, str) and pa.types.is_timestamp(a.type):
+            v = datetime.datetime.fromisoformat(v)    # as Spark casts it
+        lit = pa.array([x for x in v if x is not None]) if op == "in" \
+            else pa.scalar(v)
+        if lit.type != a.type and not pa.types.is_integer(lit.type) \
+                and not pa.types.is_floating(lit.type):
+            lit = lit.cast(a.type)
+        r = pc.is_in(a, value_set=lit) if op == "in" else _CMP[op](a, lit)
+        v_nan = isinstance(v, float) and v != v
+        if op != "in" and (v_nan or pa.types.is_floating(a.type)):
+            # where either side is NaN, Spark compares NaN-ness (NaN sorts
+            # above every number); NaN is the one value unequal to itself
+            a_nan = pc.not_equal(a, a)
+            r = pc.if_else(pc.or_(a_nan, v_nan), _CMP[op](a_nan, v_nan), r)
+    else:
+        raise ValueError(f"unknown filter op {op!r}")
+    return pc.fill_null(r, False).to_numpy(zero_copy_only=False)
 
 
 def _nullable_type(t: pa.DataType) -> pa.DataType:
@@ -182,24 +272,6 @@ def _startswith_keep(lo, hi, v):
     return keep if up is None else keep & (lo < up)
 
 
-def _bloom_positions(value) -> "np.ndarray":
-    """The k bit indexes encode._column_bloom sets for one literal (must
-    mirror it exactly)."""
-    from omi_cpp_parquet_wide_record_spark.operators.encode import (
-        BLOOM_BITS, BLOOM_K, BLOOM_P, BLOOM_PREFIX,
-    )
-    import numpy as np
-    vb = value.encode() if isinstance(value, str) else value
-    hs = []
-    for base in (257, 263):
-        a = 1 % BLOOM_P
-        for ch in vb[:BLOOM_PREFIX]:
-            a = (a * base + ch) % BLOOM_P
-        hs.append(a)
-    return np.array([(hs[0] + i * hs[1]) % BLOOM_BITS
-                     for i in range(BLOOM_K)])
-
-
 def _bloom_literal_groups(ops) -> list[list]:
     """Bloom-probe groups for one column's (op, value) filters: each ==
     bytes-like literal is a singleton group; each IN list of bytes-like
@@ -219,8 +291,8 @@ def _split_filter_col(c: str) -> tuple[str, str | None]:
     """Filter-column accessor syntax for NESTED columns (r5): a '#' in
     the column name splits into (base_column, accessor) —
 
-      'embedding#len'   list/map length          (F.size residual)
-      'embedding#val'   SOME flattened element   (F.exists residual)
+      'embedding#len'   list/map length          (Spark's size)
+      'embedding#val'   SOME flattened element   (Spark's exists)
       'point#f:x'       struct field 'x'         (F.col('point.x'))
 
     '#' is never legal in the engine's column names (Spark unquoted
@@ -243,7 +315,6 @@ def prune_files(manifest: pa.Table,
     the driver path holds to its 'millions of chunk rows' claim.
     Timestamps compare as epoch micros."""
     import base64
-    import datetime
     import json as _json
 
     import numpy as np
@@ -332,7 +403,10 @@ def prune_files(manifest: pa.Table,
             lo_a, hi_a = np.asarray(lo), np.asarray(hi)
             bad = np.zeros(len(lo), dtype=bool)
             for op, v in ops:
-                if op not in _vec:
+                # a NaN sorts above every number (Spark), so no bound
+                # can rule a NaN literal out
+                if op not in _vec or any(
+                        x != x for x in (v if op == "in" else [v])):
                     continue
                 try:
                     bad |= ~np.asarray(_vec[op](lo_a, hi_a, v), dtype=bool)
@@ -359,15 +433,14 @@ def prune_files(manifest: pa.Table,
         if groups and has_bloom:
             brows = sub.filter(sub.column("bloom").is_valid())
             if brows.num_rows:
-                from omi_cpp_parquet_wide_record_spark.operators.encode \
-                    import BLOOM_BITS
                 blooms = brows.column("bloom").to_pylist()
                 raw = b"".join(base64.b64decode(b) for b in blooms)
                 mat = np.frombuffer(raw, dtype=np.uint8).reshape(
                     len(blooms), BLOOM_BITS // 8)
-                flat = [v for g in groups for v in g]
+                flat = [v.encode() if isinstance(v, str) else v
+                        for g in groups for v in g]
                 goff = np.cumsum([0] + [len(g) for g in groups])
-                idx = np.stack([_bloom_positions(v) for v in flat])
+                idx = bloom_positions(pa.array(flat, pa.binary()))
                 byte_i, bit_i = idx // 8, 7 - (idx % 8)
                 bits = (mat[:, byte_i] >> bit_i[None, :, :]) & 1
                 present = bits.all(axis=2)          # (nr, sum(|g|))
@@ -609,11 +682,13 @@ def decode_store(spark: SparkSession, out_dir: str,
     is_null is_not_null, ANDed; ``in`` takes a list/tuple of values,
     ``startswith`` a string prefix pruned as the range
     [p, prefix_upper(p)), the null ops ignore the value and prune on the
-    manifest's per-chunk null counts) pushes the predicate into the
-    store: chunk files whose zone maps and blooms cannot satisfy it are
-    never opened (an IN list prunes a chunk only when EVERY member is
-    provably absent), and the exact filter is applied to the surviving
-    rows — semantics identical to a post-hoc .filter()/.isin().
+    manifest's per-chunk null counts; nested accessors per
+    ``_split_filter_col``) pushes the predicate into the store: chunk
+    files whose zone maps and blooms cannot satisfy it are never opened
+    (an IN list prunes a chunk only when EVERY member is provably
+    absent), and ``read_chunk_table`` drops each opened chunk's failing
+    rows in Arrow with a post-hoc .filter()'s semantics; no row filter
+    runs in Spark. A bad filter raises from this call.
 
     ``planning`` chooses where scan planning runs; both modes prune with
     the same compiler (``prune_files``) and read each chunk with the same
@@ -636,28 +711,22 @@ def decode_store(spark: SparkSession, out_dir: str,
     runs, and a decode error (a ``check_sha`` mismatch, a bad chunk)
     raises from this call instead of at the first action. An empty plan
     opens no chunk at all. Larger reads and every distributed-planning
-    read decode in Spark tasks. Both forks read each chunk with
-    ``read_chunk_table`` and take the same residual filter and final
-    projection."""
+    read decode in Spark tasks. Both forks read and filter each chunk with
+    the same ``read_chunk_table`` call."""
     if planning not in ("driver", "distributed"):
         raise ValueError(
             f"planning must be 'driver' or 'distributed': {planning}")
     plan = ScanPlan.resolve(out_dir, snapshot, ref, since_snapshot)
-    schema = plan.schema
-    if columns is not None:
-        # filter columns decode too (then drop in the final projection):
-        # Iceberg semantics let a filter reference a column the caller
-        # did not project
-        extra = [_split_filter_col(f[0])[0] for f in (filters or [])]
-        schema = pa.schema([schema.field(c) for c in dict.fromkeys(
-            list(columns) + extra)])
+    filters = list(filters or [])
+    _row_mask(plan.schema.empty_table(), filters)   # raises on a bad one
+    schema = plan.schema if columns is None else \
+        pa.schema([plan.schema.field(c) for c in columns])
     from pyspark.sql.pandas.types import from_arrow_schema
     spark_schema = from_arrow_schema(schema)
     chunks_dir = plan.store.chunks_dir
     if planning == "driver":
-        # the chunk read also decodes each delete's key column
-        kept = plan.kept_files(filters, schema.names +
-                               [lk for _, _, lk, _ in plan.deletes])
+        kept = plan.kept_files(filters, _decoded_columns(
+            schema.names, [lk for _, _, lk, _ in plan.deletes], filters))
         fdf = None if kept.bytes_in <= DRIVER_DECODE_BYTES else \
             _names_df(spark, list(kept), "chunk_file")
     else:
@@ -667,7 +736,8 @@ def decode_store(spark: SparkSession, out_dir: str,
 
     def read(fname, n):
         return read_chunk_table(os.path.join(chunks_dir, fname), schema,
-                                plan.aliases, check_sha, plan.deletes_for(n))
+                                plan.aliases, check_sha, plan.deletes_for(n),
+                                filters)
 
     def task(batches):
         for b in batches:
@@ -678,66 +748,11 @@ def decode_store(spark: SparkSession, out_dir: str,
             for fname, n in zip(files, ns):
                 yield from read(fname, n).to_batches()
 
-    if fdf is None:
-        # a small read decodes here, eagerly, into a local relation: no
-        # Python-worker job, and decode errors raise from this call
-        table = pa.concat_tables([read(f, n) for f, n in kept.items()]) \
-            if kept else schema.empty_table()
-        out = spark.createDataFrame(table, schema=spark_schema)
-    else:
-        out = fdf.mapInArrow(task, spark_schema)
-    if filters:
-        from pyspark.sql import functions as F
-        # exact residual filter over the surviving chunks (pruning is
-        # conservative at chunk granularity, this makes it precise).
-        # Nested accessors: '#len' -> size(), '#f:x' -> struct field,
-        # '#val' -> EXISTENTIAL over elements (matching the zone-map
-        # semantics: the chunk range covers every element, so row-level
-        # truth is "some element satisfies")
-        for c, op, v in filters:
-            base_c, acc = _split_filter_col(c)
-            if acc == "val":
-                if op in ("is_null", "is_not_null"):
-                    # null ops on the existential element accessor are
-                    # ambiguous (SOME element null? the row null?) —
-                    # reject explicitly before planning rather than
-                    # KeyError mid-build (ADVICE r5)
-                    raise ValueError(
-                        f"filter op {op!r} is not supported on the "
-                        f"'#val' nested accessor ({c}); filter the "
-                        "column itself or use a comparison op")
-                pred = {"<": lambda x: x < v, "<=": lambda x: x <= v,
-                        ">": lambda x: x > v, ">=": lambda x: x >= v,
-                        "==": lambda x: x == v,
-                        "startswith": lambda x: x.startswith(v),
-                        "in": lambda x: (x.isin(*list(v)) if len(v)
-                                         else F.lit(False))}[op]
-                base = F.col(base_c)
-                if dict(out.dtypes).get(base_c, "").startswith("map<"):
-                    base = F.map_values(base)
-                out = out.filter(F.exists(base, pred))
-                continue
-            if acc == "len":
-                col = F.size(F.col(base_c))
-            elif acc is not None and acc.startswith("f:"):
-                col = F.col(base_c).getField(acc[2:])
-            else:
-                col = F.col(c)
-            if op == "in":
-                out = out.filter(col.isin(*list(v)) if len(v)
-                                 else F.lit(False))
-            elif op == "is_null":
-                out = out.filter(col.isNull())
-            elif op == "is_not_null":
-                out = out.filter(col.isNotNull())
-            elif op == "startswith":
-                # kept out of the dict below: it is built eagerly and
-                # startswith(non-string) has no JVM overload
-                out = out.filter(col.startswith(v))
-            else:
-                out = out.filter(
-                    {"<": col < v, "<=": col <= v, ">": col > v,
-                     ">=": col >= v, "==": col == v}[op])
-    if columns is not None and list(out.columns) != list(columns):
-        out = out.select(*columns)
-    return out
+    if fdf is not None:
+        return fdf.mapInArrow(task, spark_schema)
+    # a small read decodes here, eagerly, into a local relation: no
+    # Python-worker job, and decode errors raise from this call
+    tables = [read(f, n) for f, n in kept.items()]
+    table = pa.concat_tables(tables) if any(t.num_rows for t in tables) \
+        else schema.empty_table()   # filtered tables may hold no chunk
+    return spark.createDataFrame(table, schema=spark_schema)

@@ -102,8 +102,8 @@ def _nested_stats(arr: pa.Array) -> tuple[str | None, str | None]:
       struct:          {"f:<name>": bound per child field with stats}
 
     Readers address these through virtual filter columns ``c#len``,
-    ``c#val`` and ``c#f:<field>`` (prune_files / distributed_file_plan /
-    decode_store residuals). Existential semantics make the flattened
+    ``c#val`` and ``c#f:<field>`` (prune_files picks chunks,
+    read_chunk_table rows). Existential semantics make the flattened
     value range sound for pruning: a chunk can hold a row with SOME
     element matching iff the [min,max] of all elements could match —
     the same rule a scalar column's zone map already uses. The object
@@ -165,6 +165,10 @@ def _column_stats(arr: pa.Array) -> tuple[str | None, str | None]:
     if arr.null_count == len(arr):
         return None, None
     import pyarrow.compute as pc
+    if pa.types.is_floating(t) and pc.any(pc.is_nan(arr)).as_py():
+        # a NaN sorts above every number (Spark) but min_max skips it:
+        # bounds without it would prune its rows, so record none
+        return None, None
     mm = pc.min_max(arr)
     if pa.types.is_timestamp(t):
         # normalize to epoch MICROS regardless of the column's own unit —
@@ -187,10 +191,6 @@ def _column_stats(arr: pa.Array) -> tuple[str | None, str | None]:
     if pa.types.is_date(t):
         lo = pa.scalar(lo, type=t).cast(pa.int64()).as_py()
         hi = pa.scalar(hi, type=t).cast(pa.int64()).as_py()
-    if pa.types.is_floating(t) and (lo != lo or hi != hi):
-        # NaN bounds are not JSON and not orderable — no stats is the
-        # only sound answer (NaN sorts inconsistently across engines)
-        return None, None
     return json.dumps(lo), json.dumps(hi)
 
 
@@ -206,11 +206,28 @@ BLOOM_PREFIX = 64             # hash only each value's first 64 bytes:
 #                               full pass over the corpus
 
 
+def bloom_positions(arr: pa.Array) -> np.ndarray:
+    """The (len(arr), BLOOM_K) bloom bit indexes of each value of a
+    null-free bytes-like array: k=4 Kirsch-Mitzenmacher indexes from two
+    mod-p Horner hashes of the value's first BLOOM_PREFIX bytes. The one
+    hash behind both the bitsets ``_column_bloom`` writes and the probes
+    ``prune_files`` makes."""
+    from omi_cpp_parquet_wide_record_spark.codecs.base import bytes_block
+    from omi_cpp_parquet_wide_record_spark.operators.dedup import (
+        _token_hashes_modp,
+    )
+    lens, corpus_mv = bytes_block(arr)
+    corpus = np.frombuffer(corpus_mv, dtype=np.uint8)
+    h1 = _token_hashes_modp(corpus, lens, 257, 1, cap=BLOOM_PREFIX)
+    h2 = _token_hashes_modp(corpus, lens, 263, 1, cap=BLOOM_PREFIX)
+    return (h1[:, None] + np.arange(BLOOM_K) * h2[:, None]) % BLOOM_BITS
+
+
 def _column_bloom(arr: pa.Array) -> str | None:
     """Base64 Bloom bitset over a bytes-like chunk column (Iceberg-style
-    bloom metadata): k=4 Kirsch-Mitzenmacher indexes from two capped
-    mod-p Horner hashes. None for non-bytes types, oversized chunks, or
-    all-null columns — readers treat missing blooms as 'may contain'."""
+    bloom metadata), set at ``bloom_positions``. None for non-bytes
+    types, oversized chunks, or all-null columns — readers treat missing
+    blooms as 'may contain'."""
     t = arr.type
     if not (pa.types.is_string(t) or pa.types.is_large_string(t)
             or pa.types.is_binary(t) or pa.types.is_large_binary(t)):
@@ -220,17 +237,8 @@ def _column_bloom(arr: pa.Array) -> str | None:
     nn = arr.drop_null() if arr.null_count else arr
     if len(nn) == 0:
         return None
-    from omi_cpp_parquet_wide_record_spark.codecs.base import bytes_block
-    from omi_cpp_parquet_wide_record_spark.operators.dedup import (
-        _token_hashes_modp,
-    )
-    lens, corpus_mv = bytes_block(nn.cast(pa.large_binary()))
-    corpus = np.frombuffer(corpus_mv, dtype=np.uint8)
-    h1 = _token_hashes_modp(corpus, lens, 257, 1, cap=BLOOM_PREFIX)
-    h2 = _token_hashes_modp(corpus, lens, 263, 1, cap=BLOOM_PREFIX)
     bits = np.zeros(BLOOM_BITS, dtype=bool)
-    for i in range(BLOOM_K):
-        bits[(h1 + i * h2) % BLOOM_BITS] = True
+    bits[bloom_positions(nn).ravel()] = True
     import base64
     return base64.b64encode(np.packbits(bits).tobytes()).decode()
 

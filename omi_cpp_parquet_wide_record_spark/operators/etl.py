@@ -56,30 +56,16 @@ def dense_row_index(df: DataFrame, order_col: str,
     # partitioning (RangePartitioner samples; re-running it can move rows).
     # Rotated per callsite so repeated calls don't accumulate cached copies
     # of the full input (the cache must outlive this function — the index
-    # pass below reads it lazily through the returned plan). A repeated
-    # call over the SAME input reuses the materialized cache instead of
-    # re-running the sampling pass + shuffle + sort (same semantics as
-    # dedup._rotate_cache; the cached partitioning is deterministic for
-    # the index because it is the one both passes read).
-    parted = df.repartitionByRange(n_parts, F.col(order_col)) \
-               .sortWithinPartitions(order_col)
+    # pass below reads it lazily through the returned plan). Never reused:
+    # a scan of a path plans the same whether or not its files changed.
     prev = _DENSE_INDEX_CACHE.pop("live", None)
     if prev is not None:
-        reused = False
         try:
-            if prev._jdf.queryExecution().analyzed().sameResult(
-                    parted._jdf.queryExecution().analyzed()):
-                parted = prev
-                reused = True
+            prev.unpersist(False)
         except Exception:
             pass
-        if not reused:
-            try:
-                prev.unpersist(False)
-            except Exception:
-                pass
-    if parted is not prev:
-        parted = parted.persist()
+    parted = df.repartitionByRange(n_parts, F.col(order_col)) \
+               .sortWithinPartitions(order_col).persist()
     _DENSE_INDEX_CACHE["live"] = parted
 
     def count_task(batches):

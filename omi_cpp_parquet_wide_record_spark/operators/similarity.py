@@ -169,16 +169,6 @@ def _pair_cosine_quantized(pairs: DataFrame, id_a: str, id_b: str,
     return pairs.mapInArrow(task, f"{id_a} long, {id_b} long, cosine double")
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
-    """Deterministic gaussian-ish hyperplanes from splitmix64 lanes
-    (sum of 4 uniforms, CLT-normalized) — identical on every executor."""
-    from omi_cpp_parquet_wide_record_spark.fixtures import splitmix64
-    raw = splitmix64(np.arange(dim * n_planes * 4, dtype=np.uint64)
-                     + np.uint64(seed * 2654435761))
-    u = raw.astype(np.float64) / 2.0**64 - 0.5
-    return u.reshape(n_planes, dim, 4).sum(axis=2)
-
-
 def int_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     """Integer hyperplanes, weights in [-1000, 1000], from lowbias32 over
     small ints. Identical on every executor AND reproducible in plain SQL

@@ -11,7 +11,9 @@ the engine's native format deserves a first-class Spark source AND sink:
 
 Read: one input partition per chunk file (so a 10^12-row store fans out
 over the cluster), column pruning pushed into the chunk footer (only
-requested columns are decoded), batches stream out as Arrow. Write: each
+requested columns are decoded), batches stream out as Arrow, and
+pushed filters prune chunk files and drop rows in ``read_chunk_table``.
+Write: each
 task feeds its partition's Arrow batches to the store's one chunk writer
 (``operators.encode.write_chunks``), which writes the chunk files and a
 manifest shard executor-side; the commit message is only the task's pid
@@ -36,7 +38,8 @@ from pyspark.sql.datasource import (
 
 class OwrcInputPartition(InputPartition):
     def __init__(self, path: str, deletes: list[tuple[str, str, str]] = (),  # noqa: B006
-                 aliases: dict[str, list[str]] | None = None):
+                 aliases: dict[str, list[str]] | None = None,
+                 filters: list[tuple[str, str, object]] = ()):  # noqa: B006
         self.path = path
         # [(delete_file_path, physical_key_col, live_key_col), ...]
         # applicable to THIS chunk's commit epoch (ScanPlan.deletes_for)
@@ -44,6 +47,7 @@ class OwrcInputPartition(InputPartition):
         # schema-evolution aliases of the snapshot being read:
         # {live column name: [retired physical names]}
         self.aliases = dict(aliases or {})
+        self.filters = list(filters)     # translated by pushFilters
 
 
 class OwrcReader(DataSourceReader):
@@ -57,36 +61,42 @@ class OwrcReader(DataSourceReader):
         self._since = options.get("sincesnapshot",
                                   options.get("since_snapshot"))
         self._ref = options.get("ref")
-        self._zone_filters: list[tuple[str, str, object]] = []
+        self._filters: list[tuple[str, str, object]] = []
         if not self.root:
             raise ValueError("owrc source needs a path")
 
     def pushFilters(self, filters):
-        """Use comparison filters for zone-map chunk pruning, but yield
-        every filter back as unhandled: pruning is conservative (chunk
-        granularity), so Spark must still apply the exact predicate."""
+        """Translate Spark's filters into the engine's list, which prunes
+        chunk files and drops rows exactly in ``read_chunk_table``; yield
+        back only those with no engine op, on a nested field, or that
+        the engine's evaluator rejects for the column's type."""
         from pyspark.sql.datasource import (
             EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull,
             IsNull, LessThan, LessThanOrEqual, StringStartsWith,
         )
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from omi_cpp_parquet_wide_record_spark.operators.decode import (
+            _row_mask,
+        )
         ops = {EqualTo: "==", GreaterThan: ">", GreaterThanOrEqual: ">=",
                LessThan: "<", LessThanOrEqual: "<=",
-               StringStartsWith: "startswith"}
-        null_ops = {IsNull: "is_null", IsNotNull: "is_not_null"}
+               StringStartsWith: "startswith", In: "in",
+               IsNull: "is_null", IsNotNull: "is_not_null"}
+        empty = to_arrow_schema(self.schema).empty_table()
         for f in filters:
-            if type(f) in ops and len(f.attribute) == 1:
-                self._zone_filters.append(
-                    (f.attribute[0], ops[type(f)], f.value))
-            elif type(f) in null_ops and len(f.attribute) == 1:
-                # null-count pruning (no literal value)
-                self._zone_filters.append(
-                    (f.attribute[0], null_ops[type(f)], None))
-            elif type(f) is In and len(f.attribute) == 1:
-                # df.filter(col.isin(...)) prunes via zone maps + blooms
-                # (a chunk drops only when EVERY member is provably absent)
-                self._zone_filters.append(
-                    (f.attribute[0], "in", list(f.value)))
-            yield f
+            if type(f) not in ops or len(f.attribute) != 1:
+                yield f
+                continue
+            op = ops[type(f)]
+            ours = (f.attribute[0], op, list(f.value) if op == "in" else
+                    getattr(f, "value", None))
+            try:
+                _row_mask(empty, [ours])
+            except (pa.ArrowException, TypeError, ValueError):
+                yield f     # e.g. == on a struct: Arrow has no kernel
+                continue
+            self._filters.append(ours)
 
     def partitions(self):
         import os
@@ -96,8 +106,9 @@ class OwrcReader(DataSourceReader):
         plan = ScanPlan.resolve(self.root, self._snapshot, self._ref,
                                 self._since)
         return [OwrcInputPartition(os.path.join(plan.store.chunks_dir, f),
-                                   plan.deletes_for(n), plan.aliases)
-                for f, n in plan.kept_files(self._zone_filters).items()]
+                                   plan.deletes_for(n), plan.aliases,
+                                   self._filters)
+                for f, n in plan.kept_files(self._filters).items()]
 
     def read(self, partition: OwrcInputPartition | None):
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -109,7 +120,8 @@ class OwrcReader(DataSourceReader):
             return
         yield from read_chunk_table(
             partition.path, to_arrow_schema(self.schema), partition.aliases,
-            deletes=partition.deletes).to_batches()
+            deletes=partition.deletes,
+            filters=partition.filters).to_batches()
 
 
 class OwrcCommitMessage(WriterCommitMessage):

@@ -4,6 +4,7 @@ reference-config golden Parquet, and resumability."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pyarrow as pa
@@ -615,6 +616,11 @@ def test_sql_over_store_and_corruption_detection(spark, tmp_path):
     open(bad, "wb").write(bytes(data)[:-3])
     with pytest.raises(ValueError, match="bad chunk magic"):
         read_chunk_file(bad)
+    # a length trailer naming a footer longer than the file
+    open(bad, "wb").write(bytes(data)[:-9] + (len(data) + 7).to_bytes(
+        4, "little") + bytes(data)[-5:])
+    with pytest.raises(ValueError, match="footer length .*bad.owrc"):
+        read_chunk_file(bad)
     # the flipped byte inside the store: a small read decodes eagerly on
     # the driver, so the typed error raises from the call itself
     open(chunk, "wb").write(bytes(data))
@@ -752,6 +758,170 @@ def test_null_delete_key_parity_across_read_paths(spark, tmp_path,
     assert ids(spark.read.format("owrc").load(out)) == want
     assert rewrite_small_chunks(spark, out)["rewritten_pids"]
     assert ids(decode_store(spark, out)) == want
+
+
+NAN = float("nan")
+T0 = datetime.datetime(2024, 3, 1, 12, 0)
+TZ5 = datetime.timezone(datetime.timedelta(hours=5))
+
+# (col, op, value) filters, one per op, accessor and edge the row filter
+# must reproduce from Spark: NaN, nulls, time zones, empty and null-member
+# IN lists, an added and a renamed column, list/struct/map accessors
+FILTER_CASES = [
+    ("x", ">", 7.0), ("x", ">=", 6.5), ("x", "in", [NAN]),
+    ("x", "==", NAN), ("x", "<", NAN), ("id", "<", NAN),
+    ("x", "is_null", None), ("s", "is_not_null", None),
+    ("ts", ">=", T0.replace(hour=18, minute=10, tzinfo=TZ5)),
+    ("ts", "<", T0.replace(minute=30)), ("ts", ">", "2024-03-01 14:00:00"),
+    ("s", "in", []), ("s", "in", ["k1", None, "k5"]),
+    ("s", "startswith", "k1"),
+    ("added", "is_null", None), ("added", ">", 215), ("yy", "<", 50),
+    ("l#len", "==", 2), ("l#val", ">", 30.0), ("l#val", "==", NAN),
+    ("st#f:a", "is_null", None), ("st#f:b", "startswith", "b1"),
+    ("m#len", "is_null", None), ("m#val", "in", [3, 4]),
+]
+
+
+def spark_filter(c, op, v):
+    """The Spark column expression meaning the same as filter (c, op, v)."""
+    from pyspark.sql import functions as F
+    base, _, acc = c.partition("#")
+
+    def pred(col):
+        if op in ("is_null", "is_not_null"):
+            return col.isNull() if op == "is_null" else col.isNotNull()
+        if op == "in":
+            return col.isin(*v)
+        if op == "startswith":
+            return col.startswith(v)
+        return getattr(col, {"<": "__lt__", "<=": "__le__", ">": "__gt__",
+                             ">=": "__ge__", "==": "__eq__"}[op])(v)
+    if acc == "len":
+        return pred(F.size(base))
+    if acc == "val":
+        return F.exists(F.map_values(base) if base == "m" else F.col(base),
+                        pred)
+    if acc.startswith("f:"):
+        return pred(F.col(base).getField(acc[2:]))
+    return pred(F.col(base))
+
+
+@pytest.fixture(scope="module")
+def filter_store(spark, tmp_path_factory):
+    """240 rows over 12+ chunks: every tenth x NaN, nulls in every
+    column, a column renamed (y -> yy) after the first commit and one
+    added (``added``) by the second."""
+    from omi_cpp_parquet_wide_record_spark.operators.maintenance import (
+        evolve_schema,
+    )
+
+    def row(i):
+        return (i, NAN if i % 10 == 0 else None if i % 17 == 3 else i * 0.05,
+                None if i % 19 == 7 else T0 + datetime.timedelta(minutes=i),
+                None if i % 11 == 4 else f"k{i % 13}", i * 2,
+                None if i % 23 == 1 else [] if i % 29 == 2 else
+                [i * 0.2, NAN if i % 7 == 0 else i * 0.1],
+                None if i % 31 == 6 else
+                (None if i % 41 == 9 else i % 37, f"b{i % 5}"),
+                None if i % 43 == 10 else {} if i % 47 == 11 else
+                {"p": i % 9, "q": i % 4})
+    cols = ("id long, x double, ts timestamp, s string, {} long, "
+            "l array<double>, st struct<a: long, b: string>, "
+            "m map<string, long>")
+    out = str(tmp_path_factory.mktemp("filters") / "store")
+    encode_dataframe(spark.createDataFrame([row(i) for i in range(200)],
+                                           cols.format("y")),
+                     out, salt_key="id", num_pids=2, chunk_rows=20,
+                     sort_by=["id"])
+    evolve_schema(out, rename={"y": "yy"})
+    encode_dataframe(spark.createDataFrame(
+        [row(i) + (None if i % 3 == 0 else i,) for i in range(200, 240)],
+        cols.format("yy") + ", added long"),
+        out, salt_key="id", num_pids=2, chunk_rows=20, sort_by=["id"],
+        resume=False)
+    # not cached: Spark's in-memory cache skips batches by min/max
+    # stats that leave NaN out, so a cached x IN (NaN) keeps no row
+    full = decode_store(spark, out)
+    assert full.count() == 240
+    return out, full
+
+
+@pytest.mark.parametrize("flt", FILTER_CASES,
+                         ids=lambda f: f"{f[0]} {f[1]} {f[2]}")
+def test_row_filter_parity_across_read_paths(spark, filter_store,
+                                             monkeypatch, flt):
+    """Every op and accessor returns, on each read path (driver decode,
+    Spark-job decode, distributed planning, format('owrc')), exactly the
+    rows Spark's own .filter keeps from the unfiltered decode. Each
+    path's rows are collected once and compared, tagged by path, in one
+    ``same_rows``."""
+    from omi_cpp_parquet_wide_record_spark.sources.owrc_source import (
+        OwrcDataSource,
+    )
+    out, full = filter_store
+    reads = decode_paths(monkeypatch, lambda: decode_store(
+        spark, out, filters=[flt]))
+    reads.append(decode_store(spark, out, filters=[flt],
+                              planning="distributed"))
+    spark.dataSource.register(OwrcDataSource)
+    reads.append(spark.read.format("owrc").load(out)
+                 .filter(spark_filter(*flt)))
+    paths = ("driver", "job", "distributed", "owrc")
+    got = [r.toArrow() for r in reads]
+    tagged = pa.concat_tables([t.append_column("path", pa.array(
+        [p] * t.num_rows, pa.string())) for p, t in zip(paths, got)])
+    want = full.filter(spark_filter(*flt)).crossJoin(
+        spark.createDataFrame([(p,) for p in paths], "path string"))
+    assert same_rows(spark.createDataFrame(tagged, schema=want.schema),
+                     want), [(p, t.num_rows) for p, t in zip(paths, got)]
+
+
+def test_nan_float_chunks_never_prune_nan_rows():
+    """A float chunk holding a NaN records no zone-map bounds (min_max
+    skips NaN, which Spark sorts above every number), and no NaN literal
+    prunes a chunk."""
+    from omi_cpp_parquet_wide_record_spark.operators.decode import (
+        prune_files,
+    )
+    from omi_cpp_parquet_wide_record_spark.operators.encode import (
+        _column_stats,
+    )
+    assert _column_stats(pa.array([1.0, NAN, 2.0])) == (None, None)
+    # a list keeps its length bounds but records no element bounds
+    assert _column_stats(pa.array([[1.0], [NAN]])) == ('{"len": 1}',
+                                                       '{"len": 1}')
+    assert _column_stats(pa.array([1.0, None, 2.0])) == ("1.0", "2.0")
+    man = pa.table({"chunk_file": ["c0"], "column": ["x"],
+                    "stat_min": ["1.0"], "stat_max": ["2.0"],
+                    "nulls": [0], "rows": [2]})
+    for op, v in (("==", NAN), ("<", NAN), (">=", NAN), ("in", [NAN, 9.0])):
+        assert prune_files(man, [("x", op, v)]) == ["c0"], (op, v)
+    assert prune_files(man, [("x", ">", 7.0)]) == []
+
+
+def test_bloom_probe_finds_every_stored_value():
+    """The writer's bitset and the reader's probe share one hash: no
+    stored value — non-ASCII, or longer than the 64-byte hash prefix —
+    ever probes absent, alone or in an IN list."""
+    from omi_cpp_parquet_wide_record_spark.operators.decode import (
+        prune_files,
+    )
+    from omi_cpp_parquet_wide_record_spark.operators.encode import (
+        _column_bloom,
+    )
+    vals = ["", "plain", "naïve café", "日本語のテキスト", "emoji 🎉🎉",
+            "x" * 64 + "tail", "ü" * 40 + "end", "🎉" * 30,
+            "long prefix " * 10 + "€"]
+    man = pa.table({"chunk_file": ["c0"], "column": ["s"],
+                    "stat_min": pa.nulls(1, pa.string()),
+                    "stat_max": pa.nulls(1, pa.string()),
+                    "bloom": [_column_bloom(pa.array(vals))]})
+    for v in vals:
+        assert prune_files(man, [("s", "==", v)]) == ["c0"], v
+        assert prune_files(man, [("s", "in", ["nope-1", v])]) == ["c0"], v
+        assert prune_files(man, [("s", "==", v.encode())]) == ["c0"], v
+    assert prune_files(man, [("s", "in", [f"absent-{i}" for i in
+                                          range(3)])]) == []
 
 
 def test_zone_map_ms_timestamp_pruning(spark, tmp_path):

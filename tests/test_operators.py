@@ -284,6 +284,22 @@ def test_dense_row_index(spark):
     assert [p[1] for p in pairs] == list(range(1, 1001))
 
 
+def test_dense_row_index_sees_rewritten_input(spark, tmp_path):
+    """A parquet file rewritten in place under the same name and indexed
+    again in the same session indexes the new rows, not a cached copy
+    of the old ones."""
+    import pyarrow.parquet as pq
+    path = str(tmp_path / "ev.parquet")
+    pq.write_table(pa.table({"ts": pa.array(range(100), pa.int64())}), path)
+    first = etl.dense_row_index(spark.read.parquet(path), "ts").collect()
+    assert max(r.ts for r in first) == 99
+    pq.write_table(pa.table({"ts": pa.array(range(1100), pa.int64())}),
+                   path)
+    again = etl.dense_row_index(spark.read.parquet(path), "ts").collect()
+    assert sorted((r.ts, r.pcap_index) for r in again) == [
+        (i, i + 1) for i in range(1100)]
+
+
 def test_streaming_tumbling(spark, tmp_path):
     from omi_cpp_parquet_wide_record_spark.streaming.encode_stream import (
         run_stream_once,
