@@ -336,6 +336,13 @@ class Codec:
     def decode(self, sections: list[memoryview], params: dict) -> pa.Array:
         raise NotImplementedError
 
+    def decode_rows(self, sections: list[memoryview], params: dict,
+                    rows: np.ndarray) -> pa.Array:
+        """The dense (null-free) values at the sorted positions ``rows``.
+        Codecs whose format can locate a row without decoding the rest
+        override this; the default decodes everything and takes."""
+        return self.decode(sections, params).take(pa.array(rows))
+
 
 _REGISTRY: dict[str, Codec] = {}
 
@@ -411,7 +418,10 @@ def encode_column(arr: pa.Array, codec_name: str,
     return Encoded(codec_name, params, payload, n, nulls, bytes_in)
 
 
-def decode_column(payload: bytes | memoryview, params: dict) -> pa.Array:
+def decode_column(payload: bytes | memoryview, params: dict,
+                  rows=None) -> pa.Array:
+    """Decode a column chunk; with ``rows`` (sorted row positions), only
+    those rows, equal to ``decode_column(payload, params).take(rows)``."""
     n = params["rows"]
     nulls = params["nulls"]
     target = name_type(params["atype"])
@@ -420,7 +430,16 @@ def decode_column(payload: bytes | memoryview, params: dict) -> pa.Array:
         bitmap, sections = sections[0], sections[1:]
         valid = np.unpackbits(np.frombuffer(bitmap, np.uint8), count=n).astype(bool)
     codec = get_codec(params["codec"])
-    dense = codec.decode(sections, params)
+    if rows is None:
+        dense = codec.decode(sections, params)
+    else:
+        rows = np.asarray(rows, dtype=np.int64)
+        dense_rows = rows
+        if nulls:
+            # the wanted rows' positions among the dense (non-null) values
+            dense_rows = (np.cumsum(valid) - 1)[rows[valid[rows]]]
+            valid = valid[rows]
+        dense = codec.decode_rows(sections, params, dense_rows)
     if dense.type != target:
         dense = dense.cast(target)
     if not nulls:
@@ -428,8 +447,9 @@ def decode_column(payload: bytes | memoryview, params: dict) -> pa.Array:
     # scatter the dense (null-free) values back under the validity bitmap:
     # a take with NULL indices yields null rows, one kernel for any type
     # (if_else has no kernel for nested types like map)
-    if n - nulls == 0:
-        return pa.nulls(n, target)
-    idx = np.zeros(n, dtype=np.int64)
-    idx[valid] = np.arange(n - nulls, dtype=np.int64)
+    m, k = len(valid), int(valid.sum())
+    if k == 0:
+        return pa.nulls(m, target)
+    idx = np.zeros(m, dtype=np.int64)
+    idx[valid] = np.arange(k, dtype=np.int64)
     return dense.take(pa.array(idx, mask=~valid))

@@ -78,7 +78,17 @@ def _with_sentinels(corpus: np.ndarray, start_pos: np.ndarray) -> np.ndarray:
     """int16 token stream with a _SEP token before each row start — paid
     once per block; every merge round then needs no boundary bookkeeping
     (a pair containing _SEP is never a merge candidate)."""
-    return _with_sentinels_tokens(corpus.astype(np.int16), start_pos)
+    t = corpus.astype(np.int16)
+    n = len(t)
+    if len(start_pos) == 0:
+        return t
+    is_start = np.zeros(n, dtype=bool)
+    is_start[start_pos] = True
+    dst = np.cumsum(is_start, dtype=np.int32)
+    dst += np.arange(n, dtype=np.int32)
+    out = np.full(n + len(start_pos), _SEP, dtype=np.int16)
+    out[dst] = t
+    return out
 
 
 def _train_and_tokenize(t: np.ndarray, rounds: int, per_round: int,
@@ -227,20 +237,6 @@ def _round0_raw(block: np.ndarray, bpos: np.ndarray,
     # array replaces a full-length cumsum
     new_bpos = bpos - np.searchsorted(sel, bpos - 1, side="left")
     return t, new_bpos
-
-
-def _with_sentinels_tokens(t: np.ndarray, start_pos: np.ndarray) -> np.ndarray:
-    """_with_sentinels for an already-int16 token stream."""
-    n = len(t)
-    if len(start_pos) == 0:
-        return t
-    is_start = np.zeros(n, dtype=bool)
-    is_start[start_pos] = True
-    dst = np.cumsum(is_start, dtype=np.int32)
-    dst += np.arange(n, dtype=np.int32)
-    out = np.full(n + len(start_pos), _SEP, dtype=np.int16)
-    out[dst] = t
-    return out
 
 
 def _apply_program(t: np.ndarray, bpos: np.ndarray, program,
@@ -460,9 +456,6 @@ def _replay_blocks(corpus: np.ndarray, starts: np.ndarray,
             tb, bp = corpus[lo:hi].astype(np.int16), bpos
         outs.append(_assemble(_apply_program(tb, bp, rest, lut),
                               enc_flat, enc_off, enc_w))
-    if not outs:   # defensive: cuts always yield >=1 block
-        outs = [_assemble(_with_sentinels(corpus, start_pos),
-                          enc_flat, enc_off, enc_w)]
     return outs[0] if len(outs) == 1 else np.concatenate(outs)
 
 
@@ -480,6 +473,74 @@ def _make_plan(prog, table: list[bytes], enc_flat: np.ndarray,
             "tab_flat": b"".join(table),
             "enc_flat": enc_flat, "enc_off": enc_off, "enc_w": enc_w,
             "exp": out_bytes / max(1, in_bytes)}
+
+
+def _markers(enc: np.ndarray) -> np.ndarray:
+    """Positions of the escape markers in an encoded stream."""
+    # escape parsing on the 0xFF-position SUBSET: inside each run of
+    # consecutive 0xFF bytes the even-offset ones are escape markers,
+    # odd-offset ones are escaped literals — runs of 0xFF positions are
+    # consecutive indices, so run-parity needs only the subset
+    ff_pos = np.flatnonzero(enc == ESCAPE)
+    if len(ff_pos):
+        rs = np.empty(len(ff_pos), dtype=bool)
+        rs[0] = True
+        np.not_equal(ff_pos[1:], ff_pos[:-1] + 1, out=rs[1:])
+        anchor = np.where(rs, ff_pos, 0)
+        np.maximum.accumulate(anchor, out=anchor)
+        ff_pos = ff_pos[((ff_pos - anchor) & 1) == 0]
+    if len(ff_pos) and ff_pos[-1] == len(enc) - 1:
+        # corrupt/truncated payload ending in a bare escape marker:
+        # there is no literal slot after it — fail loudly instead of
+        # the IndexError the marker_pos+1 write would raise (ADVICE r2)
+        raise ValueError(
+            "fsst: truncated payload ends with escape marker")
+    return ff_pos
+
+
+def _code_widths(tab_lens: np.ndarray) -> np.ndarray:
+    """Decoded width per code byte, as a 256-entry uint8 LUT: codes are
+    0..ncodes-1 < 255, so the ESCAPE slot keeps width 1 naturally (the
+    LUT gather touches 1 byte per token on a memory-bound kernel)."""
+    code_len8 = np.ones(256, dtype=np.uint8)
+    code_len8[:len(tab_lens)] = tab_lens
+    return code_len8
+
+
+def _expand(tab_flat: np.ndarray, tab_lens: np.ndarray,
+            enc: np.ndarray) -> np.ndarray:
+    """The decoded bytes of an encoded stream (or of whole rows of one,
+    concatenated: rows start and end on token boundaries)."""
+    marker_pos = _markers(enc)
+    tok = enc != ESCAPE
+    tok[marker_pos + 1] = False          # the literal slot after a marker
+    tok[marker_pos] = True               # the marker is the token
+    tok_pos = np.flatnonzero(tok)
+    codes = enc[tok_pos]
+    widths = _code_widths(tab_lens)[codes]
+    total = int(widths.sum(dtype=np.int64))
+    ncodes = len(tab_lens)
+    # single-gather expansion: every output byte reads from an extended
+    # source [symbol table | encoded stream] — table reads stay
+    # cache-resident, the output writes are purely sequential (the old
+    # per-code scatter loop wrote to random positions, DRAM-hostile);
+    # int32 index math while the chunk fits, and every full-length
+    # temporary stays at most 4 bytes wide (the memory-bound budget)
+    big = np.concatenate([tab_flat, enc])
+    it = np.int32 if max(total, len(big)) < 2**31 - 8 else np.int64
+    ends = np.cumsum(widths, dtype=it)
+    tab_off = np.zeros(256, dtype=it)
+    np.cumsum(tab_lens[:-1] if ncodes else tab_lens,
+              out=tab_off[1:ncodes])
+    src0 = tab_off[codes]
+    if len(marker_pos):
+        esc = np.flatnonzero(codes == ESCAPE)  # markers: the only ESCAPEs
+        src0[esc] = (tok_pos[esc] + (len(tab_flat) + 1)).astype(it)
+    np.subtract(src0, ends, out=src0)
+    src0 += widths                        # src0 - (ends - widths)
+    src = np.repeat(src0, widths)
+    src += np.arange(total, dtype=it)
+    return big[src]
 
 
 class FsstCodec(Codec):
@@ -610,71 +671,37 @@ class FsstCodec(Codec):
                                  "lens": lens_params}
 
     def decode(self, sections, params: dict) -> pa.Array:
+        return self.decode_rows(sections, params, None)
+
+    def decode_rows(self, sections, params: dict, rows) -> pa.Array:
+        """The rows at sorted positions ``rows`` (None: every row).
+        Symbols never span rows, so one running sum of the decoded width
+        of each stream byte (an escaped literal's slot adds 0) locates
+        the wanted rows' bytes, and only those parse and expand."""
         target = name_type(params["atype"])
         lengths = unpack_uints(sections[2], params["lens"])
         enc = np.frombuffer(sections[3], dtype=np.uint8)
-        if len(enc) == 0:
-            return block_to_array(lengths, b"", target)
-        ncodes = params["ncodes"]
-        tab_lens = np.frombuffer(sections[0], dtype=np.uint8, count=ncodes)
+        tab_lens = np.frombuffer(sections[0], dtype=np.uint8,
+                                 count=params["ncodes"])
         tab_flat = np.frombuffer(sections[1], dtype=np.uint8)
-
-        # escape parsing on the 0xFF-position SUBSET: inside each run of
-        # consecutive 0xFF bytes the even-offset ones are escape markers,
-        # odd-offset ones are escaped literals — runs of 0xFF positions are
-        # consecutive indices, so run-parity needs only the subset
-        ff_pos = np.flatnonzero(enc == ESCAPE)
-        if len(ff_pos):
-            rs = np.empty(len(ff_pos), dtype=bool)
-            rs[0] = True
-            np.not_equal(ff_pos[1:], ff_pos[:-1] + 1, out=rs[1:])
-            anchor = np.where(rs, ff_pos, 0)
-            np.maximum.accumulate(anchor, out=anchor)
-            marker_pos = ff_pos[((ff_pos - anchor) & 1) == 0]
-        else:
-            marker_pos = ff_pos
-        if len(marker_pos) and marker_pos[-1] == len(enc) - 1:
-            # corrupt/truncated payload ending in a bare escape marker:
-            # there is no literal slot after it — fail loudly instead of
-            # the IndexError the marker_pos+1 write would raise (ADVICE r2)
-            raise ValueError(
-                "fsst: truncated payload ends with escape marker")
-        tok = enc != ESCAPE
-        tok[marker_pos + 1] = False          # the literal slot after a marker
-        tok[marker_pos] = True               # the marker is the token
-        tok_pos = np.flatnonzero(tok)
-        codes = enc[tok_pos]
-        # widths via a 256-entry uint8 LUT: codes are 0..ncodes-1 < 255, so
-        # the ESCAPE slot keeps width 1 naturally — this replaces the old
-        # int64 np.where/code_len chain (8x the bytes on a memory-bound
-        # kernel; the LUT gather touches 1 byte per token)
-        code_len8 = np.ones(256, dtype=np.uint8)
-        code_len8[:ncodes] = tab_lens
-        widths = code_len8[codes]
-        total = int(widths.sum(dtype=np.int64))
-
-        # single-gather expansion: every output byte reads from an extended
-        # source [symbol table | encoded stream] — table reads stay
-        # cache-resident, the output writes are purely sequential (the old
-        # per-code scatter loop wrote to random positions, DRAM-hostile);
-        # int32 index math while the chunk fits, and every full-length
-        # temporary stays at most 4 bytes wide (the memory-bound budget)
-        big = np.concatenate([tab_flat, enc])
-        it = np.int32 if max(total, len(big)) < 2**31 - 8 else np.int64
-        ends = np.cumsum(widths, dtype=it)
-        tab_off = np.zeros(256, dtype=it)
-        np.cumsum(tab_lens[:-1] if ncodes else tab_lens,
-                  out=tab_off[1:ncodes])
-        src0 = tab_off[codes]
-        if len(marker_pos):
-            esc = np.flatnonzero(codes == ESCAPE)  # markers: the only ESCAPEs
-            src0[esc] = (tok_pos[esc] + (len(tab_flat) + 1)).astype(it)
-        np.subtract(src0, ends, out=src0)
-        src0 += widths                        # src0 - (ends - widths)
-        src = np.repeat(src0, widths)
-        src += np.arange(total, dtype=it)
-        out = big[src]
-        assert int(lengths.sum()) == len(out), "fsst decode length mismatch"
+        if rows is not None:
+            width = np.take(_code_widths(tab_lens), enc)
+            width[_markers(enc) + 1] = 0
+            # a byte decodes to at most 255 bytes: int32 while that fits
+            ends = np.cumsum(width, dtype=np.int32 if len(enc) < 2**23
+                             else np.int64)
+            if (int(ends[-1]) if len(ends) else 0) != int(lengths.sum()):
+                raise ValueError("fsst decode length mismatch")
+            starts = np.zeros(len(lengths) + 1, dtype=ends.dtype)
+            np.cumsum(lengths, out=starts[1:])
+            lo = np.searchsorted(ends, starts[rows], side="right")
+            cnt = np.searchsorted(ends, starts[rows + 1], side="right") - lo
+            enc = enc[np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+                      + np.arange(int(cnt.sum()))]
+            lengths = lengths[rows]
+        out = _expand(tab_flat, tab_lens, enc)
+        if int(lengths.sum()) != len(out):
+            raise ValueError("fsst decode length mismatch")
         return block_to_array(lengths, out.tobytes(), target)
 
 
@@ -705,12 +732,16 @@ class Fsst2Codec(Codec):
         return [secs1[0], secs1[1], secs1[2], *secs2], {**p1, "p2": p2}
 
     def decode(self, sections, params: dict) -> pa.Array:
+        return self.decode_rows(sections, params, None)
+
+    def decode_rows(self, sections, params: dict, rows) -> pa.Array:
+        """Pass 2 in full, then pass 1 for the wanted ``rows`` only."""
         inner = FsstCodec()
         p2 = {**params["p2"], "atype": "large_binary"}
         stream = inner.decode(list(sections[3:]), p2)[0].as_py()
         p1 = {k: v for k, v in params.items() if k != "p2"}
-        return inner.decode(
-            [sections[0], sections[1], sections[2], stream], p1)
+        return inner.decode_rows(
+            [sections[0], sections[1], sections[2], stream], p1, rows)
 
 
 register(FsstCodec())

@@ -42,43 +42,45 @@ from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
 DRIVER_DECODE_BYTES = 16 << 20
 
 
+def _chunk_footer(f, path: str) -> dict:
+    """The footer of the open chunk file ``f``, read from its tail."""
+    f.seek(0, os.SEEK_END)
+    fsize = f.tell()
+    tail = min(fsize, 64 << 10)
+    f.seek(fsize - tail)
+    buf = f.read(tail)
+    if buf[-5:] != CHUNK_MAGIC:
+        raise ValueError(f"bad chunk magic in {path}")
+    flen = int.from_bytes(buf[-9:-5], "little")
+    if flen + 9 > fsize:
+        raise ValueError(f"chunk footer length {flen} exceeds the "
+                         f"{fsize}-byte file {path}")
+    if flen + 9 > len(buf):
+        f.seek(fsize - flen - 9)
+        buf = f.read(flen + 9)
+    return json.loads(buf[-9 - flen:-9])
+
+
+def _payload(f, col: dict, path: str, check_sha: bool) -> bytes:
+    """One footer column's payload bytes, sha256-checked on request."""
+    f.seek(col["offset"])
+    payload = f.read(col["length"])
+    if check_sha and hashlib.sha256(payload).hexdigest() != col["sha256"]:
+        raise ValueError(f"sha256 mismatch for {col['name']} in {path}")
+    return payload
+
+
 def read_chunk_file(path: str, columns: list[str] | None = None,
                     check_sha: bool = False) -> pa.Table:
-    """Decode one self-describing chunk file.
-
-    Column pruning is real I/O pruning: the footer is read from the file
-    tail, then only the selected columns' byte ranges are read — a scan of
-    2 of 67 wide-record columns touches ~3% of the file (the chunk-level
-    analogue of Parquet column-chunk seeks)."""
+    """Decode the ``columns`` (default: all) of one self-describing chunk
+    file, reading only their byte ranges (the chunk-level analogue of
+    Parquet column-chunk seeks): 2 of 67 wide-record columns read ~3%."""
     with open(path, "rb") as f:
-        f.seek(0, os.SEEK_END)
-        fsize = f.tell()
-        tail = min(fsize, 64 << 10)
-        f.seek(fsize - tail)
-        buf = f.read(tail)
-        if buf[-5:] != CHUNK_MAGIC:
-            raise ValueError(f"bad chunk magic in {path}")
-        flen = int.from_bytes(buf[-9:-5], "little")
-        if flen + 9 > fsize:
-            raise ValueError(f"chunk footer length {flen} exceeds the "
-                             f"{fsize}-byte file {path}")
-        if flen + 9 > len(buf):
-            f.seek(fsize - flen - 9)
-            buf = f.read(flen + 9)
-        footer = json.loads(buf[-9 - flen:-9])
-        arrays, names = [], []
-        for col in footer["columns"]:
-            if columns is not None and col["name"] not in columns:
-                continue
-            f.seek(col["offset"])
-            payload = f.read(col["length"])
-            if check_sha and \
-                    hashlib.sha256(payload).hexdigest() != col["sha256"]:
-                raise ValueError(
-                    f"sha256 mismatch for {col['name']} in {path}")
-            arrays.append(decode_column(payload, col["params"]))
-            names.append(col["name"])
-    return pa.table(dict(zip(names, arrays)))
+        return pa.table({
+            c["name"]: decode_column(_payload(f, c, path, check_sha),
+                                     c["params"])
+            for c in _chunk_footer(f, path)["columns"]
+            if columns is None or c["name"] in columns})
 
 
 # per-python-worker cache of delete-key arrays: every chunk of a scan
@@ -121,40 +123,56 @@ def read_chunk_table(path: str, schema: pa.Schema,
       (Iceberg's read-time null-fill for added fields).
     - drop: a dropped column simply isn't in ``schema`` — its bytes stay
       in old chunks (readable via time travel) but are never decoded.
-    - filters: ``decode_store``'s list; rows ``_row_mask`` rejects drop
-      after the deletes and null-fill. Filter columns decode too.
+    - filters: ``decode_store``'s list; rows ``_row_mask`` rejects drop.
+
+    Filter-first: the delete keys and filter columns decode whole, then
+    the other columns only for the surviving rows (``decode_column``'s
+    ``rows``; no ``rows`` when all survive, as on an unfiltered read). A
+    chunk with no survivor returns a table with no chunks and decodes
+    nothing else; ``check_sha`` still hashes every projected payload.
     """
-    want = _decoded_columns(schema.names, [lk for _, _, lk in deletes],
-                            filters)
-    old_names = [o for c in want for o in (aliases or {}).get(c, [])]
-    t = read_chunk_file(path, columns=want + old_names,
-                        check_sha=check_sha)
-    if old_names:
-        present = set(t.schema.names)
-        relabel = {}
-        for live in want:
-            if live in present:
-                continue
-            for old in (aliases or {}).get(live, []):
-                if old in present:
-                    relabel[old] = live
+    first = _decoded_columns([], [lk for _, _, lk in deletes], filters)
+    with open(path, "rb") as f:
+        footer = _chunk_footer(f, path)
+        n = footer["rows"]
+        by_name = {c["name"]: c for c in footer["columns"]}
+        src = {}    # live name -> its footer column, else a retired one's
+        for live in {*schema.names, *first}:
+            for name in [live, *(aliases or {}).get(live, [])]:
+                if name in by_name:
+                    src[live] = by_name[name]
                     break
-        if relabel:
-            t = t.rename_columns([relabel.get(n, n)
-                                  for n in t.schema.names])
-    for dpath, key, live_key in deletes:
-        if live_key in t.schema.names:   # else: chunk predates the key
-            t = t.filter(pc.invert(pc.is_in(
-                t.column(live_key), value_set=_delete_keys(dpath, key),
-                skip_nulls=True)))
-    for c in want:
-        if c not in t.schema.names:
+
+        def column(c, **kw):
+            if c in src:
+                return decode_column(_payload(f, src[c], path, check_sha),
+                                     src[c]["params"], **kw)
+            # a column added after the chunk committed null-fills
             typ = schema.field(c).type if c in schema.names else pa.null()
-            t = t.append_column(c, pa.nulls(t.num_rows, type=typ))
-    out = t.select(schema.names)
-    if filters:
-        out = out.filter(pa.array(_row_mask(t, filters)))
-    return out.cast(schema)
+            return pa.nulls(len(kw["rows"]) if kw else n, typ)
+
+        # phase 1: the delete keys and filter columns, whole
+        cols = {c: column(c) for c in first}
+        keep = np.ones(n, dtype=bool)
+        for dpath, key, live_key in deletes:
+            if live_key in src:      # else: chunk predates the key
+                keep &= ~pc.is_in(
+                    cols[live_key], value_set=_delete_keys(dpath, key),
+                    skip_nulls=True).to_numpy(zero_copy_only=False)
+        if filters:
+            keep &= _row_mask(pa.table(cols), filters)
+        if not keep.any():
+            if check_sha:            # the integrity check reads them all
+                for c in src.keys() - cols.keys():
+                    _payload(f, src[c], path, True)
+            return pa.Table.from_batches([], schema)
+        # phase 2: every other column, only for the surviving rows
+        rows = None if keep.all() else np.flatnonzero(keep)
+        kw = {} if rows is None else {"rows": rows}
+        out = {c: column(c, **kw) if c not in cols else
+               cols[c] if rows is None else cols[c].take(rows)
+               for c in schema.names}
+    return pa.table(out).cast(schema)
 
 
 def _decoded_columns(names, delete_keys, filters) -> list[str]:
@@ -315,9 +333,6 @@ def prune_files(manifest: pa.Table,
     the driver path holds to its 'millions of chunk rows' claim.
     Timestamps compare as epoch micros."""
     import base64
-    import json as _json
-
-    import numpy as np
 
     def _norm(v):
         # stats store timestamps as epoch micros; normalize filter values
@@ -377,11 +392,9 @@ def prune_files(manifest: pa.Table,
             # string (no per-row Python list), one C-level json.loads
             def _parse(col):
                 a = srows.column(col).combine_chunks()
-                if isinstance(a, pa.ChunkedArray):
-                    a = a.combine_chunks()
                 joined = pc.binary_join(
                     pa.ListArray.from_arrays([0, len(a)], a), ",")
-                return _json.loads("[" + joined[0].as_py() + "]")
+                return json.loads("[" + joined[0].as_py() + "]")
             lo = _parse("stat_min")
             hi = _parse("stat_max")
             if acc is not None:
@@ -712,7 +725,8 @@ def decode_store(spark: SparkSession, out_dir: str,
     raises from this call instead of at the first action. An empty plan
     opens no chunk at all. Larger reads and every distributed-planning
     read decode in Spark tasks. Both forks read and filter each chunk with
-    the same ``read_chunk_table`` call."""
+    the same ``read_chunk_table`` call, which decodes the filter columns
+    first and every other column only for the rows that pass."""
     if planning not in ("driver", "distributed"):
         raise ValueError(
             f"planning must be 'driver' or 'distributed': {planning}")
@@ -752,7 +766,7 @@ def decode_store(spark: SparkSession, out_dir: str,
         return fdf.mapInArrow(task, spark_schema)
     # a small read decodes here, eagerly, into a local relation: no
     # Python-worker job, and decode errors raise from this call
-    tables = [read(f, n) for f, n in kept.items()]
-    table = pa.concat_tables(tables) if any(t.num_rows for t in tables) \
-        else schema.empty_table()   # filtered tables may hold no chunk
+    # tables with rows only: createDataFrame drops rows after an empty batch
+    tables = [t for t in (read(f, n) for f, n in kept.items()) if t.num_rows]
+    table = pa.concat_tables(tables) if tables else schema.empty_table()
     return spark.createDataFrame(table, schema=spark_schema)

@@ -16,7 +16,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from omi_cpp_parquet_wide_record_spark.codecs import (
-    decode_column, encode_column,
+    codec_names, decode_column, encode_column,
 )
 from tests.conftest import arrays_equal
 
@@ -245,6 +245,73 @@ def test_map_roundtrips():
         roundtrip(arr, "map")
     from omi_cpp_parquet_wide_record_spark.selector import choose_codec
     assert choose_codec(cases[0]).codec == "map"
+
+
+# ---------------------------------------------------------------- row subsets
+
+def _rows_inputs(rng) -> dict[str, list[pa.Array]]:
+    """Null-free inputs of every codec, on each of its types."""
+    n = 240
+    ints = pa.array(rng.integers(-1000, 1000, n))
+    small = pa.array(rng.integers(0, 9, n))
+    bools = pa.array(rng.random(n) < 0.3)
+    ts = pa.array(rng.integers(0, 10**6, n) * 1000, pa.timestamp("us"))
+    reals = pa.array(rng.normal(size=n))
+    prices = pa.array(np.round(rng.uniform(0, 500, n), 2))
+    words = ["<div>", "href=", "banana", "日本", "", "spark "]
+    text = pa.array(["".join(rng.choice(words, rng.integers(0, 12)))
+                     for _ in range(n)])
+    escapes = pa.array([b"\xff" * (i % 5) + b"a\xff" * (i % 3)
+                        for i in range(n)], pa.binary())
+    lists = pa.array([[float(i)] * (i % 4) for i in range(n)],
+                     pa.list_(pa.float64()))
+    struct = pa.array([{"a": i % 7, "b": f"b{i % 11}"} for i in range(n)])
+    maps = pa.array([{"k": i, "j": -i} if i % 3 else {} for i in range(n)],
+                    pa.map_(pa.string(), pa.int64()))
+    return {"plain": [ints, bools, ts, reals, text], "for": [ints, ts],
+            "delta": [ints, ts], "bitpack": [small, bools],
+            "dict": [ints, reals, text], "rle": [small, text, bools],
+            "alp": [prices], "alprd": [reals],
+            "fsst": [text, escapes], "fsst2": [text, escapes],
+            "list": [lists], "struct": [struct], "map": [maps]}
+
+
+@pytest.mark.parametrize("codec", codec_names())
+def test_decode_rows_equals_take(codec):
+    """``decode_column(p, params, rows)`` equals the full decode's
+    ``take(rows)`` on every codec and type, with and without nulls."""
+    rng = np.random.default_rng(11)
+    for base in _rows_inputs(rng)[codec]:
+        n = len(base)
+        holes = pa.array(np.arange(n), mask=rng.random(n) < 0.3)
+        for arr in (base, base.take(holes)):
+            e = encode_column(arr, codec)
+            full = decode_column(e.payload, e.params)
+            subsets = [[], [0], [n - 1], range(n)] + [
+                np.sort(rng.choice(n, k, replace=False)) for k in (1, 9, 150)]
+            for rows in subsets:
+                rows = np.asarray(rows, dtype=np.int64)
+                got = decode_column(e.payload, e.params, rows=rows)
+                assert arrays_equal(got, full.take(pa.array(rows))), \
+                    (codec, arr.type, arr.null_count, rows)
+
+
+@pytest.mark.parametrize("edit", ["truncated", "extra"])
+def test_fsst_bad_payload_raises_value_error(edit):
+    """A payload whose token stream is cut short or carries extra bytes
+    raises ``ValueError`` (an assert would vanish under ``python -O``),
+    on the full decode and on the row-subset decode."""
+    arr = pa.array([f"row {i} of the table" for i in range(50)])
+    e = encode_column(arr, "fsst")
+    lens = list(e.params["sections"])
+    payload = e.payload[:-3] if edit == "truncated" else \
+        e.payload + b"\x00\x01\x02"
+    lens[-1] += -3 if edit == "truncated" else 3
+    params = {**e.params, "sections": lens}
+    for rows in (None, np.array([0, 7, 49])):
+        with pytest.raises(ValueError, match="fsst"):
+            decode_column(payload, params, **(
+                {} if rows is None else {"rows": rows}))
 
 
 # ---------------------------------------------------------------- hypothesis

@@ -276,6 +276,91 @@ def test_small_pruned_reads_decode_on_driver(spark, tmp_path, monkeypatch):
     assert 0 < plan.kept_files(None).bytes_in <= cut
 
 
+def test_fully_deleted_chunk_loses_no_later_rows(spark, tmp_path,
+                                                 monkeypatch):
+    """A chunk whose every row is deleted reads as a table with no rows,
+    and every read path still returns the rows of the chunks after it
+    (Spark's createDataFrame of an Arrow table drops the rows that follow
+    a zero-length batch)."""
+    from pyspark.sql import functions as F
+    from omi_cpp_parquet_wide_record_spark.operators.maintenance import (
+        delete_rows,
+    )
+    out = str(tmp_path / "store")
+    encode_dataframe(spark.range(0, 300), out, salt_key="id", num_pids=1,
+                     chunk_rows=100, sort_by=["id"])
+    encode_dataframe(spark.range(300, 400).select(
+        F.col("id"), (F.col("id") * 2).alias("y")), out, salt_key="id",
+        num_pids=1, resume=False)
+    delete_rows(out, spark.range(100, 200), "id")
+    want = [i for i in range(400) if not 100 <= i < 200]
+    reads = decode_paths(monkeypatch, lambda: decode_store(spark, out))
+    reads.append(decode_store(spark, out, planning="distributed"))
+    for df in reads:
+        assert df.count() == 300
+        assert sorted(r.id for r in df.select("id").collect()) == want
+
+
+def test_filter_first_read_decodes_only_what_survives(spark, tmp_path,
+                                                      monkeypatch):
+    """``read_chunk_table`` decodes the filter columns first: a chunk
+    with no surviving row decodes nothing else, a chunk with a few
+    survivors decodes the other columns for those rows only, and one
+    whose rows all survive decodes them whole. ``check_sha`` still
+    hashes the payloads a no-survivor read never decodes."""
+    import shutil
+
+    from pyspark.sql import functions as F
+    out = str(tmp_path / "store")
+    encode_dataframe(spark.range(0, 200).select(
+        F.col("id"), F.concat(F.lit("u"), F.col("id")).alias("url"),
+        (F.col("id") / 7).alias("v")), out, salt_key="id", num_pids=1,
+        chunk_rows=100, sort_by=["id"])
+    plan = D.ScanPlan.resolve(out)
+    path = os.path.join(plan.store.chunks_dir,
+                        sorted(plan.kept_files(None))[0])
+    whole = D.read_chunk_table(path, plan.schema)
+    lo = min(whole.column("id").to_pylist())
+    names = {"int64": "id", "string": "url", "float64": "v"}
+    calls = []
+    real = D.decode_column
+
+    def counting(payload, params, **kw):
+        rows = kw.get("rows")
+        calls.append((names[params["atype"]],
+                      None if rows is None else list(rows)))
+        return real(payload, params, **kw)
+
+    monkeypatch.setattr(D, "decode_column", counting)
+
+    def read(flt, p=path, check_sha=False):
+        calls.clear()
+        return D.read_chunk_table(p, plan.schema, check_sha=check_sha,
+                                  filters=[flt])
+
+    none = read(("id", "<", -1))
+    assert none.num_rows == 0 and none.column("url").num_chunks == 0
+    assert none.schema == plan.schema and calls == [("id", None)]
+    few = read(("id", "in", [lo + 5, lo + 9]))
+    assert few.equals(whole.take([5, 9]))
+    assert calls == [("id", None), ("url", [5, 9]), ("v", [5, 9])]
+    assert read(("id", ">=", lo)).equals(whole)
+    assert calls == [("id", None), ("url", None), ("v", None)]
+    # a flipped byte in a payload a no-survivor read never decodes
+    bad = str(tmp_path / "bad.owrc")
+    shutil.copy(path, bad)
+    with open(bad, "r+b") as f:
+        col = next(c for c in D._chunk_footer(f, bad)["columns"]
+                   if c["name"] == "url")
+        f.seek(col["offset"] + 1)
+        byte = f.read(1)[0]
+        f.seek(col["offset"] + 1)
+        f.write(bytes([byte ^ 0xFF]))
+    assert read(("id", "<", -1), bad).num_rows == 0
+    with pytest.raises(ValueError, match="sha256 mismatch for url"):
+        read(("id", "<", -1), bad, check_sha=True)
+
+
 def test_resume_after_partial_commit(spark, corpus, tmp_path):
     """Kill-after-K-commits simulation: commit a manifest for a subset of
     pids, rerun, assert only the missing pids are encoded (SURVEY §5.2.5)."""
@@ -503,6 +588,8 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert got.count() == 700
     assert got.filter(F.col("b").isNull()).count() == 400   # old rows
     assert got.filter("id = 500").collect()[0].b == "v500"
+    # projecting only the added column still reads every old row
+    assert decode_store(spark, out, columns=["b"]).count() == 700
     # time travel still returns the OLD schema for the old snapshot
     past = decode_store(spark, out, snapshot=0)
     assert set(past.columns) == {"id", "a"} and past.count() == 400
@@ -1169,11 +1256,14 @@ def test_pruning_fuzz_never_loses_rows(spark, tmp_path):
          .alias("key"),
         F.concat(F.lit("d-"), (F.col("id") % 13).cast("string"))
          .alias("cat"),
-        F.when(F.col("id") % 5 != 0, F.col("id") * 11).alias("w"))
+        F.when(F.col("id") % 5 != 0, F.col("id") * 11).alias("w"),
+        # a few NaN rows: chunks holding one record no float bounds
+        F.when(F.col("id") % 400 == 7, F.lit(NAN))
+         .when(F.col("id") % 13 != 1, F.col("id") * 0.25).alias("f"))
     out = str(tmp_path / "store")
     encode_dataframe(df, out, salt_key="key", num_pids=12,
                      chunk_rows=500, sort_by=["id"])
-    full = decode_store(spark, out).cache()
+    full = decode_store(spark, out)    # uncached: see filter_store
     assert full.count() == N
     store = ChunkStore(out)
     snap = store.current_snapshot()
@@ -1182,7 +1272,15 @@ def test_pruning_fuzz_never_loses_rows(spark, tmp_path):
              for x in snap["manifests"]]
 
     def rand_filter():
-        col = rnd.choice(["id", "v", "key", "cat", "w"])
+        col = rnd.choice(["id", "v", "key", "cat", "w", "f"])
+        if col == "f":
+            op = rnd.choice(["<", "<=", ">", ">=", "==", "in"])
+            top = N // 4 + 50
+            mk = lambda: NAN if rnd.random() < 0.4 else float(  # noqa: E731
+                rnd.randrange(0, top))
+            if op == "in":
+                return (col, op, [mk() for _ in range(rnd.randrange(1, 4))])
+            return (col, op, mk())
         if col == "w":
             op = rnd.choice(["is_null", "is_not_null", "<", ">="])
             if op in ("is_null", "is_not_null"):
@@ -1215,8 +1313,11 @@ def test_pruning_fuzz_never_loses_rows(spark, tmp_path):
              "startswith": lambda c, v: F.col(c).startswith(v),
              "is_null": lambda c, v: F.col(c).isNull(),
              "is_not_null": lambda c, v: F.col(c).isNotNull()}
-    for trial in range(25):
-        filters = [rand_filter() for _ in range(rnd.randrange(1, 4))]
+    nan_cases = [[("f", "==", NAN)], [("f", "in", [NAN, 250.0])],
+                 [("f", ">", 1000.0)], [("f", "<", NAN), ("v", "<", 50)]]
+    for trial in range(25 + len(nan_cases)):
+        filters = nan_cases[trial] if trial < len(nan_cases) else \
+            [rand_filter() for _ in range(rnd.randrange(1, 4))]
         cond = None
         for c, op, v in filters:
             e = exprs[op](c, v)
@@ -1335,7 +1436,7 @@ def test_string_pruning_unicode_edges(spark, tmp_path):
     out = str(tmp_path / "store")
     encode_dataframe(df, out, salt_key="id", num_pids=6,
                      chunk_rows=300, sort_by=["s"])
-    full = decode_store(spark, out).cache()
+    full = decode_store(spark, out)    # uncached: see filter_store
     assert full.count() == 2000
     store = ChunkStore(out)
     snap = store.current_snapshot()
@@ -1545,7 +1646,7 @@ def test_nested_zone_map_pruning(spark, tmp_path, monkeypatch):
     # per-chunk zones — the layout a sort-ordered ingest produces
     encode_dataframe(df, out, partition_by=["bucket"], salt_key="id",
                      num_pids=12, salt=1, sort_by=["id"])
-    full = decode_store(spark, out).cache()
+    full = decode_store(spark, out)    # uncached: see filter_store
     assert full.count() == N
     store = ChunkStore(out)
     snap = store.current_snapshot()
@@ -1634,7 +1735,7 @@ def test_nested_pruning_fuzz_never_loses_rows(spark, tmp_path):
     out = str(tmp_path / "store")
     encode_dataframe(df, out, salt_key="id", num_pids=8,
                      chunk_rows=300, sort_by=["id"])
-    full = decode_store(spark, out).cache()
+    full = decode_store(spark, out)    # uncached: see filter_store
     assert full.count() == N
     store = ChunkStore(out)
     snap = store.current_snapshot()
