@@ -220,8 +220,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---------------- binary capture pipeline (O1-O10 on real binary data)
     def _pcap_parse(s, d):
-        """O1+O2 on real capture bytes: pcap file scan (binaryFile + record
-        framing) -> eth/VLAN/IPv4/UDP strip -> full wide-record decode, all
+        """O1+O2 on real capture bytes: pcap file scan (per-file reads +
+        record framing) -> eth/VLAN/IPv4/UDP strip -> full wide-record decode, all
         67 columns hash-compared against a golden parquet produced by an
         independent scalar reference-style parser from the same bytes."""
         from omi_cpp_parquet_wide_record_spark.operators.wide_record import (

@@ -62,16 +62,13 @@ _NKEYS = _KSPACE * _KSPACE
 # slightly better table (the finer stride samples more rows; min_count
 # scales down with the sample) at 1.5-1.9x the encode throughput of the
 # r2 2 MB budget; 256 KB starts to wobble the ratio on text columns.
-import os as _os
 import sys as _sys
 
-TRAIN_BYTES_DEFAULT = int(_os.environ.get("OWR_FSST_TRAIN_BYTES",
-                                          512 << 10))
+TRAIN_BYTES_DEFAULT = 512 << 10
 # 512 KB replay blocks (r5 sweep: 22.4 vs 20.1 MB/s single-proc and
 # 279 vs 264 MB/s aggregate at 32-way against the old 1 MB — the int16
 # stream + temps of a 1 MB block overflow L2 under full-core concurrency)
-BLOCK_BYTES_DEFAULT = int(_os.environ.get("OWR_FSST_BLOCK_BYTES",
-                                          512 << 10))
+BLOCK_BYTES_DEFAULT = 512 << 10
 
 
 def _with_sentinels(corpus: np.ndarray, start_pos: np.ndarray) -> np.ndarray:
@@ -579,15 +576,12 @@ class FsstCodec(Codec):
         np.cumsum(lengths, out=starts[1:])
         start_pos = starts[:-1][lengths > 0]
 
-        TRAIN_BYTES = TRAIN_BYTES_DEFAULT
-        BLOCK_BYTES = BLOCK_BYTES_DEFAULT
-
         plan = shared.get("plan") if shared is not None else None
         if plan is not None:
             out = _replay_blocks(corpus, starts, start_pos, n_rows,
                                  plan["prog"], plan["lut16"],
                                  plan["enc_flat"], plan["enc_off"],
-                                 plan["enc_w"], BLOCK_BYTES)
+                                 plan["enc_w"], BLOCK_BYTES_DEFAULT)
             if len(out) <= int(plan["exp"] * len(corpus) * 1.3) + 4096:
                 table = plan["table"]
                 tab_lens = plan["tab_lens"]
@@ -598,7 +592,7 @@ class FsstCodec(Codec):
             # drift: this chunk's bytes no longer match the trained
             # distribution — retrain below and replace the shared plan
 
-        if len(corpus) <= BLOCK_BYTES and shared is None:
+        if len(corpus) <= BLOCK_BYTES_DEFAULT and shared is None:
             min_count = max(self.min_count, len(corpus) >> 15)
             t, pairs, _prog = _train_and_tokenize(
                 _with_sentinels(corpus, start_pos), self.rounds,
@@ -606,7 +600,7 @@ class FsstCodec(Codec):
             table, enc_flat, enc_off, enc_w = _assign_codes_from_freq(
                 np.bincount(t, minlength=_KSPACE).astype(np.int64), pairs)
             out = _assemble(t, enc_flat, enc_off, enc_w)
-        elif len(corpus) <= BLOCK_BYTES:
+        elif len(corpus) <= BLOCK_BYTES_DEFAULT:
             # whole corpus is the training sample. THIS chunk's output uses
             # the exact assignment (ids absent from the stream get no table
             # entry — byte-identical to the shared=None path); the PLAN
@@ -626,13 +620,14 @@ class FsstCodec(Codec):
             shared["plan"] = _make_plan(prog, ptable, pflat, poff, pw,
                                         len(out), len(corpus))
         else:
-            # train on a strided row sample (TRAIN_BYTES), replay the merge
-            # program on ~1 MB blocks — the per-round passes then run over
-            # cache-resident token arrays instead of DRAM-sized ones
+            # train on a strided row sample (TRAIN_BYTES_DEFAULT), replay
+            # the merge program on BLOCK_BYTES_DEFAULT blocks — the
+            # per-round passes then run over cache-resident token arrays
+            # instead of DRAM-sized ones
             row_off = starts[:-1]
             nz = np.flatnonzero(lengths > 0)
             stride = max(1, int(np.ceil(
-                float(lengths[nz].sum()) / TRAIN_BYTES)))
+                float(lengths[nz].sum()) / TRAIN_BYTES_DEFAULT)))
             pick = nz[::stride]
             plens = lengths[pick]
             s_off = np.concatenate(([0], np.cumsum(plens)[:-1]))
@@ -659,7 +654,7 @@ class FsstCodec(Codec):
             lut16 = _round0_lut16(prog)
             out = _replay_blocks(corpus, starts, start_pos, n_rows, prog,
                                  lut16, enc_flat, enc_off, enc_w,
-                                 BLOCK_BYTES)
+                                 BLOCK_BYTES_DEFAULT)
             if shared is not None:
                 shared["plan"] = _make_plan(prog, table, enc_flat, enc_off,
                                             enc_w, len(out), len(corpus),

@@ -488,43 +488,6 @@ def _names_df(spark: SparkSession, names: list[str], col: str) -> DataFrame:
         .repartition(parallelism)
 
 
-def _map_shards(spark: SparkSession, paths: list[str], fn,
-                schema: pa.Schema) -> DataFrame:
-    """``fn(manifest_path) -> pa.Table`` over every manifest shard as one
-    Spark job: the distributed form of a driver-side loop over shards, so
-    chunk-level manifest rows never materialize on the driver."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    def task(batches):
-        for b in batches:
-            for path in b.column("manifest").to_pylist():
-                yield from fn(path).cast(schema).to_batches()
-
-    return _names_df(spark, paths, "manifest").mapInArrow(
-        task, from_arrow_schema(schema))
-
-
-def distributed_file_plan(spark: SparkSession, paths: list[str],
-                          filters: list[tuple[str, str, object]] | None,
-                          drop_pids: list[int] | None = None,
-                          aliases: dict[str, list[str]] | None = None
-                          ) -> DataFrame:
-    """Chunk-file list as a Spark plan: each task takes manifest shards,
-    builds their live view (``ChunkStore.live_shard``: pid drop, alias
-    canonicalization) and prunes it with ``prune_files`` — the same
-    compiler driver planning runs, so both modes open the same files.
-    Per-shard pruning equals global pruning because every chunk file's
-    manifest rows live in one shard (``write_chunks``, the one writer,
-    puts all of a task's chunk rows in that task's shard)."""
-    def plan(path):
-        live = ChunkStore.live_shard(path, drop_pids or (), aliases)
-        return pa.table({"chunk_file": pa.array(
-            prune_files(live, filters or []), pa.string())})
-
-    return _map_shards(spark, list(paths), plan,
-                       pa.schema([("chunk_file", pa.string())]))
-
-
 @dataclass
 class ScanPlan:
     """Every read-path decision taken before a chunk is opened, made once
@@ -636,13 +599,24 @@ class ScanPlan:
 
     def _shards(self, spark: SparkSession, fn, schema: pa.Schema
                 ) -> DataFrame:
+        """``fn(shard_view) -> pa.Table`` over every manifest shard of
+        the snapshot as one Spark job: the distributed form of a
+        driver-side loop over shards, so chunk-level manifest rows never
+        materialize on the driver. Per-shard pruning equals global
+        pruning because every chunk file's manifest rows live in one
+        shard (``write_chunks``, the one writer, puts all of a task's
+        chunk rows in that task's shard)."""
+        from pyspark.sql.pandas.types import from_arrow_schema
         store, snap = self.store, self.snap
-        return _map_shards(
-            spark, [os.path.join(store.manifests_dir, m)
-                    for m in snap["manifests"]],
-            lambda path: fn(store.shard_view(snap, os.path.basename(path),
-                                             with_commit_n=True)),
-            schema)
+
+        def task(batches):
+            for b in batches:
+                for m in b.column("manifest").to_pylist():
+                    live = store.shard_view(snap, m, with_commit_n=True)
+                    yield from fn(live).cast(schema).to_batches()
+
+        return _names_df(spark, list(snap["manifests"]), "manifest") \
+            .mapInArrow(task, from_arrow_schema(schema))
 
 
 class KeptFiles(dict):

@@ -7,10 +7,13 @@ header, and keeps only UDP — non-UDP packets are dropped but still bump the
 1-based packet counter (`try_get_nasdaq_itch`, ref NQ:3401-3434; VLAN loop
 3410-3412; UDP test 3421; counter bump before the filter, NQ:3403).
 
-Spark shape: `spark.read.format("binaryFile")` fans capture files out over
-the cluster (one task per file — captures are the natural work unit, the
-in-file record chain is inherently sequential, exactly as in the
-reference's single pcap loop). Inside a task, the per-record header walk
+Spark shape: `_list_captures` selects the capture files and both entry
+points — `read_pcap` (the file list handed to Spark by
+`operators.decode._names_df`) and `spark.read.format("pcap")`
+(`PcapDataSource`) — fan them out over the cluster and read each with
+`_capture_batches` (whole files per task — captures are the natural work
+unit, the in-file record chain is inherently sequential, exactly as in
+the reference's single pcap loop). Inside a task, the per-record header walk
 touches only the 16-byte pcap record headers; every per-packet byte
 operation (ethertype reads, VLAN stepping, IHL/protocol extraction, UDP
 payload slicing) is whole-array numpy over all records at once.
@@ -22,10 +25,18 @@ pcap_index already dense per file including dropped non-UDP packets.
 
 from __future__ import annotations
 
+import glob
+import os
+
 import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import (
+    DataSource, DataSourceReader, InputPartition,
+)
+
+from omi_cpp_parquet_wide_record_spark.operators.decode import _names_df
 
 PCAP_MAGIC_LE = b"\xd4\xc3\xb2\xa1"   # 0xa1b2c3d4 written little-endian
 PCAP_MAGIC_BE = b"\xa1\xb2\xc3\xd4"
@@ -333,85 +344,82 @@ def packets_from_capture(data: bytes) -> pa.RecordBatch:
     return pa.concat_tables(parts)
 
 
+PACKETS_SCHEMA = ("pcap_index long, pcap_sec long, pcap_usec long, "
+                  "payload binary")
+
+
+def _list_captures(path: str) -> list[str]:
+    """The capture files both readers scan: every ``*.pcap`` under a
+    directory (recursive; ``_``-prefixed names are included, glob skips
+    ``.``-prefixed ones), else the ``glob(path)`` matches. Raises
+    FileNotFoundError naming ``path`` when nothing matches."""
+    if os.path.isdir(path):
+        files = glob.glob(os.path.join(path, "**", "*.pcap"), recursive=True)
+    else:
+        files = glob.glob(path)
+    if not files:
+        raise FileNotFoundError(f"no .pcap files under {path}")
+    return sorted(files)
+
+
+def _capture_batches(path: str):
+    """One capture file -> its packet batches (none for an empty capture)."""
+    with open(path, "rb") as f:
+        tbl = packets_from_capture(f.read())
+    if tbl.num_rows:
+        yield from tbl.to_batches()
+
+
 def read_pcap(spark: SparkSession, path: str) -> DataFrame:
     """Distributed pcap scan: capture files -> packets DataFrame.
 
-    `binaryFile` assigns whole files to tasks (a 100 TB corpus is many
-    capture files; each decodes independently). The emitted pcap_index is
-    per-file, like the reference's per-run counter.
+    The ``_list_captures`` list goes to Spark through ``_names_df``, the
+    engine's one file-list path; each task reads whole capture files from
+    the local or shared filesystem (a 100 TB corpus is many capture files;
+    each decodes independently). The emitted pcap_index is per-file, like
+    the reference's per-run counter.
     """
-    import os
-    reader = spark.read.format("binaryFile")
-    if os.path.isdir(path):
-        reader = reader.option("recursiveFileLookup", "true") \
-                       .option("pathGlobFilter", "*.pcap")
-    files = reader.load(path).select("content")
-
     def task(batches):
         for b in batches:
-            content = b.column("content")
-            for i in range(len(content)):
-                out = packets_from_capture(content[i].as_py())
-                if out.num_rows:
-                    yield from out.to_batches()
+            for f in b.column("path").to_pylist():
+                yield from _capture_batches(f)
 
-    return files.mapInArrow(
-        task, "pcap_index long, pcap_sec long, pcap_usec long, payload binary")
+    return _names_df(spark, _list_captures(path), "path").mapInArrow(
+        task, PACKETS_SCHEMA)
 
 
 # ------------------------------------------------ registered Spark format
 
-def _list_captures(path: str) -> list[str]:
-    import glob
-    import os
-    if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, "**", "*.pcap"),
-                                recursive=True))
-    return sorted(glob.glob(path))
+class _PcapPartition(InputPartition):
+    def __init__(self, path: str):
+        self.path = path
 
 
-try:
-    from pyspark.sql.datasource import (
-        DataSource, DataSourceReader, InputPartition,
-    )
+class _PcapReader(DataSourceReader):
+    def __init__(self, options):
+        self.path = options.get("path")
+        if not self.path:
+            raise ValueError("pcap source needs a path")
 
-    class _PcapPartition(InputPartition):
-        def __init__(self, path: str):
-            self.path = path
+    def partitions(self):
+        return [_PcapPartition(f) for f in _list_captures(self.path)]
 
-    class _PcapReader(DataSourceReader):
-        def __init__(self, options):
-            self.path = options.get("path")
-            if not self.path:
-                raise ValueError("pcap source needs a path")
+    def read(self, partition: _PcapPartition):
+        yield from _capture_batches(partition.path)
 
-        def partitions(self):
-            files = _list_captures(self.path)
-            if not files:
-                raise FileNotFoundError(f"no .pcap files under {self.path}")
-            return [_PcapPartition(f) for f in files]
 
-        def read(self, partition: _PcapPartition):
-            with open(partition.path, "rb") as f:
-                tbl = packets_from_capture(f.read())
-            if tbl.num_rows:
-                yield from tbl.to_batches()
+class PcapDataSource(DataSource):
+    """spark.read.format("pcap").load(path): one task per capture file of
+    ``_list_captures(path)`` (local/shared filesystem paths), the same
+    files and rows as ``read_pcap``. Register with
+    spark.dataSource.register(PcapDataSource)."""
 
-    class PcapDataSource(DataSource):
-        """spark.read.format("pcap").load(path): one task per capture file
-        (local/shared filesystem paths; use read_pcap() + binaryFile for
-        object stores). Register with
-        spark.dataSource.register(PcapDataSource)."""
+    @classmethod
+    def name(cls) -> str:
+        return "pcap"
 
-        @classmethod
-        def name(cls) -> str:
-            return "pcap"
+    def schema(self):
+        return PACKETS_SCHEMA
 
-        def schema(self):
-            return ("pcap_index long, pcap_sec long, pcap_usec long, "
-                    "payload binary")
-
-        def reader(self, schema):
-            return _PcapReader(self.options)
-except ImportError:       # pragma: no cover - older pyspark without the API
-    PcapDataSource = None
+    def reader(self, schema):
+        return _PcapReader(self.options)

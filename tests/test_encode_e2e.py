@@ -1186,11 +1186,8 @@ def test_pruning_parity_driver_vs_distributed(spark, tmp_path):
     for string zone-map filters and (multi-literal) bloom equality — at
     corpus scale distributed planning is mandatory, so a plan that prunes
     less there would quietly lose exactly the point-lookup wins."""
-    import os
     from pyspark.sql import functions as F
-    from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
-    )
+    from omi_cpp_parquet_wide_record_spark.operators.decode import prune_files
     out = str(tmp_path / "store")
     df = spark.range(0, 4000).select(
         F.col("id"),
@@ -1202,8 +1199,7 @@ def test_pruning_parity_driver_vs_distributed(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
+    plan = D.ScanPlan.resolve(out)
 
     cases = [
         # string range: zone maps on url bounds
@@ -1225,7 +1221,7 @@ def test_pruning_parity_driver_vs_distributed(spark, tmp_path):
     for filters in cases:
         drv = prune_files(m, filters)
         dist = sorted(r.chunk_file for r in
-                      distributed_file_plan(spark, paths, filters)
+                      plan.shard_files(spark, filters)
                       .collect())
         assert drv == dist, (filters, len(drv), len(dist))
     # a real string-pruned case must actually prune
@@ -1240,13 +1236,10 @@ def test_pruning_fuzz_never_loses_rows(spark, tmp_path):
     filtered read must return exactly the rows a full decode +
     post-filter returns (over-pruning is silent data loss), and driver
     vs distributed planning must open the same file set."""
-    import os
     import random
 
     from pyspark.sql import functions as F
-    from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
-    )
+    from omi_cpp_parquet_wide_record_spark.operators.decode import prune_files
     rnd = random.Random(20260817)
     N = 6000
     df = spark.range(0, N).select(
@@ -1268,8 +1261,7 @@ def test_pruning_fuzz_never_loses_rows(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
+    plan = D.ScanPlan.resolve(out)
 
     def rand_filter():
         col = rnd.choice(["id", "v", "key", "cat", "w", "f"])
@@ -1331,7 +1323,7 @@ def test_pruning_fuzz_never_loses_rows(spark, tmp_path):
         if trial % 5 == 0:   # cross-mode parity on a sample of trials
             drv = prune_files(m, filters)
             dist = sorted(r.chunk_file for r in
-                          distributed_file_plan(spark, paths, filters)
+                          plan.shard_files(spark, filters)
                           .collect())
             assert drv == dist, (trial, filters)
     # Iceberg semantics: a filter may reference a non-projected column —
@@ -1422,12 +1414,8 @@ def test_string_pruning_unicode_edges(spark, tmp_path):
     planning compares UTF-8 binary, the driver path Python strings —
     both must equal code-point order on astral-plane, combining-char,
     CJK, and empty-string bounds, with no row ever lost."""
-    import os
-
     from pyspark.sql import functions as F
-    from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
-    )
+    from omi_cpp_parquet_wide_record_spark.operators.decode import prune_files
     vals = ["", "a", "zz", "éclair", "中文", "\U0001F600emoji",
             "Ácombining", "￿", "~tilde",
             'he said "hi"', "back\\slash", "line\nbreak"]
@@ -1441,8 +1429,7 @@ def test_string_pruning_unicode_edges(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
+    plan = D.ScanPlan.resolve(out)
     cases = [
         [("s", ">=", "中")], [("s", "<", "b")],
         [("s", "==", "\U0001F600emoji5")], [("s", ">=", "\U0001F600")],
@@ -1465,7 +1452,7 @@ def test_string_pruning_unicode_edges(spark, tmp_path):
         assert got == want, (flt, len(got), len(want))
         drv = prune_files(m, flt)
         dist = sorted(r.chunk_file for r in
-                      distributed_file_plan(spark, paths, flt).collect())
+                      plan.shard_files(spark, flt).collect())
         assert drv == dist, (flt, drv, dist)
 
 
@@ -1510,9 +1497,7 @@ def test_in_list_filter_pushdown(spark, tmp_path):
     probe pass); the residual isin keeps results exact. Driver and
     distributed planning must open the same file set."""
     from pyspark.sql import functions as F
-    from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
-    )
+    from omi_cpp_parquet_wide_record_spark.operators.decode import prune_files
     out = str(tmp_path / "store")
     df = spark.range(0, 4000).select(
         F.col("id"),
@@ -1543,15 +1528,13 @@ def test_in_list_filter_pushdown(spark, tmp_path):
     miss = prune_files(m, [("url", "in", ["nope://a", "nope://b"])])
     assert len(miss) < n_files / 2
     # driver/distributed parity on IN (string and numeric)
-    snap = store.current_snapshot()
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
+    plan = D.ScanPlan.resolve(out)
     for filters in ([("url", "in", urls)],
                     [("url", "in", ["nope://a", "nope://b"])],
                     [("id", "in", [5, 77, 9999999])]):
         drv = prune_files(m, filters)
         dist = sorted(r.chunk_file for r in
-                      distributed_file_plan(spark, paths, filters)
+                      plan.shard_files(spark, filters)
                       .collect())
         assert drv == dist, (filters, len(drv), len(dist))
     # distributed-mode results match driver-mode results
@@ -1620,12 +1603,8 @@ def test_nested_zone_map_pruning(spark, tmp_path, monkeypatch):
     AND apply exact residuals. Checks: real file reduction, residual
     exactness vs full-decode + the equivalent Spark filter, and
     driver/distributed planning parity."""
-    import os
-
     from pyspark.sql import functions as F
-    from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
-    )
+    from omi_cpp_parquet_wide_record_spark.operators.decode import prune_files
     N = 4000
     # embedding length and values both correlate with id, and the store
     # sorts by id, so per-chunk [len, val] zone ranges are tight
@@ -1651,8 +1630,7 @@ def test_nested_zone_map_pruning(spark, tmp_path, monkeypatch):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
+    plan = D.ScanPlan.resolve(out)
     all_files = prune_files(m, [])
 
     # 1) pruning actually reduces the file set on nested filters
@@ -1690,7 +1668,7 @@ def test_nested_zone_map_pruning(spark, tmp_path, monkeypatch):
         # 3) driver/distributed parity on the same chunk-file set
         drv = prune_files(m, filters)
         dist = sorted(r.chunk_file for r in
-                      distributed_file_plan(spark, paths, filters)
+                      plan.shard_files(spark, filters)
                       .collect())
         assert drv == dist, (filters, len(drv), len(dist))
 
@@ -1715,13 +1693,10 @@ def test_nested_pruning_fuzz_never_loses_rows(spark, tmp_path):
     c#len / c#val / c#f: and scalar filters must return exactly the
     full-decode + post-filter rows (over-pruning on the new stats would
     be silent data loss), driver == distributed file sets."""
-    import os
     import random
 
     from pyspark.sql import functions as F
-    from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
-    )
+    from omi_cpp_parquet_wide_record_spark.operators.decode import prune_files
     rnd = random.Random(20260818)
     N = 3000
     df = spark.range(0, N).select(
@@ -1740,8 +1715,7 @@ def test_nested_pruning_fuzz_never_loses_rows(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
+    plan = D.ScanPlan.resolve(out)
 
     def rand_filter():
         kind = rnd.choice(["len", "val", "fld", "scalar"])
@@ -1786,7 +1760,7 @@ def test_nested_pruning_fuzz_never_loses_rows(spark, tmp_path):
         if trial % 4 == 0:
             drv = prune_files(m, filters)
             dist = sorted(r.chunk_file for r in
-                          distributed_file_plan(spark, paths, filters)
+                          plan.shard_files(spark, filters)
                           .collect())
             assert drv == dist, (trial, filters)
 
@@ -2088,11 +2062,8 @@ def test_null_count_pruning(spark, tmp_path):
     counts: chunks with zero nulls can't serve IS NULL, all-null chunks
     (which carry no zone-map stats at all) can't serve IS NOT NULL —
     and both planning modes open the same files."""
-    import os
     from pyspark.sql import functions as F
-    from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
-    )
+    from omi_cpp_parquet_wide_record_spark.operators.decode import prune_files
     # sorted by id so chunks are id-contiguous: v is NULL only for
     # id < 1000 -> the null rows concentrate in a few chunks
     df = spark.range(0, 8000).select(
@@ -2104,15 +2075,14 @@ def test_null_count_pruning(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
+    plan = D.ScanPlan.resolve(out)
     n_all = len(prune_files(m, []))
     for flt, want in ([("v", "is_null", None)], 1000), \
                      ([("v", "is_not_null", None)], 7000):
         pruned = prune_files(m, flt)
         assert len(pruned) < n_all, (flt, len(pruned), n_all)
         dist = sorted(r.chunk_file for r in
-                      distributed_file_plan(spark, paths, flt).collect())
+                      plan.shard_files(spark, flt).collect())
         assert pruned == dist, flt
         assert decode_store(spark, out, filters=flt).count() == want
     # DataSource pushdown: isNull()/isNotNull() reach the same pruning
@@ -2131,11 +2101,7 @@ def test_rewrite_small_chunks_binpack(spark, tmp_path):
     in-place rewrite coalesces them under ONE pid-scoped rewrite commit —
     same rows, far fewer chunks, time travel intact, incremental readers
     skip the rewrite and still see the original appends."""
-    import os
     from pyspark.sql import functions as F
-    from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan,
-    )
     from omi_cpp_parquet_wide_record_spark.operators.maintenance import (
         rewrite_small_chunks,
     )
@@ -2159,19 +2125,11 @@ def test_rewrite_small_chunks_binpack(spark, tmp_path):
         assert got.count() == 6000
         assert sorted(r.id for r in got.collect()) == list(range(6000))
     m = store.manifest_table()
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
     drv = sorted(set(m.column("chunk_file").to_pylist()))
     # distributed planning must exclude the rewritten-away rows too
-    from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-        ChunkStore as CS,
-    )
-    dist = set()
-    for p, mn in zip(paths, snap["manifests"]):
-        dp = sorted(CS.rewritten_pids_for(snap, mn))
-        dist.update(r.chunk_file for r in distributed_file_plan(
-            spark, [p], None, drop_pids=dp).collect())
-    assert drv == sorted(dist)
+    dist = sorted(r.chunk_file for r in
+                  D.ScanPlan.resolve(out).shard_files(spark, None).collect())
+    assert drv == dist
     # time travel: pre-rewrite snapshot still reads the ORIGINAL layout
     old = decode_store(spark, out, snapshot=n0)
     assert old.count() == 6000

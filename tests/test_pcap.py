@@ -5,7 +5,11 @@ capture bytes, verified against an independent scalar reference-style parser
 
 from __future__ import annotations
 
+import re
+
 import pyarrow as pa
+import pytest
+from pyspark.errors import AnalysisException
 
 from conftest import arrays_equal
 
@@ -119,19 +123,38 @@ def test_u32_full_range_survives_unwrapped():
 
 def test_pcap_datasource_format(spark, tmp_path):
     """spark.read.format('pcap') — the capture format as a first-class
-    registered source, matching read_pcap's output exactly."""
+    registered source, matching read_pcap's output exactly: the same
+    files (``_``-prefixed names and directories included) and the same
+    rows, and a path that names no capture fails on both."""
     from omi_cpp_parquet_wide_record_spark.sources.pcap import PcapDataSource
     a = FX.pcap_capture(300, "nasdaq", seed=5)
     b = FX.pcap_capture(200, "nasdaq", seed=6)
+    c = FX.pcap_capture(100, "nasdaq", seed=7)
+    d = FX.pcap_capture(150, "nasdaq", seed=8)
     (tmp_path / "a.pcap").write_bytes(a)
     (tmp_path / "sub").mkdir()
     (tmp_path / "sub" / "b.pcap").write_bytes(b)
+    (tmp_path / "_c.pcap").write_bytes(c)
+    (tmp_path / "_sub").mkdir()
+    (tmp_path / "_sub" / "d.pcap").write_bytes(d)
     spark.dataSource.register(PcapDataSource)
     df = spark.read.format("pcap").load(str(tmp_path))
     via_fn = read_pcap(spark, str(tmp_path))
-    assert df.count() == via_fn.count()
+    cols = ["pcap_index", "pcap_sec", "pcap_usec", "payload"]
+    assert df.columns == via_fn.columns == cols
+    assert sorted(df.collect()) == sorted(via_fn.collect())
+    want = sum(packets_from_capture(x).num_rows for x in (a, b, c, d))
+    assert df.count() == via_fn.count() == want
     wide = parse_packets(df, "nasdaq")
-    assert wide.count() == 500
+    assert wide.count() == 750
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    missing = re.escape(f"no .pcap files under {empty}")
+    with pytest.raises(FileNotFoundError, match=missing):
+        read_pcap(spark, str(empty))
+    with pytest.raises(AnalysisException, match=missing):
+        spark.read.format("pcap").load(str(empty)).count()
 
 
 def test_truncated_capture_tail():
