@@ -592,19 +592,11 @@ class FsstCodec(Codec):
             # drift: this chunk's bytes no longer match the trained
             # distribution — retrain below and replace the shared plan
 
-        if len(corpus) <= BLOCK_BYTES_DEFAULT and shared is None:
-            min_count = max(self.min_count, len(corpus) >> 15)
-            t, pairs, _prog = _train_and_tokenize(
-                _with_sentinels(corpus, start_pos), self.rounds,
-                self.per_round, min_count)
-            table, enc_flat, enc_off, enc_w = _assign_codes_from_freq(
-                np.bincount(t, minlength=_KSPACE).astype(np.int64), pairs)
-            out = _assemble(t, enc_flat, enc_off, enc_w)
-        elif len(corpus) <= BLOCK_BYTES_DEFAULT:
+        if len(corpus) <= BLOCK_BYTES_DEFAULT:
             # whole corpus is the training sample. THIS chunk's output uses
             # the exact assignment (ids absent from the stream get no table
-            # entry — byte-identical to the shared=None path); the PLAN
-            # stashes a complete=True assignment, since replay on a later
+            # entry); the PLAN, when there is a ``shared`` slot to stash it
+            # in, takes a complete=True assignment, since replay on a later
             # chunk can mint ids this stream never produced. The second
             # assignment runs on the <=510-entry id space — negligible.
             min_count = max(self.min_count, len(corpus) >> 15)
@@ -615,10 +607,11 @@ class FsstCodec(Codec):
             table, enc_flat, enc_off, enc_w = _assign_codes_from_freq(
                 freq, pairs)
             out = _assemble(t, enc_flat, enc_off, enc_w)
-            ptable, pflat, poff, pw = _assign_codes_from_freq(
-                freq, pairs, complete=True)
-            shared["plan"] = _make_plan(prog, ptable, pflat, poff, pw,
-                                        len(out), len(corpus))
+            if shared is not None:
+                ptable, pflat, poff, pw = _assign_codes_from_freq(
+                    freq, pairs, complete=True)
+                shared["plan"] = _make_plan(prog, ptable, pflat, poff, pw,
+                                            len(out), len(corpus))
         else:
             # train on a strided row sample (TRAIN_BYTES_DEFAULT), replay
             # the merge program on BLOCK_BYTES_DEFAULT blocks — the

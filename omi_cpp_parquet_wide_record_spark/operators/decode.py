@@ -30,7 +30,7 @@ from omi_cpp_parquet_wide_record_spark.operators.encode import (
     BLOOM_BITS, CHUNK_MAGIC, bloom_positions,
 )
 from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-    MANIFEST_SCHEMA, ChunkStore,
+    LIVE_MANIFEST_SCHEMA, ChunkStore,
 )
 
 # Plain-equivalent bytes (the manifest's ``bytes_in``) up to which a
@@ -570,7 +570,7 @@ class ScanPlan:
         the driver's live manifest table. ``bytes_in`` of the result sums
         the manifest's plain-equivalent bytes of ``columns`` (default:
         every column) over the kept files."""
-        live = self.store.manifest_table(self.snap, with_commit_n=True)
+        live = self.store.manifest_table(self.snap)
         kept = _kept(live, filters)
         out = KeptFiles(zip(kept.column("chunk_file").to_pylist(),
                             kept.column("commit_n").to_pylist()))
@@ -592,10 +592,9 @@ class ScanPlan:
                             _KEPT_SCHEMA)
 
     def live_rows(self, spark: SparkSession) -> DataFrame:
-        """The live manifest view (``manifest_table(with_commit_n=True)``)
-        as a distributed DataFrame."""
-        return self._shards(spark, lambda live: live, MANIFEST_SCHEMA.append(
-            pa.field("commit_n", pa.int32())))
+        """The live manifest view (what ``manifest_table`` concatenates,
+        with ``commit_n``) as a distributed DataFrame."""
+        return self._shards(spark, lambda live: live, LIVE_MANIFEST_SCHEMA)
 
     def _shards(self, spark: SparkSession, fn, schema: pa.Schema
                 ) -> DataFrame:
@@ -612,7 +611,7 @@ class ScanPlan:
         def task(batches):
             for b in batches:
                 for m in b.column("manifest").to_pylist():
-                    live = store.shard_view(snap, m, with_commit_n=True)
+                    live = store.shard_view(snap, m)
                     yield from fn(live).cast(schema).to_batches()
 
         return _names_df(spark, list(snap["manifests"]), "manifest") \

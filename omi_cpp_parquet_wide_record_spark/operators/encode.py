@@ -294,16 +294,11 @@ def _write_chunk(chunks_dir: str, pid: int, seq: int, table: pa.Table,
             # distributed job; explicit overrides still raise.
             if forced:
                 raise
-            enc = None
-            for fb in ("for", "plain"):
-                try:
-                    enc = encode_column(arr, fb)
-                    plan_cache[key] = fb
-                    break
-                except (ValueError, TypeError):
-                    continue
-            if enc is None:
+            try:
+                enc = encode_column(arr, "for")
+            except (ValueError, TypeError):
                 enc = encode_column(arr, "plain")
+            plan_cache[key] = enc.codec
         digest = hashlib.sha256(enc.payload).hexdigest()
         smin, smax = _column_stats(arr)
         rows.append({

@@ -214,7 +214,7 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
     plan = ScanPlan.resolve(store_dir)
     store, snap = plan.store, plan.snap
     schema = store.arrow_schema(snap)
-    m = store.manifest_table(snap, with_commit_n=True)   # live view
+    m = store.manifest_table(snap)   # live view
     if m.num_rows == 0:
         return {"rewritten_pids": [], "chunks_before": 0, "chunks_after": 0}
     # one row per (pid, chunk FILE): every column of a chunk shares its

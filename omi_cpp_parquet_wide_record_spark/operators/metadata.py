@@ -17,7 +17,7 @@ kind maps onto a DataFrame:
 
 Scale: ``files``/``partitions`` read the manifests as a SPARK job (a
 task per batch of manifest shards, each building the shard's live view
-with the same ``ChunkStore.live_shard`` driver planning concatenates),
+with the same ``ChunkStore.shard_view`` driver planning concatenates),
 so chunk-level metadata rows never materialize on the driver: at 10^12
 rows the files table is itself tens of millions of rows and must
 distribute like any other scan. ``snapshots``/``refs``/``deletes`` are

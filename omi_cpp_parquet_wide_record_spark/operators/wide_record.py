@@ -48,8 +48,8 @@ def _fold_be(corpus: np.ndarray, offs: np.ndarray, width: int,
     return v.view(np.int64)
 
 
-def parse_packets_batch(batch: pa.RecordBatch, which: str = "nasdaq",
-                        max_messages: int | None = None) -> pa.RecordBatch:
+def parse_packets_batch(batch: pa.RecordBatch,
+                        which: str = "nasdaq") -> pa.RecordBatch:
     """One Arrow batch of packets -> one Arrow batch of wide-record rows.
 
     Bounds-safe on malformed input without changing valid-capture output
@@ -60,13 +60,11 @@ def parse_packets_batch(batch: pa.RecordBatch, which: str = "nasdaq",
     next packet's bytes. The slot loop runs to the largest ACTUAL count
     in the batch, capped by what the longest payload could physically
     hold (>= 3 bytes per message) — a fixed 64-slot cap silently dropped
-    messages 65+ of dense packets. ``max_messages`` remains as an
-    explicit override."""
+    messages 65+ of dense packets."""
     if isinstance(batch, pa.Table):
         # packets_from_capture returns a Table (chunked when one capture
         # exceeds int32 binary offsets); parse chunk-wise and recombine
-        parts = [parse_packets_batch(b, which, max_messages)
-                 for b in batch.to_batches()]
+        parts = [parse_packets_batch(b, which) for b in batch.to_batches()]
         sch0 = S.NASDAQ_WIDE if which == "nasdaq" else S.JNX_WIDE
         if not parts:
             return pa.RecordBatch.from_arrays(
@@ -108,11 +106,8 @@ def parse_packets_batch(batch: pa.RecordBatch, which: str = "nasdaq",
     cursor = starts + 20
     m_pkt, m_idx, m_type, m_body = [], [], [], []
     remaining = count.copy()
-    if max_messages is not None:
-        loop_bound = max_messages
-    else:
-        feasible = (int(lengths.max()) - 20) // 3 + 1 if n_pkt else 0
-        loop_bound = min(int(count.max()), max(feasible, 0))
+    feasible = (int(lengths.max()) - 20) // 3 + 1 if n_pkt else 0
+    loop_bound = min(int(count.max()), max(feasible, 0))
     for slot in range(loop_bound):
         active = remaining > slot
         if not active.any():

@@ -7,7 +7,6 @@ column chunks:
     <root>/chunks/chunk-p<pid>-s<seq>-<tag>.owrc     column payloads + footer
     <root>/manifests/manifest-shard-*.parquet        one row per column chunk,
                                                      one shard per write task
-    <root>/manifests/manifest-<n>-*.parquet          driver-held table commits
     <root>/deletes/delete-<n>-*.parquet              equality-delete keys
     <root>/snapshots/snapshot-<n>.json               manifest list + lineage
     <root>/_current                                  name of live snapshot
@@ -71,6 +70,10 @@ MANIFEST_SCHEMA = pa.schema([
     # Nullable — older manifests pad, non-eligible columns stay null.
     ("bloom", pa.string()),
 ])
+
+# the live manifest view (``ChunkStore.shard_view``): MANIFEST_SCHEMA plus
+# each row's manifest commit number, which scopes sequence-scoped deletes
+LIVE_MANIFEST_SCHEMA = MANIFEST_SCHEMA.append(pa.field("commit_n", pa.int32()))
 
 
 # lineage fields ``_publish`` stamps on every snapshot; the rest is content
@@ -447,36 +450,35 @@ class ChunkStore:
         n_m = ChunkStore.manifest_commit_n(snap, manifest_name)
         return {int(p) for p, rn in rw.items() if int(rn) > n_m}
 
-    @staticmethod
-    def live_shard(path: str, drop_pids=(), aliases=None,
-                   commit_n: int | None = None) -> pa.Table:
-        """One manifest shard's LIVE rows — the single definition of the
-        live manifest view, shared by driver planning (``manifest_table``
-        concatenates it) and distributed planning (a ``mapInArrow`` over
-        shard names calls it per shard):
+    def shard_view(self, snap: dict, manifest_name: str) -> pa.Table:
+        """One manifest shard's LIVE rows under ``snap`` — the single
+        definition of the live manifest view, shared by driver planning
+        (``manifest_table`` concatenates it) and distributed planning (a
+        ``mapInArrow`` over shard names calls it per shard):
 
         - manifests written before the zone-map columns pad with nulls;
-        - rows of ``drop_pids`` (superseded by a later pid-scoped
-          rewrite) drop;
-        - ``commit_n`` (the shard's commit number), when given, rides
-          along as an int32 column for sequence-scoped deletes;
-        - retired physical column names (``aliases``: live -> retired)
-          canonicalize to live names, so pre-rename chunks keep pruning.
+        - rows of pids superseded by a later pid-scoped rewrite drop;
+        - the shard's commit number rides along as an int32 ``commit_n``
+          column for sequence-scoped deletes;
+        - retired physical column names canonicalize to live names, so
+          pre-rename chunks keep pruning.
         """
         import pyarrow.compute as pc
-        t = pq.read_table(path)
+        t = pq.read_table(os.path.join(self.manifests_dir, manifest_name))
         for f in MANIFEST_SCHEMA:
             if f.name not in t.schema.names:
                 t = t.append_column(f.name,
                                     pa.nulls(t.num_rows, type=f.type))
         t = t.select(MANIFEST_SCHEMA.names)
+        drop_pids = self.rewritten_pids_for(snap, manifest_name)
         if drop_pids:
             t = t.filter(pc.invert(pc.is_in(
                 t.column("pid"), value_set=pa.array(
                     sorted(drop_pids), type=t.schema.field("pid").type))))
-        if commit_n is not None:
-            t = t.append_column("commit_n", pa.array(
-                [commit_n] * t.num_rows, type=pa.int32()))
+        t = t.append_column("commit_n", pa.array(
+            [self.manifest_commit_n(snap, manifest_name)] * t.num_rows,
+            type=pa.int32()))
+        aliases = self.alias_map(snap)
         if aliases and t.num_rows:
             col = t.column("column").combine_chunks()
             for live, olds in aliases.items():
@@ -486,40 +488,18 @@ class ChunkStore:
                              t.schema.field("column"), col)
         return t
 
-    def shard_view(self, snap: dict, manifest_name: str,
-                   with_commit_n: bool = False) -> pa.Table:
-        """``live_shard`` of one manifest of ``snap``, with the drop set,
-        commit number and aliases that snapshot assigns it."""
-        return self.live_shard(
-            os.path.join(self.manifests_dir, manifest_name),
-            self.rewritten_pids_for(snap, manifest_name),
-            self.alias_map(snap),
-            self.manifest_commit_n(snap, manifest_name)
-            if with_commit_n else None)
-
-    def manifest_table(self, snapshot: dict | None = None,
-                       with_commit_n: bool = False) -> pa.Table:
+    def manifest_table(self, snapshot: dict | None = None) -> pa.Table:
         """All LIVE manifest rows of a snapshot (default: the live one):
-        the ``live_shard`` view of every manifest, concatenated — so every
+        the ``shard_view`` of every manifest, concatenated — so every
         driver-side consumer (planning, metrics, pruning, GC's
         per-snapshot liveness) sees the post-rewrite, alias-canonical
-        view.
-
-        ``with_commit_n=True`` appends each row's manifest COMMIT number
-        as an int32 ``commit_n`` column (from the snapshot's manifest_n
-        record — driver-side metadata, no extra I/O). Sequence-scoped
-        delete reads derive per-chunk epochs from this instead of
-        re-reading every manifest parquet on the driver (VERDICT r4 #6)."""
+        view, with each row's ``commit_n`` (LIVE_MANIFEST_SCHEMA)."""
         snap = snapshot or self.current_snapshot()
         tables = [t for m in (snap or {}).get("manifests", [])
-                  if (t := self.shard_view(snap, m, with_commit_n)).num_rows]
+                  if (t := self.shard_view(snap, m)).num_rows]
         if tables:
             return pa.concat_tables(tables)
-        empty = MANIFEST_SCHEMA.empty_table()
-        if with_commit_n:
-            empty = empty.append_column(
-                "commit_n", pa.array([], type=pa.int32()))
-        return empty
+        return LIVE_MANIFEST_SCHEMA.empty_table()
 
     def arrow_schema(self, snapshot: dict | None = None) -> pa.Schema:
         snap = snapshot or self.current_snapshot()
@@ -531,7 +511,7 @@ class ChunkStore:
 
     # ------------------------------------------------------------ commit
 
-    def commit(self, manifest: pa.Table | list[str],
+    def commit(self, shard_files: list[str],
                schema: pa.Schema | None,
                run_id: str,
                replace: bool = False,
@@ -542,29 +522,26 @@ class ChunkStore:
                retired_names: list[str] | None = None,
                branch: str | None = None,
                expected_parent_id: str | None = None) -> dict:
-        """Append a manifest and flip the snapshot pointer atomically.
+        """Append manifest shards and flip the snapshot pointer atomically.
 
-        ``manifest`` is a list of manifest SHARD file names that
-        ``operators.encode.write_chunks`` already wrote executor-side into
-        ``manifests_dir`` — the form every engine write path commits:
-        chunk-level manifest rows scale with the data (one row per chunk
-        column — tens of millions at corpus scale), so they must never be
-        collected to the driver; only the shard NAMES (one per task) and
-        the pid-level rollup reach the commit. ``new_pids`` is required
-        with it. A driver-held Arrow table (written here as one manifest
-        file) is also accepted; it serves tests and tools that build
-        partial stores by hand.
+        ``shard_files`` are manifest SHARD file names already written into
+        ``manifests_dir`` (by ``operators.encode.write_chunks``, the one
+        manifest writer): chunk-level manifest rows scale with the data
+        (one row per chunk column — tens of millions at corpus scale), so
+        they must never be collected to the driver; only the shard NAMES
+        (one per task) and the pid-level rollup (``new_pids``, required)
+        reach the commit.
 
         ``schema=None`` keeps the parent's schema (``commit_deletes``
         uses it); it is resolved under the lock, so a concurrent schema
         evolution is never undone.
 
         ``replace=True`` is the Iceberg REPLACE commit: the new snapshot
-        references only this manifest (prior data, deletes, and pids drop
+        references only these shards (prior data, deletes, and pids drop
         out of the live view but stay readable via time travel until GC).
 
         ``add_delete=(keys, key_col)`` commits an equality-delete file IN
-        THE SAME snapshot as the appended manifest (the MERGE/upsert
+        THE SAME snapshot as the appended shards (the MERGE/upsert
         shape): the delete is sequence-scoped at this commit's n, so it
         anti-joins only data from manifests committed BEFORE it — the
         rows appended here are exempt. One atomic pointer flip gives
@@ -572,7 +549,7 @@ class ChunkStore:
         replaced state ever visible to readers.
 
         ``rewrite_pids`` marks this commit as a pid-scoped REWRITE
-        (Iceberg rewrite_data_files): the committed manifest holds the
+        (Iceberg rewrite_data_files): the committed shards hold the
         compacted replacement for those work units, and the snapshot's
         ``pid_rewrites`` map records {pid: this n} so readers drop each
         rewritten pid's rows from every manifest committed BEFORE this
@@ -642,18 +619,11 @@ class ChunkStore:
                         f"column name(s) {sorted(bad)} were retired by a "
                         "concurrent schema evolution and cannot be reused; "
                         "pick a fresh name")
+            if new_pids is None:
+                raise ValueError("commit needs new_pids")
             n = self._next_n()
-            if isinstance(manifest, list):
-                if new_pids is None:
-                    raise ValueError("sharded commit needs new_pids")
-                mnames = list(manifest)
-                new_pids = set(int(p) for p in new_pids)
-            else:
-                mname = f"manifest-{n:05d}-{uuid.uuid4().hex[:8]}.parquet"
-                pq.write_table(manifest.cast(MANIFEST_SCHEMA),
-                               os.path.join(self.manifests_dir, mname))
-                mnames = [mname]
-                new_pids = set(manifest.column("pid").to_pylist())
+            mnames = list(shard_files)
+            new_pids = set(int(p) for p in new_pids)
             base = parent if parent is not None and not replace else {}
             delete_files = list(base.get("delete_files", []))
             if add_delete is not None:

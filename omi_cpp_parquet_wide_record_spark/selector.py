@@ -83,7 +83,6 @@ DEFAULT_SAMPLE_BYTES = 128 << 10
 
 
 def sample_array(arr: pa.Array, max_rows: int = DEFAULT_SAMPLE_ROWS,
-                 seed: int = 42,
                  max_bytes: int = DEFAULT_SAMPLE_BYTES) -> pa.Array:
     """Deterministic sample: a contiguous head slice plus a strided tail.
 
@@ -152,14 +151,3 @@ def choose_codec(arr: pa.Array, max_rows: int = DEFAULT_SAMPLE_ROWS) -> Choice:
     return Choice(best, ratio, trials,
                   plans={k: v for k, v in plans.items() if v})
 
-
-def plan_columns(batch: pa.RecordBatch | pa.Table,
-                 max_rows: int = DEFAULT_SAMPLE_ROWS) -> dict[str, Choice]:
-    """Codec plan for every column of a batch/table sample."""
-    out: dict[str, Choice] = {}
-    for name in batch.schema.names:
-        col = batch.column(name)
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
-        out[name] = choose_codec(col, max_rows)
-    return out

@@ -349,12 +349,17 @@ PACKETS_SCHEMA = ("pcap_index long, pcap_sec long, pcap_usec long, "
 
 
 def _list_captures(path: str) -> list[str]:
-    """The capture files both readers scan: every ``*.pcap`` under a
-    directory (recursive; ``_``-prefixed names are included, glob skips
-    ``.``-prefixed ones), else the ``glob(path)`` matches. Raises
-    FileNotFoundError naming ``path`` when nothing matches."""
+    """The capture files both readers scan: an existing file itself,
+    every ``*.pcap`` under a directory (recursive; ``_``-prefixed names
+    are included, glob skips ``.``-prefixed ones), else the
+    ``glob(path)`` matches. Glob metacharacters in an existing file or
+    directory name match literally. Raises FileNotFoundError naming
+    ``path`` when nothing matches."""
+    if os.path.isfile(path):
+        return [path]
     if os.path.isdir(path):
-        files = glob.glob(os.path.join(path, "**", "*.pcap"), recursive=True)
+        files = glob.glob(os.path.join(glob.escape(path), "**", "*.pcap"),
+                          recursive=True)
     else:
         files = glob.glob(path)
     if not files:

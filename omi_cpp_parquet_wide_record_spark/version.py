@@ -12,101 +12,64 @@ modules whose edits can change what lands on disk or how it reads back.
 from __future__ import annotations
 
 import hashlib
-import os
+import importlib.util
+import pkgutil
 
 _FINGERPRINT: str | None = None
 
-# modules (relative to the package root) whose source bytes define the
-# on-disk format and its interpretation
+# modules (relative to the package) whose source defines the on-disk
+# format and its interpretation; a package covers its direct submodules
 _SURFACE = (
-    "codecs",          # whole directory
-    "selector.py",
-    "operators/encode.py",
-    "operators/decode.py",
-    "plans/snapshot.py",
-    "schema.py",
+    "codecs",
+    "selector",
+    "operators.encode",
+    "operators.decode",
+    "plans.snapshot",
+    "schema",
 )
 
 
-def engine_fingerprint() -> str:
-    """Stable 16-hex digest of the encode/decode-relevant source files.
+def _find_spec(name: str):
+    """The module's spec, or None when it (or a parent package) is
+    missing."""
+    try:
+        return importlib.util.find_spec(name)
+    except ModuleNotFoundError as e:
+        if name != e.name and not name.startswith(f"{e.name}."):
+            raise                       # a dependency failed to import
+        return None
 
-    Computed once per process; file order is fixed (sorted relative
-    paths) so the digest is deterministic across machines."""
-    global _FINGERPRINT
-    if _FINGERPRINT is not None:
-        return _FINGERPRINT
-    pkg_root = os.path.dirname(os.path.abspath(__file__))
-    paths: list[str] = []
+
+def _surface_sources(pkg: str):
+    """(module name relative to ``pkg``, source) of every surface module
+    the package holds, read through the import loaders — so a checkout
+    and a zip archive of the same tree (``--py-files``) yield the same
+    list."""
     for entry in _SURFACE:
-        full = os.path.join(pkg_root, entry)
-        if os.path.isdir(full):
-            for dirpath, _dirs, files in os.walk(full):
-                paths.extend(os.path.join(dirpath, f)
-                             for f in files if f.endswith(".py"))
-        elif os.path.exists(full):
-            paths.append(full)
-    h = hashlib.sha256()
-    if paths:
-        # hash (module-style name, decoded source) sorted BY MODULE NAME
-        # — the same normal form the zipimport fallback below produces,
-        # so one store's fingerprint matches across local and --py-files
-        # runs
-        named = []
-        for p in paths:
-            rel = os.path.relpath(p, pkg_root)[:-3].replace(os.sep, ".")
-            if rel.endswith(".__init__"):
-                rel = rel[: -len(".__init__")]
-            with open(p, "rb") as f:
-                named.append((rel, f.read().decode("utf-8", "replace")
-                              .replace("\r\n", "\n")))
-        for rel, src in sorted(named):
-            h.update(rel.encode())
-            h.update(src.encode())
-    else:
-        # zipimport (--py-files): the package dir is inside an archive,
-        # so walk/open see nothing — hash module SOURCES via the import
-        # loaders instead. The module list is DERIVED from _SURFACE by
-        # listing the archive's entries under the package prefix (a
-        # second hand-maintained list drifted: a new codec module
-        # updated the walked digest but not the zip digest, so the same
-        # code fingerprinted differently local vs --py-files; ADVICE r5)
-        import importlib.util
+        spec = _find_spec(f"{pkg}.{entry}")
+        if spec is None:
+            continue
+        yield entry, spec.loader.get_source(spec.name)
+        for sub in pkgutil.iter_modules(spec.submodule_search_locations
+                                        or ()):
+            sub_spec = _find_spec(f"{spec.name}.{sub.name}")
+            yield (f"{entry}.{sub.name}",
+                   sub_spec.loader.get_source(sub_spec.name))
+
+
+def engine_fingerprint() -> str:
+    """Stable 16-hex digest of the encode/decode-relevant sources.
+
+    Computed once per process; modules hash in sorted-name order so the
+    digest is deterministic across machines and import modes."""
+    global _FINGERPRINT
+    if _FINGERPRINT is None:
         pkg = __name__.rsplit(".", 1)[0]
-        pkg_prefix = pkg.replace(".", "/") + "/"
-        mods: list[str] = []
-        for entry in _SURFACE:
-            if entry.endswith(".py"):
-                mods.append(entry[:-3].replace("/", "."))
+        h = hashlib.sha256()
+        for name, src in sorted(_surface_sources(pkg)):
+            if src is None:             # no source to hash (sourceless)
                 continue
-            # directory surface: enumerate the zip archive's .py entries
-            # under <pkg>/<entry>/
-            try:
-                import zipfile
-                archive = os.path.dirname(pkg_root)
-                while not os.path.isfile(archive):
-                    parent = os.path.dirname(archive)
-                    if parent == archive:    # reached the root: no archive
-                        raise FileNotFoundError(pkg_root)
-                    archive = parent
-                with zipfile.ZipFile(archive) as zf:
-                    want = pkg_prefix + entry + "/"
-                    for name in zf.namelist():
-                        if name.startswith(want) and name.endswith(".py"):
-                            rel = name[len(pkg_prefix):-3]
-                            mods.append(rel.replace("/", ".")
-                                        .removesuffix(".__init__"))
-            except Exception:
-                # archive unreadable: fall back to the package itself
-                mods.append(entry.replace("/", "."))
-        for m in sorted(set(mods)):
-            try:
-                spec = importlib.util.find_spec(f"{pkg}.{m}")
-                src = spec.loader.get_source(spec.name)  # type: ignore
-            except Exception:
-                continue
-            if src:
-                h.update(m.encode())
-                h.update(src.encode())
-    _FINGERPRINT = h.hexdigest()[:16]
+            h.update(name.encode())
+            h.update(src.encode())
+        _FINGERPRINT = h.hexdigest()[:16]
     return _FINGERPRINT

@@ -182,6 +182,28 @@ def test_fsst_shared_plan_drift_retrains():
     assert arrays_equal(wild, decode_column(e.payload, e.params))
 
 
+def test_fsst_shared_slot_does_not_change_output():
+    """A fresh ``shared`` slot only stashes the trained plan: every web
+    chunk column encodes to the same payload and params with
+    ``shared=None`` and with ``shared={}``."""
+    from omi_cpp_parquet_wide_record_spark import fixtures as FX
+    t = FX.web_pages_table(8000, seed=1)
+    checked = 0
+    for lang in sorted(set(t.column("lang").to_pylist())):
+        part = t.filter(pa.compute.equal(t.column("lang"), lang))
+        for off in range(0, part.num_rows, 400):
+            chunk = part.slice(off, 400)
+            for name in ("url", "text", "html"):
+                arr = chunk.column(name).combine_chunks()
+                for codec in ("fsst", "fsst2"):
+                    alone = encode_column(arr, codec)
+                    stashed = encode_column(arr, codec, shared={})
+                    assert alone.payload == stashed.payload, (name, codec)
+                    assert alone.params == stashed.params, (name, codec)
+                    checked += 1
+    assert checked >= 100
+
+
 # ---------------------------------------------------------------- lists
 
 def test_list_roundtrips():

@@ -8,6 +8,7 @@ import datetime
 import os
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from omi_cpp_parquet_wide_record_spark import fixtures as FX
@@ -17,7 +18,9 @@ from omi_cpp_parquet_wide_record_spark.operators.decode import (
 )
 from omi_cpp_parquet_wide_record_spark.operators.encode import encode_dataframe
 from omi_cpp_parquet_wide_record_spark.operators.verify import verify_roundtrip
-from omi_cpp_parquet_wide_record_spark.plans.snapshot import ChunkStore
+from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
+    MANIFEST_SCHEMA, ChunkStore,
+)
 
 ROWS = 4000
 
@@ -235,8 +238,8 @@ def test_distributed_planning_matches_driver(spark, corpus, tmp_path,
     # the distributed files table is the driver's live manifest view
     rows_of = lambda rows: sorted(map(tuple, rows), key=repr)  # noqa: E731
     assert rows_of(metadata_table(spark, out, "files").collect()) == \
-        rows_of(r.values() for r in ChunkStore(out).manifest_table(
-            with_commit_n=True).to_pylist())
+        rows_of(r.values() for r in ChunkStore(out).manifest_table()
+                .to_pylist())
 
 
 def test_small_pruned_reads_decode_on_driver(spark, tmp_path, monkeypatch):
@@ -379,7 +382,11 @@ def test_resume_after_partial_commit(spark, corpus, tmp_path):
     pstore = ChunkStore(partial_dir).create()
     mask = pa.compute.is_in(full.column("pid"),
                             value_set=pa.array(keep, type=pa.int32()))
-    pstore.commit(full.filter(mask), store.arrow_schema(), "partial-run")
+    shard = "manifest-shard-partial.parquet"
+    pq.write_table(full.filter(mask).select(MANIFEST_SCHEMA.names),
+                   os.path.join(pstore.manifests_dir, shard))
+    pstore.commit([shard], store.arrow_schema(), "partial-run",
+                  new_pids=set(keep))
     assert pstore.committed_pids() == set(keep)
 
     r2 = encode_dataframe(corpus, partial_dir, partition_by=["lang"],
@@ -2782,27 +2789,19 @@ def test_branch_upsert_and_resume_read_branch_head(spark, tmp_path):
 
 
 def test_concurrent_commits_serialize_no_lost_update(tmp_path):
-    """The commit lock: N processes committing driver-held manifests
+    """The commit lock: N processes committing manifest shards
     concurrently must ALL land in the final lineage (before the lock,
     the read-modify-write race on `_current` silently dropped the
     losers' commits). Pure metadata — no Spark session needed."""
     import multiprocessing as mp
     import pyarrow as pa
-    from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-        MANIFEST_SCHEMA, ChunkStore,
-    )
     out = str(tmp_path / "store")
     schema = pa.schema([("k", pa.int64())])
 
     def one_commit(i):
-        row = {f.name: [None] for f in MANIFEST_SCHEMA}
-        row.update({"chunk_file": [f"c{i}.owrc"], "pid": [i], "seq": [0],
-                    "column": ["k"], "codec": ["plain"], "params": ["{}"],
-                    "rows": [1], "nulls": [0], "bytes_in": [8],
-                    "bytes_out": [8], "offset": [0], "length": [8],
-                    "sha256": ["x"], "run_id": [f"r{i}"]})
-        ChunkStore(out).commit(
-            pa.table(row, schema=MANIFEST_SCHEMA), schema, f"r{i}")
+        store = ChunkStore(out)
+        store.commit(_one_chunk_shard(store, i), schema, f"r{i}",
+                     new_pids={i})
 
     procs = [mp.Process(target=one_commit, args=(i,)) for i in range(8)]
     [p.start() for p in procs]
@@ -2823,19 +2822,22 @@ def test_concurrent_commits_serialize_no_lost_update(tmp_path):
 _KV = pa.schema([("k", pa.int64()), ("v", pa.int64())])
 
 
-def _one_chunk_manifest(pid: int) -> pa.Table:
-    """A driver-held manifest naming one chunk of ``pid`` (metadata-only
-    stores: the chunk file itself is never read)."""
-    from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-        MANIFEST_SCHEMA,
-    )
+def _one_chunk_shard(store: ChunkStore, pid: int) -> list[str]:
+    """Write a manifest shard naming one chunk of ``pid`` into ``store``
+    and return the shard names to commit (metadata-only stores: the chunk
+    file itself is never read)."""
+    import uuid
+
     row = {f.name: [None] for f in MANIFEST_SCHEMA}
     row.update({"chunk_file": [f"c{pid}.owrc"], "pid": [pid], "seq": [0],
                 "column": ["k"], "codec": ["plain"], "params": ["{}"],
                 "rows": [1], "nulls": [0], "bytes_in": [8],
                 "bytes_out": [8], "offset": [0], "length": [8],
                 "sha256": ["x"], "run_id": [f"r{pid}"]})
-    return pa.table(row, schema=MANIFEST_SCHEMA)
+    name = f"manifest-shard-p{pid}-{uuid.uuid4().hex[:8]}.parquet"
+    pq.write_table(pa.table(row, schema=MANIFEST_SCHEMA),
+                   os.path.join(store.create().manifests_dir, name))
+    return [name]
 
 
 @pytest.mark.parametrize("mutation", ["append", "branch", "delete",
@@ -2853,10 +2855,11 @@ def test_snapshot_crash_before_flip_keeps_head(tmp_path, monkeypatch,
     from omi_cpp_parquet_wide_record_spark.plans.snapshot import _snapshot_n
     out = str(tmp_path / "store")
     store = ChunkStore(out)
-    store.commit(_one_chunk_manifest(0), _KV, "r0")
-    store.commit(_one_chunk_manifest(1), _KV, "r1")
+    store.commit(_one_chunk_shard(store, 0), _KV, "r0", new_pids={0})
+    store.commit(_one_chunk_shard(store, 1), _KV, "r1", new_pids={1})
     if mutation == "fast_forward":
-        store.commit(_one_chunk_manifest(2), _KV, "r2", branch="b")
+        store.commit(_one_chunk_shard(store, 2), _KV, "r2", new_pids={2},
+                     branch="b")
     head = store.current_snapshot()["snapshot_id"]
     refs = store.refs()
     before = set(store._snapshot_names())
@@ -2870,9 +2873,10 @@ def test_snapshot_crash_before_flip_keeps_head(tmp_path, monkeypatch,
     monkeypatch.setattr(ChunkStore, "_set_current", crash)
     monkeypatch.setattr(ChunkStore, "_write_refs", crash)
     mutate = {
-        "append": lambda: store.commit(_one_chunk_manifest(3), _KV, "r3"),
-        "branch": lambda: store.commit(_one_chunk_manifest(3), _KV, "r3",
-                                       branch="b2"),
+        "append": lambda: store.commit(_one_chunk_shard(store, 3), _KV,
+                                       "r3", new_pids={3}),
+        "branch": lambda: store.commit(_one_chunk_shard(store, 3), _KV,
+                                       "r3", new_pids={3}, branch="b2"),
         "delete": lambda: store.commit_deletes(
             pa.table({"k": pa.array([0], pa.int64())}), "k", "rd"),
         "evolve": lambda: evolve_schema(out, rename={"v": "w"}),
@@ -2889,7 +2893,8 @@ def test_snapshot_crash_before_flip_keeps_head(tmp_path, monkeypatch,
     assert len(orphans) == (0 if mutation == "fast_forward" else 1)
     newest = max(_snapshot_n(name) for name in before | orphans)
     assert all(_snapshot_n(name) == newest for name in orphans)
-    snap = store.commit(_one_chunk_manifest(4), _KV, "r4")
+    snap = store.commit(_one_chunk_shard(store, 4), _KV, "r4",
+                        new_pids={4})
     assert snap["n"] == newest + 1
     rep = expire_snapshots(store, keep_last=1)
     assert orphans <= set(rep["removed_snapshots"])
@@ -2902,7 +2907,7 @@ def test_snapshots_order_by_commit_number_past_99999(tmp_path):
     import json
     out = str(tmp_path / "store")
     store = ChunkStore(out)
-    store.commit(_one_chunk_manifest(0), _KV, "r0")
+    store.commit(_one_chunk_shard(store, 0), _KV, "r0", new_pids={0})
     for n in (99999, 100000):
         with open(os.path.join(store.snapshots_dir,
                                f"snapshot-{n:05d}.json"), "w") as f:
@@ -2922,7 +2927,7 @@ def test_snapshot_commit_removes_broken_stale_lock(tmp_path):
         f.write("crashed-holder")
     hour_ago = time.time() - 3600
     os.utime(lock, (hour_ago, hour_ago))
-    store.commit(_one_chunk_manifest(0), _KV, "r0")
+    store.commit(_one_chunk_shard(store, 0), _KV, "r0", new_pids={0})
     assert store.current_snapshot()["n"] == 0
     assert not [f for f in os.listdir(out) if f.startswith("_commit.lock")]
 

@@ -157,6 +157,27 @@ def test_pcap_datasource_format(spark, tmp_path):
         spark.read.format("pcap").load(str(empty)).count()
 
 
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_capture_path_with_glob_metacharacters(spark, tmp_path, layout):
+    """A capture file or directory whose name holds glob metacharacters
+    is read as named, not as a pattern, and both readers return the same
+    rows."""
+    from omi_cpp_parquet_wide_record_spark.sources.pcap import PcapDataSource
+    data = FX.pcap_capture(200, "nasdaq", seed=9)
+    if layout == "file":
+        path = tmp_path / "cap[1].pcap"
+    else:
+        (tmp_path / "run[1]").mkdir()
+        path = tmp_path / "run[1]" / "a.pcap"
+    path.write_bytes(data)
+    target = str(path if layout == "file" else path.parent)
+    spark.dataSource.register(PcapDataSource)
+    via_fn = read_pcap(spark, target)
+    via_fmt = spark.read.format("pcap").load(target)
+    assert sorted(via_fn.collect()) == sorted(via_fmt.collect())
+    assert via_fn.count() == packets_from_capture(data).num_rows > 0
+
+
 def test_truncated_capture_tail():
     """A capture cut off mid-record (killed tcpdump) must decode every
     complete frame and drop the torn tail — identically in the vectorized

@@ -119,7 +119,7 @@ def test_commit_rechecks_retired_names_under_lock(spark, tmp_path):
         evolve_schema,
     )
     from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-        ChunkStore, CommitConflict, MANIFEST_SCHEMA,
+        ChunkStore, CommitConflict,
     )
     out = str(tmp_path / "retired")
     df = spark.createDataFrame([(i, i) for i in range(20)],
@@ -127,12 +127,9 @@ def test_commit_rechecks_retired_names_under_lock(spark, tmp_path):
     encode_dataframe(df, out, salt_key="k", num_pids=2)
     evolve_schema(out, rename={"old": "renamed"})
     store = ChunkStore(out)
-    empty_manifest = pa.table(
-        {f.name: pa.array([], type=f.type) for f in MANIFEST_SCHEMA},
-        schema=MANIFEST_SCHEMA)
     bad_schema = pa.schema([("k", pa.int64()), ("old", pa.int64())])
     with pytest.raises(CommitConflict, match="retired"):
-        store.commit(empty_manifest, bad_schema, "r06-test")
+        store.commit([], bad_schema, "r06-test", new_pids=set())
 
 
 def test_expire_snapshots_age_guard_on_snapshot_json(spark, tmp_path):
@@ -194,19 +191,14 @@ def test_expire_snapshots_unlocks_before_file_phase(spark, tmp_path,
 
 # ------------------------------------------------- fingerprint parity
 
-def test_engine_fingerprint_matches_under_zipimport(tmp_path):
-    """The filesystem walk and the zipimport fallback hash the same
-    normal form — one store's fingerprint is valid across local and
-    --py-files runs."""
+def _zip_package(zpath: str, extra: dict[str, str] | None = None) -> str:
+    """Zip the package's .py files (plus ``extra``: {archive path:
+    source}) as a --py-files archive; return the engine fingerprint a
+    fresh interpreter importing the package from it computes."""
     import zipfile
 
     import omi_cpp_parquet_wide_record_spark as pkg
-    from omi_cpp_parquet_wide_record_spark.version import (
-        engine_fingerprint,
-    )
-    local_fp = engine_fingerprint()
     pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
-    zpath = str(tmp_path / "pkg.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for dirpath, _dirs, files in os.walk(pkg_dir):
             for f in files:
@@ -215,20 +207,41 @@ def test_engine_fingerprint_matches_under_zipimport(tmp_path):
                 full = os.path.join(dirpath, f)
                 rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                 zf.write(full, rel)
+        for rel, src in (extra or {}).items():
+            zf.writestr(rel, src)
     code = (
         "import sys; sys.path.insert(0, %r); "
         "from omi_cpp_parquet_wide_record_spark.version import "
         "engine_fingerprint; print(engine_fingerprint())" % zpath)
-    zip_fp = subprocess.run(
+    return subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
         check=True).stdout.strip()
+
+
+def test_engine_fingerprint_matches_under_zipimport(tmp_path):
+    """A checkout and a zip of the same tree hash the same normal form —
+    one store's fingerprint is valid across local and --py-files runs."""
+    from omi_cpp_parquet_wide_record_spark.version import (
+        engine_fingerprint,
+    )
+    local_fp = engine_fingerprint()
+    zip_fp = _zip_package(str(tmp_path / "pkg.zip"))
     assert zip_fp == local_fp
 
 
+def test_engine_fingerprint_covers_new_codec_module_in_zip(tmp_path):
+    """A codec module that exists only in the archive changes the zip's
+    fingerprint: the module list comes from the package itself, not from
+    a hand-kept list that can drift from the checkout's."""
+    plain = _zip_package(str(tmp_path / "plain.zip"))
+    extra = _zip_package(str(tmp_path / "extra.zip"), {
+        "omi_cpp_parquet_wide_record_spark/codecs/zz_extra.py": "X = 1\n"})
+    assert len(extra) == 16 and extra != plain
+
+
 def test_engine_fingerprint_without_archive_terminates(tmp_path):
-    """A package root with neither its surface files nor an archive above
-    it (the zipimport fallback's archive walk reaches the filesystem
-    root) falls through to the loader fallback instead of spinning."""
+    """A package that holds none of the surface modules (their parent
+    packages missing too) still fingerprints, hashing nothing."""
     import omi_cpp_parquet_wide_record_spark.version as version
     pkg = tmp_path / "barepkg"
     pkg.mkdir()

@@ -7,13 +7,14 @@ import pyarrow as pa
 
 from omi_cpp_parquet_wide_record_spark import fixtures as FX
 from omi_cpp_parquet_wide_record_spark.codecs import decode_column, encode_column
-from omi_cpp_parquet_wide_record_spark.selector import choose_codec, plan_columns
+from omi_cpp_parquet_wide_record_spark.selector import choose_codec
 from tests.conftest import arrays_equal
 
 
 def test_expected_choices_on_web_pages():
     t = FX.web_pages_table(5000)
-    plan = plan_columns(t)
+    plan = {name: choose_codec(t[name].combine_chunks())
+            for name in t.column_names}
     assert plan["lang"].codec in ("dict", "rle")
     assert plan["warc_ts"].codec in ("for", "delta")
     # template-heavy text/url: the cascaded table beats single-pass fsst

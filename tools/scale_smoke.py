@@ -41,6 +41,7 @@ def main() -> int:
 
     import pyarrow as pa
     import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
     from omi_cpp_parquet_wide_record_spark import fixtures as FX
     from omi_cpp_parquet_wide_record_spark.operators.decode import (
@@ -55,7 +56,9 @@ def main() -> int:
     from omi_cpp_parquet_wide_record_spark.operators.verify import (
         verify_roundtrip,
     )
-    from omi_cpp_parquet_wide_record_spark.plans.snapshot import ChunkStore
+    from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
+        MANIFEST_SCHEMA, ChunkStore,
+    )
     from omi_cpp_parquet_wide_record_spark.session import get_spark
 
     spark = get_spark("owr-scale-smoke", cores=32)
@@ -104,8 +107,11 @@ def main() -> int:
             pstore = ChunkStore(partial).create()
             mask = pc.is_in(full.column("pid"),
                             value_set=pa.array(keep, type=pa.int32()))
-            pstore.commit(full.filter(mask), store.arrow_schema(),
-                          "partial-run")
+            shard = "manifest-shard-partial.parquet"
+            pq.write_table(full.filter(mask).select(MANIFEST_SCHEMA.names),
+                           os.path.join(pstore.manifests_dir, shard))
+            pstore.commit([shard], store.arrow_schema(), "partial-run",
+                          new_pids=set(keep))
             t0 = time.time()
             r2 = encode_dataframe(corpus, partial, partition_by=["lang"],
                                   salt_key="url", num_pids=num_pids,
