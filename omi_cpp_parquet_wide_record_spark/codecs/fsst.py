@@ -70,6 +70,14 @@ TRAIN_BYTES_DEFAULT = 512 << 10
 # stream + temps of a 1 MB block overflow L2 under full-core concurrency)
 BLOCK_BYTES_DEFAULT = 512 << 10
 
+# Largest share of a column's encoded stream the row-index section (one
+# bit-packed encoded length per row, ~1-2 bytes) may cost, so only long
+# rows get it. On the web corpus's 400-row chunks it costs 0.08% of an
+# ``html`` stream and 0.6% of a ``text`` one; urls (~14 encoded bytes a
+# row) and ITCH tickers (~2) stay without it, and locating a few rows in
+# their short streams with one pass is cheap.
+ROW_INDEX_SHARE = 0.01
+
 
 def _with_sentinels(corpus: np.ndarray, start_pos: np.ndarray) -> np.ndarray:
     """int16 token stream with a _SEP token before each row start — paid
@@ -237,12 +245,13 @@ def _round0_raw(block: np.ndarray, bpos: np.ndarray,
 
 
 def _apply_program(t: np.ndarray, bpos: np.ndarray, program,
-                   lut: np.ndarray) -> np.ndarray:
+                   lut: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Replay a trained merge program on one (cache-sized) token block
     with BOUNDARY MASKING: per round only lut-gather + boundary mask +
     parity-select + compaction — no counting, no sentinel tokens (the
     masked positions break marked runs exactly where sentinels would,
-    so the selected pair set is identical)."""
+    so the selected pair set is identical). Returns the token stream and
+    its row starts in token coordinates."""
     for keys, ids in program:
         if len(t) < 2:
             break
@@ -263,7 +272,7 @@ def _apply_program(t: np.ndarray, bpos: np.ndarray, program,
             t = t[keep]
             bpos = bpos - np.searchsorted(sel, bpos - 1, side="left")
         lut[keys] = -1     # restore shared lut for the next round/block
-    return t
+    return t, bpos
 
 
 def _assign_codes_from_freq(freq_full: np.ndarray,
@@ -404,33 +413,38 @@ def _assign_codes_from_freq(freq_full: np.ndarray,
 
 
 def _assemble(p: np.ndarray, enc_flat: np.ndarray, enc_off: np.ndarray,
-              enc_w: np.ndarray) -> np.ndarray:
+              enc_w: np.ndarray, row_tok: np.ndarray
+              ) -> tuple[np.ndarray, np.ndarray]:
     """Single-gather output assembly for one token block: token id -> final
     byte sequence (code, ESCAPE+literal, or demoted expansion; sentinels
     emit zero bytes, so no strip pass). Writes are purely sequential;
-    index math stays int32 while the block fits."""
+    index math stays int32 while the block fits. Also returns the output
+    offset of each token position in ``row_tok`` (the first token of each
+    non-empty row), read off the running sum the assembly computes."""
     w = enc_w[p]                            # uint8: 1 byte per token
     total = int(w.sum(dtype=np.int64))
     it = np.int32 if total < 2**31 - 8 else np.int64
     ends = np.cumsum(w, dtype=it)
+    row_off = ends[row_tok] - w[row_tok]
     src0 = enc_off[p].astype(it, copy=False)
     np.subtract(src0, ends, out=src0)
     src0 += w                               # enc_off[p] - (ends - w)
     src = np.repeat(src0, w)
     src += np.arange(total, dtype=it)
-    return enc_flat[src]
+    return enc_flat[src], row_off
 
 
 def _replay_blocks(corpus: np.ndarray, starts: np.ndarray,
                    start_pos: np.ndarray, n_rows: int, prog,
                    lut16: np.ndarray | None, enc_flat: np.ndarray,
                    enc_off: np.ndarray, enc_w: np.ndarray,
-                   block_bytes: int) -> np.ndarray:
+                   block_bytes: int) -> tuple[np.ndarray, np.ndarray]:
     """Replay a trained merge program + code assignment over the corpus in
     ~1 MB blocks (round-0 -> remaining rounds -> assembly per block, all
     while the cache-sized token stream is resident). Block boundaries are
     the first row start at/after each multiple of block_bytes (vectorized
-    searchsorted, no per-row loop)."""
+    searchsorted, no per-row loop). Returns the encoded stream and the
+    stream offset where each non-empty row starts."""
     row_ends = starts[1:]
     marks = np.arange(block_bytes, int(row_ends[-1]),
                       block_bytes, dtype=np.int64)
@@ -440,7 +454,7 @@ def _replay_blocks(corpus: np.ndarray, starts: np.ndarray,
     cuts = cuts[cuts <= n_rows]
     lut = np.full(_NKEYS, -1, dtype=np.int16)
     rest = prog[1:] if lut16 is not None else prog
-    outs = []
+    outs, offs, done = [], [], 0
     for a, b in zip(cuts[:-1].tolist(), cuts[1:].tolist()):
         lo, hi = int(starts[a]), int(starts[b])
         if hi <= lo:
@@ -451,23 +465,25 @@ def _replay_blocks(corpus: np.ndarray, starts: np.ndarray,
             tb, bp = _round0_raw(corpus[lo:hi], bpos, lut16)
         else:
             tb, bp = corpus[lo:hi].astype(np.int16), bpos
-        outs.append(_assemble(_apply_program(tb, bp, rest, lut),
-                              enc_flat, enc_off, enc_w))
-    return outs[0] if len(outs) == 1 else np.concatenate(outs)
+        tb, bp = _apply_program(tb, bp, rest, lut)
+        out, off = _assemble(tb, enc_flat, enc_off, enc_w, bp)
+        outs.append(out)
+        offs.append(off.astype(np.int64) + done)
+        done += len(out)
+    if len(outs) == 1:
+        return outs[0], offs[0]
+    return np.concatenate(outs), np.concatenate(offs)
 
 
 def _make_plan(prog, table: list[bytes], enc_flat: np.ndarray,
                enc_off: np.ndarray, enc_w: np.ndarray, out_bytes: int,
                in_bytes: int, lut16: np.ndarray | None = None) -> dict:
     """Bundle everything replay needs (merge program, round-0 LUT, code
-    assignment, serialized table) plus the training compression ratio the
-    drift guard compares against."""
+    assignment, table) plus the training compression ratio the drift
+    guard compares against."""
     if lut16 is None:
         lut16 = _round0_lut16(prog)
     return {"prog": prog, "lut16": lut16, "table": table,
-            "tab_lens": np.array([len(s) for s in table],
-                                 dtype=np.uint8).tobytes(),
-            "tab_flat": b"".join(table),
             "enc_flat": enc_flat, "enc_off": enc_off, "enc_w": enc_w,
             "exp": out_bytes / max(1, in_bytes)}
 
@@ -541,6 +557,17 @@ def _expand(tab_flat: np.ndarray, tab_lens: np.ndarray,
 
 
 class FsstCodec(Codec):
+    """Sections: [tab_lens, tab_flat, row_lens, stream] and, when the
+    params carry ``row_index``, a fifth: the encoded length of every row
+    (``pack_uints``; ``row_index`` holds its pack params). A row's bytes
+    in the stream then start at the sum of the lengths before it, so
+    ``decode_rows`` slices the wanted rows without a pass over the whole
+    stream. The section is written only where it costs at most
+    ``ROW_INDEX_SHARE`` of the stream, i.e. for long rows: web ``html``
+    chunks (~1.5 KB a row) carry it, short strings such as urls or
+    tickers do not. Chunks without it locate rows with one pass over the
+    stream."""
+
     name = "fsst"
 
     # rounds=4: measured on the web corpus, rounds 5-6 leave the ratio
@@ -578,21 +605,17 @@ class FsstCodec(Codec):
 
         plan = shared.get("plan") if shared is not None else None
         if plan is not None:
-            out = _replay_blocks(corpus, starts, start_pos, n_rows,
-                                 plan["prog"], plan["lut16"],
-                                 plan["enc_flat"], plan["enc_off"],
-                                 plan["enc_w"], BLOCK_BYTES_DEFAULT)
-            if len(out) <= int(plan["exp"] * len(corpus) * 1.3) + 4096:
-                table = plan["table"]
-                tab_lens = plan["tab_lens"]
-                return [tab_lens, plan["tab_flat"], lens_payload,
-                        out.tobytes()], {"n": n_rows,
-                                         "ncodes": len(table),
-                                         "lens": lens_params}
-            # drift: this chunk's bytes no longer match the trained
-            # distribution — retrain below and replace the shared plan
-
-        if len(corpus) <= BLOCK_BYTES_DEFAULT:
+            out, row_off = _replay_blocks(
+                corpus, starts, start_pos, n_rows, plan["prog"],
+                plan["lut16"], plan["enc_flat"], plan["enc_off"],
+                plan["enc_w"], BLOCK_BYTES_DEFAULT)
+            if len(out) > int(plan["exp"] * len(corpus) * 1.3) + 4096:
+                # drift: this chunk's bytes no longer match the trained
+                # distribution — retrain below and replace the shared plan
+                plan = None
+        if plan is not None:
+            table = plan["table"]
+        elif len(corpus) <= BLOCK_BYTES_DEFAULT:
             # whole corpus is the training sample. THIS chunk's output uses
             # the exact assignment (ids absent from the stream get no table
             # entry); the PLAN, when there is a ``shared`` slot to stash it
@@ -606,7 +629,9 @@ class FsstCodec(Codec):
             freq = np.bincount(t, minlength=_KSPACE).astype(np.int64)
             table, enc_flat, enc_off, enc_w = _assign_codes_from_freq(
                 freq, pairs)
-            out = _assemble(t, enc_flat, enc_off, enc_w)
+            # a row starts at its sentinel, which emits no bytes
+            out, row_off = _assemble(t, enc_flat, enc_off, enc_w,
+                                     np.flatnonzero(t == _SEP))
             if shared is not None:
                 ptable, pflat, poff, pw = _assign_codes_from_freq(
                     freq, pairs, complete=True)
@@ -645,52 +670,95 @@ class FsstCodec(Codec):
                 np.bincount(st, minlength=_KSPACE).astype(np.int64),
                 pairs, complete=True)
             lut16 = _round0_lut16(prog)
-            out = _replay_blocks(corpus, starts, start_pos, n_rows, prog,
-                                 lut16, enc_flat, enc_off, enc_w,
-                                 BLOCK_BYTES_DEFAULT)
+            out, row_off = _replay_blocks(corpus, starts, start_pos, n_rows,
+                                          prog, lut16, enc_flat, enc_off,
+                                          enc_w, BLOCK_BYTES_DEFAULT)
             if shared is not None:
                 shared["plan"] = _make_plan(prog, table, enc_flat, enc_off,
                                             enc_w, len(out), len(corpus),
                                             lut16)
 
-        tab_lens = np.array([len(s) for s in table], dtype=np.uint8)
-        return [tab_lens.tobytes(), b"".join(table), lens_payload,
-                out.tobytes()], {"n": n_rows, "ncodes": len(table),
-                                 "lens": lens_params}
+        sections = [np.array([len(s) for s in table], dtype=np.uint8)
+                    .tobytes(), b"".join(table), lens_payload, out.tobytes()]
+        params = {"n": n_rows, "ncodes": len(table), "lens": lens_params}
+        if n_rows > 1:     # one row (fsst2's pass 2) has nothing to locate
+            # encoded length per row: empty rows have none, and each
+            # non-empty row runs to the next one's start
+            enc_lens = np.zeros(n_rows, dtype=np.int64)
+            enc_lens[lengths > 0] = np.diff(row_off, append=len(out))
+            index, index_params = pack_uints(enc_lens)
+            if len(index) <= ROW_INDEX_SHARE * len(out):
+                sections.append(index)
+                params["row_index"] = index_params
+        return sections, params
 
     def decode(self, sections, params: dict) -> pa.Array:
         return self.decode_rows(sections, params, None)
 
     def decode_rows(self, sections, params: dict, rows) -> pa.Array:
-        """The rows at sorted positions ``rows`` (None: every row).
-        Symbols never span rows, so one running sum of the decoded width
-        of each stream byte (an escaped literal's slot adds 0) locates
-        the wanted rows' bytes, and only those parse and expand."""
+        """The rows at sorted positions ``rows`` (None: every row): the
+        stream bytes of those rows, sliced at the row offsets, parse and
+        expand; the rest of the stream is never touched. The offsets come
+        from the row-index section where the chunk has one, else from
+        ``_locate_rows``."""
         target = name_type(params["atype"])
         lengths = unpack_uints(sections[2], params["lens"])
         enc = np.frombuffer(sections[3], dtype=np.uint8)
         tab_lens = np.frombuffer(sections[0], dtype=np.uint8,
                                  count=params["ncodes"])
         tab_flat = np.frombuffer(sections[1], dtype=np.uint8)
+        indexed = "row_index" in params
         if rows is not None:
-            width = np.take(_code_widths(tab_lens), enc)
-            width[_markers(enc) + 1] = 0
-            # a byte decodes to at most 255 bytes: int32 while that fits
-            ends = np.cumsum(width, dtype=np.int32 if len(enc) < 2**23
-                             else np.int64)
-            if (int(ends[-1]) if len(ends) else 0) != int(lengths.sum()):
-                raise ValueError("fsst decode length mismatch")
-            starts = np.zeros(len(lengths) + 1, dtype=ends.dtype)
-            np.cumsum(lengths, out=starts[1:])
-            lo = np.searchsorted(ends, starts[rows], side="right")
-            cnt = np.searchsorted(ends, starts[rows + 1], side="right") - lo
+            bounds = _indexed_rows(sections[4], params["row_index"],
+                                   len(lengths), len(enc)) if indexed \
+                else _locate_rows(enc, tab_lens, lengths)
+            lo = bounds[rows]
+            cnt = bounds[rows + 1] - lo
             enc = enc[np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
                       + np.arange(int(cnt.sum()))]
             lengths = lengths[rows]
         out = _expand(tab_flat, tab_lens, enc)
         if int(lengths.sum()) != len(out):
             raise ValueError("fsst decode length mismatch")
+        if rows is None and indexed:
+            # a full decode needs no offsets, but still checks the index
+            _indexed_rows(sections[4], params["row_index"], len(lengths),
+                          len(enc))
         return block_to_array(lengths, out.tobytes(), target)
+
+
+def _indexed_rows(section, index_params: dict, n_rows: int,
+                  stream_len: int) -> np.ndarray:
+    """Stream offset of each row's first byte, plus the stream's end,
+    from a row-index section; a section that does not describe the
+    stream raises ``ValueError``."""
+    enc_lens = unpack_uints(section, index_params)
+    if len(enc_lens) != n_rows or (n_rows and int(enc_lens.min()) < 0) \
+            or int(enc_lens.sum()) != stream_len:
+        raise ValueError("fsst: row index does not match the stream "
+                         f"({len(enc_lens)} lengths for {n_rows} rows, "
+                         f"summing to {int(enc_lens.sum())} of "
+                         f"{stream_len} bytes)")
+    bounds = np.zeros(n_rows + 1, dtype=np.int64)
+    np.cumsum(enc_lens, out=bounds[1:])
+    return bounds
+
+
+def _locate_rows(enc: np.ndarray, tab_lens: np.ndarray,
+                 lengths: np.ndarray) -> np.ndarray:
+    """``_indexed_rows``' offsets from one pass over the stream: symbols
+    never span rows, so a running sum of the decoded width of each stream
+    byte (an escaped literal's slot adds 0) meets every row start."""
+    width = np.take(_code_widths(tab_lens), enc)
+    width[_markers(enc) + 1] = 0
+    # a byte decodes to at most 255 bytes: int32 while that fits
+    ends = np.cumsum(width, dtype=np.int32 if len(enc) < 2**23
+                     else np.int64)
+    if (int(ends[-1]) if len(ends) else 0) != int(lengths.sum()):
+        raise ValueError("fsst decode length mismatch")
+    starts = np.zeros(len(lengths) + 1, dtype=ends.dtype)
+    np.cumsum(lengths, out=starts[1:])
+    return np.searchsorted(ends, starts, side="right")
 
 
 class Fsst2Codec(Codec):
@@ -703,8 +771,10 @@ class Fsst2Codec(Codec):
     sampling selector correctly keeps plain fsst there.
 
     Sections: [tab_lens1, tab_flat1, row_lens, tab_lens2, tab_flat2,
-    stream_lens2, out2]; decode inverts pass 2 (one-row binary holding
-    pass 1's stream) then pass 1."""
+    stream_lens2, out2], then pass 1's row index when its params carry
+    ``row_index`` (``FsstCodec``'s rule, against pass 1's stream; pass 2
+    encodes one row and has none). Decode inverts pass 2 in full (one-row
+    binary holding pass 1's stream), then pass 1 for the wanted rows."""
 
     name = "fsst2"
     supports_shared_plan = True
@@ -717,7 +787,7 @@ class Fsst2Codec(Codec):
         stream = pa.array([secs1[3]], type=pa.large_binary())
         s2 = shared.setdefault("p2", {}) if shared is not None else None
         secs2, p2 = inner.encode(stream, shared=s2)
-        return [secs1[0], secs1[1], secs1[2], *secs2], {**p1, "p2": p2}
+        return [*secs1[:3], *secs2, *secs1[4:]], {**p1, "p2": p2}
 
     def decode(self, sections, params: dict) -> pa.Array:
         return self.decode_rows(sections, params, None)
@@ -726,10 +796,10 @@ class Fsst2Codec(Codec):
         """Pass 2 in full, then pass 1 for the wanted ``rows`` only."""
         inner = FsstCodec()
         p2 = {**params["p2"], "atype": "large_binary"}
-        stream = inner.decode(list(sections[3:]), p2)[0].as_py()
+        stream = inner.decode(list(sections[3:7]), p2)[0].as_py()
         p1 = {k: v for k, v in params.items() if k != "p2"}
         return inner.decode_rows(
-            [sections[0], sections[1], sections[2], stream], p1, rows)
+            [*sections[:3], stream, *sections[7:]], p1, rows)
 
 
 register(FsstCodec())

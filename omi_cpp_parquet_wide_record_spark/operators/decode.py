@@ -193,8 +193,9 @@ def _row_mask(t: pa.Table, filters) -> np.ndarray:
     promotes them and other literals cast to the column type (a naive
     datetime reads as UTC, as in ``prune_files``). ``c#len`` is a list or
     map length, ``c#f:x`` a struct field, and ``c#val`` holds when SOME
-    element (map value) satisfies the op. Bad filters raise, so
-    evaluating a list over no rows checks it."""
+    element (map value) satisfies the op. Bad filters raise ``ValueError``,
+    also for a literal that Arrow cannot compare with the column's type,
+    so evaluating a list over no rows checks it."""
     keep = np.ones(t.num_rows, dtype=bool)
     for c, op, v in filters:
         base, acc = _split_filter_col(c)
@@ -211,7 +212,8 @@ def _row_mask(t: pa.Table, filters) -> np.ndarray:
             valid = a.is_valid().to_numpy(zero_copy_only=False)
         if acc == "val":
             seen = np.concatenate(([0], np.cumsum(_compare(
-                a.items if pa.types.is_map(a.type) else a.values, op, v))))
+                a.items if pa.types.is_map(a.type) else a.values, op, v,
+                c))))
             keep &= valid & (seen[off[1:]] > seen[off[:-1]])
             continue
         if acc == "len":
@@ -220,12 +222,28 @@ def _row_mask(t: pa.Table, filters) -> np.ndarray:
             a = pc.struct_field(a, acc[2:])
         elif acc is not None:
             raise ValueError(f"unknown nested accessor {acc!r} in {c}")
-        keep &= _compare(a, op, v)
+        keep &= _compare(a, op, v, c)
     return keep
 
 
-def _compare(a: pa.Array, op: str, v) -> np.ndarray:
-    """Spark's ``a <op> v`` per element of ``a``, null read as False."""
+def _compare(a: pa.Array, op: str, v, c: str) -> np.ndarray:
+    """Spark's ``a <op> v`` per element of ``a``, null read as False.
+    A literal Arrow cannot compare with ``a`` raises ``ValueError``
+    naming the filter column ``c``."""
+    try:
+        r = _compare_arrow(a, op, v)
+    except (pa.ArrowNotImplementedError, pa.ArrowTypeError,
+            pa.ArrowInvalid) as e:
+        kind = type(v).__name__ if op != "in" else "list of " + "/".join(
+            sorted({type(x).__name__ for x in v if x is not None}))
+        raise ValueError(f"filter ({c!r}, {op!r}, ...): a literal of type "
+                         f"{kind} cannot be compared with column {c!r} of "
+                         f"type {a.type}") from e
+    return pc.fill_null(r, False).to_numpy(zero_copy_only=False)
+
+
+def _compare_arrow(a: pa.Array, op: str, v):
+    """``_compare``'s Arrow boolean result, nulls kept."""
     if op in ("is_null", "is_not_null"):
         r = pc.is_null(a) if op == "is_null" else pc.is_valid(a)
     elif op == "startswith":
@@ -247,7 +265,7 @@ def _compare(a: pa.Array, op: str, v) -> np.ndarray:
             r = pc.if_else(pc.or_(a_nan, v_nan), _CMP[op](a_nan, v_nan), r)
     else:
         raise ValueError(f"unknown filter op {op!r}")
-    return pc.fill_null(r, False).to_numpy(zero_copy_only=False)
+    return r
 
 
 def _nullable_type(t: pa.DataType) -> pa.DataType:
@@ -674,7 +692,12 @@ def decode_store(spark: SparkSession, out_dir: str,
     (an IN list prunes a chunk only when EVERY member is provably
     absent), and ``read_chunk_table`` drops each opened chunk's failing
     rows in Arrow with a post-hoc .filter()'s semantics; no row filter
-    runs in Spark. A bad filter raises from this call.
+    runs in Spark. A bad filter raises ``ValueError`` from this call. So
+    does a literal Arrow cannot compare with its column, such as
+    ``("s", "==", 1)`` or ``("s", "in", [1, 2])`` on a string column:
+    Spark's own ``col == lit`` would cast one side to a common type and
+    compare; the engine never casts a column, so write the literal in
+    the column's type.
 
     ``planning`` chooses where scan planning runs; both modes prune with
     the same compiler (``prune_files``) and read each chunk with the same

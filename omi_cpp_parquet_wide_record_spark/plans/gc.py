@@ -21,7 +21,7 @@ import os
 import time
 
 from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-    ChunkStore, _snapshot_name,
+    ChunkStore, _snapshot_name, read_shard,
 )
 
 
@@ -172,10 +172,10 @@ def remove_orphan_chunks(store: ChunkStore,
 
 def _remove_orphan_chunks(store: ChunkStore, snaps: list[tuple[str, dict]],
                           older_than_s: float) -> list[str]:
-    import pyarrow.parquet as pq
     # union of UNIQUE manifest names first: retained snapshots share
     # manifests by append, so reading per snapshot was O(S x M) full
-    # manifest reads; one pruned read per unique manifest suffices
+    # manifest reads; one (cached, ``read_shard``) read per unique
+    # manifest suffices
     manifest_names = {m for _, s in snaps for m in s["manifests"]}
     referenced: set[str] = set()
     for m in manifest_names:
@@ -194,7 +194,7 @@ def _remove_orphan_chunks(store: ChunkStore, snaps: list[tuple[str, dict]],
             dropped_everywhere = d if dropped_everywhere is None \
                 else (dropped_everywhere & d)
         if dropped_everywhere:
-            t = pq.read_table(p, columns=["chunk_file", "pid"])
+            t = read_shard(p)
             import pyarrow.compute as pc
             import pyarrow as pa
             keep = pc.invert(pc.is_in(
@@ -204,8 +204,7 @@ def _remove_orphan_chunks(store: ChunkStore, snaps: list[tuple[str, dict]],
             referenced.update(
                 t.column("chunk_file").filter(keep).to_pylist())
         else:
-            t = pq.read_table(p, columns=["chunk_file"])
-            referenced.update(t.column("chunk_file").to_pylist())
+            referenced.update(read_shard(p).column("chunk_file").to_pylist())
     removed = []
     for f in os.listdir(store.chunks_dir):
         p = os.path.join(store.chunks_dir, f)

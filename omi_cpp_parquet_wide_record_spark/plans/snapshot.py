@@ -24,6 +24,15 @@ removable by GC). Resume = the set of committed partition ids in the
 live snapshot; the encode job anti-joins its work units against it
 (SURVEY.md §2.2).
 
+Manifest shard reads are cached per process (``read_shard``): every read
+of a store re-reads the same immutable shards, so the driver's planning,
+each Python worker's distributed planning, GC and ``metadata_table`` take a
+shard's parquet read from memory after the first. An entry is keyed by the
+shard's path and its file identity (inode, size, mtime), so a store deleted
+and re-created at the same path, or a shard rewritten in place, is read
+again. The cache holds at most ``SHARD_CACHE_BYTES`` and evicts the least
+recently used shards first.
+
 No Iceberg runtime jar exists in this sandbox (verified); the snapshot JSON
 convention keeps identical semantics and would swap for Iceberg REPLACE
 commits on a real deployment.
@@ -34,8 +43,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import time
 import uuid
+from collections import OrderedDict
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -74,6 +85,44 @@ MANIFEST_SCHEMA = pa.schema([
 # the live manifest view (``ChunkStore.shard_view``): MANIFEST_SCHEMA plus
 # each row's manifest commit number, which scopes sequence-scoped deletes
 LIVE_MANIFEST_SCHEMA = MANIFEST_SCHEMA.append(pa.field("commit_n", pa.int32()))
+
+
+# Arrow bytes of manifest shards ``read_shard`` keeps in memory per process.
+# A shard holds one row per chunk column, at most ~2 KB of Arrow each
+# (params JSON, zone maps, and a 1.4 KB base64 bloom on byte columns): the
+# benchmark stores' 120-540 manifest rows take well under 1 MiB, and 32 MiB
+# holds at least 16k chunk columns.
+SHARD_CACHE_BYTES = 32 << 20
+
+_SHARDS: OrderedDict = OrderedDict()     # key -> table, oldest use first
+_SHARDS_LOCK = threading.Lock()
+_shards_bytes = 0
+
+
+def read_shard(path: str) -> pa.Table:
+    """The parquet table of the manifest shard at ``path``, from the
+    process-wide LRU cache when the file is unchanged since it was read:
+    the key is (absolute path, inode, size, mtime in ns). Shards are
+    written once under unique names, so the key only has to catch a store
+    re-created at the same path and a shard file replaced or truncated in
+    place; a same-size rewrite of the same inode within one mtime tick of
+    the filesystem is the one change it cannot see."""
+    global _shards_bytes
+    st = os.stat(path)
+    key = (os.path.abspath(path), st.st_ino, st.st_size, st.st_mtime_ns)
+    with _SHARDS_LOCK:
+        t = _SHARDS.get(key)
+        if t is not None:
+            _SHARDS.move_to_end(key)
+            return t
+    t = pq.read_table(path)
+    with _SHARDS_LOCK:
+        if key not in _SHARDS:
+            _SHARDS[key] = t
+            _shards_bytes += t.nbytes
+        while _shards_bytes > SHARD_CACHE_BYTES:
+            _shards_bytes -= _SHARDS.popitem(last=False)[1].nbytes
+    return t
 
 
 # lineage fields ``_publish`` stamps on every snapshot; the rest is content
@@ -462,9 +511,11 @@ class ChunkStore:
           column for sequence-scoped deletes;
         - retired physical column names canonicalize to live names, so
           pre-rename chunks keep pruning.
+
+        The shard's parquet read comes from ``read_shard``'s cache.
         """
         import pyarrow.compute as pc
-        t = pq.read_table(os.path.join(self.manifests_dir, manifest_name))
+        t = read_shard(os.path.join(self.manifests_dir, manifest_name))
         for f in MANIFEST_SCHEMA:
             if f.name not in t.schema.names:
                 t = t.append_column(f.name,

@@ -285,6 +285,9 @@ def _rows_inputs(rng) -> dict[str, list[pa.Array]]:
                      for _ in range(n)])
     escapes = pa.array([b"\xff" * (i % 5) + b"a\xff" * (i % 3)
                         for i in range(n)], pa.binary())
+    # long rows: FSST writes its row-index section for these
+    pages = pa.array(["".join(rng.choice(words, rng.integers(0, 400)))
+                      for _ in range(n)])
     lists = pa.array([[float(i)] * (i % 4) for i in range(n)],
                      pa.list_(pa.float64()))
     struct = pa.array([{"a": i % 7, "b": f"b{i % 11}"} for i in range(n)])
@@ -294,20 +297,24 @@ def _rows_inputs(rng) -> dict[str, list[pa.Array]]:
             "delta": [ints, ts], "bitpack": [small, bools],
             "dict": [ints, reals, text], "rle": [small, text, bools],
             "alp": [prices], "alprd": [reals],
-            "fsst": [text, escapes], "fsst2": [text, escapes],
+            "fsst": [text, escapes, pages], "fsst2": [text, escapes, pages],
             "list": [lists], "struct": [struct], "map": [maps]}
 
 
 @pytest.mark.parametrize("codec", codec_names())
 def test_decode_rows_equals_take(codec):
     """``decode_column(p, params, rows)`` equals the full decode's
-    ``take(rows)`` on every codec and type, with and without nulls."""
+    ``take(rows)`` on every codec and type, with and without nulls. FSST
+    inputs cover both row-offset sources: long rows get the row-index
+    section, short ones are located by a pass over the stream."""
     rng = np.random.default_rng(11)
+    indexed = set()
     for base in _rows_inputs(rng)[codec]:
         n = len(base)
         holes = pa.array(np.arange(n), mask=rng.random(n) < 0.3)
         for arr in (base, base.take(holes)):
             e = encode_column(arr, codec)
+            indexed.add("row_index" in e.params)
             full = decode_column(e.payload, e.params)
             subsets = [[], [0], [n - 1], range(n)] + [
                 np.sort(rng.choice(n, k, replace=False)) for k in (1, 9, 150)]
@@ -316,24 +323,89 @@ def test_decode_rows_equals_take(codec):
                 got = decode_column(e.payload, e.params, rows=rows)
                 assert arrays_equal(got, full.take(pa.array(rows))), \
                     (codec, arr.type, arr.null_count, rows)
+    if codec in ("fsst", "fsst2"):
+        assert indexed == {True, False}
 
 
-@pytest.mark.parametrize("edit", ["truncated", "extra"])
+def _edit_row_index(e, edit: str) -> tuple[bytes, dict]:
+    """``e``'s payload and params with its row-index section (the last
+    section) replaced by a corrupt one: a length too few (same sum), a
+    negative length (same sum), or a sum one past the stream."""
+    from omi_cpp_parquet_wide_record_spark.codecs.base import (
+        pack_uints, split_sections, unpack_uints,
+    )
+    secs = [bytes(s) for s in split_sections(e.payload,
+                                             e.params["sections"])]
+    lens = unpack_uints(secs[-1], e.params["row_index"])
+    if edit == "index_rows":
+        lens = np.concatenate((lens[:-2], [lens[-2] + lens[-1]]))
+    elif edit == "index_negative":
+        lens[0] += lens[1] + 1
+        lens[1] = -1
+    else:
+        lens[0] += 1
+    secs[-1], index_params = pack_uints(lens.astype(np.int64))
+    return b"".join(secs), {**e.params, "row_index": index_params,
+                            "sections": [len(s) for s in secs]}
+
+
+@pytest.mark.parametrize("edit", ["truncated", "extra", "index_rows",
+                                  "index_negative", "index_sum"])
 def test_fsst_bad_payload_raises_value_error(edit):
-    """A payload whose token stream is cut short or carries extra bytes
+    """A payload whose token stream is cut short or carries extra bytes,
+    or whose row-index section does not describe the stream (wrong row
+    count, a negative length, a sum other than the stream length),
     raises ``ValueError`` (an assert would vanish under ``python -O``),
     on the full decode and on the row-subset decode."""
-    arr = pa.array([f"row {i} of the table" for i in range(50)])
-    e = encode_column(arr, "fsst")
-    lens = list(e.params["sections"])
-    payload = e.payload[:-3] if edit == "truncated" else \
-        e.payload + b"\x00\x01\x02"
-    lens[-1] += -3 if edit == "truncated" else 3
-    params = {**e.params, "sections": lens}
-    for rows in (None, np.array([0, 7, 49])):
-        with pytest.raises(ValueError, match="fsst"):
-            decode_column(payload, params, **(
-                {} if rows is None else {"rows": rows}))
+    if edit in ("truncated", "extra"):
+        arr = pa.array([f"row {i} of the table" for i in range(50)])
+        e = encode_column(arr, "fsst")
+        assert "row_index" not in e.params   # the stream is the last section
+        lens = list(e.params["sections"])
+        payload = e.payload[:-3] if edit == "truncated" else \
+            e.payload + b"\x00\x01\x02"
+        lens[-1] += -3 if edit == "truncated" else 3
+        cases = [(payload, {**e.params, "sections": lens})]
+    else:
+        rng = np.random.default_rng(2)
+        arr = pa.array([" ".join(map(str, rng.integers(0, 10**6, 200)))
+                        for _ in range(50)])
+        cases = []
+        for codec in ("fsst", "fsst2"):
+            e = encode_column(arr, codec)
+            assert "row_index" in e.params, codec
+            cases.append(_edit_row_index(e, edit))
+    for payload, params in cases:
+        for rows in (None, np.array([0, 7, 49])):
+            with pytest.raises(ValueError, match="fsst"):
+                decode_column(payload, params, **(
+                    {} if rows is None else {"rows": rows}))
+
+
+@pytest.mark.parametrize("codec", ["fsst", "fsst2"])
+def test_fsst_chunks_without_row_index_still_decode(codec):
+    """A column encoded before the row-index section existed (payload and
+    params checked in under ``tests/data``; long rows, which the codec
+    now indexes, with nulls and an empty row) decodes in full and by
+    row subset to the values it was encoded from."""
+    import base64
+    import json
+    import os
+    path = os.path.join(os.path.dirname(__file__), "data",
+                        "fsst_head_format.json")
+    with open(path, encoding="utf-8") as f:
+        fx = json.load(f)
+    want = pa.array(fx["values"], pa.string())
+    payload = base64.b64decode(fx[codec]["payload"])
+    params = fx[codec]["params"]
+    assert "row_index" not in params
+    assert "row_index" in encode_column(want, codec).params
+    assert arrays_equal(decode_column(payload, params), want)
+    n = len(want)
+    for rows in ([], [0], [n - 1], range(n), [1, 4, 6, 9], [3, 4, 5]):
+        rows = np.asarray(rows, dtype=np.int64)
+        assert arrays_equal(decode_column(payload, params, rows=rows),
+                            want.take(pa.array(rows))), rows
 
 
 # ---------------------------------------------------------------- hypothesis

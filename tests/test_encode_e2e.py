@@ -1807,9 +1807,18 @@ def test_delete_scoping_reads_each_manifest_once(spark, tmp_path,
         return real(path, *a, **kw)
 
     monkeypatch.setattr(pq_mod, "read_table", counting)
+    # counted from an empty shard cache (``read_shard``): the encodes and
+    # the delete above already read every manifest in this process
+    from collections import OrderedDict
+    from omi_cpp_parquet_wide_record_spark.plans import snapshot as S
+    monkeypatch.setattr(S, "_SHARDS", OrderedDict())
+    monkeypatch.setattr(S, "_shards_bytes", 0)
     got = decode_store(spark, out).count()
     store = ChunkStore(out)
     n_manifests = len(store.current_snapshot()["manifests"])
+    assert calls["n"] == n_manifests, (calls["n"], n_manifests)
+    # a second read of the unchanged snapshot reads none again
+    assert decode_store(spark, out).count() == got
     assert calls["n"] == n_manifests, (calls["n"], n_manifests)
     # rows 10-19 deleted from commit 0, 10-14 re-inserted after -> 395
     assert got == 395, got
@@ -1818,6 +1827,8 @@ def test_delete_scoping_reads_each_manifest_once(spark, tmp_path,
     # with deletes present, planning reads each manifest once
     from omi_cpp_parquet_wide_record_spark.operators.decode import ScanPlan
     calls["n"] = 0
+    S._SHARDS.clear()
+    monkeypatch.setattr(S, "_shards_bytes", 0)
     plan = ScanPlan.resolve(out)
     kept = plan.kept_files(None)
     assert calls["n"] == n_manifests, (calls["n"], n_manifests)
@@ -3050,3 +3061,158 @@ def test_gc_keep_last_counts_main_lineage_only(spark, tmp_path):
         decode_store(spark, out, snapshot=0).count()
     # the staged branch is untouched
     assert decode_store(spark, out, ref="b").count() == 500
+
+
+def test_incomparable_filter_literal_raises_value_error(spark, tmp_path):
+    """A filter literal Arrow cannot compare with its column raises a
+    ``ValueError`` naming the column, op and literal type from
+    ``decode_store`` on both planning modes, and the owrc reader hands
+    such a filter back to Spark instead of pushing it."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.datasource import EqualTo, GreaterThan, In
+    from omi_cpp_parquet_wide_record_spark.sources.owrc_source import (
+        OwrcReader,
+    )
+    out = str(tmp_path / "store")
+    encode_dataframe(spark.range(0, 300).select(
+        F.col("id"), F.concat(F.lit("s"), F.col("id")).alias("s")),
+        out, salt_key="id", num_pids=3)
+    bad = [("s", "==", 1), ("s", ">", 1), ("s", "in", [1, 2])]
+    for planning in ("driver", "distributed"):
+        for c, op, v in bad:
+            with pytest.raises(ValueError, match=rf"'s'.*'{op}'.*int.*"
+                               r"column 's' of type string"):
+                decode_store(spark, out, filters=[(c, op, v)],
+                             planning=planning)
+        assert decode_store(spark, out, filters=[("s", "==", "s7")],
+                            planning=planning).count() == 1
+    reader = OwrcReader(decode_store(spark, out).schema, {"path": out})
+    pushed = [EqualTo(("s",), 1), GreaterThan(("s",), 1), In(("s",), (1, 2)),
+              EqualTo(("s",), "s7")]
+    assert list(reader.pushFilters(pushed)) == pushed[:3]
+    assert reader._filters == [("s", "==", "s7")]
+
+
+def test_store_recreated_at_same_path_reads_new_rows(spark, tmp_path,
+                                                     monkeypatch):
+    """A store deleted and re-encoded with other rows at the same path
+    reads back the new rows on every read path, though the old store's
+    manifest shards were read (and cached) first."""
+    import shutil
+    from pyspark.sql import functions as F
+    out = str(tmp_path / "store")
+
+    def reads():
+        return decode_paths(monkeypatch, lambda: decode_store(spark, out)) \
+            + [decode_store(spark, out, planning="distributed")]
+
+    encode_dataframe(spark.range(0, 300).select(
+        F.col("id"), (F.col("id") * 2).alias("v")), out, salt_key="id",
+        num_pids=3)
+    assert [r.count() for r in reads()] == [300] * 3
+    shutil.rmtree(out)
+    encode_dataframe(spark.range(1000, 1100).select(
+        F.col("id"), (F.col("id") * 3).alias("v")), out, salt_key="id",
+        num_pids=3)
+    want = [(i, 3 * i) for i in range(1000, 1100)]
+    for r in reads():
+        assert sorted(map(tuple, r.collect())) == want
+
+
+def test_shard_cache_sees_rewritten_and_truncated_shards(tmp_path):
+    """The manifest shard cache keys on the file's identity: a shard
+    overwritten in place with other rows, or replaced by a rename, reads
+    anew, and a truncated one raises. Pure metadata, no Spark session."""
+    out = str(tmp_path / "store")
+    store = ChunkStore(out)
+    [name] = _one_chunk_shard(store, 0)
+    store.commit([name], _KV, "r0", new_pids={0})
+    path = os.path.join(store.manifests_dir, name)
+
+    def pids():
+        return store.manifest_table().column("pid").to_pylist()
+
+    assert pids() == pids() == [0]
+    row = pq.read_table(path)
+
+    def with_pid(p):
+        return row.set_column(1, "pid", pa.array([p], pa.int32()))
+
+    pq.write_table(pa.concat_tables([row, with_pid(7)]), path)
+    assert pids() == [0, 7]
+    pq.write_table(with_pid(5), path + ".tmp")
+    os.replace(path + ".tmp", path)
+    assert pids() == [5]
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+    with pytest.raises(pa.ArrowInvalid):
+        store.manifest_table()
+
+
+def test_shard_cache_evicts_least_recently_used(tmp_path, monkeypatch):
+    """The shard cache stays within ``SHARD_CACHE_BYTES``, dropping the
+    least recently read shard first, and keeps no shard larger than the
+    bound."""
+    from collections import OrderedDict
+    from omi_cpp_parquet_wide_record_spark.plans import snapshot as S
+    store = ChunkStore(str(tmp_path / "store"))
+    paths = [os.path.abspath(os.path.join(
+        store.manifests_dir, _one_chunk_shard(store, p)[0]))
+        for p in range(4)]
+    one = max(pq.read_table(p).nbytes for p in paths)
+    monkeypatch.setattr(S, "_SHARDS", OrderedDict())
+    monkeypatch.setattr(S, "_shards_bytes", 0)
+    monkeypatch.setattr(S, "SHARD_CACHE_BYTES", 2 * one + one // 2)
+
+    def cached():
+        assert S._shards_bytes <= S.SHARD_CACHE_BYTES
+        return [key[0] for key in S._SHARDS]
+
+    for p in (0, 1, 0, 2):
+        S.read_shard(paths[p])
+    assert cached() == [paths[0], paths[2]]
+    assert S.read_shard(paths[3]).column("pid").to_pylist() == [3]
+    assert cached() == [paths[2], paths[3]]
+    monkeypatch.setattr(S, "SHARD_CACHE_BYTES", one // 2)
+    S.read_shard(paths[1])
+    assert cached() == []
+
+
+def test_shard_cache_byte_count_under_threads(tmp_path, monkeypatch):
+    """Threads reading shards through a cache too small for all of them
+    leave its byte count equal to what it holds and within the bound."""
+    import sys
+    import threading
+    from collections import OrderedDict
+    from omi_cpp_parquet_wide_record_spark.plans import snapshot as S
+    store = ChunkStore(str(tmp_path / "store"))
+    paths = [os.path.join(store.manifests_dir, _one_chunk_shard(store, p)[0])
+             for p in range(6)]
+    one = max(pq.read_table(p).nbytes for p in paths)
+    monkeypatch.setattr(S, "_SHARDS", OrderedDict())
+    monkeypatch.setattr(S, "_shards_bytes", 0)
+    monkeypatch.setattr(S, "SHARD_CACHE_BYTES", 3 * one)
+    errors = []
+
+    def reader(k):
+        try:
+            for i in range(60):
+                p = (k + i) % len(paths)
+                assert S.read_shard(paths[p]).column("pid")[0].as_py() == p
+        except Exception as e:      # noqa: BLE001 - reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(k,))
+                   for k in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert S._shards_bytes == sum(t.nbytes for t in S._SHARDS.values())
+    assert S._shards_bytes <= S.SHARD_CACHE_BYTES
