@@ -157,7 +157,13 @@ def pack_sections(sections: list[bytes]) -> tuple[bytes, list[int]]:
 
 
 def split_sections(payload: bytes | memoryview, lens: list[int]) -> list[memoryview]:
+    """``payload`` cut into sections of the byte lengths ``lens``. Lengths
+    that overrun the payload raise ``ValueError``: a slice past the end
+    would come back short, and the codec would read it as data."""
     mv = memoryview(payload)
+    if sum(lens) > mv.nbytes:
+        raise ValueError(f"section lengths {list(lens)} sum past the "
+                         f"payload's {mv.nbytes} bytes")
     out, pos = [], 0
     for n in lens:
         out.append(mv[pos:pos + n])
@@ -174,17 +180,34 @@ def bit_width(max_value: int) -> int:
     return int(max_value).bit_length()
 
 
-def pack_bits(values: np.ndarray, width: int) -> bytes:
-    """Pack uint64 values into MSB-first ``width``-bit lanes.
+# widths whose lanes are whole big-endian machine words: packed bits are
+# then exactly the values' big-endian bytes
+_BYTE_LANES = {8: ">u1", 16: ">u2", 32: ">u4", 64: ">u8"}
 
-    One pass per bit position instead of a broadcast (n, width) uint64
+# The narrowest width whose full decode gathers windows (``_gather`` over
+# every position) instead of looping once per bit position. Measured on
+# one Xeon core (x86-64) with numpy 1.26: the loop costs ~5.5 us per bit
+# of width on 2,000 values (~24 us on 20,000) and the gather ~37 us
+# (~150 us) at any width up to 57, so they cross between 6 and 7 bits at
+# both sizes.
+GATHER_MIN_WIDTH = 7
+
+
+def pack_bits(values: np.ndarray, width: int) -> bytes:
+    """Pack uint64 values into MSB-first ``width``-bit lanes (the low
+    ``width`` bits of each value).
+
+    Widths 8, 16, 32 and 64 are the values' big-endian bytes. Other widths
+    take one pass per bit position instead of a broadcast (n, width) uint64
     matrix: the broadcast form peaked at ~72x the payload in temporaries
     (n*width*8 bytes) on every int-codec encode; the loop keeps the peak
     at the n*width uint8 bit plane plus one n-length uint64 scratch.
-    Byte output is identical."""
+    Byte output is identical on every path."""
     if width == 0 or len(values) == 0:
         return b""
     v = values.astype(np.uint64, copy=False)
+    if width in _BYTE_LANES:
+        return v.astype(_BYTE_LANES[width]).tobytes()
     n = len(v)
     bits = np.empty((n, width), dtype=np.uint8)
     tmp = np.empty(n, dtype=np.uint64)
@@ -195,13 +218,42 @@ def pack_bits(values: np.ndarray, width: int) -> bytes:
     return np.packbits(bits.ravel()).tobytes()
 
 
+def _packed_bytes(data: bytes | memoryview, n: int, width: int) -> np.ndarray:
+    """``data`` as uint8, checked to hold ``n`` values of ``width`` bits.
+    A short section raises ``ValueError``: unpacking would read its
+    missing tail as zeros."""
+    u8 = np.frombuffer(data, dtype=np.uint8)
+    need = (n * width + 7) // 8
+    if len(u8) < need:
+        raise ValueError(f"bit-packed section holds {len(u8)} bytes; {n} "
+                         f"values of {width} bits need {need}")
+    return u8
+
+
 def unpack_bits(data: bytes | memoryview, n: int, width: int) -> np.ndarray:
-    """Inverse of pack_bits; same per-bit-column strategy (the reshape+
-    astype(uint64)+shift form peaked at ~131x the payload)."""
+    """Inverse of pack_bits: the ``n`` values of ``data`` as uint64.
+
+    One entry point, three paths with the same output: widths 8, 16, 32
+    and 64 read the bytes as big-endian words; widths from
+    ``GATHER_MIN_WIDTH`` up gather each value's byte window (as
+    ``unpack_bits_at`` does, over every position); narrower widths
+    unpack the bit plane and OR in one bit position per pass (the
+    reshape + astype(uint64) + shift form peaked at ~131x the payload).
+    A section shorter than ``n`` values raises ``ValueError``."""
     if width == 0 or n == 0:
         return np.zeros(n, dtype=np.uint64)
-    bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8), count=n * width)
-    bits = bits.reshape(n, width)
+    u8 = _packed_bytes(data, n, width)
+    if width in _BYTE_LANES:
+        return np.frombuffer(u8, dtype=_BYTE_LANES[width],
+                             count=n).astype(np.uint64)
+    if width >= GATHER_MIN_WIDTH:
+        return _gather(u8, np.arange(n, dtype=np.int64), width)
+    return _unpack_bits_loop(u8, n, width)
+
+
+def _unpack_bits_loop(u8: np.ndarray, n: int, width: int) -> np.ndarray:
+    """``unpack_bits``'s per-bit-position path over a checked section."""
+    bits = np.unpackbits(u8, count=n * width).reshape(n, width)
     out = np.zeros(n, dtype=np.uint64)
     tmp = np.empty(n, dtype=np.uint64)
     for j in range(width):                    # MSB first
@@ -209,6 +261,67 @@ def unpack_bits(data: bytes | memoryview, n: int, width: int) -> np.ndarray:
         tmp <<= np.uint64(width - 1 - j)
         out |= tmp
     return out
+
+
+def unpack_bits_at(data: bytes | memoryview, idx: np.ndarray, width: int,
+                   n: int) -> np.ndarray:
+    """The values at positions ``idx`` of a section packed by pack_bits
+    with ``n`` values, as uint64, equal to ``unpack_bits(data, n,
+    width)[idx]`` in O(len(idx)): each value is shifted out of the
+    big-endian 8-byte window that holds it (9 bytes for widths over
+    57, where 7 bits of offset plus the width pass 64). A section shorter
+    than ``n`` values raises ``ValueError``; a position outside [0, n)
+    raises ``IndexError``."""
+    idx = np.asarray(idx, dtype=np.int64)
+    if len(idx) and (int(idx.min()) < 0 or int(idx.max()) >= n):
+        raise IndexError(f"bit-packed positions outside [0, {n})")
+    if width == 0 or len(idx) == 0:
+        return np.zeros(len(idx), dtype=np.uint64)
+    return _gather(_packed_bytes(data, n, width), idx, width)
+
+
+def _gather(u8: np.ndarray, idx: np.ndarray, width: int) -> np.ndarray:
+    """``unpack_bits_at`` over a checked section and in-range positions:
+    shifting a value's window left by its bit offset drops the bits
+    before it, and a right shift by (64 - width) the bits after it."""
+    bit = idx * width
+    start = bit >> 3
+    shift = bit.view(np.uint64) & np.uint64(7)
+    win = _be64_at(u8, start)
+    win <<= shift
+    if width > 57:
+        # the shift bits the window lacks come from the next byte (a right
+        # shift by 8 when the offset is 0 adds none)
+        nxt = _be64_at(u8, start + 1) & np.uint64(0xFF)
+        win |= nxt >> (np.uint64(8) - shift)
+    win >>= np.uint64(64 - width)
+    return win
+
+
+def _be64_at(u8: np.ndarray, start: np.ndarray) -> np.ndarray:
+    """The big-endian uint64 of the 8 bytes at each offset in ``start``
+    (each in [0, len(u8)]). Windows that fit read ``u8`` in place; the few
+    that run past its end read a copy of its last bytes followed by zeros,
+    which hold no wanted bit."""
+    m = len(u8)
+    over = start > m - 8
+    past = np.flatnonzero(over)
+    win = np.empty(len(start), dtype=np.uint64)
+    if m >= 8:
+        win[:] = _words(u8).take(np.where(over, 0, start) if len(past)
+                                 else start)
+    if len(past):
+        base = max(m - 8, 0)
+        tail = np.zeros(m - base + 8, dtype=np.uint8)
+        tail[:m - base] = u8[base:]
+        win[past] = _words(tail).take(start[past] - base)
+    return win
+
+
+def _words(u8: np.ndarray) -> np.ndarray:
+    """A view of the big-endian uint64 at every byte offset of ``u8``
+    whose 8 bytes lie inside it (a 1-byte stride, no copy)."""
+    return np.ndarray((len(u8) - 7,), dtype=">u8", buffer=u8, strides=(1,))
 
 
 # --------------------------------------------------------------------------
@@ -421,24 +534,31 @@ def encode_column(arr: pa.Array, codec_name: str,
 def decode_column(payload: bytes | memoryview, params: dict,
                   rows=None) -> pa.Array:
     """Decode a column chunk; with ``rows`` (sorted row positions), only
-    those rows, equal to ``decode_column(payload, params).take(rows)``."""
+    those rows, equal to ``decode_column(payload, params).take(rows)``.
+    Wanted rows that are all NULL return nulls without calling the codec:
+    a filtered read of the sparse wide record keeps one message type, so
+    most other columns hold no value on any surviving row."""
     n = params["rows"]
     nulls = params["nulls"]
     target = name_type(params["atype"])
     sections = split_sections(payload, params["sections"])
+    if rows is not None:
+        rows = np.asarray(rows, dtype=np.int64)
     if nulls:
         bitmap, sections = sections[0], sections[1:]
         valid = np.unpackbits(np.frombuffer(bitmap, np.uint8), count=n).astype(bool)
+        wanted = valid if rows is None else valid[rows]
+        if not wanted.any():
+            return pa.nulls(len(wanted), target)
     codec = get_codec(params["codec"])
     if rows is None:
         dense = codec.decode(sections, params)
     else:
-        rows = np.asarray(rows, dtype=np.int64)
         dense_rows = rows
         if nulls:
             # the wanted rows' positions among the dense (non-null) values
-            dense_rows = (np.cumsum(valid) - 1)[rows[valid[rows]]]
-            valid = valid[rows]
+            dense_rows = (np.cumsum(valid) - 1)[rows[wanted]]
+            valid = wanted
         dense = codec.decode_rows(sections, params, dense_rows)
     if dense.type != target:
         dense = dense.cast(target)
@@ -448,8 +568,6 @@ def decode_column(payload: bytes | memoryview, params: dict,
     # a take with NULL indices yields null rows, one kernel for any type
     # (if_else has no kernel for nested types like map)
     m, k = len(valid), int(valid.sum())
-    if k == 0:
-        return pa.nulls(m, target)
     idx = np.zeros(m, dtype=np.int64)
     idx[valid] = np.arange(k, dtype=np.int64)
     return dense.take(pa.array(idx, mask=~valid))

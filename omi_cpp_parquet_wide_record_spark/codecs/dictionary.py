@@ -4,6 +4,11 @@ The explicit analogue of the Parquet dictionary encoding the reference relies
 on implicitly (default WriterProperties, ref NQ:3396). Values page is encoded
 recursively with PLAIN; codes are bit-packed at ceil(log2(n_dict)) bits, the
 RLE_DICTIONARY shape without the hybrid runs (RLE is its own codec here).
+
+Row subsets (``decode_rows``): DICT reads only the wanted rows' codes
+(``unpack_bits_at``) and takes them from the dictionary page; RLE finds
+each wanted row's run by binary search over the cumulative run lengths,
+O(runs + rows wanted). Both still decode the whole dictionary page.
 """
 
 from __future__ import annotations
@@ -13,7 +18,7 @@ import pyarrow as pa
 
 from omi_cpp_parquet_wide_record_spark.codecs.base import (
     Codec, bit_width, name_type, pack_bits, register, split_sections,
-    type_name, unpack_bits,
+    type_name, unpack_bits, unpack_bits_at,
 )
 from omi_cpp_parquet_wide_record_spark.codecs.plain import PlainCodec
 
@@ -37,16 +42,16 @@ class DictCodec(Codec):
             "n": len(arr), "w": w, "ndict": len(values), "values": vparams}
 
     def decode(self, sections, params: dict) -> pa.Array:
-        target = name_type(params["atype"])
         if params["n"] == 0:
-            return pa.array([], type=target)
-        vparams = params["values"]
-        vsections = split_sections(sections[1], vparams["sections"])
-        values = PlainCodec().decode(vsections, vparams)
-        if values.type != target:
-            values = values.cast(target)
-        codes = unpack_bits(sections[0], params["n"], params["w"]).view(np.int64)
-        return values.take(pa.array(codes, type=pa.int64()))
+            return pa.array([], type=name_type(params["atype"]))
+        codes = unpack_bits(sections[0], params["n"], params["w"])
+        return _take(sections[1], params, codes)
+
+    def decode_rows(self, sections, params: dict, rows) -> pa.Array:
+        if params["n"] == 0:
+            return pa.array([], type=name_type(params["atype"]))
+        codes = unpack_bits_at(sections[0], rows, params["w"], params["n"])
+        return _take(sections[1], params, codes)
 
 
 class RleCodec(Codec):
@@ -84,19 +89,42 @@ class RleCodec(Codec):
             "values": vparams}
 
     def decode(self, sections, params: dict) -> pa.Array:
-        target = name_type(params["atype"])
         if params["n"] == 0:
-            return pa.array([], type=target)
-        nruns = params["nruns"]
-        run_codes = unpack_bits(sections[0], nruns, params["wcode"]).view(np.int64)
-        run_lens = unpack_bits(sections[1], nruns, params["wlen"]).view(np.int64)
-        vparams = params["values"]
-        vsections = split_sections(sections[2], vparams["sections"])
-        values = PlainCodec().decode(vsections, vparams)
-        if values.type != target:
-            values = values.cast(target)
-        codes = np.repeat(run_codes, run_lens)
-        return values.take(pa.array(codes, type=pa.int64()))
+            return pa.array([], type=name_type(params["atype"]))
+        run_codes, run_lens = _runs(sections, params)
+        return _take(sections[2], params, np.repeat(run_codes, run_lens))
+
+    def decode_rows(self, sections, params: dict, rows) -> pa.Array:
+        if params["n"] == 0:
+            return pa.array([], type=name_type(params["atype"]))
+        run_codes, run_lens = _runs(sections, params)
+        run = np.searchsorted(np.cumsum(run_lens), rows, side="right")
+        return _take(sections[2], params, run_codes[run])
+
+
+def _runs(sections, params: dict) -> tuple[np.ndarray, np.ndarray]:
+    """An RLE chunk's run codes and run lengths; lengths that do not sum
+    to the chunk's rows raise ``ValueError``."""
+    nruns = params["nruns"]
+    run_codes = unpack_bits(sections[0], nruns, params["wcode"])
+    run_lens = unpack_bits(sections[1], nruns, params["wlen"]).view(np.int64)
+    total = int(run_lens.sum())
+    if total != params["n"]:
+        raise ValueError(f"rle run lengths sum to {total}, not the chunk's "
+                         f"{params['n']} rows")
+    return run_codes, run_lens
+
+
+def _take(vsection, params: dict, codes: np.ndarray) -> pa.Array:
+    """The dictionary page in ``vsection`` (PLAIN, cast to the column's
+    type) taken at ``codes``."""
+    vparams = params["values"]
+    values = PlainCodec().decode(split_sections(vsection, vparams["sections"]),
+                                 vparams)
+    target = name_type(params["atype"])
+    if values.type != target:
+        values = values.cast(target)
+    return values.take(pa.array(codes.view(np.int64), type=pa.int64()))
 
 
 register(DictCodec())

@@ -5,6 +5,11 @@ SURVEY.md §2.3: BITPACK covers small-domain unsigned ints (the reference's
 counters the reference stores uncompressed — `pcap_index` (ref NQ:23-45),
 `message_sequence` (ref NQ:3457), and `warc_ts`-style timestamps. All three
 operate on the widened int64 lane (mod-2^64 arithmetic, exact round trip).
+
+Row subsets (``decode_rows``): BITPACK and FOR read only the wanted rows'
+bit windows (``unpack_bits_at``), O(rows wanted) whatever the chunk's size.
+DELTA keeps the default full decode and take: a value is the prefix sum
+of every difference before it.
 """
 
 from __future__ import annotations
@@ -14,7 +19,8 @@ import pyarrow as pa
 
 from omi_cpp_parquet_wide_record_spark.codecs.base import (
     Codec, bit_width, name_type, numeric_values, pack_bits, pack_uints,
-    register, unpack_bits, unpack_uints, values_to_array, zigzag, unzigzag,
+    register, unpack_bits, unpack_bits_at, unpack_uints, values_to_array,
+    zigzag, unzigzag,
 )
 
 _MASK = 0xFFFFFFFFFFFFFFFF
@@ -45,6 +51,10 @@ class BitpackCodec(Codec):
         v = unpack_bits(sections[0], params["n"], params["w"]).view(np.int64)
         return values_to_array(v, name_type(params["atype"]))
 
+    def decode_rows(self, sections, params: dict, rows) -> pa.Array:
+        v = unpack_bits_at(sections[0], rows, params["w"], params["n"])
+        return values_to_array(v.view(np.int64), name_type(params["atype"]))
+
 
 class ForCodec(Codec):
     """Frame-of-reference: deltas from min, mod-2^64 exact for any int64."""
@@ -60,6 +70,11 @@ class ForCodec(Codec):
     def decode(self, sections, params: dict) -> pa.Array:
         v = unpack_uints(sections[0], params)
         return values_to_array(v, name_type(params["atype"]))
+
+    def decode_rows(self, sections, params: dict, rows) -> pa.Array:
+        d = unpack_bits_at(sections[0], rows, params["w"], params["n"])
+        d += np.uint64(params["ref"] & _MASK)
+        return values_to_array(d.view(np.int64), name_type(params["atype"]))
 
 
 class DeltaCodec(Codec):

@@ -194,8 +194,9 @@ def _row_mask(t: pa.Table, filters) -> np.ndarray:
     datetime reads as UTC, as in ``prune_files``). ``c#len`` is a list or
     map length, ``c#f:x`` a struct field, and ``c#val`` holds when SOME
     element (map value) satisfies the op. Bad filters raise ``ValueError``,
-    also for a literal that Arrow cannot compare with the column's type,
-    so evaluating a list over no rows checks it."""
+    also for a column ``t`` does not have and for a literal that Arrow
+    cannot compare with the column's type, so evaluating a list over no
+    rows checks it."""
     keep = np.ones(t.num_rows, dtype=bool)
     for c, op, v in filters:
         base, acc = _split_filter_col(c)
@@ -203,6 +204,9 @@ def _row_mask(t: pa.Table, filters) -> np.ndarray:
             # SOME element null, or the row null? Ambiguous: rejected
             raise ValueError(f"filter op {op!r} is not supported on the "
                              f"'#val' nested accessor ({c})")
+        if base not in t.schema.names:
+            raise ValueError(f"filter ({c!r}, {op!r}, ...): no column "
+                             f"{base!r}")
         a = t.column(base).combine_chunks()
         if pa.types.is_null(a.type):     # a column the chunk predates
             keep &= op == "is_null"

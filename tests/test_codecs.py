@@ -18,6 +18,9 @@ from hypothesis import given, settings, strategies as st
 from omi_cpp_parquet_wide_record_spark.codecs import (
     codec_names, decode_column, encode_column,
 )
+from omi_cpp_parquet_wide_record_spark.codecs.base import (
+    pack_bits, split_sections, unpack_bits, unpack_bits_at,
+)
 from tests.conftest import arrays_equal
 
 INT_CODECS = ["plain", "for", "delta", "dict", "rle"]
@@ -293,31 +296,70 @@ def _rows_inputs(rng) -> dict[str, list[pa.Array]]:
     struct = pa.array([{"a": i % 7, "b": f"b{i % 11}"} for i in range(n)])
     maps = pa.array([{"k": i, "j": -i} if i % 3 else {} for i in range(n)],
                     pa.map_(pa.string(), pa.int64()))
-    return {"plain": [ints, bools, ts, reals, text], "for": [ints, ts],
-            "delta": [ints, ts], "bitpack": [small, bools],
-            "dict": [ints, reals, text], "rle": [small, text, bools],
+    # one value: dict codes and rle run codes are 0 bits wide
+    const = pa.array([7] * n)
+    return {"plain": [ints, bools, ts, reals, text],
+            "for": [ints, ts, *_width_inputs(rng, n, for_=True)],
+            "delta": [ints, ts],
+            "bitpack": [small, bools, *_width_inputs(rng, n, for_=False)],
+            "dict": [ints, reals, text, const],
+            "rle": [small, text, bools, const],
             "alp": [prices], "alprd": [reals],
             "fsst": [text, escapes, pages], "fsst2": [text, escapes, pages],
             "list": [lists], "struct": [struct], "map": [maps]}
 
 
+_WIDTHS = (1, 7, 8, 9, 16, 31, 32, 33, 57, 58, 63, 64)
+
+
+def _width_inputs(rng, n: int, for_: bool) -> list[pa.Array]:
+    """int64 columns whose values pack at each width of ``_WIDTHS``: for
+    bitpack, [0, 2^w) with 2^w - 1 present (63 bits at most: bitpack
+    takes no negative int64); for FOR, the same span above a negative
+    reference, and at 64 bits int64's min and max."""
+    out = []
+    for w in _WIDTHS:
+        if w == 64:
+            if for_:
+                v = rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64,
+                                 endpoint=True)
+                v[[3, 7]] = np.iinfo(np.int64).min, np.iinfo(np.int64).max
+                out.append(pa.array(v))
+            continue
+        v = rng.integers(0, 2**w - 1, n, dtype=np.int64, endpoint=True)
+        v[5] = 2**w - 1
+        if for_:
+            v[9] = 0
+            v = v + np.int64(-(2**62) if w < 62 else -1)
+        out.append(pa.array(v))
+    return out
+
+
 @pytest.mark.parametrize("codec", codec_names())
 def test_decode_rows_equals_take(codec):
     """``decode_column(p, params, rows)`` equals the full decode's
-    ``take(rows)`` on every codec and type, with and without nulls. FSST
-    inputs cover both row-offset sources: long rows get the row-index
-    section, short ones are located by a pass over the stream."""
+    ``take(rows)`` on every codec and type, with and without nulls, on
+    subsets that hold the last row (whose bit window runs past the end of
+    its section) and subsets that are all NULL. FSST inputs cover both
+    row-offset sources: long rows get the row-index section, short ones
+    are located by a pass over the stream. Bitpack and FOR inputs cover
+    every width in ``_WIDTHS`` that they can take."""
     rng = np.random.default_rng(11)
-    indexed = set()
+    indexed, widths = set(), set()
     for base in _rows_inputs(rng)[codec]:
         n = len(base)
         holes = pa.array(np.arange(n), mask=rng.random(n) < 0.3)
         for arr in (base, base.take(holes)):
             e = encode_column(arr, codec)
             indexed.add("row_index" in e.params)
+            widths.add(e.params.get("w", e.params.get("wcode")))
             full = decode_column(e.payload, e.params)
+            assert arrays_equal(full, arr), (codec, arr.type)
             subsets = [[], [0], [n - 1], range(n)] + [
                 np.sort(rng.choice(n, k, replace=False)) for k in (1, 9, 150)]
+            if arr.null_count:
+                subsets.append(np.flatnonzero(
+                    arr.is_null().to_numpy(zero_copy_only=False)))
             for rows in subsets:
                 rows = np.asarray(rows, dtype=np.int64)
                 got = decode_column(e.payload, e.params, rows=rows)
@@ -325,6 +367,11 @@ def test_decode_rows_equals_take(codec):
                     (codec, arr.type, arr.null_count, rows)
     if codec in ("fsst", "fsst2"):
         assert indexed == {True, False}
+    if codec in ("bitpack", "for"):
+        assert widths >= set(_WIDTHS) - ({64} if codec == "bitpack" else
+                                         set())
+    if codec in ("dict", "rle"):
+        assert 0 in widths
 
 
 def _edit_row_index(e, edit: str) -> tuple[bytes, dict]:
@@ -408,6 +455,85 @@ def test_fsst_chunks_without_row_index_still_decode(codec):
                             want.take(pa.array(rows))), rows
 
 
+def _short_input(codec: str) -> tuple[pa.Array, int]:
+    """A null-free column for ``codec`` and the index of a bit-packed
+    section of its encoding that holds more than 20 bytes."""
+    rng = np.random.default_rng(5)
+    n = 400
+    if codec == "alp":
+        return pa.array(np.round(rng.uniform(0, 500, n), 2)), 0
+    if codec == "dict":
+        return pa.array(rng.integers(0, 300, n)), 0
+    if codec == "rle":
+        return pa.array(np.repeat(rng.integers(0, 9, n // 2), 2)), 1
+    return pa.array(rng.integers(0, 10**6, n)), 0
+
+
+@pytest.mark.parametrize("codec", ["bitpack", "for", "delta", "dict", "rle",
+                                   "alp"])
+def test_short_bit_packed_section_raises_value_error(codec):
+    """A bit-packed section cut by 20 bytes, with its length in
+    ``sections`` cut to match, raises ``ValueError`` on the full and the
+    row-subset decode instead of reading its missing values as 0; a
+    payload cut without its section lengths raises from the split."""
+    arr, k = _short_input(codec)
+    e = encode_column(arr, codec)
+    secs = [bytes(x) for x in split_sections(e.payload, e.params["sections"])]
+    assert len(secs[k]) > 20
+    secs[k] = secs[k][:-20]
+    cut = b"".join(secs), {**e.params, "sections": [len(x) for x in secs]}
+    for payload, params, match in (
+            (*cut, "bit-packed section holds"),
+            (e.payload[:-20], e.params, "section lengths")):
+        for kw in ({}, {"rows": np.array([0, 7, len(arr) - 1])}):
+            with pytest.raises(ValueError, match=match):
+                decode_column(payload, params, **kw)
+
+
+def test_unpack_short_section_raises_value_error():
+    """Both unpackers refuse a section shorter than its values (the
+    parent's unpack_bits read the missing half as zeros), and a position
+    past the last value raises."""
+    data = pack_bits(np.arange(100, dtype=np.uint64), 7)[:50]
+    with pytest.raises(ValueError, match="holds 50 bytes; 100 values"):
+        unpack_bits(data, 100, 7)
+    with pytest.raises(ValueError, match="holds 50 bytes; 100 values"):
+        unpack_bits_at(data, np.array([0]), 7, 100)
+    with pytest.raises(IndexError):
+        unpack_bits_at(pack_bits(np.arange(100, dtype=np.uint64), 7),
+                       np.array([100]), 7, 100)
+
+
+@pytest.mark.parametrize("codec", ["bitpack", "for", "dict"])
+def test_row_subset_decode_reads_only_wanted_rows(codec, monkeypatch):
+    """A ``rows=`` decode of bitpack, FOR and dict columns never runs the
+    full bit unpacker, and a subset whose rows are all NULL never calls
+    the codec at all."""
+    from omi_cpp_parquet_wide_record_spark.codecs import (
+        base, dictionary, intcodecs,
+    )
+    rng = np.random.default_rng(3)
+    n = 500
+    v = rng.integers(0, 200, n)
+    arr = pa.array(v, mask=np.arange(n) % 4 == 1)
+    e = encode_column(arr, codec)
+    full = decode_column(e.payload, e.params)
+    null_rows = np.arange(1, n, 4)
+
+    def boom(*a, **k):
+        raise AssertionError("full decode on a row-subset read")
+    for mod in (base, dictionary, intcodecs):
+        monkeypatch.setattr(mod, "unpack_bits", boom)
+    rows = np.sort(rng.choice(n, 50, replace=False))
+    assert arrays_equal(decode_column(e.payload, e.params, rows=rows),
+                        full.take(pa.array(rows)))
+    codec_type = type(base.get_codec(codec))
+    monkeypatch.setattr(codec_type, "decode", boom)
+    monkeypatch.setattr(codec_type, "decode_rows", boom)
+    got = decode_column(e.payload, e.params, rows=null_rows)
+    assert got.null_count == len(null_rows) and got.type == pa.int64()
+
+
 # ---------------------------------------------------------------- hypothesis
 
 @settings(max_examples=60, deadline=None)
@@ -415,6 +541,38 @@ def test_fsst_chunks_without_row_index_still_decode(codec):
 @pytest.mark.parametrize("codec", INT_CODECS)
 def test_prop_int64(codec, xs):
     roundtrip(pa.array(xs, type=pa.int64()), codec)
+
+
+def _pack_bits_reference(v: np.ndarray, width: int) -> bytes:
+    """pack_bits as a broadcast (n, width) bit matrix, MSB first."""
+    shifts = np.arange(width - 1, -1, -1, dtype=np.uint64)
+    bits = (v[:, None] >> shifts) & np.uint64(1)
+    return np.packbits(bits.astype(np.uint8).ravel()).tobytes()
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.integers(0, 64).flatmap(lambda w: st.tuples(
+    st.just(w), st.lists(st.integers(0, (1 << w) - 1), min_size=1,
+                         max_size=200))), st.data())
+def test_prop_bit_unpackers(wv, data):
+    """Every path of pack_bits matches the bit-matrix reference;
+    unpack_bits (byte-aligned, window-gather or per-bit path) equals the
+    per-bit loop; unpack_bits_at equals the values at any positions,
+    the last one included."""
+    from omi_cpp_parquet_wide_record_spark.codecs.base import (
+        _packed_bytes, _unpack_bits_loop,
+    )
+    width, xs = wv
+    v = np.array(xs, dtype=np.uint64)
+    n = len(v)
+    packed = pack_bits(v, width)
+    assert packed == (_pack_bits_reference(v, width) if width else b"")
+    assert np.array_equal(unpack_bits(packed, n, width), v)
+    assert np.array_equal(
+        _unpack_bits_loop(_packed_bytes(packed, n, width), n, width), v)
+    idx = np.array(data.draw(st.lists(st.integers(0, n - 1), max_size=40))
+                   + [n - 1], dtype=np.int64)
+    assert np.array_equal(unpack_bits_at(packed, idx, width, n), v[idx])
 
 
 @settings(max_examples=60, deadline=None)

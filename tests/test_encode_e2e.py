@@ -3093,6 +3093,31 @@ def test_incomparable_filter_literal_raises_value_error(spark, tmp_path):
     assert reader._filters == [("s", "==", "s7")]
 
 
+def test_unknown_filter_column_raises_value_error(spark, tmp_path):
+    """A filter on a column the store does not have raises a
+    ``ValueError`` naming the column from ``decode_store`` on both
+    planning modes (pyarrow's ``KeyError`` before), and the owrc reader
+    hands such a filter back to Spark instead of pushing it."""
+    from pyspark.sql.datasource import EqualTo
+    from omi_cpp_parquet_wide_record_spark.operators.decode import _row_mask
+    from omi_cpp_parquet_wide_record_spark.sources.owrc_source import (
+        OwrcReader,
+    )
+    out = str(tmp_path / "store")
+    encode_dataframe(spark.range(0, 100), out, salt_key="id", num_pids=2)
+    t = pa.table({"id": [1, 2, 3]})
+    for f in [("zz", "==", 1), ("zz#len", ">", 0), ("zz", "is_null", None)]:
+        with pytest.raises(ValueError, match="no column 'zz'"):
+            _row_mask(t, [f])
+        for planning in ("driver", "distributed"):
+            with pytest.raises(ValueError, match="no column 'zz'"):
+                decode_store(spark, out, filters=[f], planning=planning)
+    reader = OwrcReader(decode_store(spark, out).schema, {"path": out})
+    pushed = [EqualTo(("zz",), 1), EqualTo(("id",), 7)]
+    assert list(reader.pushFilters(pushed)) == pushed[:1]
+    assert reader._filters == [("id", "==", 7)]
+
+
 def test_store_recreated_at_same_path_reads_new_rows(spark, tmp_path,
                                                      monkeypatch):
     """A store deleted and re-encoded with other rows at the same path
