@@ -43,9 +43,3 @@ def ascii_trimmed(col: Column, pos: int, width: int) -> Column:
 def ascii_raw(col: Column, pos: int, width: int) -> Column:
     """Fixed ASCII, no trim (the session field shape, NQ:107-127)."""
     return F.decode(F.substring(col, pos, width), "UTF-8")
-
-
-def pcap_ts_micros(sec: Column, usec: Column) -> Column:
-    """pcap timeval -> TIMESTAMP micros (ref NQ:60-83)."""
-    return F.timestamp_micros((sec.cast("long") * 1_000_000
-                               + usec.cast("long")))

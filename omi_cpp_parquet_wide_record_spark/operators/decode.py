@@ -34,11 +34,13 @@ from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
 )
 
 # Plain-equivalent bytes (the manifest's ``bytes_in``) up to which a
-# driver-planned read decodes on the driver instead of in a Spark job. A
-# Spark read costs a fixed 0.4-0.6 s (an absent-key read, 4 vCPU) and one
-# core decodes ~40 MB/s (41.6 MB in 1.06 s): the cut is the lower fixed
-# cost's worth of single-core decode, 0.4 s x 40 MB/s. It errs towards
-# Spark, whose tasks also spread a larger decode over cores.
+# driver-planned read decodes on the driver instead of in a Spark job. One
+# core decodes ~40 MB/s (41.6 MB in 1.06 s), and a Spark read's 8 tasks
+# (``_names_df``) cost a fixed ~0.27 s (a no-op 8-task ``mapInArrow`` job,
+# 4 vCPU, reused workers) before they spread the decode over 4 cores:
+# x / 40 = 0.27 + x / 160 breaks even at ~14 MB, so the cut sits at the
+# break-even, erring slightly towards the driver. (It was set when that
+# fixed cost was 0.4-0.8 s, before ``session.reuse_zip_directories``.)
 DRIVER_DECODE_BYTES = 16 << 20
 
 
@@ -489,24 +491,32 @@ def prune_files(manifest: pa.Table,
     return sorted(f for f in files if f not in excluded)
 
 
-def _names_df(spark: SparkSession, names: list[str], col: str) -> DataFrame:
-    """A list of names (chunk files or manifest shards) as a one-column
-    DataFrame spread over up to 2 x cores partitions — 2 x cores balances
-    task-level skew against the ~5 ms/task JVM->Python Arrow runner setup.
+def _names_df(spark: SparkSession, names: list[str], col: str,
+              **ints: list[int]) -> DataFrame:
+    """A list of names (chunk files or manifest shards) as a DataFrame
+    column ``col`` spread over up to 2 x cores partitions — 2 x cores
+    balances task-level skew against the per-task cost of a Python task
+    (JVM task start to Python init done: 3-55 ms, median 12 ms, on a
+    reused worker; a no-op job takes 0.18 s with 1 task, 0.27 s with 8 on
+    4 vCPU). Each keyword is an int column that rides along row for row
+    (``commit_n=[...]``).
     Up to 65536 names, range(numPartitions) + an array-literal lookup
     distributes the list WITHOUT an exchange: createDataFrame of a local
     list plans as a single-partition LocalTableScan, and the repartition
     it needs costs a whole extra stage (~0.3 s/action measured). An empty
     list is an empty relation, no repartition."""
+    ddl = ", ".join([f"{col} string"] + [f"{k} long" for k in ints])
     if not names:
-        return spark.createDataFrame([], f"{col} string")
+        return spark.createDataFrame([], ddl)
     parallelism = min(len(names), spark.sparkContext.defaultParallelism * 2)
     if len(names) <= 65536:
         from pyspark.sql import functions as F
+        i = F.col("id").cast("int") + 1
         return spark.range(0, len(names), 1, parallelism).select(
-            F.element_at(F.lit(names), F.col("id").cast("int") + 1)
-            .alias(col))
-    return spark.createDataFrame([(n,) for n in names], f"{col} string") \
+            F.element_at(F.lit(names), i).alias(col),
+            *[F.element_at(F.lit(v), i).cast("long").alias(k)
+              for k, v in ints.items()])
+    return spark.createDataFrame(list(zip(names, *ints.values())), ddl) \
         .repartition(parallelism)
 
 
@@ -583,8 +593,7 @@ class ScanPlan:
         """Deletes scoping a chunk committed at ``commit_n`` (Iceberg
         sequence numbers): a delete committed at n applies only to data
         from earlier commits, so rows re-inserted after it stay visible."""
-        return [(p, k, lk) for p, k, lk, n in self.deletes
-                if n is None or commit_n < n]
+        return _scoped_deletes(self.deletes, commit_n)
 
     def kept_files(self, filters: list[tuple[str, str, object]] | None,
                    columns: list[str] | None = None) -> "KeptFiles":
@@ -638,6 +647,13 @@ class ScanPlan:
 
         return _names_df(spark, list(snap["manifests"]), "manifest") \
             .mapInArrow(task, from_arrow_schema(schema))
+
+
+def _scoped_deletes(deletes, commit_n: int) -> list[tuple[str, str, str]]:
+    """``ScanPlan.deletes_for`` over a bare ``ScanPlan.deletes`` list,
+    which a Spark task can carry without the plan's store and snapshot."""
+    return [(p, k, lk) for p, k, lk, n in deletes
+            if n is None or commit_n < n]
 
 
 class KeptFiles(dict):
@@ -737,29 +753,29 @@ def decode_store(spark: SparkSession, out_dir: str,
         pa.schema([plan.schema.field(c) for c in columns])
     from pyspark.sql.pandas.types import from_arrow_schema
     spark_schema = from_arrow_schema(schema)
-    chunks_dir = plan.store.chunks_dir
+    chunks_dir, aliases, deletes = \
+        plan.store.chunks_dir, plan.aliases, plan.deletes
     if planning == "driver":
         kept = plan.kept_files(filters, _decoded_columns(
-            schema.names, [lk for _, _, lk, _ in plan.deletes], filters))
+            schema.names, [lk for _, _, lk, _ in deletes], filters))
         fdf = None if kept.bytes_in <= DRIVER_DECODE_BYTES else \
-            _names_df(spark, list(kept), "chunk_file")
+            _names_df(spark, list(kept), "chunk_file",
+                      commit_n=list(kept.values()))
     else:
-        kept = {}
         fdf = plan.shard_files(spark, filters).repartition(
             spark.sparkContext.defaultParallelism * 2)
 
+    # the Spark task pickles this closure: it carries the read's schema,
+    # aliases, deletes, filters and check_sha, not the plan
     def read(fname, n):
         return read_chunk_table(os.path.join(chunks_dir, fname), schema,
-                                plan.aliases, check_sha, plan.deletes_for(n),
-                                filters)
+                                aliases, check_sha,
+                                _scoped_deletes(deletes, n), filters)
 
     def task(batches):
         for b in batches:
-            files = b.column("chunk_file").to_pylist()
-            ns = (b.column("commit_n").to_pylist()
-                  if "commit_n" in b.schema.names else
-                  [kept[f] for f in files])
-            for fname, n in zip(files, ns):
+            for fname, n in zip(b.column("chunk_file").to_pylist(),
+                                b.column("commit_n").to_pylist()):
                 yield from read(fname, n).to_batches()
 
     if fdf is not None:
