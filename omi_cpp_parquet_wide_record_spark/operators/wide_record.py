@@ -235,14 +235,40 @@ def parse_packets_batch(batch: pa.RecordBatch,
 
 def parse_packets(packets: DataFrame, which: str = "nasdaq") -> DataFrame:
     """Distributed capture decode: packets (pcap_sec, pcap_usec, payload) ->
-    the reference's wide-record DataFrame. The dense packet index (O3) is
-    attached first — unless the source already carries one (the pcap file
+    the reference's wide-record DataFrame.
+
+    When ``packets`` is exactly the DataFrame ``sources.pcap.read_pcap``
+    returned (``capture_files``), one ``mapInArrow`` over its capture-file
+    list frames and parses each file in the same task — the reference's
+    single per-capture loop (NQ:3777-3809), one Python worker per task
+    instead of two. Packets are parsed in slices of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, the batches
+    the chained path receives. Any other packets DataFrame is parsed by a
+    second ``mapInArrow`` over its rows: the dense packet index (O3) is
+    attached first unless the source already carries one (the pcap file
     reader emits per-file indexes that count dropped non-UDP frames,
     ref NQ:3403); each task then parses its packets fully vectorized."""
     from pyspark.sql.pandas.types import from_arrow_schema
     from omi_cpp_parquet_wide_record_spark.operators.etl import dense_row_index
+    from omi_cpp_parquet_wide_record_spark.sources.pcap import (
+        _scan_captures, capture_files,
+    )
 
-    sch = S.NASDAQ_WIDE if which == "nasdaq" else S.JNX_WIDE
+    sch = from_arrow_schema(S.NASDAQ_WIDE if which == "nasdaq"
+                            else S.JNX_WIDE)
+    names = capture_files(packets)
+    if names is not None:
+        rows = int(packets.sparkSession.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+        def fused(batches):
+            for b in _scan_captures(batches):
+                step = rows if rows > 0 else b.num_rows
+                for i in range(0, b.num_rows, step):
+                    yield parse_packets_batch(b.slice(i, step), which)
+
+        return names.mapInArrow(fused, sch)
+
     if "pcap_index" in packets.columns:
         indexed = packets
     else:
@@ -256,4 +282,4 @@ def parse_packets(packets: DataFrame, which: str = "nasdaq") -> DataFrame:
             if b.num_rows:
                 yield parse_packets_batch(b, which)
 
-    return indexed.mapInArrow(task, from_arrow_schema(sch))
+    return indexed.mapInArrow(task, sch)

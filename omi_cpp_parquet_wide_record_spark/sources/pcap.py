@@ -18,6 +18,18 @@ touches only the 16-byte pcap record headers; every per-packet byte
 operation (ethertype reads, VLAN stepping, IHL/protocol extraction, UDP
 payload slicing) is whole-array numpy over all records at once.
 
+`read_pcap` remembers, for the exact DataFrame object it returns, the
+file-list relation it maps over (`capture_files`). Given that object,
+`operators.wide_record.parse_packets` maps ONE task over the same file
+list that frames and parses each capture in the same Python worker (the
+reference's one pcap_next_ex -> strip -> dispatch loop, NQ:3777-3809),
+instead of a second `mapInArrow` over the packets: one Python runner per
+capture task instead of two, and no packet round trip through the JVM.
+Any other packets DataFrame — one derived from `read_pcap`'s (`filter`,
+`select`, `union`, ...), a cached one, or `format("pcap")`'s — is parsed
+by the chained second `mapInArrow`. Both of `read_pcap`'s paths read
+its file list through `_scan_captures`.
+
 Output: (pcap_index, pcap_sec, pcap_usec, payload) — the packets table the
 wide-record parser (operators/wide_record.py, O4-O10) consumes, with
 pcap_index already dense per file including dropped non-UDP packets.
@@ -27,6 +39,7 @@ from __future__ import annotations
 
 import glob
 import os
+import weakref
 
 import numpy as np
 import pyarrow as pa
@@ -352,16 +365,18 @@ def _list_captures(path: str) -> list[str]:
     """The capture files both readers scan: an existing file itself,
     every ``*.pcap`` under a directory (recursive; ``_``-prefixed names
     are included, glob skips ``.``-prefixed ones), else the
-    ``glob(path)`` matches. Glob metacharacters in an existing file or
-    directory name match literally. Raises FileNotFoundError naming
-    ``path`` when nothing matches."""
+    ``glob(path)`` matches. Only regular files are kept: a directory
+    named like a capture is searched, never read. Glob metacharacters in
+    an existing file or directory name match literally. Raises
+    FileNotFoundError naming ``path`` when nothing matches."""
     if os.path.isfile(path):
         return [path]
     if os.path.isdir(path):
-        files = glob.glob(os.path.join(glob.escape(path), "**", "*.pcap"),
+        found = glob.glob(os.path.join(glob.escape(path), "**", "*.pcap"),
                           recursive=True)
     else:
-        files = glob.glob(path)
+        found = glob.glob(path)
+    files = [f for f in found if os.path.isfile(f)]
     if not files:
         raise FileNotFoundError(f"no .pcap files under {path}")
     return sorted(files)
@@ -375,6 +390,20 @@ def _capture_batches(path: str):
         yield from tbl.to_batches()
 
 
+def _scan_captures(names):
+    """Packet batches of every capture file named in a stream of ``path``
+    batches: the per-file loop of ``read_pcap``'s task and of the fused
+    ``parse_packets`` task."""
+    for b in names:
+        for f in b.column("path").to_pylist():
+            yield from _capture_batches(f)
+
+
+# read_pcap's own DataFrames -> the file-list relation each one maps over.
+# Keyed by object identity, so a DataFrame derived from one is never found.
+_CAPTURE_FILES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def read_pcap(spark: SparkSession, path: str) -> DataFrame:
     """Distributed pcap scan: capture files -> packets DataFrame.
 
@@ -382,15 +411,22 @@ def read_pcap(spark: SparkSession, path: str) -> DataFrame:
     engine's one file-list path; each task reads whole capture files from
     the local or shared filesystem (a 100 TB corpus is many capture files;
     each decodes independently). The emitted pcap_index is per-file, like
-    the reference's per-run counter.
+    the reference's per-run counter. ``parse_packets`` over the returned
+    DataFrame itself frames and parses in one task per file
+    (``capture_files``).
     """
-    def task(batches):
-        for b in batches:
-            for f in b.column("path").to_pylist():
-                yield from _capture_batches(f)
+    names = _names_df(spark, _list_captures(path), "path")
+    packets = names.mapInArrow(_scan_captures, PACKETS_SCHEMA)
+    _CAPTURE_FILES[packets] = names
+    return packets
 
-    return _names_df(spark, _list_captures(path), "path").mapInArrow(
-        task, PACKETS_SCHEMA)
+
+def capture_files(packets: DataFrame) -> DataFrame | None:
+    """The ``path`` relation ``packets`` maps over when ``packets`` is a
+    DataFrame ``read_pcap`` returned and is not cached, else None."""
+    if packets.is_cached:
+        return None
+    return _CAPTURE_FILES.get(packets)
 
 
 # ------------------------------------------------ registered Spark format

@@ -337,24 +337,6 @@ def test_owrc_datasource(spark, tmp_path):
     assert two.count() == 1500
 
 
-def test_wire_functions(spark):
-    from pyspark.sql import functions as F
-    from omi_cpp_parquet_wide_record_spark.functions import wire
-    df = spark.createDataFrame(
-        [(bytearray(b"SESSION001" + (1234567).to_bytes(8, "big")
-                    + b"AB \x00XY"),)], "payload binary")
-    row = df.select(
-        wire.ascii_raw(F.col("payload"), 1, 10).alias("session"),
-        wire.be_uint(F.col("payload"), 11, 8).alias("seq"),
-        wire.ascii_trimmed(F.col("payload"), 19, 3).alias("trimmed"),
-        wire.u8_code(F.col("payload"), 19).alias("code"),
-    ).collect()[0]
-    assert row.session == "SESSION001"
-    assert row.seq == 1234567
-    assert row.trimmed == "AB"
-    assert row.code == ord("A")
-
-
 def test_stateful_sessionization(spark, tmp_path):
     from omi_cpp_parquet_wide_record_spark.streaming.stateful import (
         run_stateful_once,

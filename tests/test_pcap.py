@@ -178,6 +178,98 @@ def test_capture_path_with_glob_metacharacters(spark, tmp_path, layout):
     assert via_fn.count() == packets_from_capture(data).num_rows > 0
 
 
+def test_directory_named_like_a_capture_is_searched_not_read(spark,
+                                                            tmp_path):
+    """A directory whose name ends in ``.pcap`` is not a capture: both
+    readers return the rows of the real captures (``b.pcap`` and
+    ``run.pcap/a.pcap``), and a glob that matches the directory keeps
+    only the regular files."""
+    from omi_cpp_parquet_wide_record_spark.sources.pcap import (
+        PcapDataSource, _list_captures,
+    )
+    a = FX.pcap_capture(200, "nasdaq", seed=10)
+    b = FX.pcap_capture(100, "nasdaq", seed=11)
+    (tmp_path / "run.pcap").mkdir()
+    (tmp_path / "run.pcap" / "a.pcap").write_bytes(a)
+    (tmp_path / "b.pcap").write_bytes(b)
+    assert _list_captures(str(tmp_path / "*.pcap")) == [
+        str(tmp_path / "b.pcap")]
+    spark.dataSource.register(PcapDataSource)
+    want = sorted(
+        tuple(r.values()) for x in (a, b)
+        for r in packets_from_capture(x).to_pylist())
+    for df in (read_pcap(spark, str(tmp_path)),
+               spark.read.format("pcap").load(str(tmp_path))):
+        assert sorted(tuple(r) for r in df.collect()) == want
+
+
+def _all_sorted(df) -> pa.Table:
+    tbl = df.toArrow()
+    return tbl.sort_by([(c, "ascending") for c in tbl.column_names])
+
+
+@pytest.mark.parametrize("layout", ["nasdaq_dir", "jnx", "empty_member",
+                                    "torn_tail"])
+def test_fused_capture_parse_matches_chained(spark, tmp_path, layout):
+    """``parse_packets(read_pcap(p))`` frames and parses in one task per
+    capture; it returns the same rows as the chained parse of a derived
+    packets DataFrame (``.select("*")``)."""
+    which = "jnx" if layout == "jnx" else "nasdaq"
+    if layout == "nasdaq_dir":
+        (tmp_path / "sub").mkdir()
+        (tmp_path / "_sub").mkdir()
+        for name, n, seed in (("a.pcap", 300, 1), ("sub/b.pcap", 200, 2),
+                              ("_c.pcap", 100, 3), ("_sub/d.pcap", 150, 4)):
+            (tmp_path / name).write_bytes(FX.pcap_capture(n, which, seed))
+        path = tmp_path
+    elif layout == "jnx":
+        path = tmp_path / "jnx.pcap"
+        path.write_bytes(FX.pcap_capture(400, which, seed=5))
+    elif layout == "empty_member":
+        from omi_cpp_parquet_wide_record_spark.sources.pcap import (
+            write_pcap_header,
+        )
+        (tmp_path / "a.pcap").write_bytes(FX.pcap_capture(300, which, 6))
+        (tmp_path / "empty.pcap").write_bytes(write_pcap_header())
+        path = tmp_path
+    else:
+        data = FX.pcap_capture(300, which, seed=7)
+        path = tmp_path / "torn.pcap"
+        path.write_bytes(data[:len(data) - 7])
+    fused = _all_sorted(parse_packets(read_pcap(spark, str(path)), which))
+    chained = _all_sorted(
+        parse_packets(read_pcap(spark, str(path)).select("*"), which))
+    assert fused.num_rows > 0
+    assert fused.equals(chained)
+
+
+def _python_maps(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("MapInArrow")
+
+
+def test_fused_capture_parse_plan_shape(spark, tmp_path):
+    """Only ``read_pcap``'s own DataFrame takes the fused path: its parse
+    plans one Python map, a derived or cached packets DataFrame is parsed
+    by a second one, and a filter on the packets is honoured."""
+    from omi_cpp_parquet_wide_record_spark.sources.pcap import capture_files
+    (tmp_path / "a.pcap").write_bytes(FX.pcap_capture(300, "nasdaq", 1))
+    (tmp_path / "b.pcap").write_bytes(FX.pcap_capture(200, "nasdaq", 2))
+    pk = read_pcap(spark, str(tmp_path))
+    assert _python_maps(parse_packets(pk, "nasdaq")) == 1
+    assert _python_maps(parse_packets(pk.select("*"), "nasdaq")) == 2
+
+    even = parse_packets(pk.filter("pcap_index % 2 = 0"), "nasdaq")
+    idx = even.select("pcap_index").toArrow().column(0).to_pylist()
+    assert idx and all(i % 2 == 0 for i in idx)
+
+    assert capture_files(pk) is not None
+    try:
+        assert capture_files(pk.cache()) is None
+    finally:
+        pk.unpersist()
+
+
 def test_truncated_capture_tail():
     """A capture cut off mid-record (killed tcpdump) must decode every
     complete frame and drop the torn tail — identically in the vectorized
