@@ -19,6 +19,8 @@ DataFrame column).
 
 from __future__ import annotations
 
+import functools
+import itertools
 from dataclasses import dataclass
 from typing import Callable
 
@@ -116,6 +118,7 @@ def _split_top(s: str) -> list[str]:
     return parts
 
 
+@functools.lru_cache(maxsize=1024)
 def name_type(name: str) -> pa.DataType:
     if name.startswith("list<") and name.endswith(">"):
         return pa.list_(name_type(name[5:-1]))
@@ -304,6 +307,8 @@ def _be64_at(u8: np.ndarray, start: np.ndarray) -> np.ndarray:
     that run past its end read a copy of its last bytes followed by zeros,
     which hold no wanted bit."""
     m = len(u8)
+    if len(start) and m >= 8 and start.max() <= m - 8:
+        return _words(u8).take(start).astype(np.uint64)
     over = start > m - 8
     past = np.flatnonzero(over)
     win = np.empty(len(start), dtype=np.uint64)
@@ -531,43 +536,133 @@ def encode_column(arr: pa.Array, codec_name: str,
     return Encoded(codec_name, params, payload, n, nulls, bytes_in)
 
 
+class ColumnLayout(dict):
+    """A column chunk's params, with what decoding needs from them worked
+    out once: the codec, the Arrow target type, the row and null counts
+    and the section bounds. ``decode_column`` takes it wherever it takes
+    params; a chunk footer keeps one per column, so repeated reads of a
+    chunk skip the params parsing. Never mutated once built."""
+
+    __slots__ = ("codec", "target", "n", "nulls", "bounds", "size", "bitmap")
+
+    def __init__(self, params: dict):
+        super().__init__(params)
+        self.codec = get_codec(params["codec"])
+        self.target = name_type(params["atype"])
+        self.n = params["rows"]
+        self.nulls = params["nulls"]
+        ends = list(itertools.accumulate(params["sections"]))
+        self.bounds = list(zip([0] + ends[:-1], ends))
+        self.size = ends[-1] if ends else 0
+        # some rows valid, and a validity bitmap long enough to test any
+        self.bitmap = 0 < self.nulls < self.n and \
+            self.bounds[0][1] >= (self.n + 7) // 8
+
+    def sections(self, payload: bytes | memoryview) -> list[memoryview]:
+        """``split_sections`` of ``payload`` by the precomputed bounds."""
+        mv = memoryview(payload)
+        if self.size > mv.nbytes:
+            raise ValueError(f"section lengths {list(self['sections'])} "
+                             f"sum past the payload's {mv.nbytes} bytes")
+        return [mv[a:b] for a, b in self.bounds]
+
+
+class WantedRows:
+    """Sorted row positions of a subset, with each row's validity-bitmap
+    byte and bit mask computed once for every column of a chunk read."""
+
+    __slots__ = ("rows", "byte", "mask", "bit", "span")
+
+    def __init__(self, rows):
+        self.rows = np.asarray(rows, dtype=np.int64)
+        # (first, last) row, for the range check of each column
+        self.span = (int(self.rows[0]), int(self.rows[-1])) \
+            if len(self.rows) else (0, -1)
+        self.byte = self.rows >> 3
+        self.bit = (self.rows & 7).astype(np.intp)
+        self.mask = np.uint8(0x80) >> self.bit.astype(np.uint8)
+
+    def __len__(self) -> int:
+        return len(self.rows)
+
+    def __iter__(self):
+        return iter(self.rows)
+
+
+def any_valid(buf: np.ndarray, starts: np.ndarray,
+              sel: WantedRows) -> np.ndarray:
+    """For the validity bitmaps (payload section 0) that start at each of
+    ``starts`` in the uint8 ``buf``, whether any of ``sel``'s rows is
+    valid: one gather for every column of a chunk read."""
+    at = buf[starts[:, None] + sel.byte]
+    return ((at & sel.mask) != 0).any(axis=1)
+
+
+# popcount of every byte, and of its top j bits (MSB first) for j in 0..7
+_POPCOUNT = np.array([bin(b).count("1") for b in range(256)], dtype=np.uint8)
+_POPCOUNT_TOP = np.array([[bin(b >> (8 - j)).count("1") if j else 0
+                           for j in range(8)] for b in range(256)],
+                         dtype=np.int64)
+
+
 def decode_column(payload: bytes | memoryview, params: dict,
                   rows=None) -> pa.Array:
-    """Decode a column chunk; with ``rows`` (sorted row positions), only
-    those rows, equal to ``decode_column(payload, params).take(rows)``.
-    Wanted rows that are all NULL return nulls without calling the codec:
-    a filtered read of the sparse wide record keeps one message type, so
-    most other columns hold no value on any surviving row."""
-    n = params["rows"]
-    nulls = params["nulls"]
-    target = name_type(params["atype"])
-    sections = split_sections(payload, params["sections"])
-    if rows is not None:
-        rows = np.asarray(rows, dtype=np.int64)
-    if nulls:
-        bitmap, sections = sections[0], sections[1:]
-        valid = np.unpackbits(np.frombuffer(bitmap, np.uint8), count=n).astype(bool)
-        wanted = valid if rows is None else valid[rows]
-        if not wanted.any():
-            return pa.nulls(len(wanted), target)
-    codec = get_codec(params["codec"])
-    if rows is None:
-        dense = codec.decode(sections, params)
+    """Decode a column chunk; with ``rows`` (sorted row positions, or a
+    ``WantedRows`` of them shared by a chunk's columns), only those rows,
+    equal to ``decode_column(payload, params).take(rows)``. ``params``
+    may be a ``ColumnLayout``, which skips parsing them.
+
+    A subset reads only the wanted rows' validity bits, O(len(rows)):
+    when none is set (a filtered read of the sparse wide record keeps one
+    message type, so most columns hold no value on any surviving row) it
+    returns nulls without touching the codec. Otherwise the wanted rows'
+    positions among the dense (non-null) values come from byte popcounts,
+    O(n / 8), and only those values decode."""
+    lay = params if isinstance(params, ColumnLayout) else ColumnLayout(params)
+    sel = rows if rows is None or isinstance(rows, WantedRows) else \
+        WantedRows(rows)
+    n, target = lay.n, lay.target
+    m = n if sel is None else len(sel)
+    sections = lay.sections(payload)
+    if n and lay.nulls == n:            # an all-NULL chunk column
+        return pa.nulls(m, target)
+    if sel is not None and (sel.span[0] < 0 or sel.span[1] >= n):
+        raise IndexError(f"row positions outside [0, {n})")
+    hit = None
+    if lay.nulls:
+        bm = np.frombuffer(sections[0], np.uint8)
+        sections = sections[1:]
+        if len(bm) < (n + 7) // 8:
+            raise ValueError(f"validity bitmap holds {len(bm)} bytes; "
+                             f"{n} rows need {(n + 7) // 8}")
+        if sel is None:
+            hit = np.unpackbits(bm, count=n).astype(bool)
+        else:
+            at = bm[sel.byte]
+            hit = (at & sel.mask).astype(bool)
+        if not hit.any():
+            return pa.nulls(m, target)
+        if sel is not None:
+            # dense position = set bits before the row: those of the
+            # whole bytes before its byte, then those above its bit
+            pop = _POPCOUNT.take(bm)
+            ends = np.cumsum(pop, dtype=np.int64)
+            dense_rows = (ends[sel.byte] - pop[sel.byte]
+                          + _POPCOUNT_TOP[at, sel.bit])[hit]
+    if sel is None:
+        dense = lay.codec.decode(sections, lay)
     else:
-        dense_rows = rows
-        if nulls:
-            # the wanted rows' positions among the dense (non-null) values
-            dense_rows = (np.cumsum(valid) - 1)[rows[wanted]]
-            valid = wanted
-        dense = codec.decode_rows(sections, params, dense_rows)
+        dense = lay.codec.decode_rows(
+            sections, lay, sel.rows if hit is None else dense_rows)
     if dense.type != target:
         dense = dense.cast(target)
-    if not nulls:
+    if hit is None or len(dense) == m:
         return dense
     # scatter the dense (null-free) values back under the validity bitmap:
     # a take with NULL indices yields null rows, one kernel for any type
     # (if_else has no kernel for nested types like map)
-    m, k = len(valid), int(valid.sum())
     idx = np.zeros(m, dtype=np.int64)
-    idx[valid] = np.arange(k, dtype=np.int64)
-    return dense.take(pa.array(idx, mask=~valid))
+    idx[hit] = np.arange(len(dense), dtype=np.int64)
+    return dense.take(pa.Array.from_buffers(pa.int64(), m, [
+        pa.py_buffer(np.packbits(hit, bitorder="little")),
+        pa.py_buffer(idx)]))

@@ -8,6 +8,11 @@ kernels, and emits Arrow batches. A read that pruning cuts to at most
 ``DRIVER_DECODE_BYTES`` of plain-equivalent data decodes on the driver into a
 local relation instead: below that size a Spark job's fixed cost exceeds the
 decode itself, and driver traffic stays bounded by the constant.
+
+Repeated small reads re-parse no metadata: planning prunes on a cached
+``PruneIndex`` of the live manifest view (``view_index``) and chunk reads
+take parsed footers from a cache keyed by file identity (``chunk_footer``),
+both held by ``plans.snapshot.cached``. Decoded data is never cached.
 """
 
 from __future__ import annotations
@@ -26,11 +31,14 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from omi_cpp_parquet_wide_record_spark.codecs import decode_column
+from omi_cpp_parquet_wide_record_spark.codecs.base import (
+    ColumnLayout, WantedRows, any_valid,
+)
 from omi_cpp_parquet_wide_record_spark.operators.encode import (
     BLOOM_BITS, CHUNK_MAGIC, bloom_positions,
 )
 from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-    LIVE_MANIFEST_SCHEMA, ChunkStore,
+    LIVE_MANIFEST_SCHEMA, ChunkStore, cached, file_key,
 )
 
 # Plain-equivalent bytes (the manifest's ``bytes_in``) up to which a
@@ -42,6 +50,14 @@ from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
 # break-even, erring slightly towards the driver. (It was set when that
 # fixed cost was 0.4-0.8 s, before ``session.reuse_zip_directories``.)
 DRIVER_DECODE_BYTES = 16 << 20
+
+
+# Payload byte ranges of one chunk read that lie at most this far apart
+# are read with one read call: reading a gap from the page cache costs
+# about what one more seek + read call costs (~2-4 us) at this size, and a
+# projection of a few far-apart columns of a fat chunk still skips the
+# bytes between them.
+READ_GAP_BYTES = 16 << 10
 
 
 def _chunk_footer(f, path: str) -> dict:
@@ -63,26 +79,123 @@ def _chunk_footer(f, path: str) -> dict:
     return json.loads(buf[-9 - flen:-9])
 
 
-def _payload(f, col: dict, path: str, check_sha: bool) -> bytes:
-    """One footer column's payload bytes, sha256-checked on request."""
-    f.seek(col["offset"])
-    payload = f.read(col["length"])
-    if check_sha and hashlib.sha256(payload).hexdigest() != col["sha256"]:
-        raise ValueError(f"sha256 mismatch for {col['name']} in {path}")
-    return payload
+class FooterColumn:
+    """One column entry of a chunk footer: where its payload lies, its
+    sha256 and its params as a ``ColumnLayout``, built on first use."""
+
+    __slots__ = ("name", "offset", "length", "sha256", "params", "_layout")
+
+    def __init__(self, c: dict):
+        self.name, self.offset, self.length = c["name"], c["offset"], \
+            c["length"]
+        self.sha256, self.params, self._layout = c["sha256"], c["params"], \
+            None
+
+    @property
+    def layout(self) -> ColumnLayout:
+        if self._layout is None:
+            self._layout = ColumnLayout(self.params)
+        return self._layout
+
+
+class ChunkFooter:
+    """A chunk file's parsed footer: its row count and its columns by
+    name, in footer order."""
+
+    __slots__ = ("rows", "columns", "nbytes")
+
+    def __init__(self, meta: dict, footer_bytes: int):
+        self.rows = meta["rows"]
+        self.columns = {c["name"]: FooterColumn(c) for c in meta["columns"]}
+        # the parsed objects take ~5x the footer's JSON bytes (measured
+        # with tracemalloc on ITCH and web chunks)
+        self.nbytes = 6 * footer_bytes
+
+
+def chunk_footer(path: str) -> ChunkFooter:
+    """The parsed footer of the chunk file at ``path``, from the metadata
+    cache (``plans.snapshot.cached``) while the file's identity is
+    unchanged: a file rewritten, replaced or truncated is parsed again."""
+    key = file_key(path)
+
+    def load():
+        with open(path, "rb") as f:
+            meta = _chunk_footer(f, path)
+        end = max((c["offset"] + c["length"] for c in meta["columns"]),
+                  default=0)
+        return ChunkFooter(meta, key[2] - end)
+
+    return cached(("footer", *key), load)
+
+
+def _payloads(f, path: str, cols: list[FooterColumn],
+              check_sha: bool) -> tuple[np.ndarray, np.ndarray]:
+    """The payload bytes of the footer columns ``cols`` of the open chunk
+    file ``f``: one uint8 buffer and each column's start in it, in the
+    order of ``cols``, sha256-checked on request. Byte ranges at most
+    ``READ_GAP_BYTES`` apart are read with one read call; a file that
+    ends inside a range raises ``ValueError``."""
+    starts = np.empty(len(cols), dtype=np.int64)
+    runs: list[list[int]] = []      # [file lo, file hi, buffer position]
+    for i in sorted(range(len(cols)), key=lambda i: cols[i].offset):
+        c = cols[i]
+        if runs and c.offset - runs[-1][1] <= READ_GAP_BYTES:
+            r = runs[-1]
+            r[1] = max(r[1], c.offset + c.length)
+        else:
+            r = [c.offset, c.offset + c.length,
+                 runs[-1][2] + runs[-1][1] - runs[-1][0] if runs else 0]
+            runs.append(r)
+        starts[i] = r[2] + c.offset - r[0]
+    buf = np.empty(runs[-1][2] + runs[-1][1] - runs[-1][0] if runs else 0,
+                   dtype=np.uint8)
+    for lo, hi, pos in runs:
+        f.seek(lo)
+        got = f.readinto(buf[pos:pos + hi - lo].data)
+        if got < hi - lo:
+            raise ValueError(f"chunk {path} ends at byte {lo + got}, "
+                             f"inside payloads that end at byte {hi}")
+    if check_sha:
+        for c, s in zip(cols, starts):
+            if hashlib.sha256(buf[s:s + c.length]).hexdigest() != c.sha256:
+                raise ValueError(f"sha256 mismatch for {c.name} in {path}")
+    return buf, starts
+
+
+def decode_payloads(buf: np.ndarray, starts: np.ndarray,
+                    cols: list[FooterColumn], rows: WantedRows | None = None
+                    ) -> list[pa.Array | None]:
+    """Decode the footer columns ``cols`` of one chunk from the payloads
+    ``_payloads`` read (``buf``, ``starts``), whole or only for the wanted
+    ``rows``: each result equals ``decode_column(payload, params)
+    .take(rows)``, except that a column with no value on any wanted row
+    is None. One gather tests the wanted rows' validity bits of every
+    column (``any_valid``); only the columns that hold a value on one of
+    them decode, and they share ``rows``' bit positions."""
+    skip = np.zeros(len(cols), dtype=bool)
+    if rows is not None:
+        lays = [c.layout for c in cols]
+        skip[[i for i, lay in enumerate(lays) if lay.nulls == lay.n]] = True
+        sparse = [i for i, lay in enumerate(lays) if lay.bitmap]
+        if sparse:
+            skip[sparse] = ~any_valid(buf, starts[sparse], rows)
+    return [None if k else
+            decode_column(buf[s:s + c.length], c.layout, rows=rows)
+            for c, s, k in zip(cols, starts.tolist(), skip.tolist())]
 
 
 def read_chunk_file(path: str, columns: list[str] | None = None,
                     check_sha: bool = False) -> pa.Table:
     """Decode the ``columns`` (default: all) of one self-describing chunk
     file, reading only their byte ranges (the chunk-level analogue of
-    Parquet column-chunk seeks): 2 of 67 wide-record columns read ~3%."""
+    Parquet column-chunk seeks): 2 of 67 wide-record columns read ~3%.
+    The recovery and tooling reader: it needs no manifest."""
+    cols = [c for c in chunk_footer(path).columns.values()
+            if columns is None or c.name in columns]
     with open(path, "rb") as f:
-        return pa.table({
-            c["name"]: decode_column(_payload(f, c, path, check_sha),
-                                     c["params"])
-            for c in _chunk_footer(f, path)["columns"]
-            if columns is None or c["name"] in columns})
+        buf, starts = _payloads(f, path, cols, check_sha)
+    return pa.table({c.name: decode_column(buf[s:s + c.length], c.layout)
+                     for c, s in zip(cols, starts)})
 
 
 # per-python-worker cache of delete-key arrays: every chunk of a scan
@@ -132,29 +245,34 @@ def read_chunk_table(path: str, schema: pa.Schema,
     ``rows``; no ``rows`` when all survive, as on an unfiltered read). A
     chunk with no survivor returns a table with no chunks and decodes
     nothing else; ``check_sha`` still hashes every projected payload.
+    Each phase reads its payloads with one read per ``READ_GAP_BYTES``
+    run (``_payloads``); ``decode_payloads`` tests the survivors'
+    validity bits of every column with one gather and decodes only the
+    columns that hold a value on one of them. The footer comes from the
+    metadata cache (``chunk_footer``). An empty ``schema`` yields a table
+    with no column that still counts the surviving rows.
     """
     first = _decoded_columns([], [lk for _, _, lk in deletes], filters)
-    with open(path, "rb") as f:
-        footer = _chunk_footer(f, path)
-        n = footer["rows"]
-        by_name = {c["name"]: c for c in footer["columns"]}
-        src = {}    # live name -> its footer column, else a retired one's
-        for live in {*schema.names, *first}:
-            for name in [live, *(aliases or {}).get(live, [])]:
-                if name in by_name:
-                    src[live] = by_name[name]
+    footer = chunk_footer(path)
+    n, names, fc = footer.rows, schema.names, footer.columns
+    # live name -> its footer column, else a retired one's
+    src = {c: fc[c] for c in (*names, *first) if c in fc}
+    for live, olds in (aliases or {}).items():
+        if live not in src and (live in first or live in names):
+            for o in olds:
+                if o in fc:
+                    src[live] = fc[o]
                     break
-
-        def column(c, **kw):
-            if c in src:
-                return decode_column(_payload(f, src[c], path, check_sha),
-                                     src[c]["params"], **kw)
-            # a column added after the chunk committed null-fills
-            typ = schema.field(c).type if c in schema.names else pa.null()
-            return pa.nulls(len(kw["rows"]) if kw else n, typ)
-
+    with open(path, "rb") as f:
         # phase 1: the delete keys and filter columns, whole
-        cols = {c: column(c) for c in first}
+        have = [c for c in first if c in src]
+        buf, starts = _payloads(f, path, [src[c] for c in have], check_sha)
+        cols = {c: decode_column(buf[s:s + src[c].length], src[c].layout)
+                for c, s in zip(have, starts)}
+        for c in first:
+            if c not in cols:   # a column added after the chunk committed
+                cols[c] = pa.nulls(n, schema.field(c).type
+                                   if c in names else pa.null())
         keep = np.ones(n, dtype=bool)
         for dpath, key, live_key in deletes:
             if live_key in src:      # else: chunk predates the key
@@ -165,16 +283,33 @@ def read_chunk_table(path: str, schema: pa.Schema,
             keep &= _row_mask(pa.table(cols), filters)
         if not keep.any():
             if check_sha:            # the integrity check reads them all
-                for c in src.keys() - cols.keys():
-                    _payload(f, src[c], path, True)
+                _payloads(f, path, [src[c] for c in src.keys() - cols.keys()],
+                          True)
             return pa.Table.from_batches([], schema)
         # phase 2: every other column, only for the surviving rows
         rows = None if keep.all() else np.flatnonzero(keep)
-        kw = {} if rows is None else {"rows": rows}
-        out = {c: column(c, **kw) if c not in cols else
-               cols[c] if rows is None else cols[c].take(rows)
-               for c in schema.names}
-    return pa.table(out).cast(schema)
+        rest = [c for c in names if c in src and c not in cols]
+        buf, starts = _payloads(f, path, [src[c] for c in rest], check_sha)
+    m = n if rows is None else len(rows)
+    out = dict(zip(rest, decode_payloads(
+        buf, starts, [src[c] for c in rest],
+        None if rows is None else WantedRows(rows))))
+    out.update((c, cols[c] if rows is None else cols[c].take(rows))
+               for c in names if c in cols)
+    blank: dict = {}    # one all-NULL array per type
+    arrays = []
+    for c, t in zip(names, schema.types):
+        a = out.get(c)
+        if a is None:   # no value on a wanted row, or a column added later
+            a = blank.get(t)
+            if a is None:
+                a = blank[t] = pa.nulls(m, t)
+        elif not a.type.equals(t, check_metadata=True):
+            a = a.cast(t)       # (== ignores list field names)
+        arrays.append(a)
+    if not arrays:              # no column: the table still counts rows
+        return pa.table({"": pa.nulls(m)}).select([])
+    return pa.Table.from_arrays(arrays, schema=schema)
 
 
 def _decoded_columns(names, delete_keys, filters) -> list[str]:
@@ -345,18 +480,146 @@ def _split_filter_col(c: str) -> tuple[str, str | None]:
     return c, None
 
 
-def prune_files(manifest: pa.Table,
+class PruneIndex:
+    """A live manifest view compiled for ``prune_files``: the sorted
+    chunk files with their commit numbers, each manifest row's file,
+    column and ``bytes_in``, and per column, built on first use, its
+    rows' null and row counts, zone-map bounds parsed from JSON (numbers
+    as typed numpy arrays, strings as object arrays) and bloom bitsets
+    as one bit-matrix. ``view_index`` caches one per live manifest view,
+    so repeated reads of a snapshot re-parse none of it. The index keeps
+    the view's table for the columns it has not built yet, and reports
+    that table's Arrow bytes as its size: more than the index adds (it
+    drops the params JSON and holds blooms raw, not in base64)."""
+
+    def __init__(self, manifest: pa.Table):
+        self.table = manifest
+        files = manifest.column("chunk_file").combine_chunks()
+        self.files = sorted(pc.unique(files).to_pylist())
+        self.pos = {f: i for i, f in enumerate(self.files)}
+        self.fi = _positions(files, self.files)
+        col = manifest.column("column").combine_chunks()
+        names = pc.unique(col).to_pylist()
+        ci = _positions(col, names)
+        order = np.argsort(ci, kind="stable")
+        cuts = np.searchsorted(ci[order], np.arange(len(names) + 1))
+        self._rows = {c: order[cuts[k]:cuts[k + 1]]
+                      for k, c in enumerate(names)}
+        self._ci, self._code = ci, {c: k for k, c in enumerate(names)}
+        self._cols: dict[str, _ColumnIndex] = {}
+        has = set(manifest.schema.names)
+        self.commit_n = self.bytes_in = None
+        if "commit_n" in has:
+            self.commit_n = np.full(len(self.files), np.iinfo(np.int64).max)
+            np.minimum.at(self.commit_n, self.fi, manifest.column(
+                "commit_n").to_numpy().astype(np.int64))
+        if "bytes_in" in has:
+            self.bytes_in = pc.fill_null(manifest.column("bytes_in"),
+                                         0).to_numpy()
+        self.nbytes = manifest.nbytes + 24 * manifest.num_rows
+
+    def column(self, name: str) -> "_ColumnIndex | None":
+        """The pruning data of column ``name``; None if no row has it."""
+        c = self._cols.get(name)
+        if c is None and name in self._rows:
+            c = self._cols[name] = _ColumnIndex(self, self._rows[name])
+        return c
+
+    def kept(self, filters) -> tuple[list[str], np.ndarray]:
+        """The files ``prune_files`` keeps, sorted, and their positions
+        in ``files``."""
+        names = prune_files(self, filters or [])
+        return names, np.fromiter((self.pos[f] for f in names), np.int64,
+                                  len(names))
+
+    def bytes_of(self, pos: np.ndarray, columns: list[str] | None) -> int:
+        """The summed ``bytes_in`` of ``columns`` (default: every column)
+        over the files at ``pos``."""
+        on = np.zeros(len(self.files), dtype=bool)
+        on[pos] = True
+        on = on[self.fi]
+        if columns is not None:
+            on &= np.isin(self._ci, [self._code[c] for c in columns
+                                     if c in self._code])
+        return int(self.bytes_in[on].sum())
+
+
+def _positions(values: pa.Array, sorted_set: list) -> np.ndarray:
+    """The position of each of ``values`` in the list ``sorted_set``."""
+    return pc.index_in(values, value_set=pa.array(sorted_set, values.type)) \
+        .to_numpy(zero_copy_only=False).astype(np.int64)
+
+
+class _ColumnIndex:
+    """One column's rows of a ``PruneIndex``, parsed for pruning: file
+    positions (``fi``) with null and row counts; ``s_fi``/``lo``/``hi``
+    for the rows with zone-map bounds (``lo_a``/``hi_a`` as arrays); and
+    ``b_fi``/``mat`` for the rows with a bloom bitset."""
+
+    __slots__ = ("fi", "nulls", "rows", "s_fi", "lo", "hi", "lo_a",
+                 "hi_a", "b_fi", "mat")
+
+    def __init__(self, index: PruneIndex, rows: np.ndarray):
+        import base64
+        sub = index.table.take(rows)
+        has = set(sub.schema.names)
+        self.fi = index.fi[rows]
+        self.nulls = self.rows = None
+        if "nulls" in has:
+            self.nulls = sub.column("nulls").to_numpy(zero_copy_only=False)
+            self.rows = sub.column("rows").to_numpy(zero_copy_only=False)
+        valid = sub.column("stat_min").is_valid() \
+            .to_numpy(zero_copy_only=False)
+        srows = sub.filter(valid)
+        self.s_fi = self.fi[valid]
+        # whole-column JSON parse: arrow-side join into one "[..]" string
+        # (no per-row Python list), one C-level json.loads
+        self.lo, self.hi = (json.loads("[" + pc.binary_join(
+            pa.ListArray.from_arrays([0, srows.num_rows], srows.column(
+                c).combine_chunks()), ",")[0].as_py() + "]")
+            if srows.num_rows else [] for c in ("stat_min", "stat_max"))
+        self.lo_a, self.hi_a = _bounds_array(self.lo), _bounds_array(self.hi)
+        self.b_fi = self.mat = None
+        if "bloom" in has:
+            bvalid = sub.column("bloom").is_valid() \
+                .to_numpy(zero_copy_only=False)
+            if bvalid.any():
+                blooms = sub.column("bloom").filter(bvalid).to_pylist()
+                raw = b"".join(base64.b64decode(b) for b in blooms)
+                self.b_fi = self.fi[bvalid]
+                self.mat = np.frombuffer(raw, dtype=np.uint8).reshape(
+                    len(blooms), BLOOM_BITS // 8)
+
+
+def _bounds_array(vals: list) -> np.ndarray:
+    """Zone-map bounds as one numpy array for vectorized compares;
+    strings stay Python objects, as a fixed-width unicode array would
+    take 4 bytes per character of the longest bound on every row."""
+    if any(isinstance(v, str) for v in vals):
+        return np.fromiter(vals, dtype=object, count=len(vals))
+    return np.asarray(vals)
+
+
+def view_index(store: ChunkStore, snap: dict) -> PruneIndex:
+    """The ``PruneIndex`` of ``snap``'s live manifest view, from the
+    metadata cache (``plans.snapshot.cached``) under
+    ``store.view_key(snap)``: built once per view, re-built when a shard
+    file changes."""
+    return cached(store.view_key(snap),
+                  lambda: PruneIndex(store.manifest_table(snap)))
+
+
+def prune_files(manifest: pa.Table | PruneIndex,
                 filters: list[tuple[str, str, object]]) -> list[str]:
     """Zone-map pruning: keep only chunk files whose per-column min/max
     stats could satisfy EVERY filter (conjunction). Conservative — files
     without stats for a filtered column always survive; type-mismatched
-    comparisons never prune. Driver-side over the manifest, COLUMNAR
-    (VERDICT r3 #8): per filtered column the stat bounds parse as ONE
-    json.loads of a joined array and compare as one numpy op, and bloom
+    comparisons never prune. Driver-side over a live manifest table or
+    its ``PruneIndex`` (planning passes the cached one), COLUMNAR: per
+    filtered column the stat bounds compare as one numpy op, and bloom
     bitsets probe as one stacked matrix gather — no per-row Python, so
     the driver path holds to its 'millions of chunk rows' claim.
     Timestamps compare as epoch micros."""
-    import base64
 
     def _norm(v):
         # stats store timestamps as epoch micros; normalize filter values
@@ -367,9 +630,12 @@ def prune_files(manifest: pa.Table,
         return v
 
     filters = [(c, op, _norm(v)) for c, op, v in filters]
-    files = pc.unique(manifest.column("chunk_file")).to_pylist()
     if not filters:
-        return sorted(files)
+        if isinstance(manifest, PruneIndex):
+            return list(manifest.files)
+        return sorted(pc.unique(manifest.column("chunk_file")).to_pylist())
+    index = manifest if isinstance(manifest, PruneIndex) else \
+        PruneIndex(manifest)
 
     by_col: dict[str, list] = {}
     for c, op, v in filters:
@@ -386,12 +652,11 @@ def prune_files(manifest: pa.Table,
             np.zeros(np.shape(lo), dtype=bool),
         "startswith": _startswith_keep,
     }
-    has_bloom = "bloom" in manifest.schema.names
-    excluded: set[str] = set()
+    keep = np.ones(len(index.files), dtype=bool)
     for c, ops in by_col.items():
         base_c, acc = _split_filter_col(c)
-        sub = manifest.filter(pc.equal(manifest.column("column"), base_c))
-        if sub.num_rows == 0:
+        col = index.column(base_c)
+        if col is None:
             continue
         # null-count pruning: the manifest's nulls/rows columns answer
         # IS [NOT] NULL exactly — a chunk with zero nulls can't satisfy
@@ -400,27 +665,15 @@ def prune_files(manifest: pa.Table,
         # all). Top-level columns only; nested accessors stay unpruned.
         null_ops = [op for op, _ in ops
                     if op in ("is_null", "is_not_null")]
-        if null_ops and acc is None and "nulls" in sub.schema.names:
-            n_null = sub.column("nulls").to_numpy(zero_copy_only=False)
-            n_rows = sub.column("rows").to_numpy(zero_copy_only=False)
-            nbad = np.zeros(len(n_null), dtype=bool)
+        if null_ops and acc is None and col.nulls is not None:
+            nbad = np.zeros(len(col.nulls), dtype=bool)
             for op in null_ops:
-                nbad |= (n_null == 0) if op == "is_null" \
-                    else (n_null == n_rows)
-            if nbad.any():
-                excluded.update(sub.column("chunk_file")
-                                .filter(pa.array(nbad)).to_pylist())
-        srows = sub.filter(sub.column("stat_min").is_valid())
-        if srows.num_rows:
-            # whole-column JSON parse: arrow-side join into one "[..]"
-            # string (no per-row Python list), one C-level json.loads
-            def _parse(col):
-                a = srows.column(col).combine_chunks()
-                joined = pc.binary_join(
-                    pa.ListArray.from_arrays([0, len(a)], a), ",")
-                return json.loads("[" + joined[0].as_py() + "]")
-            lo = _parse("stat_min")
-            hi = _parse("stat_max")
+                nbad |= (col.nulls == 0) if op == "is_null" \
+                    else (col.nulls == col.rows)
+            keep[col.fi[nbad]] = False
+        if len(col.s_fi):
+            s_fi, lo, hi, lo_a, hi_a = \
+                col.s_fi, col.lo, col.hi, col.lo_a, col.hi_a
             if acc is not None:
                 # nested stats are JSON objects keyed by accessor; rows
                 # without the key (all-null children, pre-r5 manifests)
@@ -434,10 +687,10 @@ def prune_files(manifest: pa.Table,
                 if not ok.all():
                     if not ok.any():
                         continue
-                    srows = srows.filter(pa.array(ok))
+                    s_fi = s_fi[ok]
                     lo = [l for l, k in zip(lo, ok) if k]
                     hi = [h for h, k in zip(hi, ok) if k]
-            lo_a, hi_a = np.asarray(lo), np.asarray(hi)
+                lo_a, hi_a = _bounds_array(lo), _bounds_array(hi)
             bad = np.zeros(len(lo), dtype=bool)
             for op, v in ops:
                 # a NaN sorts above every number (Spark), so no bound
@@ -455,10 +708,7 @@ def prune_files(manifest: pa.Table,
                             bad[i] |= not _vec[op](l, h, v)
                         except TypeError:
                             pass
-            if bad.any():
-                # convert only the EXCLUDED file names to Python
-                excluded.update(srows.column("chunk_file")
-                                .filter(pa.array(bad)).to_pylist())
+            keep[s_fi[bad]] = False
         # bloom pruning for equality/IN on bytes-like columns: min/max
         # ranges on high-cardinality strings rarely exclude anything, the
         # bitset does. Missing blooms read as "may contain". All literals
@@ -467,28 +717,19 @@ def prune_files(manifest: pa.Table,
         # group — a chunk is excluded when ANY group is WHOLLY absent
         # (filters are a conjunction; IN needs only one member present).
         groups = _bloom_literal_groups(ops)
-        if groups and has_bloom:
-            brows = sub.filter(sub.column("bloom").is_valid())
-            if brows.num_rows:
-                blooms = brows.column("bloom").to_pylist()
-                raw = b"".join(base64.b64decode(b) for b in blooms)
-                mat = np.frombuffer(raw, dtype=np.uint8).reshape(
-                    len(blooms), BLOOM_BITS // 8)
-                flat = [v.encode() if isinstance(v, str) else v
-                        for g in groups for v in g]
-                goff = np.cumsum([0] + [len(g) for g in groups])
-                idx = bloom_positions(pa.array(flat, pa.binary()))
-                byte_i, bit_i = idx // 8, 7 - (idx % 8)
-                bits = (mat[:, byte_i] >> bit_i[None, :, :]) & 1
-                present = bits.all(axis=2)          # (nr, sum(|g|))
-                absent = ~present
-                bad = np.zeros(len(blooms), dtype=bool)
-                for gi in range(len(groups)):
-                    bad |= absent[:, goff[gi]:goff[gi + 1]].all(axis=1)
-                if bad.any():
-                    excluded.update(brows.column("chunk_file")
-                                    .filter(pa.array(bad)).to_pylist())
-    return sorted(f for f in files if f not in excluded)
+        if groups and col.mat is not None:
+            flat = [v.encode() if isinstance(v, str) else v
+                    for g in groups for v in g]
+            goff = np.cumsum([0] + [len(g) for g in groups])
+            idx = bloom_positions(pa.array(flat, pa.binary()))
+            byte_i, bit_i = idx // 8, 7 - (idx % 8)
+            bits = (col.mat[:, byte_i] >> bit_i[None, :, :]) & 1
+            absent = ~bits.all(axis=2)              # (nr, sum(|g|))
+            bad = np.zeros(len(col.mat), dtype=bool)
+            for gi in range(len(groups)):
+                bad |= absent[:, goff[gi]:goff[gi + 1]].all(axis=1)
+            keep[col.b_fi[bad]] = False
+    return [index.files[i] for i in np.flatnonzero(keep)]
 
 
 def _names_df(spark: SparkSession, names: list[str], col: str,
@@ -598,38 +839,43 @@ class ScanPlan:
     def kept_files(self, filters: list[tuple[str, str, object]] | None,
                    columns: list[str] | None = None) -> "KeptFiles":
         """Driver planning: {kept chunk file: commit number}, pruned on
-        the driver's live manifest table. ``bytes_in`` of the result sums
-        the manifest's plain-equivalent bytes of ``columns`` (default:
-        every column) over the kept files."""
-        live = self.store.manifest_table(self.snap)
-        kept = _kept(live, filters)
-        out = KeptFiles(zip(kept.column("chunk_file").to_pylist(),
-                            kept.column("commit_n").to_pylist()))
-        rows = live.filter(pc.is_in(live.column("chunk_file"),
-                                    value_set=kept.column("chunk_file")))
-        if columns is not None:
-            rows = rows.filter(pc.is_in(rows.column("column"),
-                                        value_set=pa.array(columns,
-                                                           pa.string())))
-        out.bytes_in = pc.sum(rows.column("bytes_in")).as_py() or 0
+        the cached ``PruneIndex`` of the snapshot's live manifest view
+        (``view_index``). ``bytes_in`` of the result sums the manifest's
+        plain-equivalent bytes of ``columns`` (default: every column)
+        over the kept files."""
+        index = view_index(self.store, self.snap)
+        names, pos = index.kept(filters)
+        out = KeptFiles(zip(names, index.commit_n[pos].tolist()))
+        out.bytes_in = index.bytes_of(pos, columns)
         return out
 
     def shard_files(self, spark: SparkSession,
                     filters: list[tuple[str, str, object]] | None
                     ) -> DataFrame:
         """Distributed planning: the same (chunk_file, commit_n) rows as
-        ``kept_files``, pruned per manifest shard in a Spark job."""
-        return self._shards(spark, lambda live: _kept(live, filters),
-                            _KEPT_SCHEMA)
+        ``kept_files``, pruned per manifest shard in a Spark job, each on
+        its one-shard view's cached ``PruneIndex``."""
+        store, snap = self.store, self.snap
+
+        def kept(m):
+            index = view_index(store, {**snap, "manifests": [m]})
+            names, pos = index.kept(filters)
+            return pa.table([pa.array(names, pa.string()),
+                             pa.array(index.commit_n[pos], pa.int32())],
+                            schema=_KEPT_SCHEMA)
+
+        return self._shards(spark, kept, _KEPT_SCHEMA)
 
     def live_rows(self, spark: SparkSession) -> DataFrame:
         """The live manifest view (what ``manifest_table`` concatenates,
         with ``commit_n``) as a distributed DataFrame."""
-        return self._shards(spark, lambda live: live, LIVE_MANIFEST_SCHEMA)
+        store, snap = self.store, self.snap
+        return self._shards(spark, lambda m: store.shard_view(snap, m),
+                            LIVE_MANIFEST_SCHEMA)
 
     def _shards(self, spark: SparkSession, fn, schema: pa.Schema
                 ) -> DataFrame:
-        """``fn(shard_view) -> pa.Table`` over every manifest shard of
+        """``fn(manifest_name) -> pa.Table`` over every manifest shard of
         the snapshot as one Spark job: the distributed form of a
         driver-side loop over shards, so chunk-level manifest rows never
         materialize on the driver. Per-shard pruning equals global
@@ -637,15 +883,13 @@ class ScanPlan:
         shard (``write_chunks``, the one writer, puts all of a task's
         chunk rows in that task's shard)."""
         from pyspark.sql.pandas.types import from_arrow_schema
-        store, snap = self.store, self.snap
 
         def task(batches):
             for b in batches:
                 for m in b.column("manifest").to_pylist():
-                    live = store.shard_view(snap, m)
-                    yield from fn(live).cast(schema).to_batches()
+                    yield from fn(m).cast(schema).to_batches()
 
-        return _names_df(spark, list(snap["manifests"]), "manifest") \
+        return _names_df(spark, list(self.snap["manifests"]), "manifest") \
             .mapInArrow(task, from_arrow_schema(schema))
 
 
@@ -664,16 +908,6 @@ class KeptFiles(dict):
 
 _KEPT_SCHEMA = pa.schema([("chunk_file", pa.string()),
                           ("commit_n", pa.int32())])
-
-
-def _kept(live: pa.Table, filters) -> pa.Table:
-    """(chunk_file, commit_n) of the files ``prune_files`` keeps in a
-    live manifest view that carries ``commit_n``, sorted by file."""
-    files = pa.array(prune_files(live, filters or []), pa.string())
-    gb = live.filter(pc.is_in(live.column("chunk_file"), value_set=files)) \
-        .group_by("chunk_file").aggregate([("commit_n", "min")])
-    return pa.table([gb.column("chunk_file"), gb.column("commit_n_min")],
-                    schema=_KEPT_SCHEMA).sort_by("chunk_file")
 
 
 def decode_store(spark: SparkSession, out_dir: str,
@@ -701,6 +935,12 @@ def decode_store(spark: SparkSession, out_dir: str,
     apply to in-range data via the normal sequence scoping; deletes
     aimed at pre-M data are invisible here (their targets are not
     scanned), matching append-scan semantics.
+
+    ``columns`` projects the read, in the order given. A name the
+    snapshot's schema lacks, or one named twice, raises ``ValueError``
+    from this call. ``columns=[]`` reads no column but keeps every row
+    the filters keep, as Spark's ``select()`` does: ``count()`` of it is
+    the row count of the filtered read.
 
     ``filters=[(col, op, value), ...]`` (ops: < <= > >= == in startswith
     is_null is_not_null, ANDed; ``in`` takes a list/tuple of values,
@@ -748,7 +988,20 @@ def decode_store(spark: SparkSession, out_dir: str,
             f"planning must be 'driver' or 'distributed': {planning}")
     plan = ScanPlan.resolve(out_dir, snapshot, ref, since_snapshot)
     filters = list(filters or [])
-    _row_mask(plan.schema.empty_table(), filters)   # raises on a bad one
+    names = set(plan.schema.names)
+    # raises on a bad filter; checked over the filtered columns alone, as
+    # an empty table costs ~5 us per column
+    _row_mask(pa.schema([plan.schema.field(b) for b in {
+        _split_filter_col(c)[0] for c, _, _ in filters} if b in names])
+        .empty_table(), filters)
+    if columns is not None:
+        seen = set()
+        for c in columns:
+            if c not in names:
+                raise ValueError(f"columns: no column {c!r} in the store")
+            if c in seen:
+                raise ValueError(f"columns: {c!r} is named more than once")
+            seen.add(c)
     schema = plan.schema if columns is None else \
         pa.schema([plan.schema.field(c) for c in columns])
     from pyspark.sql.pandas.types import from_arrow_schema
@@ -784,5 +1037,9 @@ def decode_store(spark: SparkSession, out_dir: str,
     # Python-worker job, and decode errors raise from this call
     # tables with rows only: createDataFrame drops rows after an empty batch
     tables = [t for t in (read(f, n) for f, n in kept.items()) if t.num_rows]
+    if len(schema) == 0:
+        # Arrow tables without columns lose their row counts in
+        # concat_tables and createDataFrame; a range keeps them
+        return spark.range(sum(t.num_rows for t in tables)).select()
     table = pa.concat_tables(tables) if tables else schema.empty_table()
     return spark.createDataFrame(table, schema=spark_schema)

@@ -27,11 +27,13 @@ live snapshot; the encode job anti-joins its work units against it
 Manifest shard reads are cached per process (``read_shard``): every read
 of a store re-reads the same immutable shards, so the driver's planning,
 each Python worker's distributed planning, GC and ``metadata_table`` take a
-shard's parquet read from memory after the first. An entry is keyed by the
-shard's path and its file identity (inode, size, mtime), so a store deleted
-and re-created at the same path, or a shard rewritten in place, is read
-again. The cache holds at most ``SHARD_CACHE_BYTES`` and evicts the least
-recently used shards first.
+shard's parquet read from memory after the first. The same cache
+(``cached``) holds the pruning index of each live manifest view, keyed by
+``ChunkStore.view_key``, and each parsed chunk footer. A shard or footer
+entry is keyed by its file's path and identity (inode, size, mtime), so a
+store deleted and re-created at the same path, or a file rewritten in
+place, is read again. The cache holds at most ``SHARD_CACHE_BYTES`` and
+evicts the least recently used entries first.
 
 No Iceberg runtime jar exists in this sandbox (verified); the snapshot JSON
 convention keeps identical semantics and would swap for Iceberg REPLACE
@@ -87,42 +89,59 @@ MANIFEST_SCHEMA = pa.schema([
 LIVE_MANIFEST_SCHEMA = MANIFEST_SCHEMA.append(pa.field("commit_n", pa.int32()))
 
 
-# Arrow bytes of manifest shards ``read_shard`` keeps in memory per process.
-# A shard holds one row per chunk column, at most ~2 KB of Arrow each
-# (params JSON, zone maps, and a 1.4 KB base64 bloom on byte columns): the
-# benchmark stores' 120-540 manifest rows take well under 1 MiB, and 32 MiB
-# holds at least 16k chunk columns.
+# Bytes of metadata the process-wide cache (``cached``) keeps: manifest
+# shard tables (``read_shard``), pruning indexes of live manifest views
+# (``operators.decode.view_index``) and parsed chunk footers
+# (``operators.decode.chunk_footer``). A shard holds one row per chunk
+# column, at most ~2 KB of Arrow each (params JSON, zone maps, and a 1.4 KB
+# base64 bloom on byte columns); an index and a footer take about as much
+# per chunk column again. The benchmark stores' 120-540 manifest rows take
+# a few MiB in all, and 32 MiB holds at least 5k chunk columns of each.
 SHARD_CACHE_BYTES = 32 << 20
 
-_SHARDS: OrderedDict = OrderedDict()     # key -> table, oldest use first
+_SHARDS: OrderedDict = OrderedDict()     # key -> value, oldest use first
 _SHARDS_LOCK = threading.Lock()
 _shards_bytes = 0
 
 
-def read_shard(path: str) -> pa.Table:
-    """The parquet table of the manifest shard at ``path``, from the
-    process-wide LRU cache when the file is unchanged since it was read:
-    the key is (absolute path, inode, size, mtime in ns). Shards are
-    written once under unique names, so the key only has to catch a store
-    re-created at the same path and a shard file replaced or truncated in
-    place; a same-size rewrite of the same inode within one mtime tick of
-    the filesystem is the one change it cannot see."""
+def cached(key: tuple, build):
+    """``build()``'s value under ``key`` in the process-wide LRU cache of
+    immutable metadata, built on a miss. A value reports its size as
+    ``nbytes``; the cache holds at most ``SHARD_CACHE_BYTES`` and evicts
+    the least recently used values first (a value larger than the bound
+    is returned but not kept). Keys start with a file identity
+    (``file_key``) or a tag naming what they cache."""
     global _shards_bytes
-    st = os.stat(path)
-    key = (os.path.abspath(path), st.st_ino, st.st_size, st.st_mtime_ns)
     with _SHARDS_LOCK:
-        t = _SHARDS.get(key)
-        if t is not None:
+        v = _SHARDS.get(key)
+        if v is not None:
             _SHARDS.move_to_end(key)
-            return t
-    t = pq.read_table(path)
+            return v
+    v = build()
     with _SHARDS_LOCK:
         if key not in _SHARDS:
-            _SHARDS[key] = t
-            _shards_bytes += t.nbytes
+            _SHARDS[key] = v
+            _shards_bytes += v.nbytes
         while _shards_bytes > SHARD_CACHE_BYTES:
             _shards_bytes -= _SHARDS.popitem(last=False)[1].nbytes
-    return t
+    return v
+
+
+def file_key(path: str) -> tuple:
+    """(absolute path, inode, size, mtime in ns) of the file at ``path``:
+    the cache key of what is parsed from it. Files the store writes are
+    written once under unique names, so the key only has to catch a store
+    re-created at the same path and a file replaced or truncated in
+    place; a same-size rewrite of the same inode within one mtime tick of
+    the filesystem is the one change it cannot see."""
+    st = os.stat(path)
+    return (os.path.abspath(path), st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def read_shard(path: str) -> pa.Table:
+    """The parquet table of the manifest shard at ``path``, from the
+    metadata cache when the file is unchanged since it was read."""
+    return cached(file_key(path), lambda: pq.read_table(path))
 
 
 # lineage fields ``_publish`` stamps on every snapshot; the rest is content
@@ -538,6 +557,20 @@ class ChunkStore:
             t = t.set_column(t.schema.get_field_index("column"),
                              t.schema.field("column"), col)
         return t
+
+    def view_key(self, snap: dict) -> tuple:
+        """The identity of ``snap``'s live manifest view: each manifest
+        shard's file identity, commit number and superseded pids, and
+        the column aliases, which are everything ``shard_view`` reads.
+        Snapshots with equal keys have equal views: a rollback to N
+        shares N's key, a ``since_snapshot`` trim does not, and a store
+        re-created at the same path has new file identities."""
+        return ("view", tuple(
+            (file_key(os.path.join(self.manifests_dir, m)),
+             self.manifest_commit_n(snap, m),
+             tuple(sorted(self.rewritten_pids_for(snap, m))))
+            for m in snap.get("manifests", [])), tuple(
+            (k, tuple(v)) for k, v in sorted(self.alias_map(snap).items())))
 
     def manifest_table(self, snapshot: dict | None = None) -> pa.Table:
         """All LIVE manifest rows of a snapshot (default: the live one):

@@ -455,6 +455,101 @@ def test_fsst_chunks_without_row_index_still_decode(codec):
                             want.take(pa.array(rows))), rows
 
 
+def _batched_read(payloads: list[bytes], params: list[dict], rows,
+                  gap: int = 3):
+    """``decode_payloads`` over the payloads laid out in one buffer, as a
+    chunk read holds them, ``gap`` junk bytes apart; ``rows`` None reads
+    whole columns."""
+    from omi_cpp_parquet_wide_record_spark.codecs.base import WantedRows
+    from omi_cpp_parquet_wide_record_spark.operators.decode import (
+        FooterColumn, decode_payloads,
+    )
+    buf, cols = b"", []
+    for i, (payload, p) in enumerate(zip(payloads, params)):
+        buf += b"\xa5" * gap
+        cols.append(FooterColumn({"name": f"c{i}", "offset": len(buf),
+                                  "length": len(payload), "sha256": "",
+                                  "params": p}))
+        buf += payload
+    buf += b"\xa5" * gap
+    starts = np.array([c.offset for c in cols], dtype=np.int64)
+    return decode_payloads(np.frombuffer(buf, np.uint8), starts, cols,
+                           None if rows is None else WantedRows(rows))
+
+
+_BATCH_INPUTS = _rows_inputs(np.random.default_rng(13))
+
+
+@settings(max_examples=120, deadline=None)
+@given(st.data())
+def test_batched_subset_read_equals_take(data):
+    """A chunk read's batched decode (``decode_payloads``: one buffer, one
+    validity gather for every column, shared row positions) equals
+    ``decode_column(payload, params).take(rows)`` on every codec, for
+    columns with no NULL, a few NULLs, a few values and only NULLs side
+    by side, and subsets that are empty, one row, every row or any
+    sorted set. Exactly the columns no wanted row holds a value in come
+    back as None, undecoded."""
+    codec = data.draw(st.sampled_from(codec_names()), label="codec")
+    inputs = _BATCH_INPUTS[codec]
+    base = inputs[data.draw(st.integers(0, len(inputs) - 1), label="input")]
+    n = len(base)
+    picks = data.draw(st.lists(st.integers(0, n - 1), min_size=1,
+                               max_size=n // 4, unique=True), label="picks")
+    holes = np.zeros(n, dtype=bool)
+    holes[picks] = True
+    # a few NULLs, then values at the picked rows only (the sparse wide
+    # record: most rows NULL)
+    arrs = [base] + [base.take(pa.array(np.arange(n), mask=m))
+                     for m in (holes, ~holes)] + [pa.nulls(n, base.type)]
+    cols = []
+    for a in arrs:
+        try:
+            cols.append((a, encode_column(a, codec)))
+        except ValueError:      # ALP-RD: no cut beats PLAIN on so few values
+            assert codec == "alprd"
+    rows = data.draw(st.one_of(
+        st.just([]), st.integers(0, n - 1).map(lambda r: [r]),
+        st.just(list(range(n))), st.none(),
+        st.lists(st.integers(0, n - 1), unique=True).map(sorted)),
+        label="rows")
+    got = _batched_read([e.payload for _, e in cols],
+                        [e.params for _, e in cols], rows)
+    for (a, e), g in zip(cols, got):
+        full = decode_column(e.payload, e.params)
+        assert arrays_equal(full, a), (codec, a.type)
+        want = full if rows is None else full.take(pa.array(rows,
+                                                            pa.int64()))
+        if rows is not None and len(rows):
+            # exactly the columns with no value on a wanted row skip decoding
+            assert (g is None) == (want.null_count == len(want)), a.null_count
+        if g is not None:
+            assert arrays_equal(g, want), (codec, a.type, a.null_count, rows)
+
+
+@pytest.mark.parametrize("codec", ["fsst", "fsst2"])
+def test_batched_read_decodes_fsst_head_format(codec):
+    """Columns encoded before FSST's row-index section existed (the
+    ``tests/data`` fixture) decode through a chunk read's batched decode,
+    whole and by row subset."""
+    import base64
+    import json
+    import os
+    path = os.path.join(os.path.dirname(__file__), "data",
+                        "fsst_head_format.json")
+    with open(path, encoding="utf-8") as f:
+        fx = json.load(f)
+    want = pa.array(fx["values"], pa.string())
+    payload = base64.b64decode(fx[codec]["payload"])
+    params = fx[codec]["params"]
+    n = len(want)
+    for rows in (None, [0], [n - 1], range(n), [1, 4, 6, 9], [3, 4, 5]):
+        [got] = _batched_read([payload], [params], rows, gap=11)
+        sub = want if rows is None else want.take(pa.array(list(rows)))
+        assert arrays_equal(got, sub) if got is not None else \
+            sub.null_count == len(sub), rows
+
+
 def _short_input(codec: str) -> tuple[pa.Array, int]:
     """A null-free column for ``codec`` and the index of a bit-packed
     section of its encoding that holds more than 20 bytes."""

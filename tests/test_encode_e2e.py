@@ -3241,3 +3241,209 @@ def test_shard_cache_byte_count_under_threads(tmp_path, monkeypatch):
     assert not any(t.is_alive() for t in threads) and not errors, errors
     assert S._shards_bytes == sum(t.nbytes for t in S._SHARDS.values())
     assert S._shards_bytes <= S.SHARD_CACHE_BYTES
+
+
+def test_zero_column_read_keeps_rows(spark, tmp_path, monkeypatch):
+    """``columns=[]`` keeps every row the filters keep on each read path
+    (driver decode, Spark-job decode, distributed planning), as Spark's
+    ``select()`` does on the owrc reader: ``count()`` is the row count
+    (0 on every decode path before: a chunk table without columns had
+    no rows)."""
+    from pyspark.sql import functions as F
+    from omi_cpp_parquet_wide_record_spark.sources.owrc_source import (
+        OwrcDataSource,
+    )
+    out = str(tmp_path / "store")
+    encode_dataframe(spark.range(0, 300).select(
+        F.col("id"), (F.col("id") % 7).alias("k")), out, salt_key="id",
+        num_pids=3, chunk_rows=64)
+    spark.dataSource.register(OwrcDataSource)
+    for flt, want in ((None, 300), (("k", "==", 3), 43),
+                      (("id", "<", 0), 0)):
+        filters = None if flt is None else [flt]
+        reads = decode_paths(monkeypatch, lambda: decode_store(
+            spark, out, columns=[], filters=filters))
+        reads.append(decode_store(spark, out, columns=[], filters=filters,
+                                  planning="distributed"))
+        owrc = spark.read.format("owrc").load(out)
+        reads.append((owrc if flt is None else owrc.filter(
+            spark_filter(*flt))).select())
+        assert [r.count() for r in reads] == [want] * 4, flt
+        assert all(r.columns == [] for r in reads)
+
+
+def test_bad_columns_raise_value_error(spark, tmp_path):
+    """A ``columns`` name the store lacks, or one named twice, raises a
+    ``ValueError`` naming it from ``decode_store`` on both planning modes
+    (pyarrow's ``KeyError`` and schema-mismatch errors before)."""
+    out = str(tmp_path / "store")
+    encode_dataframe(spark.range(0, 50), out, salt_key="id", num_pids=1)
+    for planning in ("driver", "distributed"):
+        with pytest.raises(ValueError, match="no column 'zz'"):
+            decode_store(spark, out, columns=["id", "zz"], planning=planning)
+        with pytest.raises(ValueError, match="'id' is named more than once"):
+            decode_store(spark, out, columns=["id", "id"], planning=planning)
+    assert decode_store(spark, out, columns=["id"]).count() == 50
+
+
+def test_chunk_footer_cache_sees_rewritten_replaced_and_truncated_chunks(
+        spark, tmp_path):
+    """Chunk footers are cached by the file's identity: a chunk file
+    rewritten in place with another chunk's bytes, or replaced by a
+    rename, reads as its new content through both chunk readers, and a
+    truncated one raises ``ValueError``."""
+    import shutil
+    out = str(tmp_path / "store")
+    encode_dataframe(spark.range(0, 200), out, salt_key="id", num_pids=1,
+                     chunk_rows=50, sort_by=["id"])
+    plan = D.ScanPlan.resolve(out)
+    a, b, c = [os.path.join(plan.store.chunks_dir, f)
+               for f in sorted(plan.kept_files(None))[:3]]
+
+    def ids(path):
+        t = D.read_chunk_table(path, plan.schema)
+        assert read_chunk_file(path).equals(t)
+        return t.column("id").to_pylist()
+
+    want = {p: ids(p) for p in (a, b, c)}
+    assert len({tuple(v) for v in want.values()}) == 3
+    with open(b, "rb") as f:
+        b_bytes = f.read()
+    st = os.stat(a)
+    with open(a, "r+b") as f:       # same inode, other content
+        f.write(b_bytes)
+        f.truncate()
+    # a later mtime even where the filesystem's clock tick is coarse
+    os.utime(a, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert os.stat(a).st_ino == st.st_ino
+    assert ids(a) == want[b]
+    shutil.copy(c, a + ".tmp")
+    os.replace(a + ".tmp", a)       # replaced by a rename
+    assert ids(a) == want[c]
+    with open(a, "r+b") as f:
+        f.truncate(os.path.getsize(a) // 2)
+    with pytest.raises(ValueError):
+        D.read_chunk_table(a, plan.schema)
+    with pytest.raises(ValueError):
+        read_chunk_file(a)
+
+
+def test_prune_index_follows_commit_since_rollback_and_recreate(
+        spark, tmp_path, monkeypatch):
+    """The cached pruning index of a live manifest view is keyed by the
+    view: it follows a new commit, a ``since_snapshot`` read, a rollback
+    and a store re-created at the same path, on driver and distributed
+    planning, and a repeat read of an unchanged snapshot builds none."""
+    import shutil
+    built = []
+
+    class Counting(D.PruneIndex):
+        def __init__(self, manifest):
+            built.append(manifest.num_rows)
+            super().__init__(manifest)
+
+    monkeypatch.setattr(D, "PruneIndex", Counting)
+    out = str(tmp_path / "store")
+
+    def ids(**kw):
+        got = [sorted(r.id for r in decode_store(
+            spark, out, columns=["id"], filters=[("id", ">=", 0)],
+            planning=p, **kw).collect()) for p in ("driver", "distributed")]
+        assert got[0] == got[1]
+        return got[0]
+
+    encode_dataframe(spark.range(0, 100), out, salt_key="id", num_pids=2)
+    first = ChunkStore(out).current_snapshot()["n"]
+    assert ids() == list(range(100))
+    built.clear()
+    assert ids() == list(range(100))
+    assert built == []              # the unchanged view's index is reused
+    encode_dataframe(spark.range(100, 150), out, salt_key="id", num_pids=2,
+                     resume=False)
+    assert ids() == list(range(150))
+    assert ids(since_snapshot=first) == list(range(100, 150))
+    ChunkStore(out).rollback_to(first)
+    assert ids() == list(range(100))
+    shutil.rmtree(out)
+    encode_dataframe(spark.range(500, 520), out, salt_key="id", num_pids=2)
+    assert ids() == list(range(500, 520))
+
+
+def test_metadata_cache_under_threads(spark, tmp_path, monkeypatch):
+    """Threads reading chunks and planning through a metadata cache too
+    small for every footer, pruning index and shard of the store get the
+    right rows and files, and leave its byte count equal to what it
+    holds and within the bound."""
+    import sys
+    import threading
+    from collections import OrderedDict
+    from omi_cpp_parquet_wide_record_spark.plans import snapshot as S
+    out = str(tmp_path / "store")
+    encode_dataframe(spark.range(0, 400), out, salt_key="id", num_pids=1,
+                     chunk_rows=50, sort_by=["id"])
+    plan = D.ScanPlan.resolve(out)
+    paths = [os.path.join(plan.store.chunks_dir, f)
+             for f in sorted(plan.kept_files(None))]
+    want = [D.read_chunk_table(p, plan.schema).column("id").to_pylist()
+            for p in paths]
+    low = sorted(plan.kept_files([("id", "<", 50)]))
+    assert len(paths) == 8 and len(low) == 1
+    bound = D.view_index(plan.store, plan.snap).nbytes + 3 * max(
+        D.chunk_footer(p).nbytes for p in paths)
+    monkeypatch.setattr(S, "_SHARDS", OrderedDict())
+    monkeypatch.setattr(S, "_shards_bytes", 0)
+    monkeypatch.setattr(S, "SHARD_CACHE_BYTES", bound)
+    errors = []
+
+    def reader(k):
+        try:
+            for i in range(40):
+                j = (k + i) % len(paths)
+                t = D.read_chunk_table(paths[j], plan.schema,
+                                       filters=[("id", ">=", 0)])
+                assert t.column("id").to_pylist() == want[j]
+                if i % 4 == 0:
+                    assert sorted(plan.kept_files([("id", "<", 50)])) == low
+        except Exception as e:      # noqa: BLE001 - reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(k,))
+                   for k in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert S._shards_bytes == sum(v.nbytes for v in S._SHARDS.values())
+    assert S._shards_bytes <= S.SHARD_CACHE_BYTES
+
+
+def test_prune_index_sees_rewritten_shards(tmp_path):
+    """The pruning index is keyed by its manifest shards' file
+    identities: a shard rewritten in place under its name, or replaced
+    by a rename, plans its new chunk files. Pure metadata, no Spark
+    session."""
+    store = ChunkStore(str(tmp_path / "store"))
+    [name] = _one_chunk_shard(store, 0)
+    store.commit([name], _KV, "r0", new_pids={0})
+    path = os.path.join(store.manifests_dir, name)
+
+    def files():
+        return sorted(D.ScanPlan.resolve(store.root).kept_files(None))
+
+    assert files() == files() == ["c0.owrc"]
+    row = pq.read_table(path)
+
+    def named(f):
+        return row.set_column(0, "chunk_file", pa.array([f], pa.string()))
+
+    pq.write_table(pa.concat_tables([row, named("c7.owrc")]), path)
+    assert files() == ["c0.owrc", "c7.owrc"]
+    pq.write_table(named("c5.owrc"), path + ".tmp")
+    os.replace(path + ".tmp", path)
+    assert files() == ["c5.owrc"]
