@@ -5,15 +5,27 @@ AQE on (runtime coalescing + skew-join splitting), shuffle partitions sized to
 cores (not the 200 default), UTC session timezone (bit-identity vs DuckDB
 oracle and the reference's GMT timestamp formatting, ref NQ:85-88), and Arrow
 execution enabled since every custom kernel runs through mapInArrow.
+
+Importing this module must not import pyspark: the package ``__init__``
+imports it, and ``daemon`` runs after the package ``__init__`` but before
+pyspark is imported.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 import zipimport
+from typing import TYPE_CHECKING, Mapping
 
-from pyspark.sql import SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
+
+ENGINE_DAEMON = f"{__package__}.daemon"
+# the directory that holds the package: the checkout root, or a
+# ``--py-files`` zip
+_ENGINE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def reuse_zip_directories() -> None:
@@ -60,6 +72,56 @@ def reuse_zip_directories() -> None:
 reuse_zip_directories()
 
 
+def local_cores(environ: Mapping[str, str]) -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
+    affinity mask, which ``nproc`` reports too; ``os.cpu_count()`` counts
+    the whole machine's)."""
+    if "SPARK_GRAFT_CPUS" in environ:
+        return int(environ["SPARK_GRAFT_CPUS"])
+    return len(os.sched_getaffinity(0))
+
+
+def engine_daemon_fits(master: str, environ: Mapping[str, str], cwd: str,
+                       parent: str = _ENGINE_PARENT) -> bool:
+    """Whether Python workers import this engine when their daemon starts
+    (``python -m ENGINE_DAEMON``), so that it may be their daemon.
+
+    ``environ`` and ``cwd`` are what the driver JVM launches workers with.
+    It must be a local master, whose workers the driver JVM starts, and a
+    JVM launched by this Python process (no ``PYSPARK_GATEWAY_PORT``). The
+    first entry of the workers' path that holds the package (the working
+    directory ``-m`` puts first, then ``PYTHONPATH``) must be the engine's
+    ``parent``, a directory: a ``--py-files`` zip is put on the path only
+    by a task."""
+    if not re.fullmatch(r"local(\[[^\]]*\])?", master) \
+            or "PYSPARK_GATEWAY_PORT" in environ:
+        return False
+    path = [e for e in environ.get("PYTHONPATH", "").split(os.pathsep) if e]
+    if not environ.get("PYTHONSAFEPATH"):
+        path.insert(0, cwd)
+    for entry in path:
+        entry = os.path.join(cwd, entry)
+        if os.path.isdir(os.path.join(entry, __package__)):
+            return os.path.realpath(entry) == os.path.realpath(parent)
+    return False
+
+
+def _worker_launch() -> tuple[Mapping[str, str], str]:
+    """The environment and working directory the driver JVM starts Python
+    workers with: this process's own until it launches the JVM, the JVM's
+    once it runs (it outlives ``spark.stop()``, and a later ``os.chdir`` or
+    ``PYTHONPATH`` edit here does not reach it)."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return os.environ, os.getcwd()
+    system = jvm.java.lang.System
+    env = {k: v for k in ("PYTHONPATH", "PYTHONSAFEPATH")
+           if (v := system.getenv(k)) is not None}
+    return env, system.getProperty("user.dir")
+
+
 def get_spark(
     app_name: str = "omi-wide-record-spark",
     cores: int | None = None,
@@ -68,16 +130,21 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores. On a real
-    cluster the same config block ships via spark-submit --conf; nothing here
-    is local-only except the master URL.
+    ``cores`` defaults to ``local_cores(os.environ)``. On a real cluster the
+    same config block ships via spark-submit --conf; nothing here is
+    local-only except the master URL and the worker daemon module, which is
+    the engine's (``daemon``) only where ``engine_daemon_fits``.
     """
+    from pyspark.sql import SparkSession
+
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+        cores = local_cores(os.environ)
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
+    extra_conf = extra_conf or {}
+    master = extra_conf.get("spark.master", f"local[{cores}]")
     builder = (
-        SparkSession.builder.master(f"local[{cores}]")
+        SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -98,7 +165,9 @@ def get_spark(
         # keeps unix_micros/watermarks working and matches the DuckDB oracle
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    if engine_daemon_fits(master, *_worker_launch()):
+        builder = builder.config("spark.python.daemon.module", ENGINE_DAEMON)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
